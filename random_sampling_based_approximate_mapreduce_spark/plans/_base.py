@@ -63,10 +63,86 @@ def _dec(col, prec: int = 12, scale: int = 2):
 from ..sources.tables import ensure_layout as _ensure_layout  # noqa: E402
 
 
+def content_keyed_text(lines: Callable[[], DataFrame], parts: int, codec: Optional[str] = None):
+    """A layout writer: the one string column of ``lines()`` as ``parts``
+    text files, hash-partitioned and sorted BY CONTENT, with canonical
+    part names. A bare round-robin repartition writes a row placement
+    that depends on upstream scan split planning, and Spark's part names
+    carry a per-job UUID; the byte-skip picks key on the file path and
+    unit index, so either made every rebuild a different byte draw.
+    Keyed on the line itself, placement and order are functions of the
+    data alone (ties are identical lines — byte-equal output either
+    way): same corpus -> bit-stable layout -> comparable picks."""
+    from ..sources.tables import canonicalize_part_names
+
+    def write(d: str) -> None:
+        df = lines()
+        col = df.columns[0]
+        w = df.repartition(parts, col).sortWithinPartitions(col).write.mode("overwrite")
+        (w.option("compression", codec) if codec else w).text(d)
+        canonicalize_part_names(d)
+
+    return write
+
+
+def codec_layout(name, key, write=None, src=None, convert=None, count_units=None, shape=None, sidecar=""):
+    """The one-time, race-safe layout ``/tmp/rsmr_{name}_{md5(key)}`` of
+    a byte-skip rung: ``write(d)`` writes text parts; ``convert(src, d)``
+    turns them (or the plain layout ``src``) into the codec's files;
+    ``count_units(part)`` feeds the build-time shape assertion (review
+    r10: a disk-shape twin is only honest if the corpus spans several
+    parts, each crossing a seam), or ``shape(d, what)`` replaces it;
+    ``sidecar`` index files must sit beside every part. ``key`` names the
+    content recipe and must move whenever the bytes would."""
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    from ..sources.tables import assert_layout_shape, ensure_layout
+
+    what = f"{name.replace('_', ' ')} layout"
+
+    def build(d: str) -> None:
+        if convert is None:
+            write(d)
+        elif src is not None:
+            parts = convert(src, d)
+        else:
+            tmp = tempfile.mkdtemp(prefix=f"rsmr_{name}_src_")
+            try:
+                write(tmp)
+                parts = convert(tmp, d)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+        missing = [p for p in parts if not os.path.exists(p + sidecar)] if sidecar else []
+        if missing:
+            raise ValueError(f"{what} missing sidecars: {missing}")
+        if shape is not None:
+            return shape(d, what)
+        skip = (lambda p: p.endswith(sidecar)) if sidecar else None
+        assert_layout_shape(d, min_parts=2, count_units=count_units, what=what, skip=skip)
+
+    digest = hashlib.md5(key.encode()).hexdigest()[:10]
+    return ensure_layout(f"/tmp/rsmr_{name}_{digest}", build)
+
+
 # --- helpers shared across family modules (hoisted in the round-8
 # catalog split; definitions unchanged) ---
 
 _WORD_SPLIT_SQL = "[^a-z0-9'']+"
+
+# word_count's oracle, shared by every layout twin that must reproduce it
+_WORD_COUNT_SQL = f"""
+    SELECT word, count(*)::BIGINT AS cnt
+    FROM (
+      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
+      FROM documents
+      WHERE NOT regexp_matches(text, '[0-9]')
+    )
+    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
+    GROUP BY word
+    """
 
 # cheap built-in tokenize pipelines skip the parallelism shuffle below this
 # input size (measured crossover, sources/tables.ensure_parallelism docstring)

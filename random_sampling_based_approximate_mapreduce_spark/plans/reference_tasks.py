@@ -19,7 +19,10 @@ from ._base import (
     WL,
     XP,
     _CHEAP_PIPE_BYTES,
+    _WORD_COUNT_SQL,
     _WORD_SPLIT_SQL,
+    codec_layout,
+    content_keyed_text,
     ensure_parallelism,
     load,
     register,
@@ -36,16 +39,7 @@ from ._base import (
 
 @register(
     "word_count",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="P2+P3+P4+G3: digit-line drop, tokenize, numeric-token drop, count "
     "(RandomizedWordCount.java:30-39)",
 )
@@ -279,43 +273,23 @@ def q_log_host_sampled(spark, sf_dir):
     return parsed.approx_count("host", ci=True, alias="est_cnt")
 
 
+def _raw_log(spark, sf_dir: str):
+    return lambda: AL.synthesize_raw_log(load(spark, sf_dir, "events"))
+
+
+# ':canon1' names the content-keyed write recipe (round 15): the key must
+# move with the recipe, or boxes holding the old generation would keep
+# measuring a different byte draw (review r14)
 def raw_log_layout(spark, sf_dir: str) -> str:
     """The synthesized Apache access log written ONCE as plain text files
     — the reference's actual input shape (a log corpus on disk, not rows
     synthesized per run). Shared by log_host_file_sampled and
-    tools/measure_reference_speedup.py."""
-    import hashlib
-
-    from ..sources.tables import canonicalize_part_names, ensure_layout
-
-    # ':canon1' = the content-keyed deterministic write below; the key
-    # must move with the recipe or boxes holding the old generation
-    # would keep measuring a different byte draw (review r14)
-    key = hashlib.md5(f"{sf_dir}:canon1".encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        from ..sources.tables import assert_layout_shape
-
-        # hash-partition + sort BY CONTENT (round 15, VERDICT r14
-        # "what's wrong" #2): a bare round-robin repartition writes a
-        # row placement that depends on upstream scan split planning,
-        # so every rebuild of the layout is a different byte draw and
-        # seeded byte-ratio picks drift across rounds. Keyed on the
-        # line itself, placement and order are functions of the DATA
-        # alone (ties are identical lines — byte-equal output either
-        # way): same corpus -> bit-stable layout -> comparable picks.
-        AL.synthesize_raw_log(load(spark, sf_dir, "events")).repartition(
-            8, "line"
-        ).sortWithinPartitions("line").write.mode("overwrite").text(d)
-        # stable part names: the pick algebra seeds on the file path,
-        # and Spark's per-job UUID in part names would redraw every
-        # pick on every rebuild (sources.tables.canonicalize_part_names)
-        canonicalize_part_names(d)
-        # build-time shape assertion (review r10): the disk-shape twin is
-        # only honest if the corpus actually spans multiple part files
-        assert_layout_shape(d, min_parts=2, what="raw log layout")
-
-    return ensure_layout(f"/tmp/rsmr_raw_log_{key}", _build)
+    tools/measure_reference_speedup.py. Content-keyed (round 15, VERDICT
+    r14 "what's wrong" #2): placement and order are functions of the
+    DATA alone, so seeded byte-ratio picks stay comparable across
+    rounds."""
+    write = content_keyed_text(_raw_log(spark, sf_dir), 8)
+    return codec_layout("raw_log", f"{sf_dir}:canon1", write)
 
 
 @register(
@@ -349,40 +323,23 @@ def bgzf_log_layout(spark, sf_dir: str) -> str:
     r=0.001, REF_SPEEDUP_r13.json) because it still reads every byte.
     Small blocks so even the test layout crosses many seams; sidecars
     asserted so the pick metadata path is the O(1) index scan."""
-    import hashlib
-    import os
-
-    from ..sources.tables import ensure_layout
-    from ..sources.bgzf_text import GZI_SUFFIX, convert_text_to_bgzf
+    from ..sources.bgzf_text import GZI_SUFFIX, convert_text_to_bgzf, scan_blocks
 
     # 4 KiB blocks (vs the word-count layouts' 16 KiB): the sf0.001 raw
     # log is ~10 KB per part, and every part must cross >= 2 seams for
-    # the prover to prove anything (assert_layout_shape below). Block
-    # size is in the cache key so retuning invalidates the layout.
+    # the prover to prove anything (the shape assertion). Block size is
+    # in the cache key so retuning invalidates the layout. ':canon1': the
+    # conversion source (raw_log_layout) moved to the deterministic
+    # content-keyed write, so this derived layout's bytes moved too.
     block_bytes = 4 * 1024
-    # ':canon1': the conversion source (raw_log_layout) moved to the
-    # deterministic content-keyed write, so this derived layout's bytes
-    # moved too — the key tracks it
-    key = hashlib.md5(f"{sf_dir}:{block_bytes}:canon1".encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        from ..sources.tables import assert_layout_shape
-        from ..sources.bgzf_text import scan_blocks
-
-        src = raw_log_layout(spark, sf_dir)
-        parts = convert_text_to_bgzf(src, d, block_bytes=block_bytes, index=True)
-        missing = [p for p in parts if not os.path.exists(p + GZI_SUFFIX)]
-        if missing:
-            raise ValueError(f"bgzf log layout missing sidecars: {missing}")
-        assert_layout_shape(
-            d,
-            min_parts=2,
-            count_units=lambda p: sum(1 for e in scan_blocks(p) if e.d_size),
-            what="bgzf log layout",
-            skip=lambda p: p.endswith(GZI_SUFFIX),
-        )
-
-    return ensure_layout(f"/tmp/rsmr_log_bgzf_{key}", _build)
+    return codec_layout(
+        "log_bgzf",
+        f"{sf_dir}:{block_bytes}:canon1",
+        src=raw_log_layout(spark, sf_dir),
+        convert=lambda src, d: convert_text_to_bgzf(src, d, block_bytes=block_bytes, index=True),
+        count_units=lambda p: sum(1 for e in scan_blocks(p) if e.d_size),
+        sidecar=GZI_SUFFIX,
+    )
 
 
 @register(
@@ -418,26 +375,10 @@ def bz2_log_layout(spark, sf_dir: str) -> str:
     files (round 14): the bzip2 twin of ``bgzf_log_layout``, so the log
     family is value-oracled on BOTH blocked rungs — real codec-written
     files, not Python bz2, like every other .bz2 fixture."""
-    import hashlib
+    from ..sources.bzip2_block_text import assert_bz2_layout_shape
 
-    from ..sources.tables import canonicalize_part_names, ensure_layout
-
-    # ':canon1' moves the key with the deterministic-write recipe
-    # (see raw_log_layout)
-    key = hashlib.md5(f"{sf_dir}:canon1".encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        from ..sources.bzip2_block_text import assert_bz2_layout_shape
-
-        AL.synthesize_raw_log(load(spark, sf_dir, "events")).repartition(
-            4, "line"
-        ).sortWithinPartitions("line").write.mode("overwrite").option(
-            "compression", "bzip2"
-        ).text(d)
-        canonicalize_part_names(d)  # stable names -> stable picks
-        assert_bz2_layout_shape(d, "bz2 log layout")
-
-    return ensure_layout(f"/tmp/rsmr_log_bz2_{key}", _build)
+    write = content_keyed_text(_raw_log(spark, sf_dir), 4, "bzip2")
+    return codec_layout("log_bz2", f"{sf_dir}:canon1", write, shape=assert_bz2_layout_shape)
 
 
 @register(
@@ -524,21 +465,13 @@ def q_xml_page_words_sampled(spark, sf_dir):
 def xml_bzip2_layout(spark, sf_dir: str) -> str:
     """One single-line ``<page>`` record per document, as a bzip2-
     compressed text corpus (Hadoop Bzip2Codec output) — the reference's
-    literal wiki.xml.bz2 input shape, built once per source dir. Shared
-    by q_xml_page_words_bzip2 and tools/measure_reference_speedup.py
-    (the x10/x100 flagship series measures THIS layout)."""
-    import hashlib
+    literal wiki.xml.bz2 input shape, built once per source dir. Shared by
+    q_xml_page_words_bzip2 and tools/measure_reference_speedup.py (the
+    x10/x100 flagship series measures THIS layout)."""
+    from ..sources.bzip2_block_text import assert_bz2_layout_shape
 
-    from ..sources.tables import canonicalize_part_names, ensure_layout
-
-    # ':canon1' moves the key with the deterministic-write recipe
-    # (see raw_log_layout)
-    key = hashlib.md5(f"{sf_dir}:canon1".encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        from ..sources.bzip2_block_text import assert_bz2_layout_shape
-
-        load(spark, sf_dir, "documents").select(
+    def pages():
+        return load(spark, sf_dir, "documents").select(
             F.concat(
                 F.lit("<page><title>doc-"),
                 F.col("doc_id").cast("string"),
@@ -546,16 +479,10 @@ def xml_bzip2_layout(spark, sf_dir: str) -> str:
                 F.col("text"),
                 F.lit("</text></page>"),
             ).alias("value")
-        ).repartition(4, "value").sortWithinPartitions(
-            "value"
-        ).write.mode("overwrite").option(
-            "compression", "bzip2"
-        ).text(d)  # content-keyed placement: bit-stable layout (see
-        # raw_log_layout's determinism note)
-        canonicalize_part_names(d)  # stable names -> stable picks
-        assert_bz2_layout_shape(d, "xml bz2 layout")
+        )
 
-    return ensure_layout(f"/tmp/rsmr_xml_bz2_{key}", _build)
+    write = content_keyed_text(pages, 4, "bzip2")
+    return codec_layout("xml_bz2", f"{sf_dir}:canon1", write, shape=assert_bz2_layout_shape)
 
 
 @register(

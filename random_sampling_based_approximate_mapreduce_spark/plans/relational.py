@@ -14,9 +14,11 @@ from ._base import (
     SamplingConfig,
     SparkSession,
     T,
-    _WORD_SPLIT_SQL,
+    _WORD_COUNT_SQL,
     _dec,
     _ensure_layout,
+    codec_layout,
+    content_keyed_text,
     load,
     register,
     sql_round,
@@ -496,18 +498,36 @@ def q_bloom_semi_join(spark, sf_dir):
     )
 
 
+def _line_word_counts(lines: DataFrame) -> DataFrame:
+    """word_count over text lines (``value``): the _WORD_COUNT_SQL twin."""
+    kept = T.drop_digit_lines(lines, "value")
+    return T.explode_words(kept, "value").groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def _line_word_estimates(sf) -> DataFrame:
+    """HT-scaled word counts over a sampled frame of text lines."""
+    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
+    return words.approx_count("word", alias="est_cnt")
+
+
+def _multifile_text_layout(spark: SparkSession, sf_dir: str) -> str:
+    """documents.text split across 8 .txt part files, one-time per sf_dir."""
+    import hashlib
+
+    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    return _ensure_layout(
+        f"/tmp/rsmr_text_multifile_{key}",
+        lambda d: load(spark, sf_dir, "documents")
+        .select("text")
+        .repartition(8)
+        .write.mode("overwrite")
+        .text(d),
+    )
+
+
 @register(
     "word_count_multifile",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count over a MULTI-FILE raw-text layout (documents.text "
     "split across 8 .txt part files, one-time per sf_dir): the scan "
     "parallelizes per file split with no repartition needed — the layout "
@@ -516,20 +536,8 @@ def q_bloom_semi_join(spark, sf_dir):
     "round trip is line-faithful)",
 )
 def q_word_count_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    src = _ensure_layout(
-        f"/tmp/rsmr_text_multifile_{key}",
-        lambda d: load(spark, sf_dir, "documents")
-        .select("text")
-        .repartition(8)
-        .write.mode("overwrite")
-        .text(d),
-    )
-    lines = spark.read.text(src)
-    kept = T.drop_digit_lines(lines, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    src = _multifile_text_layout(spark, sf_dir)
+    return _line_word_counts(spark.read.text(src))
 
 
 @register(
@@ -548,24 +556,13 @@ def q_word_count_multifile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sampled",),
 )
 def q_word_count_byteblock_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
     from ..sources.byteblock_text import read_text_byteblock_sampled
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    src = _ensure_layout(
-        f"/tmp/rsmr_text_multifile_{key}",
-        lambda d: load(spark, sf_dir, "documents")
-        .select("text")
-        .repartition(8)
-        .write.mode("overwrite")
-        .text(d),
-    )
+    src = _multifile_text_layout(spark, sf_dir)
     # 64 KiB blocks so the small test layout still has blocks to skip;
     # at corpus scale use the 16 MiB default (the natural text split)
     sf = read_text_byteblock_sampled(spark, src, 0.5, block_bytes=64 * 1024, seed=11)
-    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
-    return words.approx_count("word", alias="est_cnt")
+    return _line_word_estimates(sf)
 
 
 @register(
@@ -580,22 +577,17 @@ def q_word_count_byteblock_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("sampled",),
 )
 def q_word_count_file_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
     from ..sources.text import read_text_file_sampled
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    src = _ensure_layout(
-        f"/tmp/rsmr_text_multifile_{key}",
-        lambda d: load(spark, sf_dir, "documents")
-        .select("text")
-        .repartition(8)
-        .write.mode("overwrite")
-        .text(d),
-    )
+    src = _multifile_text_layout(spark, sf_dir)
     sf = read_text_file_sampled(spark, src, 0.5, SamplingConfig(ratio=0.5, seed=42))
-    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
-    return words.approx_count("word", alias="est_cnt")
+    return _line_word_estimates(sf)
+
+
+# The byte-skip provers' layouts: documents.text as 4 content-keyed
+# parts per codec, one-time per sf_dir (':canon1' names the recipe).
+def _docs_text(spark: SparkSession, sf_dir: str, codec: str | None = None):
+    return content_keyed_text(lambda: load(spark, sf_dir, "documents").select("text"), 4, codec)
 
 
 def _bz2_text_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -603,33 +595,15 @@ def _bz2_text_layout(spark: SparkSession, sf_dir: str) -> str:
     one-time per sf_dir — real codec-written files, not Python bz2, so
     the block reader is exercised against the format as produced in the
     wild."""
-    import hashlib
+    from ..sources.bzip2_block_text import assert_bz2_layout_shape
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        from ..sources.bzip2_block_text import assert_bz2_layout_shape
-
-        load(spark, sf_dir, "documents").select("text").repartition(
-            4
-        ).write.mode("overwrite").option("compression", "bzip2").text(d)
-        assert_bz2_layout_shape(d, "bz2 text layout")
-
-    return _ensure_layout(f"/tmp/rsmr_text_bz2_{key}", _build)
+    write = _docs_text(spark, sf_dir, "bzip2")
+    return codec_layout("text_bz2", f"{sf_dir}:canon1", write, shape=assert_bz2_layout_shape)
 
 
 @register(
     "word_count_bzip2_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the BZIP2-BLOCK source at ratio 1.0 "
     "(sources/bzip2_block_text.py): compressed byte ranges become the "
     "scan's partitions, each decoding only its own bzip2 blocks via "
@@ -647,10 +621,7 @@ def q_word_count_bzip2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _bz2_text_layout(spark, sf_dir)
     # 64 KiB ranges so even the small test layout crosses many seams
     sf = read_text_bzip2_sampled(spark, src, 1.0, range_bytes=64 * 1024)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    return _line_word_counts(sf.df)
 
 
 @register(
@@ -673,8 +644,7 @@ def q_word_count_bzip2_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _bz2_text_layout(spark, sf_dir)
     sf = read_text_bzip2_sampled(spark, src, 0.5, range_bytes=64 * 1024, seed=11)
-    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
-    return words.approx_count("word", alias="est_cnt")
+    return _line_word_estimates(sf)
 
 
 def _zstd_text_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -682,55 +652,24 @@ def _zstd_text_layout(spark: SparkSession, sf_dir: str) -> str:
     independent frames + skippable-frame seek table), one-time per
     sf_dir: text written by Spark, converted driver-side by the module's
     own spec-conforming writer. Small frames so even the test layout
-    crosses many seams."""
-    import hashlib
+    crosses many seams; the build asserts every part splits into
+    several frames (review r10: a dropped frame_bytes collapsed this
+    layout to one frame per file and the oracle silently stopped
+    crossing seams)."""
+    from ..sources.zstd_seekable_text import convert_text_to_seekable, parse_seek_table
 
-    from ..sources.tables import ensure_layout
-    from ..sources.zstd_seekable_text import convert_text_to_seekable
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        import shutil
-        import tempfile
-
-        from ..sources.tables import assert_layout_shape
-        from ..sources.zstd_seekable_text import parse_seek_table
-
-        tmp = tempfile.mkdtemp(prefix="rsmr_zstd_txt_src_")
-        try:
-            load(spark, sf_dir, "documents").select("text").repartition(
-                4
-            ).write.mode("overwrite").text(tmp)
-            convert_text_to_seekable(tmp, d, frame_bytes=16 * 1024)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # build-time shape assertion (review r10: a dropped frame_bytes
-        # collapsed this layout to one frame per file and the oracle
-        # silently stopped crossing seams): every part must split into
-        # multiple frames, and there must be multiple parts
-        assert_layout_shape(
-            d,
-            min_parts=2,
-            count_units=lambda p: len(parse_seek_table(p)),
-            what="zstd text layout",
-        )
-
-    return ensure_layout(f"/tmp/rsmr_text_zstd_{key}", _build)
+    return codec_layout(
+        "text_zstd",
+        f"{sf_dir}:canon1",
+        _docs_text(spark, sf_dir),
+        convert=lambda src, d: convert_text_to_seekable(src, d, frame_bytes=16 * 1024),
+        count_units=lambda p: len(parse_seek_table(p)),
+    )
 
 
 @register(
     "word_count_zstd_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the SEEKABLE-ZSTD frame source at ratio 1.0 "
     "(sources/zstd_seekable_text.py): the seek table (zstd contrib "
     "seekable_format, a public spec) gives exact per-frame offsets, so "
@@ -747,10 +686,7 @@ def q_word_count_zstd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _zstd_text_layout(spark, sf_dir)
     sf = read_text_zstd_sampled(spark, src, 1.0)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    return _line_word_counts(sf.df)
 
 
 @register(
@@ -771,22 +707,12 @@ def q_word_count_zstd_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _zstd_text_layout(spark, sf_dir)
     sf = read_text_zstd_sampled(spark, src, 0.5, seed=11)
-    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
-    return words.approx_count("word", alias="est_cnt")
+    return _line_word_estimates(sf)
 
 
 @register(
     "word_count_zstd_runs_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the SEEKABLE-ZSTD source at ratio 1.0 with "
     "the CONTIGUOUS-RUN pick (run_frames=4, round 13 / VERDICT r12 "
     "item 2): the sampling cluster is a run of 4 adjacent frames, "
@@ -807,65 +733,34 @@ def q_word_count_zstd_runs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _zstd_text_layout(spark, sf_dir)
     sf = read_text_zstd_sampled(spark, src, 1.0, run_frames=4)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    return _line_word_counts(sf.df)
 
 
-def _bgzf_text_layout(spark: SparkSession, sf_dir: str) -> str:
+def _bgzf_text_layout(spark: SparkSession, sf_dir: str, index: bool = False) -> str:
     """documents.text as BGZF part files (SAM spec 4.1 blocked gzip:
     independent gzip members whose headers carry their own compressed
     size), one-time per sf_dir: text written by Spark, converted
     driver-side by the module's own spec-conforming writer. Small
-    blocks so even the test layout crosses many seams."""
-    import hashlib
+    blocks so even the test layout crosses many seams; the build asserts
+    every part splits into several DATA blocks (the EOF marker doesn't
+    count). ``index=True`` (round 13) adds the htslib .gzi sidecars the
+    scanner prefers, and the build asserts every part has one, so the
+    layout genuinely exercises the O(1) index-scan path."""
+    from ..sources.bgzf_text import GZI_SUFFIX, convert_text_to_bgzf, scan_blocks
 
-    from ..sources.tables import ensure_layout
-    from ..sources.bgzf_text import convert_text_to_bgzf
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        import shutil
-        import tempfile
-
-        from ..sources.tables import assert_layout_shape
-        from ..sources.bgzf_text import scan_blocks
-
-        tmp = tempfile.mkdtemp(prefix="rsmr_bgzf_txt_src_")
-        try:
-            load(spark, sf_dir, "documents").select("text").repartition(
-                4
-            ).write.mode("overwrite").text(tmp)
-            convert_text_to_bgzf(tmp, d, block_bytes=16 * 1024)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        # build-time shape assertion (review r10): every part must split
-        # into multiple DATA blocks (the EOF marker doesn't count), and
-        # there must be multiple parts
-        assert_layout_shape(
-            d,
-            min_parts=2,
-            count_units=lambda p: sum(1 for e in scan_blocks(p) if e.d_size),
-            what="bgzf text layout",
-        )
-
-    return ensure_layout(f"/tmp/rsmr_text_bgzf_{key}", _build)
+    return codec_layout(
+        "text_bgzfidx" if index else "text_bgzf",
+        f"{sf_dir}:canon1",
+        _docs_text(spark, sf_dir),
+        convert=lambda src, d: convert_text_to_bgzf(src, d, block_bytes=16 * 1024, index=index),
+        count_units=lambda p: sum(1 for e in scan_blocks(p) if e.d_size),
+        sidecar=GZI_SUFFIX if index else "",
+    )
 
 
 @register(
     "word_count_gzip_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the BGZF BLOCKED-GZIP source at ratio 1.0 "
     "(sources/bgzf_text.py): the block hop (SAM spec 4.1 — every gzip "
     "member's header carries its compressed size in the BC FEXTRA "
@@ -889,10 +784,7 @@ def q_word_count_gzip_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _bgzf_text_layout(spark, sf_dir)
     sf = read_text_bgzf_sampled(spark, src, 1.0)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    return _line_word_counts(sf.df)
 
 
 @register(
@@ -913,22 +805,12 @@ def q_word_count_gzip_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _bgzf_text_layout(spark, sf_dir)
     sf = read_text_bgzf_sampled(spark, src, 0.5, seed=11)
-    words = sf.transform(lambda df: T.explode_words(T.drop_digit_lines(df, "value"), "value"))
-    return words.approx_count("word", alias="est_cnt")
+    return _line_word_estimates(sf)
 
 
 @register(
     "word_count_gzip_runs_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the BGZF source at ratio 1.0 with the "
     "CONTIGUOUS-RUN pick (run_blocks=4, round 12 / VERDICT r11 item 4): "
     "the sampling cluster is a run of 4 adjacent blocks, picked by run "
@@ -948,67 +830,12 @@ def q_word_count_gzip_runs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _bgzf_text_layout(spark, sf_dir)
     sf = read_text_bgzf_sampled(spark, src, 1.0, run_blocks=4)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-
-
-def _bgzf_indexed_text_layout(spark: SparkSession, sf_dir: str) -> str:
-    """documents.text as BGZF part files WITH htslib .gzi sidecars
-    (round 13): same blocks as _bgzf_text_layout, plus the index the
-    scanner prefers — the build asserts every part has its sidecar, so
-    the layout genuinely exercises the O(1) index-scan path."""
-    import hashlib
-    import os
-
-    from ..sources.tables import ensure_layout
-    from ..sources.bgzf_text import GZI_SUFFIX, convert_text_to_bgzf
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-
-    def _build(d: str) -> None:
-        import shutil
-        import tempfile
-
-        from ..sources.tables import assert_layout_shape
-        from ..sources.bgzf_text import scan_blocks
-
-        tmp = tempfile.mkdtemp(prefix="rsmr_bgzfidx_txt_src_")
-        try:
-            load(spark, sf_dir, "documents").select("text").repartition(
-                4
-            ).write.mode("overwrite").text(tmp)
-            parts = convert_text_to_bgzf(tmp, d, block_bytes=16 * 1024, index=True)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        missing = [p for p in parts if not os.path.exists(p + GZI_SUFFIX)]
-        if missing:
-            raise ValueError(f"bgzf indexed layout missing sidecars: {missing}")
-        assert_layout_shape(
-            d,
-            min_parts=2,
-            count_units=lambda p: sum(1 for e in scan_blocks(p) if e.d_size),
-            what="bgzf indexed text layout",
-            # sidecars sit beside the parts but are not parts
-            skip=lambda p: p.endswith(GZI_SUFFIX),
-        )
-
-    return ensure_layout(f"/tmp/rsmr_text_bgzfidx_{key}", _build)
+    return _line_word_counts(sf.df)
 
 
 @register(
     "word_count_gzip_indexed_exact",
-    f"""
-    SELECT word, count(*)::BIGINT AS cnt
-    FROM (
-      SELECT unnest(string_split_regex(lower(text), '{_WORD_SPLIT_SQL}')) AS word
-      FROM documents
-      WHERE NOT regexp_matches(text, '[0-9]')
-    )
-    WHERE word <> '' AND NOT regexp_matches(word, '^[0-9]+$')
-    GROUP BY word
-    """,
+    _WORD_COUNT_SQL,
     doc="word_count through the BGZF source at ratio 1.0 on a layout "
     "carrying htslib .gzi SIDECAR INDEXES (round 13): scan_blocks "
     "prefers the index when it sits next to the file, so the block "
@@ -1027,12 +854,9 @@ def _bgzf_indexed_text_layout(spark: SparkSession, sf_dir: str) -> str:
 def q_word_count_gzip_indexed_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.bgzf_text import read_text_bgzf_sampled
 
-    src = _bgzf_indexed_text_layout(spark, sf_dir)
+    src = _bgzf_text_layout(spark, sf_dir, index=True)
     sf = read_text_bgzf_sampled(spark, src, 1.0)
-    kept = T.drop_digit_lines(sf.df, "value")
-    return T.explode_words(kept, "value").groupBy("word").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    return _line_word_counts(sf.df)
 
 
 @register(

@@ -232,44 +232,6 @@ def md5_accept(key: str, ratio: float) -> bool:
     return int.from_bytes(h[:4], "big") < ratio * 4294967296
 
 
-def pick_byte_clusters(
-    files: list[str],
-    ratio: float,
-    unit_bytes: int,
-    key_of,
-) -> tuple[list[tuple[str, int, int]], int, int]:
-    """Shared cluster-pick algebra for the byte-offset samplers
-    (byteblock_text blocks / bzip2_block_text compressed ranges; review
-    r9: the enumeration + md5 accept + never-empty hash-min fallback +
-    byte accounting lived verbatim in both modules — one definition,
-    like ``md5_accept`` itself).
-
-    ``key_of(path, idx) -> str`` namespaces the hash key per sampler so
-    existing seeds keep their historical picks. Returns
-    (picked [(file, start, end)], picked_bytes, total_bytes); units are
-    fixed-size byte spans per file, boundaries resolved by each READER.
-    """
-    import os
-
-    if unit_bytes < 1:
-        raise ValueError(f"unit bytes must be >= 1, got {unit_bytes}")
-    units: list[tuple[str, int, int]] = []
-    spans: dict[tuple[str, int], tuple[int, int]] = {}
-    for f in files:
-        size = os.path.getsize(f)
-        for idx in range(0, max(1, -(-size // unit_bytes))):
-            start = idx * unit_bytes
-            end = min(size, start + unit_bytes)
-            units.append((f, idx, end - start))
-            spans[(f, idx)] = (start, end)
-    picked, picked_bytes, total = pick_units(units, ratio, key_of)
-    return (
-        [(f, *spans[(f, i)]) for f, i in picked],
-        picked_bytes,
-        total,
-    )
-
-
 def pick_units(
     units: list[tuple[str, int, int]],
     ratio: float,
@@ -278,11 +240,10 @@ def pick_units(
     """The ONE definition of the cluster-pick accept rule: md5 accept per
     (path, idx) unit + the never-empty hash-min fallback + weight
     accounting. ``units`` is [(path, idx, weight)]; returns
-    (picked [(path, idx)], picked_weight, total_weight). Shared by the
-    byte-span pickers (via ``pick_byte_clusters``) and the seekable-zstd
-    frame picker, whose units come from a seek table rather than
-    fixed-size spans (review r10: the zstd picker had re-inlined this
-    algebra — the r8/r9 rule stands, any change lands once).
+    (picked [(path, idx)], picked_weight, total_weight). Every cluster
+    picker reaches it through ``sources.unit_source.pick_runs`` — byte
+    spans, bzip2 ranges, zstd frames, BGZF blocks and parquet row groups
+    alike (the r8/r9 rule stands: any change lands once).
     """
     import hashlib
 

@@ -75,16 +75,24 @@ extended to gzip, the one mainstream codec Hadoop itself cannot split.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 import zlib
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
-from .seam_text import SpanEntry, unit_lines
+from .seam_text import SpanEntry, run_lines
+from .unit_source import (
+    DEFAULT_BATCH_BYTES,
+    TextRung,
+    UnitTextDataSource,
+    UnitTextReader,
+    cluster_bytes,
+    convert_parts,
+    only_suffixes,
+    read_sampled,
+    remember,
+)
 
 # SAM spec §4.1: gzip member, FEXTRA set, BC subfield carrying BSIZE.
 _GZIP_ID1 = 0x1F
@@ -356,11 +364,7 @@ def scan_blocks(path: str) -> tuple[SpanEntry, ...]:
         return hit
     size = st.st_size
     if idx_key is not None:
-        entries = _scan_via_index(path, idx_path, size)
-        while len(_BLOCK_CACHE) > 256:
-            _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))
-        _BLOCK_CACHE[cache_key] = entries
-        return entries
+        return remember(_BLOCK_CACHE, cache_key, _scan_via_index(path, idx_path, size))
     parsed: list[SpanEntry] = []
     c_off = 0
     d_off = 0
@@ -385,12 +389,7 @@ def scan_blocks(path: str) -> tuple[SpanEntry, ...]:
             parsed.append(SpanEntry(c_off, block_size, d_off, isize))
             c_off += block_size
             d_off += isize
-    entries = tuple(parsed)
-    while len(_BLOCK_CACHE) > 256:  # bound worker memory across many files
-        # FIFO single-entry eviction, not clear() — the zstd cache rule
-        _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))
-    _BLOCK_CACHE[cache_key] = entries
-    return entries
+    return remember(_BLOCK_CACHE, cache_key, tuple(parsed))
 
 
 def decode_block(path_or_blob, e: SpanEntry) -> bytes:
@@ -493,29 +492,18 @@ def read_block_lines(path: str, entries, idx: int) -> list[str]:
 
 def read_block_run_lines(path: str, entries, start: int, stop: int) -> list[str]:
     """All lines OWNED by the CONTIGUOUS block run ``[start, stop)`` —
-    exactly the union of per-block ownership (the pairing depends only
-    on span boundaries, so merging interior boundaries merges
-    ownership; tests pin the equivalence), but each block is inflated
-    ONCE: per-block reads of a contiguous run would fetch every
-    interior boundary line by decoding the following block a second
-    time, doubling the decode work of a ratio-1.0 scan."""
-    run = entries[start:stop]
-    if not run:
-        return []
-    merged = SpanEntry(
-        run[0].c_off,
-        sum(e.c_size for e in run),
-        run[0].d_off,
-        sum(e.d_size for e in run),
-    )
-    # view: the run as one unit, followed by the REAL blocks after it
-    # (only their d_sizes + the tail stream are consulted)
-    tmp = [merged] + list(entries[stop:])
-    return unit_lines(
-        tmp,
-        0,
-        lambda _e: b"".join(decode_block(path, b) for b in run if b.d_size),
-        lambda j: _BlockTailStream(path, entries, stop + (j - 1)),
+    exactly the union of per-block ownership (tests pin the
+    equivalence), but each block is inflated ONCE
+    (``seam_text.run_lines``): per-block reads of a contiguous run
+    would fetch every interior boundary line by decoding the following
+    block a second time, doubling the decode work of a ratio-1.0 scan.
+    The boundary line comes from the incremental ``_BlockTailStream``."""
+    return run_lines(
+        entries,
+        start,
+        stop,
+        lambda e: decode_block(path, e),
+        lambda j: _BlockTailStream(path, entries, j),
     )
 
 
@@ -649,26 +637,18 @@ def convert_text_to_bgzf(
     index: bool = False
 ) -> list[str]:
     """Convert every plain-text part file under ``src_dir`` to a BGZF
-    .gz under ``dst_dir`` (driver-side, one streaming pass per file) —
-    the layout builder for fixtures and measurements. Writes a
-    ``_SUCCESS`` marker like Spark's own writers (callers wrap this in
-    ``ensure_layout``, whose published-check is that marker).
-    ``index=True`` also writes a ``.gzi`` sidecar per part."""
-    os.makedirs(dst_dir, exist_ok=True)
-    out: list[str] = []
-    for f in sorted(os.listdir(src_dir)):
-        p = os.path.join(src_dir, f)
-        if not os.path.isfile(p) or f.startswith(("_", ".")):
-            continue
-        dst = os.path.join(dst_dir, f + ".gz")
-        with open(p, "rb") as fh:
-            stream_bgzf(fh, dst, block_bytes=block_bytes, index=index)
-        out.append(dst)
-    if not out:
-        raise ValueError(f"no text part files under {src_dir}")
-    with open(os.path.join(dst_dir, "_SUCCESS"), "w"):
-        pass
-    return out
+    .gz under ``dst_dir`` (driver-side, one streaming pass per file,
+    ``unit_source.convert_parts``) — the layout builder for fixtures
+    and measurements. Writes a ``_SUCCESS`` marker like Spark's own
+    writers (callers wrap this in ``ensure_layout``, whose
+    published-check is that marker). ``index=True`` also writes a
+    ``.gzi`` sidecar per part."""
+    return convert_parts(
+        src_dir,
+        dst_dir,
+        ".gz",
+        lambda fh, dst: stream_bgzf(fh, dst, block_bytes=block_bytes, index=index),
+    )
 
 
 def decompress_file(path: str) -> bytes:
@@ -682,30 +662,6 @@ def decompress_file(path: str) -> bytes:
 # ---------------------------------------------------------------------------
 # block pick (cluster sampling over the header hop)
 # ---------------------------------------------------------------------------
-
-
-def _list_bgzf_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # confusing suffix refusal / FileNotFoundError downstream
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    # .gzi sidecars are metadata, not data (scan_blocks finds them by
-    # suffix next to their block file) — never listed, never refused
-    found = [f for f in found if not f.endswith(GZI_SUFFIX)]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith((".gz", ".bgz", ".bgzf"))]
-    if bad:
-        raise ValueError(f"bgzf_text expects .gz/.bgz/.bgzf files, got {bad[:3]}")
-    return found
 
 
 def suggest_run_blocks(
@@ -737,17 +693,30 @@ def suggest_run_blocks(
     cell at every (codec, ratio) matches cluster_bytes ~
     clamp(total * ratio / 20, 1 MiB, 4 MiB) — twenty expected picks,
     floored where sequential I/O amortizes, capped where quantization
-    outweighs further streaming gains."""
+    outweighs further streaming gains (``unit_source.cluster_bytes``)."""
     if not 0.0 < ratio <= 1.0:
         raise ValueError(f"ratio must be in (0, 1], got {ratio}")
     if ratio < 0.01:
         return 1
     target = target_cluster_bytes
     if total_bytes is not None:
-        if total_bytes < 1:
-            raise ValueError(f"total bytes must be >= 1, got {total_bytes}")
-        target = max(1 << 20, min(4 << 20, int(total_bytes * ratio / 20.0)))
+        target = cluster_bytes(total_bytes, ratio, 1 << 20, 4 << 20)
     return max(1, round(target / block_bytes))
+
+
+BGZF = TextRung(
+    name="bgzf_text",
+    table=lambda path, _unit_bytes: scan_blocks(path),
+    read_run=read_block_run_lines,
+    check=only_suffixes((".gz", ".bgz", ".bgzf"), "bgzf_text expects .gz/.bgz/.bgzf files"),
+    unit_tag="blk",
+    run_tag="run",
+    run_option="run_blocks",
+    batched=True,
+    pick_empty=False,
+    sidecar=GZI_SUFFIX,  # metadata beside its block file, never data
+)
+_list_bgzf_files = BGZF.files
 
 
 def pick_blocks(
@@ -756,7 +725,7 @@ def pick_blocks(
     """Deterministic hash-pick of blocks across all files from their
     header hops alone. Returns (picked [(file, block_idx)], picked
     compressed bytes, total compressed bytes of data blocks). Never
-    empty — the shared ``pick_units`` algebra.
+    empty — the shared ``unit_source.pick_runs`` algebra.
 
     ``run_blocks > 1`` makes the sampling UNIT a contiguous run of that
     many adjacent data blocks (the last run per file may be shorter).
@@ -770,42 +739,7 @@ def pick_blocks(
     ~run_blocks x. Returned picks stay per-BLOCK so batching and the
     reader are unchanged; a run's blocks are adjacent, so the reader's
     contiguity merge already decodes each picked run in one pass."""
-    from ..sampling.deterministic import pick_units
-
-    if run_blocks < 1:
-        raise ValueError(f"run_blocks must be >= 1, got {run_blocks}")
-    by_file = [
-        (f, [i for i, e in enumerate(scan_blocks(f)) if e.d_size])
-        for f in _list_bgzf_files(path)
-    ]
-    if all(not idxs for _, idxs in by_file):
-        # every block empty: keep the never-empty contract on unit 0
-        by_file = [(f, list(range(len(scan_blocks(f))))) for f, _ in by_file]
-    if run_blocks == 1:
-        units = [
-            (f, i, scan_blocks(f)[i].c_size) for f, idxs in by_file for i in idxs
-        ]
-        return pick_units(units, ratio, lambda f, i: f"{seed}:{f}#blk{i}")
-    run_members: dict[tuple[str, int], list[int]] = {}
-    units = []
-    for f, idxs in by_file:
-        entries = scan_blocks(f)
-        for j, s in enumerate(range(0, len(idxs), run_blocks)):
-            blocks = idxs[s : s + run_blocks]
-            run_members[(f, j)] = blocks
-            units.append((f, j, sum(entries[b].c_size for b in blocks)))
-    picked_runs, pw, tw = pick_units(
-        units, ratio, lambda f, j: f"{seed}:{f}#run{run_blocks}:{j}"
-    )
-    return [(f, b) for f, j in picked_runs for b in run_members[(f, j)]], pw, tw
-
-
-# ---------------------------------------------------------------------------
-# Spark source
-# ---------------------------------------------------------------------------
-
-
-DEFAULT_BATCH_BYTES = 4 << 20
+    return BGZF.pick(path, ratio, seed, run=run_blocks)
 
 
 def batch_picked_blocks(
@@ -816,96 +750,18 @@ def batch_picked_blocks(
     (a task holds one open file). The pick stays per-BLOCK — batching
     changes scheduling, not sampling semantics; tests pin that the
     batched read equals the per-block ownership oracle exactly."""
-    if batch_bytes < 1:
-        raise ValueError(f"batch_bytes must be >= 1, got {batch_bytes}")
-    out: list[tuple[str, list[int]]] = []
-    cur_file: str | None = None
-    cur_idxs: list[int] = []
-    cur_bytes = 0
-    for f, i in picked:
-        sz = scan_blocks(f)[i].c_size
-        if cur_file is not None and (f != cur_file or cur_bytes >= batch_bytes):
-            out.append((cur_file, cur_idxs))
-            cur_idxs, cur_bytes = [], 0
-        cur_file = f
-        cur_idxs.append(i)
-        cur_bytes += sz
-    if cur_file is not None:
-        out.append((cur_file, cur_idxs))
-    return out
+    return BGZF.batches(picked, batch_bytes)
 
 
-class _BlockBatchPartition(InputPartition):
-    def __init__(self, path: str, idxs: list[int]):
-        self.path = path
-        self.idxs = idxs
+class BgzfTextReader(UnitTextReader):
+    rung = BGZF
 
 
-class BgzfTextDataSource(DataSource):
-    """format name ``bgzf_text``; options: path, ratio, seed,
-    batch_bytes, run_blocks. Schema fixed: ``value string`` (one row
-    per line), matching ``spark.read.text``."""
+class BgzfTextDataSource(UnitTextDataSource):
+    """format ``bgzf_text``; options: path, ratio, seed, batch_bytes,
+    run_blocks."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "bgzf_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "BgzfTextReader":
-        return BgzfTextReader(self.options)
-
-
-class BgzfTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("bgzf_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-        self.batch_bytes = int(options.get("batch_bytes", str(DEFAULT_BATCH_BYTES)))
-        self.run_blocks = int(options.get("run_blocks", "1"))
-
-    def partitions(self):
-        picked, _, _ = pick_blocks(
-            self.path, self.ratio, self.seed, run_blocks=self.run_blocks
-        )
-        return [
-            _BlockBatchPartition(f, idxs)
-            for f, idxs in batch_picked_blocks(picked, self.batch_bytes)
-        ]
-
-    def read(self, partition: _BlockBatchPartition):
-        import pyarrow as pa
-
-        entries = scan_blocks(partition.path)
-        # contiguous picked blocks decode once as a run (a per-block
-        # loop would re-inflate every interior successor for its
-        # boundary line — 2x decode at ratio 1.0)
-        runs: list[list[int]] = []
-        for idx in partition.idxs:
-            if runs and idx == runs[-1][1]:
-                runs[-1][1] = idx + 1
-            else:
-                runs.append([idx, idx + 1])
-        buf: list[str] = []
-        for start, stop in runs:
-            buf.extend(read_block_run_lines(partition.path, entries, start, stop))
-            while len(buf) >= self._BATCH_ROWS:
-                chunk, buf = buf[: self._BATCH_ROWS], buf[self._BATCH_ROWS :]
-                yield pa.record_batch(
-                    [pa.array(chunk, pa.string())], names=["value"]
-                )
-        if buf:
-            yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
-
-
-def register_bgzf_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(BgzfTextDataSource)
+    reader_class = BgzfTextReader
 
 
 def read_text_bgzf_sampled(
@@ -936,18 +792,6 @@ def read_text_bgzf_sampled(
     example). Deliberately NOT applied automatically: the run key
     differs from the block key, so a default change would silently
     change which rows a seeded sample returns."""
-    register_bgzf_text(spark)
-    # eager driver-side validation
-    pick_blocks(path, block_ratio, seed, run_blocks=run_blocks)
-    df = (
-        spark.read.format("bgzf_text")
-        .option("path", path)
-        .option("ratio", str(block_ratio))
-        .option("seed", str(seed))
-        .option("batch_bytes", str(batch_bytes))
-        .option("run_blocks", str(run_blocks))
-        .load()
-    )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, block_ratio, seed, row_config)
+    knobs = {"batch_bytes": batch_bytes, "run_blocks": run_blocks}
+    source = BgzfTextDataSource
+    return read_sampled(spark, source, path, block_ratio, seed, row_config, **knobs)

@@ -19,12 +19,14 @@ cluster-sampling ladder:
 
 Line-boundary contract (the standard splittable-text rule, same as
 Hadoop's LineRecordReader): a line BELONGS to the block containing its
-first byte. A reader seeks to its block start, discards the partial line
-it lands in (the previous block's reader finishes it, whether or not
-that block was picked — it reads past its end to complete its last
-line), then emits lines until its end offset. Union over all blocks at
-ratio 1.0 is exactly the file, no loss, no duplication
-(tests/test_byteblock_text.py proves the partition-boundary algebra).
+first byte — the shared ``seam_text`` ownership rule with an identity
+decode (a block's "decompressed" bytes are its raw bytes). A reader
+discards the partial line it lands in (the previous block's reader
+finishes it, whether or not that block was picked), then emits lines
+until its end offset. Union over all blocks at ratio 1.0 is exactly the
+file, no loss, no duplication (tests/test_byteblock_text.py proves the
+partition-boundary algebra). The pick, the Spark source and the
+sampled-read wrapper are the shared ``unit_source`` ones.
 
 Estimator contract: blocks are CLUSTERS accepted independently with
 probability ``ratio`` (md5 of (seed, file, block index) — deterministic,
@@ -52,15 +54,18 @@ catalog. Arrow batches carry rows into the JVM columnar-side.
 
 from __future__ import annotations
 
-import glob as _glob
-import os
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
+from .seam_text import SpanEntry, run_lines
+from .unit_source import (
+    ByteSpans,
+    TextRung,
+    UnitTextDataSource,
+    UnitTextReader,
+    pick_spans,
+    read_sampled,
+)
 
-_CAP = 1 << 32
 DEFAULT_BLOCK_BYTES = 16 << 20
 
 _COMPRESSED_EXTS = (".gz", ".bz2", ".zst", ".zstd", ".snappy", ".lz4", ".deflate")
@@ -72,22 +77,8 @@ def _accept_block(path: str, idx: int, seed: int, ratio: float) -> bool:
     return md5_accept(f"{seed}:{path}#blk{idx}", ratio)
 
 
-def _list_text_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # downstream FileNotFoundError (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    for f in found:
+def _refuse_compressed(files: list[str]) -> None:
+    for f in files:
         if f.endswith(_COMPRESSED_EXTS):
             raise ValueError(
                 f"byte-block sampling cannot seek into compressed input {f}; "
@@ -95,7 +86,41 @@ def _list_text_files(path: str) -> list[str]:
                 "read_text_file_sampled (file-level clusters) / "
                 "read_text_sampled (row Bernoulli) for other codecs"
             )
-    return found
+
+
+def read_block_run(path: str, table, start: int, stop: int) -> list[str]:
+    """All lines OWNED by the contiguous blocks ``[start, stop)``: the
+    shared ``seam_text.run_lines`` with an identity decode. It is the
+    Hadoop LineRecordReader pairing: since every follower block discards
+    its first line UNCONDITIONALLY, a block owns lines starting at any
+    offset <= its end (including exactly its end), and its last line is
+    finished past its end whether or not the next block was picked.
+    Exactly one terminator (\\n or \\r\\n) is stripped, like
+    ``spark.read.text``; classic-Mac \\r-only endings are out of
+    contract, as for Hadoop's default LineReader."""
+
+    def read_span(e: SpanEntry) -> bytes:
+        with open(path, "rb") as fh:
+            fh.seek(e.c_off)
+            return fh.read(e.c_size)
+
+    def open_stream(j: int):
+        fh = open(path, "rb")
+        fh.seek(table[j].c_off)
+        return fh
+
+    return run_lines(table, start, stop, read_span, open_stream)
+
+
+BYTEBLOCK = TextRung(
+    name="byteblock_text",
+    table=ByteSpans,
+    read_run=read_block_run,
+    check=_refuse_compressed,
+    unit_tag="blk",
+    unit_option="block_bytes",
+    default_unit_bytes=DEFAULT_BLOCK_BYTES,
+)
 
 
 def pick_blocks(
@@ -107,92 +132,17 @@ def pick_blocks(
     Never returns an empty pick (hash-min fallback). Block boundaries are
     raw byte offsets — the READER aligns them to line boundaries.
     """
-    from ..sampling.deterministic import pick_byte_clusters
-
-    return pick_byte_clusters(
-        _list_text_files(path),
-        ratio,
-        block_bytes,
-        lambda f, idx: f"{seed}:{f}#blk{idx}",
-    )
+    return pick_spans(BYTEBLOCK, path, ratio, block_bytes, seed)
 
 
-class _BlockPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+class ByteBlockTextReader(UnitTextReader):
+    rung = BYTEBLOCK
 
 
-class ByteBlockTextDataSource(DataSource):
-    """format name ``byteblock_text``; options: path, ratio, block_bytes,
-    seed. Schema is fixed: ``value string`` (one row per line), matching
-    ``spark.read.text``."""
+class ByteBlockTextDataSource(UnitTextDataSource):
+    """format ``byteblock_text``; options: path, ratio, block_bytes, seed."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "byteblock_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "ByteBlockTextReader":
-        return ByteBlockTextReader(self.options)
-
-
-class ByteBlockTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("byteblock_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.block_bytes = int(options.get("block_bytes", str(DEFAULT_BLOCK_BYTES)))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self):
-        picked, _, _ = pick_blocks(self.path, self.ratio, self.block_bytes, self.seed)
-        return [_BlockPartition(f, s, e) for f, s, e in picked]
-
-    def read(self, partition: _BlockPartition):
-        import pyarrow as pa
-
-        with open(partition.path, "rb") as fh:
-            fh.seek(partition.start)
-            if partition.start > 0:
-                # land mid-line: the previous block's reader owns this
-                # line (it reads past its end to finish it) — discard
-                fh.readline()
-            batch: list[str] = []
-            # Hadoop LineRecordReader pairing: since every follower block
-            # discards its first line UNCONDITIONALLY, this block owns
-            # lines starting at any offset <= end (including exactly end);
-            # readline() past end finishes the straddler
-            while fh.tell() <= partition.end:
-                line = fh.readline()
-                if not line:
-                    break
-                # Strip exactly one line terminator (\n or \r\n), matching
-                # spark.read.text / Hadoop LineReader. Content that ends in
-                # literal \r (or classic-Mac \r-only line endings, which
-                # readline() does not split on) is out of contract — same
-                # as Hadoop's default LineReader without a custom delimiter.
-                if line.endswith(b"\r\n"):
-                    line = line[:-2]
-                elif line.endswith(b"\n"):
-                    line = line[:-1]
-                batch.append(line.decode("utf-8", errors="replace"))
-                if len(batch) >= self._BATCH_ROWS:
-                    yield pa.record_batch([pa.array(batch, pa.string())], names=["value"])
-                    batch = []
-            if batch:
-                yield pa.record_batch([pa.array(batch, pa.string())], names=["value"])
-
-
-def register_byteblock_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(ByteBlockTextDataSource)
+    reader_class = ByteBlockTextReader
 
 
 def read_text_byteblock_sampled(
@@ -210,17 +160,5 @@ def read_text_byteblock_sampled(
     ``row_config`` composes a within-block Bernoulli row stage (two-stage
     design, same algebra as the file-level and row-group samplers).
     """
-    register_byteblock_text(spark)
-    # validate eagerly driver-side (clear errors beat executor stack traces)
-    pick_blocks(path, block_ratio, block_bytes, seed)
-    df = (
-        spark.read.format("byteblock_text")
-        .option("path", path)
-        .option("ratio", str(block_ratio))
-        .option("block_bytes", str(block_bytes))
-        .option("seed", str(seed))
-        .load()
-    )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, block_ratio, seed, row_config)
+    source = ByteBlockTextDataSource
+    return read_sampled(spark, source, path, block_ratio, seed, row_config, block_bytes=block_bytes)

@@ -69,10 +69,18 @@ from __future__ import annotations
 import bz2
 import os
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
+from .unit_source import (
+    ByteSpans,
+    TextRung,
+    UnitTextDataSource,
+    UnitTextReader,
+    cluster_bytes,
+    only_suffixes,
+    pick_spans,
+    read_sampled,
+)
 
 BLOCK_MAGIC = 0x314159265359
 FOOTER_MAGIC = 0x177245385090
@@ -351,31 +359,11 @@ def _decode_block_robust(
     )
 
 
-def _list_bz2_files(path: str) -> list[str]:
-    import glob as _glob
-
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # downstream FileNotFoundError (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith(".bz2")]
-    if bad:
-        raise ValueError(
-            f"bzip2_block_text reads .bz2 files only (got {bad[:3]}); raw "
-            "text wants byteblock_text, other codecs want "
-            "read_text_file_sampled / read_text_sampled"
-        )
-    return found
+_refuse_non_bz2 = only_suffixes(
+    (".bz2",),
+    "bzip2_block_text reads .bz2 files only; raw text wants byteblock_text, "
+    "other codecs want read_text_file_sampled / read_text_sampled",
+)
 
 
 def suggest_range_bytes(
@@ -405,43 +393,15 @@ def suggest_range_bytes(
     measured cell at each ratio matches range_bytes ~ total * r /
     ``target_picks`` (~20 expected picks), floored at one compressed
     block and capped at the 4 MiB task-size default — this function
-    returns that, rounded down to a power of two.
+    returns that (``unit_source.cluster_bytes``), rounded down to a
+    power of two.
 
     ``path_or_total``: a layout dir/file (sizes summed) or an explicit
     total compressed byte count."""
-    if not 0.0 < ratio <= 1.0:
-        raise ValueError(f"ratio must be in (0, 1], got {ratio}")
-    if target_picks < 1:
-        raise ValueError(f"target_picks must be >= 1, got {target_picks}")
-    if isinstance(path_or_total, str):
-        total = sum(os.path.getsize(f) for f in _list_bz2_files(path_or_total))
-    else:
-        total = int(path_or_total)
-    if total < 1:
-        raise ValueError(f"total bytes must be >= 1, got {total}")
-    raw = max(min_range, min(max_range, total * ratio / target_picks))
-    return 1 << int(raw).bit_length() - 1
-
-
-def pick_ranges(
-    path: str, ratio: float, range_bytes: int = DEFAULT_RANGE_BYTES, seed: int = 42
-) -> tuple[list[tuple[str, int, int]], int, int]:
-    """Deterministic hash-pick of COMPRESSED byte ranges across files.
-
-    Same pick algebra as ``byteblock_text.pick_blocks`` (md5 of
-    (seed, file, index), never-empty hash-min fallback); boundaries are
-    compressed offsets — the READER resolves them to whole bzip2 blocks
-    and line boundaries. Returns (picked [(file, start, end)],
-    picked_bytes, total_bytes).
-    """
-    from ..sampling.deterministic import pick_byte_clusters
-
-    return pick_byte_clusters(
-        _list_bz2_files(path),
-        ratio,
-        range_bytes,
-        lambda f, idx: f"{seed}:{f}#bzr{idx}",
-    )
+    is_path = isinstance(path_or_total, str)
+    total = sum(map(os.path.getsize, BZIP2.files(path_or_total))) if is_path else int(path_or_total)
+    raw = cluster_bytes(total, ratio, min_range, max_range, target_picks)
+    return 1 << raw.bit_length() - 1
 
 
 # a reader must know whether its first owned block is the FILE's first
@@ -578,60 +538,47 @@ def read_range_lines(path: str, start: int, end: int) -> list[str]:
         win.close()
 
 
-class _RangePartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
+def _read_range_run(path: str, table, start: int, stop: int) -> list[str]:
+    # one range = a few decompressed blocks (bounded by range_bytes *
+    # bzip2's ~10x text ratio), so materializing before batching is
+    # bounded by the partition size by construction
+    last = table[stop - 1]
+    return read_range_lines(path, table[start].c_off, last.c_off + last.c_size)
 
 
-class Bzip2BlockTextDataSource(DataSource):
-    """format name ``bzip2_block_text``; options: path, ratio,
-    range_bytes, seed. Schema ``value string``, one row per line."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "bzip2_block_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "Bzip2BlockTextReader":
-        return Bzip2BlockTextReader(self.options)
+BZIP2 = TextRung(
+    name="bzip2_block_text",
+    table=ByteSpans,
+    read_run=_read_range_run,
+    check=_refuse_non_bz2,
+    unit_tag="bzr",
+    unit_option="range_bytes",
+    default_unit_bytes=DEFAULT_RANGE_BYTES,
+)
 
 
-class Bzip2BlockTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
+def pick_ranges(
+    path: str, ratio: float, range_bytes: int = DEFAULT_RANGE_BYTES, seed: int = 42
+) -> tuple[list[tuple[str, int, int]], int, int]:
+    """Deterministic hash-pick of COMPRESSED byte ranges across files.
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("bzip2_block_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.range_bytes = int(options.get("range_bytes", str(DEFAULT_RANGE_BYTES)))
-        self.seed = int(options.get("seed", "42"))
-
-    def partitions(self):
-        picked, _, _ = pick_ranges(self.path, self.ratio, self.range_bytes, self.seed)
-        return [_RangePartition(f, s, e) for f, s, e in picked]
-
-    def read(self, partition: _RangePartition):
-        import pyarrow as pa
-
-        # one range = a few decompressed blocks (bounded by range_bytes
-        # * bzip2's ~10x text ratio), so materializing before batching
-        # is bounded by the partition size by construction
-        lines = read_range_lines(partition.path, partition.start, partition.end)
-        for i in range(0, len(lines), self._BATCH_ROWS):
-            yield pa.record_batch(
-                [pa.array(lines[i : i + self._BATCH_ROWS], pa.string())],
-                names=["value"],
-            )
+    Same pick algebra as ``byteblock_text.pick_blocks`` (md5 of
+    (seed, file, index), never-empty hash-min fallback); boundaries are
+    compressed offsets — the READER resolves them to whole bzip2 blocks
+    and line boundaries. Returns (picked [(file, start, end)],
+    picked_bytes, total_bytes).
+    """
+    return pick_spans(BZIP2, path, ratio, range_bytes, seed)
 
 
-def register_bzip2_block_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(Bzip2BlockTextDataSource)
+class Bzip2BlockTextReader(UnitTextReader):
+    rung = BZIP2
+
+
+class Bzip2BlockTextDataSource(UnitTextDataSource):
+    """format ``bzip2_block_text``; options: path, ratio, range_bytes, seed."""
+
+    reader_class = Bzip2BlockTextReader
 
 
 def read_text_bzip2_sampled(
@@ -657,16 +604,5 @@ def read_text_bzip2_sampled(
     the pick key, so a default change would silently change which
     lines a seeded sample returns.
     """
-    register_bzip2_block_text(spark)
-    pick_ranges(path, range_ratio, range_bytes, seed)  # eager validation
-    df = (
-        spark.read.format("bzip2_block_text")
-        .option("path", path)
-        .option("ratio", str(range_ratio))
-        .option("range_bytes", str(range_bytes))
-        .option("seed", str(seed))
-        .load()
-    )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, range_ratio, seed, row_config)
+    source = Bzip2BlockTextDataSource
+    return read_sampled(spark, source, path, range_ratio, seed, row_config, range_bytes=range_bytes)

@@ -38,80 +38,38 @@ counts, distribute it or use a ``_metadata`` sidecar).
 
 from __future__ import annotations
 
-import glob as _glob
-import hashlib
-
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..sampling.config import SamplingConfig
-from ..sampling.sampled_frame import SampledFrame
-
-_CAP = 1 << 32
-
-
-def _accept_rg(path: str, rg: int, seed: int, ratio: float) -> bool:
-    from ..sampling.deterministic import md5_accept
-
-    return md5_accept(f"{seed}:{path}#rg{rg}", ratio)
+from ..sampling.sampled_frame import SampledFrame, compose_cluster_row_stage
+from .unit_source import list_files, only_suffixes, pick_runs, unit_runs
 
 
-def _list_parquet_files(path: str) -> list[str]:
-    import os
+def _footers(path: str):
+    """[(file, footer metadata)] over the parquet files under ``path``."""
+    import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*.parquet"))
-            if not os.path.basename(f).startswith("_")
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # downstream FileNotFoundError (review r10 ADVICE)
-        found = sorted(_glob.glob(path))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no parquet files under {path}")
-    return found
+    check = only_suffixes((".parquet",), "rowgroup_parquet reads .parquet files only")
+    files = list_files(path, check, what="parquet ")
+    return [(f, pq.ParquetFile(f).metadata) for f in files]
 
 
 def pick_row_groups(
     path: str, rg_ratio: float, seed: int = 42
 ) -> tuple[list[tuple[str, int]], int, int]:
-    """Deterministic hash-pick of ``rg_ratio`` of all row groups.
+    """Deterministic hash-pick of ``rg_ratio`` of all row groups (the
+    shared run pick, one row group per unit).
 
     Returns (picked [(file, row_group_idx)], picked_rows, total_rows) —
     row counts are EXACT from footer metadata (the reference needs a
     whole-job counter side channel for its totals; a columnar format
     carries them in the footer for free). Never returns an empty pick.
     """
-    import pyarrow.parquet as pq
-
-    if not 0.0 < rg_ratio <= 1.0:
-        raise ValueError(f"rg_ratio must be in (0, 1], got {rg_ratio}")
-    picked: list[tuple[str, int]] = []
-    rows_of: dict[tuple[str, int], int] = {}
-    total_rows = 0
-    for f in _list_parquet_files(path):
-        meta = pq.ParquetFile(f).metadata
-        for rg in range(meta.num_row_groups):
-            n = meta.row_group(rg).num_rows
-            total_rows += n
-            rows_of[(f, rg)] = n
-            if _accept_rg(f, rg, seed, rg_ratio):
-                picked.append((f, rg))
-    if not picked and rows_of:
-        # guarantee a non-empty sample: take the hash-min row group
-        picked = [
-            min(
-                rows_of,
-                key=lambda k: int.from_bytes(
-                    hashlib.md5(f"{seed}:{k[0]}#rg{k[1]}".encode()).digest()[:4], "big"
-                ),
-            )
-        ]
-    picked_rows = sum(rows_of[k] for k in picked)
-    return picked, picked_rows, total_rows
+    by_file = [
+        (f, [(rg, meta.row_group(rg).num_rows) for rg in range(meta.num_row_groups)])
+        for f, meta in _footers(path)
+    ]
+    return pick_runs(by_file, rg_ratio, lambda f, rg: f"{seed}:{f}#rg{rg}")
 
 
 class _RowGroupPartition(InputPartition):
@@ -164,23 +122,6 @@ class RowGroupSampledParquetReader(DataSourceReader):
         yield from pf.iter_batches(row_groups=[partition.row_group])
 
 
-def register_rowgroup_parquet(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(RowGroupSampledParquetDataSource)
-
-
-def _compose_row_stage(
-    df, achieved: float, seed: int, row_config: SamplingConfig | None
-) -> SampledFrame:
-    """Stage two of the two-stage design: Bernoulli rows WITHIN the picked
-    row groups. Mirrors ``text.read_text_file_sampled`` — the coarse
-    cluster ratio comes from footer metadata (exact), the fine ratio from
-    seeded per-row draws, and estimators scale by the product."""
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, achieved, seed, row_config)
-
-
 def read_parquet_rowgroup_sampled(
     spark,
     path: str,
@@ -196,7 +137,7 @@ def read_parquet_rowgroup_sampled(
     cluster sampling in one call): keep the coarse skip ratio here and
     the fine ratio in ``row_config``, exactly as for file-level sampling.
     """
-    register_rowgroup_parquet(spark)
+    spark.dataSource.register(RowGroupSampledParquetDataSource)
     schema = spark.read.parquet(path).schema
     _, picked_rows, total_rows = pick_row_groups(path, rg_ratio, seed)
     achieved = picked_rows / total_rows if total_rows else 1.0
@@ -208,7 +149,7 @@ def read_parquet_rowgroup_sampled(
         .option("seed", str(seed))
         .load()
     )
-    return _compose_row_stage(df, achieved, seed, row_config)
+    return compose_cluster_row_stage(df, achieved, seed, row_config)
 
 
 def rowgroup_id_ranges(
@@ -231,68 +172,42 @@ def rowgroup_id_ranges(
     Requires data written in ``id_col`` order (ingest ids, event time —
     the common case for append-only corpora).
     """
-    import pyarrow.parquet as pq
-
-    if not 0.0 < rg_ratio <= 1.0:
-        raise ValueError(f"rg_ratio must be in (0, 1], got {rg_ratio}")
     if band_size < 1:
         raise ValueError(f"band_size must be >= 1, got {band_size}")
-    # per-file ordered row-group stats
-    per_file: dict[str, list[tuple[object, object, int]]] = {}
-    total_rows = 0
-    for f in _list_parquet_files(path):
-        meta = pq.ParquetFile(f).metadata
-        schema = meta.schema
-        col_idx = None
-        for i in range(len(schema.names)):
-            if schema.names[i] == id_col:
-                col_idx = i
-                break
-        if col_idx is None:
-            raise ValueError(f"{id_col!r} not in {f} (columns: {schema.names})")
-        rgs = []
+    # per-file ordered row groups, with their id_col (min, max) stats
+    by_file = []
+    stats: dict[tuple[str, int], tuple[object, object]] = {}
+    for f, meta in _footers(path):
+        names = meta.schema.names
+        if id_col not in names:
+            raise ValueError(f"{id_col!r} not in {f} (columns: {names})")
+        col_idx = names.index(id_col)
+        units = []
         for rg in range(meta.num_row_groups):
             rg_meta = meta.row_group(rg)
             st = rg_meta.column(col_idx).statistics
             if st is None or st.min is None or st.max is None:
                 raise ValueError(f"no min/max stats for {id_col!r} in {f} rg{rg}")
-            total_rows += rg_meta.num_rows
-            rgs.append((st.min, st.max, rg_meta.num_rows))
-        per_file[f] = rgs
+            stats[(f, rg)] = (st.min, st.max)
+            units.append((rg, rg_meta.num_rows))
+        by_file.append((f, units))
 
-    # contiguous bands of band_size row groups (band == row group when 1);
-    # a band's merged (lo, hi) is one filter arm
+    # a band is a run of band_size row groups; its merged (lo, hi) is one
+    # filter arm (band == row group, keyed per row group, when 1)
     def _band_key(f: str, idx: int) -> str:
         return f"{seed}:{f}#rg{idx}" if band_size == 1 else f"{seed}:{f}#band{idx}x{band_size}"
 
-    bands: list[tuple[str, int, object, object, int]] = []
-    for f, rgs in per_file.items():
-        for i in range(0, len(rgs), band_size):
-            chunk = rgs[i : i + band_size]
-            idx = i if band_size == 1 else i // band_size
-            bands.append(
-                (f, idx, min(c[0] for c in chunk), max(c[1] for c in chunk), sum(c[2] for c in chunk))
-            )
-
-    def _accept(f: str, idx: int) -> bool:
-        h = hashlib.md5(_band_key(f, idx).encode()).digest()
-        return int.from_bytes(h[:4], "big") < rg_ratio * _CAP
-
-    picked = [t for t in bands if _accept(t[0], t[1])]
-    if not picked:
-        picked = [
-            min(
-                bands,
-                key=lambda t: int.from_bytes(
-                    hashlib.md5(_band_key(t[0], t[1]).encode()).digest()[:4], "big"
-                ),
-            )
-        ]
-    picked_keys = {(t[0], t[1]) for t in picked}
-    for f, idx, lo, hi, _ in bands:
-        if (f, idx) in picked_keys:
+    picked_units, picked_rows, total_rows = pick_runs(by_file, rg_ratio, _band_key, band_size)
+    picked_set = set(picked_units)
+    bands = []
+    for f, j, rgs, _ in unit_runs(by_file, band_size):
+        lo, hi = min(stats[(f, rg)][0] for rg in rgs), max(stats[(f, rg)][1] for rg in rgs)
+        bands.append((f, j, lo, hi, (f, rgs[0]) in picked_set))
+    picked = [(lo, hi) for _, _, lo, hi, on in bands if on]
+    for f, idx, lo, hi, on in bands:
+        if on:
             continue
-        for _, _, plo, phi, _ in picked:
+        for plo, phi in picked:
             if not (hi < plo or lo > phi):
                 raise ValueError(
                     f"row-group {id_col!r} ranges overlap ({f} band {idx} "
@@ -300,8 +215,7 @@ def rowgroup_id_ranges(
                     f"written in {id_col} order for pruned sampling — use "
                     "read_parquet_rowgroup_sampled (direct reader) instead"
                 )
-    picked_rows = sum(t[4] for t in picked)
-    return [(t[2], t[3]) for t in picked], picked_rows, total_rows
+    return picked, picked_rows, total_rows
 
 
 def read_parquet_rowgroup_pruned(
@@ -342,4 +256,4 @@ def read_parquet_rowgroup_pruned(
     for lo, hi in ranges:
         arm = F.col(id_col).between(F.lit(lo), F.lit(hi))
         cond = arm if cond is None else (cond | arm)
-    return _compose_row_stage(df.where(cond), achieved, seed, row_config)
+    return compose_cluster_row_stage(df.where(cond), achieved, seed, row_config)

@@ -31,11 +31,12 @@ Schema: ``line STRING`` (add parsing above, per engine discipline).
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip
 import hashlib
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from .unit_source import list_files
 
 _BUCKETS = 1_000_000
 
@@ -68,25 +69,12 @@ class SampledTextReader(DataSourceReader):
         self.seed = int(options.get("seed", "42"))
 
     def partitions(self):
-        # expand directories like the sibling sources (review r8: a bare
-        # glob of a directory path yielded the directory itself as a
-        # "file" partition and IsADirectoryError inside the task)
-        import os as _os
-
-        out = []
-        for p in sorted(_glob.glob(self.path)) or [self.path]:
-            if _os.path.isdir(p):
-                out.extend(
-                    sorted(
-                        _os.path.join(p, f)
-                        for f in _os.listdir(p)
-                        if not f.startswith((".", "_"))
-                        and _os.path.isfile(_os.path.join(p, f))
-                    )
-                )
-            else:
-                out.append(p)
-        return [_FilePartition(f) for f in out]
+        # the shared lister: a directory, named or matched by a glob,
+        # expands to its files (review r8: a bare glob of a directory
+        # yielded the directory itself as a "file" partition and
+        # IsADirectoryError inside the task), and a path matching nothing
+        # fails here at planning, not inside a task
+        return [_FilePartition(f) for f in list_files(self.path)]
 
     def read(self, partition: _FilePartition):
         ratio, seed = self.ratio, self.seed

@@ -1,12 +1,14 @@
 """Shared line-seam ownership algebra for unit-compressed text sources.
 
-The byte-skip ladder has three sources whose skip unit is an
-independently decodable compressed span with exact (compressed,
-decompressed) extents — seekable-zstd frames (``zstd_seekable_text``)
-and BGZF gzip blocks (``bgzf_text``) — plus the uncompressed byteblock
-source that pioneered the pairing. All of them share ONE line-ownership
-rule (the project rule since r8: shared algebra lands once, like
-``sampling.deterministic.pick_units`` for the cluster pick):
+Two byte-skip sources have a skip unit that is an independently
+decodable compressed span with exact (compressed, decompressed) extents
+— seekable-zstd frames (``zstd_seekable_text``) and BGZF gzip blocks
+(``bgzf_text``) — and the uncompressed byteblock source reads its byte
+blocks through the same pairing with an identity decode. All three
+share ONE line-ownership rule (the project rule since r8: shared algebra
+lands once, like ``sources.unit_source.pick_runs`` for the cluster
+pick); the bzip2 rung applies the same rule to bit-scanned blocks in
+``bzip2_block_text.read_range_lines``:
 
 - a line belongs to the unit whose DECOMPRESSED span contains its first
   byte;
@@ -119,3 +121,28 @@ def unit_lines(entries, idx: int, decode_unit, open_stream) -> list[str]:
         (p[:-1] if p.endswith(b"\r") else p).decode("utf-8", errors="replace")
         for p in parts
     ]
+
+
+def run_lines(entries, start: int, stop: int, decode_unit, open_stream) -> list[str]:
+    """All lines OWNED by the contiguous units ``[start, stop)`` —
+    exactly the union of per-unit ownership (the pairing depends only on
+    span boundaries, so merging interior boundaries merges ownership),
+    but each unit is decoded ONCE: per-unit reads would fetch every
+    interior boundary line by decoding the following unit a second time.
+    ``open_stream(j)`` streams the decompressed bytes of units ``j..``."""
+    stop = min(stop, len(entries))
+    if start >= stop:
+        return []
+    first, last, tail = entries[start], entries[stop - 1], entries[-1]
+    end_c, end_d = last.c_off + last.c_size, last.d_off + last.d_size
+    # the run as one unit, followed by the rest of the stream as another
+    view = [
+        SpanEntry(first.c_off, end_c - first.c_off, first.d_off, end_d - first.d_off),
+        SpanEntry(end_c, tail.c_off + tail.c_size - end_c, end_d, tail.d_off + tail.d_size - end_d),
+    ]
+    return unit_lines(
+        view,
+        0,
+        lambda _e: b"".join(decode_unit(entries[i]) for i in range(start, stop) if entries[i].d_size),
+        lambda _j: open_stream(stop),
+    )

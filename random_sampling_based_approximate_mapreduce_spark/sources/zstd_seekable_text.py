@@ -28,7 +28,7 @@ Format facts used (all from the public spec):
 
 Sampling semantics: FRAMES are the clusters. ``pick_frames`` hash-picks
 frame indices deterministically (md5 of (seed, file, frame index) — the
-shared ``pick_byte_clusters``-style algebra, never-empty per pick) from
+shared ``unit_source`` run pick, never-empty per pick) from
 the seek table alone, so the pick costs a tail read per file, not a
 scan. A picked frame becomes one partition that seeks straight to its
 compressed offset and decompresses ONLY itself (pyarrow's zstd codec;
@@ -78,15 +78,22 @@ a zstd decode error.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
-from .seam_text import SpanEntry, unit_lines
+from .seam_text import SpanEntry, run_lines
+from .unit_source import (
+    DEFAULT_BATCH_BYTES,
+    TextRung,
+    UnitTextDataSource,
+    UnitTextReader,
+    convert_parts,
+    only_suffixes,
+    read_sampled,
+    remember,
+)
 
 SKIPPABLE_MAGIC = 0x184D2A5E
 SEEKABLE_MAGIC = 0x8F92EAB1
@@ -113,13 +120,14 @@ def parse_seek_table(path: str) -> tuple[FrameEntry, ...]:
     Raises ValueError (with the fallback ladder) for files that are not
     seekable-format zstd — including plain single-frame .zst.
 
-    Cached per (path, size, mtime_ns): Spark reuses Python workers across
-    tasks, and every frame partition of a file needs the same table —
-    without the cache a 100k-frame file would pay an O(frames) tail read
-    per task, O(frames^2) across its tasks. Keyed on st_mtime_ns (not the
-    float st_mtime, whose sub-second truncation can alias a same-size
-    overwrite) and stored/returned as an immutable tuple so no caller can
-    mutate the cached entries (review r10 ADVICE).
+    Cached per (path, size, mtime_ns) (``unit_source.remember``): Spark
+    reuses Python workers across tasks, and every frame partition of a
+    file needs the same table — without the cache a 100k-frame file
+    would pay an O(frames) tail read per task, O(frames^2) across its
+    tasks. Keyed on st_mtime_ns (not the float st_mtime, whose
+    sub-second truncation can alias a same-size overwrite) and
+    stored/returned as an immutable tuple so no caller can mutate the
+    cached entries (review r10 ADVICE).
     """
     st = os.stat(path)
     cache_key = (path, st.st_size, st.st_mtime_ns)
@@ -213,13 +221,7 @@ def parse_seek_table(path: str) -> tuple[FrameEntry, ...]:
                         f"{len(out)} bytes but the seek table claims 0 "
                         "(lying seek-table entry)"
                     )
-    while len(_TABLE_CACHE) > 256:  # bound worker memory across many files
-        # FIFO single-entry eviction, not clear(): a task mix cycling
-        # over >256 files would otherwise wipe every hot entry at once
-        # and re-pay the tail parses the cache exists to amortize
-        _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
-    _TABLE_CACHE[cache_key] = entries
-    return entries
+    return remember(_TABLE_CACHE, cache_key, entries)
 
 
 def write_seekable_zstd(
@@ -248,6 +250,7 @@ def write_seekable_zstd(
         align_lines=align_lines,
         level=level,
     )
+
 
 
 def stream_seekable_zstd(
@@ -312,169 +315,29 @@ def convert_text_to_seekable(
     src_dir: str, dst_dir: str, frame_bytes: int = DEFAULT_FRAME_BYTES
 ) -> list[str]:
     """Convert every plain-text part file under ``src_dir`` to a
-    seekable .zst under ``dst_dir`` (driver-side, one pass per file) —
-    the layout builder for fixtures and measurements.
+    seekable .zst under ``dst_dir`` (driver-side, one streaming pass per
+    file, ``unit_source.convert_parts``) — the layout builder for
+    fixtures and measurements. Peak memory is O(frame_bytes), not
+    O(part size), and ``frame_bytes`` really sets the frames (review
+    r10: it was silently dropped here, so every converted file was one
+    4 MB-default frame and the oracled layout never crossed a seam).
 
     Writes a ``_SUCCESS`` marker like Spark's own writers: callers wrap
     this in ``ensure_layout``, whose published-check is that marker —
     without it every call would rebuild AND destructively replace a
     layout another session may be reading (review r10)."""
-    os.makedirs(dst_dir, exist_ok=True)
-    out: list[str] = []
-    for f in sorted(os.listdir(src_dir)):
-        p = os.path.join(src_dir, f)
-        if not os.path.isfile(p) or f.startswith(("_", ".")):
-            continue
-        dst = os.path.join(dst_dir, f + ".zst")
-        with open(p, "rb") as fh:
-            # review r10: frame_bytes was silently dropped here, so every
-            # converted file was one 4 MB-default frame and the oracled
-            # layout never crossed a seam; streamed so peak memory is
-            # O(frame_bytes), not O(part size)
-            stream_seekable_zstd(fh, dst, frame_bytes=frame_bytes)
-        out.append(dst)
-    if not out:
-        raise ValueError(f"no text part files under {src_dir}")
-    with open(os.path.join(dst_dir, "_SUCCESS"), "w"):
-        pass
-    return out
+    return convert_parts(
+        src_dir,
+        dst_dir,
+        ".zst",
+        lambda fh, dst: stream_seekable_zstd(fh, dst, frame_bytes=frame_bytes),
+    )
 
 
 def decompress_file(path: str) -> bytes:
     """Whole-file decode via the seek table (tests compare this against
     the original bytes and against per-frame reads)."""
-    import pyarrow as pa
-
-    codec = pa.Codec("zstd")
-    entries = parse_seek_table(path)
-    out = bytearray()
-    with open(path, "rb") as fh:
-        for e in entries:
-            fh.seek(e.c_off)
-            if e.d_size == 0:
-                continue
-            out += codec.decompress(fh.read(e.c_size), e.d_size, asbytes=True)
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# frame pick (cluster sampling over the seek table)
-# ---------------------------------------------------------------------------
-
-
-def _list_zst_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "*"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-    else:
-        # bare nonexistent path: fail here as "no files", not as a
-        # confusing suffix refusal / FileNotFoundError downstream
-        # (review r10 ADVICE)
-        found = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-        if not found and os.path.isfile(path):
-            found = [path]
-    if not found:
-        raise ValueError(f"no files under {path}")
-    bad = [f for f in found if not f.endswith((".zst", ".zstd"))]
-    if bad:
-        raise ValueError(
-            f"zstd_seekable_text expects .zst/.zstd files, got {bad[:3]}"
-        )
-    return found
-
-
-def suggest_run_frames(
-    ratio: float,
-    frame_bytes: int = DEFAULT_FRAME_BYTES,
-    target_cluster_bytes: int = 16 << 20,
-) -> int:
-    """Measured guidance for ``run_frames`` — the shared crossover rule
-    (``bgzf_text.suggest_run_blocks``: singletons below r=0.01 where
-    the pick floor dominates, contiguous clusters at moderate ratios)
-    with THIS rung's measured cluster target (~16 MB = runs of 4 at
-    the default frame). History matters for reading the numbers: the
-    round-13 ×16000 grid first measured runs of 4 flipping the losing
-    moderate-r cells (r=0.1 warm 0.57x -> 1.04x, cold 1.07x -> 2.68x,
-    COLD_SKIP_zstd_runframes_x16000.json), which exposed that the
-    dominant cost was ONE-TASK-PER-FRAME scheduling, fixed the same
-    round by ``batch_picked_frames`` (the BGZF task batching). On the
-    batched reader (COLD_SKIP_zstd_batched_x16000.json) singletons
-    already win every cell (r=0.1: 1.23x warm / 2.59x cold) and runs
-    of 4 add a measured ~5-25% on top (1.29x / 3.0x; r=0.025: 2.46x ->
-    3.02x warm, 5.41x -> 6.33x cold) — locality still pays, but the
-    knob is now a margin, not a rescue. Advisory only, never applied
-    automatically (the run key differs from the frame key, so a
-    default change would silently change which rows a seeded sample
-    returns)."""
-    from .bgzf_text import suggest_run_blocks
-
-    return suggest_run_blocks(
-        ratio, block_bytes=frame_bytes, target_cluster_bytes=target_cluster_bytes
-    )
-
-
-def pick_frames(
-    path: str, ratio: float, seed: int = 42, run_frames: int = 1
-) -> tuple[list[tuple[str, int]], int, int]:
-    """Deterministic hash-pick of frames across all files from their seek
-    tables alone. Returns (picked [(file, frame_idx)], picked_compressed
-    bytes, total_compressed_bytes of data frames). Never empty. The
-    accept rule + never-empty fallback is the shared ``pick_units``
-    algebra (one definition across all cluster pickers).
-
-    ``run_frames > 1`` makes the sampling UNIT a contiguous run of that
-    many adjacent data frames (the last run per file may be shorter) —
-    the BGZF rung's contiguous-run pick (``bgzf_text.pick_blocks``,
-    VERDICT r12 item 2) generalized to the frame rung; the seek-table
-    frame list is the same SpanEntry offsets shape as the block hop, so
-    the run algebra carries over verbatim. HT semantics are unchanged —
-    every line's inclusion probability is still ``ratio``, with the run
-    as the cluster — but a picked unit's compressed bytes are sequential
-    on disk. The price is the same coarser pick floor (~run_frames x),
-    and at this rung's 4 MB default frame a SINGLETON pick is already a
-    ~1 MB sequential compressed read, so the knob matters mainly for
-    small-frame layouts (the BGZF crossover analysis in
-    ``bgzf_text.suggest_run_blocks`` applies with frame_bytes in place
-    of block_bytes). ``run_frames=1`` is bit-for-bit the historical
-    per-frame pick (same keys, same picks). Returned picks stay
-    per-FRAME so downstream accounting is unchanged; a run's frames are
-    adjacent, so the reader decodes each picked run in one pass."""
-    from ..sampling.deterministic import pick_units
-
-    if run_frames < 1:
-        raise ValueError(f"run_frames must be >= 1, got {run_frames}")
-    files = _list_zst_files(path)
-    if run_frames == 1:
-        units = [
-            (f, i, e.c_size)
-            for f in files
-            for i, e in enumerate(parse_seek_table(f))
-        ]
-        return pick_units(units, ratio, lambda f, i: f"{seed}:{f}#frm{i}")
-    by_file = [
-        (f, [i for i, e in enumerate(parse_seek_table(f)) if e.d_size])
-        for f in files
-    ]
-    if all(not idxs for _, idxs in by_file):
-        # every frame empty: keep the never-empty contract on unit 0
-        by_file = [
-            (f, list(range(len(parse_seek_table(f))))) for f, _ in by_file
-        ]
-    run_members: dict[tuple[str, int], list[int]] = {}
-    units = []
-    for f, idxs in by_file:
-        entries = parse_seek_table(f)
-        for j, s in enumerate(range(0, len(idxs), run_frames)):
-            frames = idxs[s : s + run_frames]
-            run_members[(f, j)] = frames
-            units.append((f, j, sum(entries[i].c_size for i in frames)))
-    picked_runs, pw, tw = pick_units(
-        units, ratio, lambda f, j: f"{seed}:{f}#frmrun{run_frames}:{j}"
-    )
-    return [(f, i) for f, j in picked_runs for i in run_members[(f, j)]], pw, tw
+    return b"".join(_decode_frame(path, e) for e in parse_seek_table(path) if e.d_size)
 
 
 # ---------------------------------------------------------------------------
@@ -524,6 +387,7 @@ def read_frame_lines(path: str, entries: list[FrameEntry], idx: int) -> list[str
     O(n^2) readline re-slice made a 4 MB frame cost ~100x its decode).
     Only frame ``idx`` and the frames its edge lines actually span are
     decompressed."""
+
     return read_frame_run_lines(path, entries, idx, idx + 1)
 
 
@@ -531,34 +395,60 @@ def read_frame_run_lines(
     path: str, entries: list[FrameEntry], start: int, stop: int
 ) -> list[str]:
     """All lines OWNED by the CONTIGUOUS frame run ``[start, stop)`` —
-    exactly the union of per-frame ownership (the pairing depends only
-    on span boundaries, so merging interior boundaries merges
-    ownership; tests pin the equivalence), but each frame is decoded
-    ONCE: per-frame reads of a contiguous run would fetch every
-    interior boundary line by decoding into the following frame a
-    second time — the same double-decode the BGZF run reader avoids
-    (``bgzf_text.read_block_run_lines``)."""
-    run = entries[start:stop]
-    if not run:
-        return []
-    merged = FrameEntry(
-        run[0].c_off,
-        sum(e.c_size for e in run),
-        run[0].d_off,
-        sum(e.d_size for e in run),
-    )
-    # view: the run as one unit, followed by the REAL frames after it
-    # (only their d_sizes + the tail stream are consulted)
-    tmp = [merged] + list(entries[stop:])
-    return unit_lines(
-        tmp,
-        0,
-        lambda _e: b"".join(_decode_frame(path, e) for e in run if e.d_size),
-        lambda j: _FrameTailStream(path, entries[stop + (j - 1)].c_off),
+    exactly the union of per-frame ownership (tests pin the
+    equivalence), but each frame is decoded ONCE
+    (``seam_text.run_lines``): per-frame reads of a contiguous run
+    would fetch every interior boundary line by decoding into the
+    following frame a second time — the same double-decode the BGZF run
+    reader avoids (``bgzf_text.read_block_run_lines``)."""
+    return run_lines(
+        entries,
+        start,
+        stop,
+        lambda e: _decode_frame(path, e),
+        lambda j: _FrameTailStream(path, entries[j].c_off),
     )
 
 
-DEFAULT_BATCH_BYTES = 4 << 20
+ZSTD = TextRung(
+    name="zstd_seekable_text",
+    table=lambda path, _unit_bytes: parse_seek_table(path),
+    read_run=read_frame_run_lines,
+    check=only_suffixes((".zst", ".zstd"), "zstd_seekable_text expects .zst/.zstd files"),
+    unit_tag="frm",
+    run_tag="frmrun",
+    run_option="run_frames",
+    batched=True,
+)
+
+
+def pick_frames(
+    path: str, ratio: float, seed: int = 42, run_frames: int = 1
+) -> tuple[list[tuple[str, int]], int, int]:
+    """Deterministic hash-pick of frames across all files from their seek
+    tables alone. Returns (picked [(file, frame_idx)], picked_compressed
+    bytes, total_compressed_bytes of data frames). Never empty. The
+    accept rule + never-empty fallback is the shared ``pick_units``
+    algebra, reached through ``unit_source.pick_runs``.
+
+    ``run_frames > 1`` makes the sampling UNIT a contiguous run of that
+    many adjacent data frames (the last run per file may be shorter) —
+    the BGZF rung's contiguous-run pick (``bgzf_text.pick_blocks``,
+    VERDICT r12 item 2) generalized to the frame rung; the seek-table
+    frame list is the same SpanEntry offsets shape as the block hop, so
+    the run algebra carries over verbatim. HT semantics are unchanged —
+    every line's inclusion probability is still ``ratio``, with the run
+    as the cluster — but a picked unit's compressed bytes are sequential
+    on disk. The price is the same coarser pick floor (~run_frames x),
+    and at this rung's 4 MB default frame a SINGLETON pick is already a
+    ~1 MB sequential compressed read, so the knob matters mainly for
+    small-frame layouts (the BGZF crossover analysis in
+    ``bgzf_text.suggest_run_blocks`` applies with frame_bytes in place
+    of block_bytes). ``run_frames=1`` is bit-for-bit the historical
+    per-frame pick (same keys, same picks). Returned picks stay
+    per-FRAME so downstream accounting is unchanged; a run's frames are
+    adjacent, so the reader decodes each picked run in one pass."""
+    return ZSTD.pick(path, ratio, seed, run=run_frames)
 
 
 def batch_picked_frames(
@@ -574,96 +464,48 @@ def batch_picked_frames(
     per-FRAME — batching changes scheduling, not sampling semantics;
     tests pin that the batched read equals the per-frame ownership
     oracle exactly."""
-    if batch_bytes < 1:
-        raise ValueError(f"batch_bytes must be >= 1, got {batch_bytes}")
-    out: list[tuple[str, list[int]]] = []
-    cur_file: str | None = None
-    cur_idxs: list[int] = []
-    cur_bytes = 0
-    for f, i in picked:
-        sz = parse_seek_table(f)[i].c_size
-        if cur_file is not None and (f != cur_file or cur_bytes >= batch_bytes):
-            out.append((cur_file, cur_idxs))
-            cur_idxs, cur_bytes = [], 0
-        cur_file = f
-        cur_idxs.append(i)
-        cur_bytes += sz
-    if cur_file is not None:
-        out.append((cur_file, cur_idxs))
-    return out
+    return ZSTD.batches(picked, batch_bytes)
 
 
-class _FrameBatchPartition(InputPartition):
-    def __init__(self, path: str, idxs: list[int]):
-        self.path = path
-        self.idxs = idxs
+def suggest_run_frames(
+    ratio: float,
+    frame_bytes: int = DEFAULT_FRAME_BYTES,
+    target_cluster_bytes: int = 16 << 20,
+) -> int:
+    """Measured guidance for ``run_frames`` — the shared crossover rule
+    (``bgzf_text.suggest_run_blocks``: singletons below r=0.01 where
+    the pick floor dominates, contiguous clusters at moderate ratios)
+    with THIS rung's measured cluster target (~16 MB = runs of 4 at
+    the default frame). History matters for reading the numbers: the
+    round-13 ×16000 grid first measured runs of 4 flipping the losing
+    moderate-r cells (r=0.1 warm 0.57x -> 1.04x, cold 1.07x -> 2.68x,
+    COLD_SKIP_zstd_runframes_x16000.json), which exposed that the
+    dominant cost was ONE-TASK-PER-FRAME scheduling, fixed the same
+    round by ``batch_picked_frames`` (the BGZF task batching). On the
+    batched reader (COLD_SKIP_zstd_batched_x16000.json) singletons
+    already win every cell (r=0.1: 1.23x warm / 2.59x cold) and runs
+    of 4 add a measured ~5-25% on top (1.29x / 3.0x; r=0.025: 2.46x ->
+    3.02x warm, 5.41x -> 6.33x cold) — locality still pays, but the
+    knob is now a margin, not a rescue. Advisory only, never applied
+    automatically (the run key differs from the frame key, so a
+    default change would silently change which rows a seeded sample
+    returns)."""
+    from .bgzf_text import suggest_run_blocks
+
+    return suggest_run_blocks(
+        ratio, block_bytes=frame_bytes, target_cluster_bytes=target_cluster_bytes
+    )
 
 
-class ZstdSeekableTextDataSource(DataSource):
-    """format name ``zstd_seekable_text``; options: path, ratio, seed,
-    batch_bytes, run_frames. Schema fixed: ``value string`` (one row
-    per line), matching ``spark.read.text``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "zstd_seekable_text"
-
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> "ZstdSeekableTextReader":
-        return ZstdSeekableTextReader(self.options)
+class ZstdSeekableTextReader(UnitTextReader):
+    rung = ZSTD
 
 
-class ZstdSeekableTextReader(DataSourceReader):
-    _BATCH_ROWS = 8192
+class ZstdSeekableTextDataSource(UnitTextDataSource):
+    """format ``zstd_seekable_text``; options: path, ratio, seed,
+    batch_bytes, run_frames."""
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("zstd_seekable_text requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-        self.batch_bytes = int(options.get("batch_bytes", str(DEFAULT_BATCH_BYTES)))
-        self.run_frames = int(options.get("run_frames", "1"))
-
-    def partitions(self):
-        picked, _, _ = pick_frames(
-            self.path, self.ratio, self.seed, run_frames=self.run_frames
-        )
-        return [
-            _FrameBatchPartition(f, idxs)
-            for f, idxs in batch_picked_frames(picked, self.batch_bytes)
-        ]
-
-    def read(self, partition: _FrameBatchPartition):
-        import pyarrow as pa
-
-        entries = parse_seek_table(partition.path)
-        # contiguous picked frames decode once as a run (a per-frame
-        # loop would re-decode into every interior successor for its
-        # boundary line — the BGZF reader's merge, same reason)
-        runs: list[list[int]] = []
-        for idx in partition.idxs:
-            if runs and idx == runs[-1][1]:
-                runs[-1][1] = idx + 1
-            else:
-                runs.append([idx, idx + 1])
-        buf: list[str] = []
-        for start, stop in runs:
-            buf.extend(read_frame_run_lines(partition.path, entries, start, stop))
-            while len(buf) >= self._BATCH_ROWS:
-                chunk, buf = buf[: self._BATCH_ROWS], buf[self._BATCH_ROWS :]
-                yield pa.record_batch(
-                    [pa.array(chunk, pa.string())], names=["value"]
-                )
-        if buf:
-            yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
-
-
-def register_zstd_seekable_text(spark) -> None:
-    """Register the source with a session (idempotent)."""
-    spark.dataSource.register(ZstdSeekableTextDataSource)
+    reader_class = ZstdSeekableTextReader
 
 
 def read_text_zstd_sampled(
@@ -688,18 +530,6 @@ def read_text_zstd_sampled(
     pick-floor granularity for sequential I/O locality (see
     ``pick_frames``; ``suggest_run_frames`` gives this rung's measured
     crossover)."""
-    register_zstd_seekable_text(spark)
-    # eager driver-side validation
-    pick_frames(path, frame_ratio, seed, run_frames=run_frames)
-    df = (
-        spark.read.format("zstd_seekable_text")
-        .option("path", path)
-        .option("ratio", str(frame_ratio))
-        .option("seed", str(seed))
-        .option("batch_bytes", str(batch_bytes))
-        .option("run_frames", str(run_frames))
-        .load()
-    )
-    from ..sampling.sampled_frame import compose_cluster_row_stage
-
-    return compose_cluster_row_stage(df, frame_ratio, seed, row_config)
+    knobs = {"batch_bytes": batch_bytes, "run_frames": run_frames}
+    source = ZstdSeekableTextDataSource
+    return read_sampled(spark, source, path, frame_ratio, seed, row_config, **knobs)

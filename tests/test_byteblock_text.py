@@ -118,7 +118,9 @@ class TestSeamProperties:
     def _read_all_blocks(self, path, block_bytes):
         from random_sampling_based_approximate_mapreduce_spark.sources.byteblock_text import (
             ByteBlockTextReader,
-            _BlockPartition,
+        )
+        from random_sampling_based_approximate_mapreduce_spark.sources.unit_source import (
+            UnitBatch as _BlockPartition,
         )
 
         reader = ByteBlockTextReader(
