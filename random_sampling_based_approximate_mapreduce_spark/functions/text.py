@@ -26,6 +26,10 @@ from .rounding import sql_round
 # RandomizedWordCount.java:31 is a superset of this; see words_reference.)
 WORD_SPLIT_RE = "[^a-z0-9']+"
 
+# P2 / P4: a digit anywhere in the line; a token of digits only.
+DIGIT_RE = r"\d"
+NUMERIC_TOKEN_RE = "^[0-9]+$"
+
 # The reference's literal delimiter set (RandomizedWordCount.java:31),
 # rendered as a character-class regex for the parity-mode tokenizer.
 REFERENCE_DELIMS_RE = r"""[\t\n\r\f\\"<>/%?@~`^”!#$&,.'():*+\[\]{}=;_|\-\s]+"""
@@ -44,14 +48,34 @@ def normalize_line(col: Column) -> Column:
     return F.url_decode(c)
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def drop_digit_lines(df: DataFrame, col: str) -> DataFrame:
-    """P2: drop the whole line if it contains any digit."""
-    return df.where(~F.col(col).rlike(r"\d"))
+    """P2: drop the whole line if it contains any digit.
+
+    The tokenizer builders here are SQL strings, parsed in the JVM in one
+    call: every ``pyspark.sql.functions`` call is a py4j round trip, and
+    each DataFrame op is analysed on its own."""
+    return df.where(f"NOT {_ident(col)} RLIKE {_sql_str(DIGIT_RE)}")
 
 
-def words(col: Column, split_re: str = WORD_SPLIT_RE) -> Column:
-    """P3 as an array column: lowercase then split; empties filtered later."""
-    return F.split(F.lower(col), split_re)
+def _words_sql(col: str, split_re: str) -> str:
+    """P3 over column ``col`` as SQL: lowercase then split. The one
+    spelling of the rule; ``words`` and ``explode_words`` build on it."""
+    return f"split(lower({_ident(col)}), {_sql_str(split_re)})"
+
+
+def words(col: str, split_re: str = WORD_SPLIT_RE) -> Column:
+    """P3 as an array column over column ``col``; empties filtered later."""
+    return F.expr(_words_sql(col, split_re))
 
 
 def explode_words(df: DataFrame, col: str, out: str = "word") -> DataFrame:
@@ -62,10 +86,9 @@ def explode_words(df: DataFrame, col: str, out: str = "word") -> DataFrame:
     with the full split expression substituted — doubling the regex work
     per row. The length>0 predicate already drops the outer-null rows.
     """
-    return (
-        df.select(F.explode_outer(words(F.col(col))).alias(out))
-        .where(F.length(out) > 0)
-        .where(~F.col(out).rlike("^[0-9]+$"))
+    o = _ident(out)
+    return df.selectExpr(f"explode_outer({_words_sql(col, WORD_SPLIT_RE)}) AS {o}").where(
+        f"length({o}) > 0 AND NOT {o} RLIKE {_sql_str(NUMERIC_TOKEN_RE)}"
     )
 
 
@@ -74,7 +97,7 @@ def explode_words_reference(df: DataFrame, col: str, out: str = "word") -> DataF
     reference's full delimiter set + P4 numeric-token drop."""
     kept = drop_digit_lines(df, col)
     toks = kept.select(F.explode_outer(F.split(normalize_line(F.col(col)), REFERENCE_DELIMS_RE)).alias(out))
-    return toks.where(F.length(out) > 0).where(~F.col(out).rlike("^[0-9]+$"))
+    return toks.where(F.length(out) > 0).where(~F.col(out).rlike(NUMERIC_TOKEN_RE))
 
 
 def explode_chars(df: DataFrame, col: str, out: str = "ch") -> DataFrame:

@@ -31,7 +31,7 @@ from ..sampling.sampled_frame import SampledFrame
 from ..sources import apache_log as AL
 from ..sources import wireless as WL
 from ..sources import xml_pages as XP
-from ..sources.tables import ensure_parallelism, load
+from ..sources.tables import ensure_parallelism, file_signature, load, read_parquet
 
 
 @dataclass

@@ -22,9 +22,11 @@ from ._base import (
     _dec,
     _ensure_layout,
     ensure_parallelism,
+    file_signature,
     load,
     psi_bucketize,
     psi_from_counts,
+    read_parquet,
     register,
     sessionize_events,
     sql_round,
@@ -279,14 +281,7 @@ def q_events_hourly_incremental(spark, sf_dir):
     # would silently merge old partials with new deltas. name+size+mtime
     # of every source file is the standard cheap staleness signature.
     src_path = os.path.join(sf_dir, "events.parquet")
-    sig = [sf_dir]
-    if os.path.isdir(src_path):
-        for f in sorted(os.listdir(src_path)):
-            st = os.stat(os.path.join(src_path, f))
-            sig.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src_path):
-        st = os.stat(src_path)
-        sig.append(f"{st.st_size}:{st.st_mtime_ns}")
+    sig = [sf_dir] + (file_signature(src_path) if os.path.exists(src_path) else [])
     key = hashlib.md5("|".join(sig).encode()).hexdigest()[:10]
     # Cache name = <source tag>_<data signature>: the tag pins WHICH
     # source directory the cache derives from, the signature pins the
@@ -322,7 +317,7 @@ def q_events_hourly_incremental(spark, sf_dir):
             load(spark, sf_dir, "events").where(F.col("ts") < cutoff)
         ).write.mode("overwrite").parquet(d),
     )
-    base = spark.read.parquet(base_dir)
+    base = read_parquet(spark, base_dir)
     delta = agg_part(load(spark, sf_dir, "events").where(F.col("ts") >= cutoff))
     return (
         base.unionByName(delta)
@@ -1318,7 +1313,7 @@ def q_docs_token_entropy_by_lang(spark, sf_dir):
     # through the explode (same explode_outer discipline, see
     # functions/text.explode_words docstring)
     tok = (
-        kept.select("lang", F.explode_outer(T.words(F.col("text"))).alias("word"))
+        kept.select("lang", F.explode_outer(T.words("text")).alias("word"))
         .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))
         .groupBy("lang", "word")

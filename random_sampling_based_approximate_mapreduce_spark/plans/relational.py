@@ -20,6 +20,7 @@ from ._base import (
     codec_layout,
     content_keyed_text,
     load,
+    read_parquet,
     register,
     sql_round,
 )
@@ -511,18 +512,9 @@ def _line_word_estimates(sf) -> DataFrame:
 
 
 def _multifile_text_layout(spark: SparkSession, sf_dir: str) -> str:
-    """documents.text split across 8 .txt part files, one-time per sf_dir."""
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return _ensure_layout(
-        f"/tmp/rsmr_text_multifile_{key}",
-        lambda d: load(spark, sf_dir, "documents")
-        .select("text")
-        .repartition(8)
-        .write.mode("overwrite")
-        .text(d),
-    )
+    """documents.text as 8 content-keyed .txt part files, one-time per
+    sf_dir (':canon1' names the recipe, as for the codec layouts below)."""
+    return codec_layout("text_multifile", f"{sf_dir}:canon1", _docs_text(spark, sf_dir, parts=8))
 
 
 @register(
@@ -586,8 +578,8 @@ def q_word_count_file_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The byte-skip provers' layouts: documents.text as 4 content-keyed
 # parts per codec, one-time per sf_dir (':canon1' names the recipe).
-def _docs_text(spark: SparkSession, sf_dir: str, codec: str | None = None):
-    return content_keyed_text(lambda: load(spark, sf_dir, "documents").select("text"), 4, codec)
+def _docs_text(spark: SparkSession, sf_dir: str, codec: str | None = None, parts: int = 4):
+    return content_keyed_text(lambda: load(spark, sf_dir, "documents").select("text"), parts, codec)
 
 
 def _bz2_text_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -899,7 +891,7 @@ def _partitioned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("lang")
         .parquet(d),
     )
-    return spark.read.parquet(src)
+    return read_parquet(spark, src)
 
 
 @register(

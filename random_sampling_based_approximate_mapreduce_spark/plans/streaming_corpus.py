@@ -11,6 +11,7 @@ from __future__ import annotations
 from ._base import (
     F,
     T,
+    _CHEAP_PIPE_BYTES,
     _FP_SQL,
     _TOKEN_COUNT_SQL,
     _WORD_SPLIT_SQL,
@@ -222,7 +223,10 @@ def q_pii_redaction(spark, sf_dir):
 def q_heavy_hitter_tokens(spark, sf_dir):
     from ..operators import corpus as C
 
-    docs = ensure_parallelism(load(spark, sf_dir, "documents").select("text"))
+    # the cheap built-in tokenizer: a small input is not worth the shuffle
+    docs = ensure_parallelism(
+        load(spark, sf_dir, "documents").select("text"), skip_below_bytes=_CHEAP_PIPE_BYTES
+    )
     return C.heavy_hitter_tokens(docs, "text", k=50).select(
         F.col("token"), F.col("cnt")
     )

@@ -421,7 +421,7 @@ def q_tfidf_top_terms(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tok = (
-        docs.select("doc_id", F.explode_outer(T.words(F.col("text"))).alias("word"))
+        docs.select("doc_id", F.explode_outer(T.words("text")).alias("word"))
         .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))
     )
@@ -436,7 +436,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     # emits each (doc, word) once.
     df_tbl = (
         docs.select(
-            F.explode_outer(F.array_distinct(T.words(F.col("text")))).alias("word")
+            F.explode_outer(F.array_distinct(T.words("text"))).alias("word")
         )
         .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))

@@ -82,6 +82,7 @@ import zlib
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
 from .seam_text import SpanEntry, run_lines
+from .tables import remember
 from .unit_source import (
     DEFAULT_BATCH_BYTES,
     TextRung,
@@ -91,7 +92,6 @@ from .unit_source import (
     convert_parts,
     only_suffixes,
     read_sampled,
-    remember,
 )
 
 # SAM spec §4.1: gzip member, FEXTRA set, BC subfield carrying BSIZE.

@@ -14,6 +14,7 @@ from pyspark.sql import SparkSession
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
+from .tables import read_parquet
 
 def read_csv_sampled(
     spark: SparkSession,
@@ -61,7 +62,7 @@ def read_parquet_sampled(
 ) -> SampledFrame:
     """Parquet scan -> SampledFrame (column pruning/pushdown still apply
     below the Sample node — project/filter ``.df`` and check the plan)."""
-    return SampledFrame.from_dataframe(spark.read.parquet(path), config)
+    return SampledFrame.from_dataframe(read_parquet(spark, path), config)
 
 
 def pick_files(spark: SparkSession, path: str, file_ratio: float, seed: int = 42) -> tuple[list[str], float]:

@@ -42,6 +42,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame, compose_cluster_row_stage
+from .tables import parquet_schema, read_parquet
 from .unit_source import list_files, only_suffixes, pick_runs, unit_runs
 
 
@@ -138,7 +139,7 @@ def read_parquet_rowgroup_sampled(
     the fine ratio in ``row_config``, exactly as for file-level sampling.
     """
     spark.dataSource.register(RowGroupSampledParquetDataSource)
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     _, picked_rows, total_rows = pick_row_groups(path, rg_ratio, seed)
     achieved = picked_rows / total_rows if total_rows else 1.0
     df = (
@@ -251,7 +252,7 @@ def read_parquet_rowgroup_pruned(
         path, rg_ratio, id_col, seed, band_size=band_size
     )
     achieved = picked_rows / total_rows if total_rows else 1.0
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     cond = None
     for lo, hi in ranges:
         arm = F.col(id_col).between(F.lit(lo), F.lit(hi))

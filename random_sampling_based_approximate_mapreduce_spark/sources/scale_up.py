@@ -31,6 +31,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import file_signature
+
 # staging dirs older than this are reclaimed even if a process with the
 # builder's PID is alive (PID recycling; ADVICE r7) — generous: a real
 # 10-copy sf0.1 build takes ~1 minute on the bench box
@@ -91,27 +93,13 @@ def replicate_table(df: DataFrame, keys: tuple[str, ...], copies: int) -> DataFr
 _LAYOUT_VERSION = 2
 
 
-def _stat_sig(path: str) -> str:
-    # name+size+mtime_ns per file (dir layouts included) — the same cheap
-    # staleness signature the incremental-rollup cache uses
-    parts = []
-    if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            st = os.stat(os.path.join(path, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(path)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return ",".join(parts)
-
-
 def _signature(src_dir: str, copies: int, tables: tuple[str, ...]) -> str:
     # fingerprint EVERY replicated table (not a proxy file): regenerating
     # events.parquet alone must invalidate an events replica, and a
     # corpus-only source dir need not contain lineitem at all
     raw = "|".join(
         [os.path.abspath(src_dir)]
-        + [f"{t}={_stat_sig(os.path.join(src_dir, f'{t}.parquet'))}" for t in tables]
+        + [f"{t}={','.join(file_signature(os.path.join(src_dir, f'{t}.parquet')))}" for t in tables]
         + [str(copies), ",".join(tables), f"v{_LAYOUT_VERSION}"]
     )
     import hashlib

@@ -3,11 +3,34 @@
 At cluster scale these would be catalog tables; filters/projections applied
 after ``load`` are pushed into the parquet scan by Catalyst (verify with
 ``.explain`` — PushedFilters/ReadSchema).
+
+Schema cache (``parquet_schema`` / ``read_parquet``, used by ``load`` and
+every other local parquet read that needs a schema before it plans).
+Spark's parquet schema inference runs a one-task Spark job per read
+(``mergeSchemasInParallel``); a read given a known schema runs none. So:
+
+- What is cached: the inferred ``StructType`` only, never a DataFrame.
+  Each read still builds a fresh relation with fresh attribute IDs; a
+  shared DataFrame would alias them when one query loads a table twice
+  (a self-join could then not tell its two sides apart).
+- The key: the absolute path, ``file_signature`` of the path (name, size
+  and ``st_mtime_ns`` of each entry of a directory layout, size and
+  ``st_mtime_ns`` of a single file), and the session values of the confs
+  that change what inference returns (``_INFERENCE_CONFS``). Paths that
+  are not local (URIs, globs, missing paths) are never cached; they read
+  through Spark's own inference and its own errors.
+- Blind spot: an in-place rewrite that keeps both the size and the
+  ``st_mtime_ns`` of every entry is not detected, and neither is a
+  change inside a nested directory that leaves the directory's own
+  size and mtime as they were.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -23,6 +46,66 @@ TABLES = (
 )
 
 
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+_CACHE_CAP = 256  # entries kept per process by each ``remember`` cache
+
+
+def remember(cache: dict, key, value):
+    """Store ``value`` in a bounded per-process cache (Spark reuses Python
+    workers, and a driver re-plans the same tables), evicting the oldest
+    entry first so it holds at most ``_CACHE_CAP`` — not clear(), which
+    wipes every hot entry; a rewritten file leaves its stale keys behind."""
+    while len(cache) >= _CACHE_CAP:
+        cache.pop(next(iter(cache)))
+    cache[key] = value
+    return value
+
+
+def file_signature(path: str) -> list[str]:
+    """Cheap staleness signature of a local file or directory layout:
+    ``name:size:mtime_ns`` of each directory entry in name order, or
+    ``size:mtime_ns`` of a single file. Raises ``OSError`` if ``path``
+    does not exist."""
+    if os.path.isdir(path):
+        out = []
+        for f in sorted(os.listdir(path)):
+            st = os.stat(os.path.join(path, f))
+            out.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+        return out
+    st = os.stat(path)
+    return [f"{st.st_size}:{st.st_mtime_ns}"]
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet at ``path``, inferred once
+    per key (see the module docstring for the cache contract)."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path).schema
+    key = (
+        os.path.abspath(path),
+        tuple(file_signature(path)),
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = remember(_SCHEMA_CACHE, key, spark.read.parquet(path).schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job once
+    the path's schema is cached."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -33,7 +116,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from ..session import configure_existing
 
     configure_existing(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (reads as long
         # under nanosAsLong) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)

@@ -26,7 +26,6 @@ from .seam_text import SpanEntry
 
 DEFAULT_BATCH_BYTES = 4 << 20
 _BATCH_ROWS = 8192
-_TABLE_CACHE_CAP = 256  # unit tables kept per worker
 
 
 def list_files(path: str, check=None, what: str = "", sidecar: str = "") -> list[str]:
@@ -67,17 +66,6 @@ def only_suffixes(suffixes: tuple[str, ...], refusal: str):
             raise ValueError(f"{refusal} (got {bad[:3]})")
 
     return check
-
-
-def remember(cache: dict, key, value):
-    """Store a unit table in a per-worker cache (Spark reuses Python
-    workers; every task of a file needs its table), evicting the oldest
-    entry past ``_TABLE_CACHE_CAP`` — not clear(), which wipes every hot
-    entry."""
-    while len(cache) > _TABLE_CACHE_CAP:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
-    return value
 
 
 def convert_parts(src_dir: str, dst_dir: str, suffix: str, write) -> list[str]:

@@ -84,6 +84,7 @@ import struct
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
 from .seam_text import SpanEntry, run_lines
+from .tables import remember
 from .unit_source import (
     DEFAULT_BATCH_BYTES,
     TextRung,
@@ -92,7 +93,6 @@ from .unit_source import (
     convert_parts,
     only_suffixes,
     read_sampled,
-    remember,
 )
 
 SKIPPABLE_MAGIC = 0x184D2A5E
@@ -120,7 +120,7 @@ def parse_seek_table(path: str) -> tuple[FrameEntry, ...]:
     Raises ValueError (with the fallback ladder) for files that are not
     seekable-format zstd — including plain single-frame .zst.
 
-    Cached per (path, size, mtime_ns) (``unit_source.remember``): Spark
+    Cached per (path, size, mtime_ns) (``tables.remember``): Spark
     reuses Python workers across tasks, and every frame partition of a
     file needs the same table — without the cache a 100k-frame file
     would pay an O(frames) tail read per task, O(frames^2) across its

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import parquet_schema
+
 _STATE_TTL_MS = 7 * 24 * 3600 * 1000
 
 
@@ -49,7 +51,7 @@ def attribution_stream(spark, sf_dir: str) -> DataFrame:
     from .sampled_stream import _stream_source_dir
 
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     # Ordering enforcement (ADVICE r4): the value-oracle identity needs
     # each user's history sorted within ONE micro-batch; maxFilesPerTrigger
     # must therefore stay UNSET here (a file source with availableNow and

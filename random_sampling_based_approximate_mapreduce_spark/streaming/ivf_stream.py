@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import _as_double, assign_ivf, train_ivf_centroids
+from ..sources.tables import parquet_schema
 
 
 class StreamingIVFIndex:
@@ -103,7 +104,7 @@ def streaming_ivf_index(
     """
     import tempfile
 
-    schema = spark.read.parquet(source_dir).schema
+    schema = parquet_schema(spark, source_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

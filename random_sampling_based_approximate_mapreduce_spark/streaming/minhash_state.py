@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from ..functions import text as T
 from ..functions.hashing import MERSENNE_P, hash64, minhash_coefficients
 from ..operators.dedup import NUM_BANDS, NUM_HASHES, ROWS_PER_BAND, SHINGLE_K
+from ..sources.tables import parquet_schema
 
 _STATE_TTL_MS = 7 * 24 * 3600 * 1000  # evict buckets 7 days past the watermark
 
@@ -227,7 +228,7 @@ def dedup_minhash_stream_run(spark, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(staging),
     )
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     verdicts = dedup_stream_minhash(stream, watermark="365 days")
     name = "rsmr_stream_minhash_dedup"

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sampling.config import SamplingConfig
+from ..sources.tables import parquet_schema
 
 
 _HASH_BUCKETS = 1_000_000
@@ -194,7 +195,7 @@ def events_hourly_stream(spark, sf_dir: str, *, sampled: bool = False, ratio: fl
     """
     name = "rsmr_stream_events_hourly" + ("_sampled" if sampled else "")
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     if sampled:
         stream = sample_stream(stream, SamplingConfig(ratio=ratio, seed=42), key_cols=["event_id"])
@@ -249,7 +250,7 @@ def user_sessions_stream(spark, sf_dir: str) -> DataFrame:
     merging-session state store and the plan are identical in both modes.
     """
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     agg = (
         stream.groupBy(
@@ -376,7 +377,7 @@ def value_psi_counts_stream(spark, sf_dir: str) -> "DataFrame":
     from ..operators.quality import psi_bucketize
 
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     agg = psi_bucketize(stream).groupBy("bucket").agg(
         F.sum("is_ref").alias("n_ref"),
@@ -419,7 +420,7 @@ def stratified_weighted_counts_stream(
     from ..sampling.deterministic import stratified_hash_weight
 
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     keyed = stream.withColumn("__k", F.col("event_id").cast("string"))
     w = stratified_hash_weight("event_type", "__k", fractions, seed=seed)
@@ -471,7 +472,7 @@ def stratified_weighted_mean_stream(
     from ..sampling.deterministic import stratified_hash_weight
 
     src = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = spark.readStream.schema(schema).parquet(src)
     keyed = stream.withColumn("__k", F.col("event_id").cast("string"))
     w = stratified_hash_weight("event_type", "__k", fractions, seed=seed)

@@ -178,7 +178,7 @@ class TestTokenEntropy:
 
         tok = (
             T.drop_digit_lines(docs.select("text"), "text")
-            .select(F.explode_outer(T.words(F.col("text"))).alias("word"))
+            .select(F.explode_outer(T.words("text")).alias("word"))
             .where(F.length("word") > 0)
             .where(~F.col("word").rlike("^[0-9]+$"))
             .groupBy("word")

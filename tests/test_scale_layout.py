@@ -110,21 +110,20 @@ class TestCatalogLayoutQueries:
     def test_multifile_text_scan_is_parallel(self, spark, sf_dir):
         """The 8-file text layout yields >= 8 scan partitions without any
         repartition in the query."""
+        import glob
+        import os
+
+        from random_sampling_based_approximate_mapreduce_spark.plans import relational
         from random_sampling_based_approximate_mapreduce_spark.plans.catalog import QUERIES
 
         QUERIES["word_count_multifile"].spark(spark, sf_dir).count()  # materialize layout
-        import glob
-        import hashlib
-
-        key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        files = glob.glob(f"/tmp/rsmr_text_multifile_{key}/part-*")
-        assert len(files) == 8
+        layout = relational._multifile_text_layout(spark, sf_dir)
+        files = glob.glob(f"{layout}/part-*")
+        assert len(files) == 8 and all(os.path.getsize(f) > 0 for f in files)
         # tiny files are bin-packed (maxPartitionBytes/openCostInBytes), so
         # the floor is the session's parallelism, not the file count
         floor = min(8, spark.sparkContext.defaultParallelism)
-        assert (
-            spark.read.text(f"/tmp/rsmr_text_multifile_{key}").rdd.getNumPartitions() >= floor
-        )
+        assert spark.read.text(layout).rdd.getNumPartitions() >= floor
 
 
 class TestRelationalPlanShapes:

@@ -97,11 +97,12 @@ def _data_files(d):
     return out
 
 
-@pytest.mark.parametrize("layout", ["_bz2_text_layout", "_zstd_text_layout"])
+@pytest.mark.parametrize("layout", ["_bz2_text_layout", "_zstd_text_layout", "_multifile_text_layout"])
 def test_documents_layout_rebuild_is_identical(spark, sf_dir, tmp_path, monkeypatch, layout):
     """Two builds of a documents-text layout into two directories give
     the same file names and bytes, so the path-keyed picks of
-    word_count_{bzip2,zstd,gzip}_sampled repeat across rebuilds."""
+    word_count_{bzip2,zstd,gzip,byteblock,file}_sampled repeat across
+    rebuilds."""
     from random_sampling_based_approximate_mapreduce_spark.plans import relational
 
     builds = []
