@@ -9,10 +9,12 @@ so results are timezone-stable and DuckDB-oracle-comparable.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def get_spark(
@@ -32,7 +34,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # testdata events.parquet stores TIMESTAMP(NANOS); read as long and
         # convert in sources.tables.load (Spark has no ns timestamp type)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(_NANOS_AS_LONG, "true")
         # With CSV column pruning, a count() over a DROPMALFORMED csv scan
         # parses ZERO columns and malformed rows are silently kept — row
         # counts become plan-dependent. An AQP engine's observed totals
@@ -84,7 +86,15 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass  # static in some builds; tables.load handles both readings
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    except Exception as exc:
+        # static in some builds. tables.load still reads MICROS data, but
+        # with the conf off Spark refuses a TIMESTAMP(NANOS) column at
+        # schema inference, so say so instead of failing later
+        warnings.warn(
+            f"could not set {_NANOS_AS_LONG} ({exc}); Spark will refuse "
+            "parquet TIMESTAMP(NANOS) columns at schema inference",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return spark

@@ -31,7 +31,7 @@ Format facts used (all from the public SAM spec §4.1):
 Sampling semantics: BLOCKS are the clusters. ``pick_blocks``
 hash-picks block indices deterministically (md5 of (seed, file, block
 index) — the shared ``pick_units`` algebra, never-empty per pick) from
-the header hop alone. A picked block becomes one partition that seeks
+the header hop alone. A picked block is read by seeking
 straight to its compressed offset and inflates ONLY itself (stdlib
 zlib; CRC32 and ISIZE are VERIFIED by zlib's gzip-wrapper decode, a
 check the zstd rung cannot afford without xxhash). Unpicked blocks are
@@ -55,13 +55,14 @@ gzip stream cannot be honest.
 
 100 TB shape: the BLOCK is the sampling unit (finer units keep the
 achieved ratio near r — the spec's 64 KiB ceiling gives this rung the
-lowest pick floor on the ladder), but the PARTITION is a batch of
+lowest pick floor on the ladder), but the scan's row is a batch of
 picked blocks packed to ``batch_bytes`` (~4 MB default) of compressed
-data per task, like a Hadoop split — one task per 64 KiB block would
-mean ~1.6B tasks at 100 TB and per-task overhead would swamp the skip
-win (measured: an unbatched x4000 run scheduled 11k tasks for a 250 MB
-pick). The hop is O(blocks) tiny reads driver-side, cached per worker
-like the zstd seek table — and when an htslib ``.gzi`` SIDECAR INDEX
+data, like a Hadoop split, and at most ``defaultParallelism`` tasks
+share the rows — one task per 64 KiB block would mean ~1.6B tasks at
+100 TB and per-task overhead would swamp the skip win (measured: an
+unbatched x4000 run scheduled 11k tasks for a 250 MB pick). The hop
+is O(blocks) tiny reads driver-side, cached per worker like the zstd
+seek table — and when an htslib ``.gzi`` SIDECAR INDEX
 sits next to the file (the public format ``bgzip -r`` writes; this
 module's writers emit it with ``index=True``), the scan drops to O(1)
 metadata reads per file (round 13), closing the pick-cost asymmetry
@@ -86,8 +87,6 @@ from .tables import remember
 from .unit_source import (
     DEFAULT_BATCH_BYTES,
     TextRung,
-    UnitTextDataSource,
-    UnitTextReader,
     cluster_bytes,
     convert_parts,
     only_suffixes,
@@ -705,14 +704,12 @@ def suggest_run_blocks(
 
 
 BGZF = TextRung(
-    name="bgzf_text",
     table=lambda path, _unit_bytes: scan_blocks(path),
     read_run=read_block_run_lines,
     check=only_suffixes((".gz", ".bgz", ".bgzf"), "bgzf_text expects .gz/.bgz/.bgzf files"),
     unit_tag="blk",
     run_tag="run",
-    run_option="run_blocks",
-    batched=True,
+    run_keyword="run_blocks",
     pick_empty=False,
     sidecar=GZI_SUFFIX,  # metadata beside its block file, never data
 )
@@ -740,28 +737,6 @@ def pick_blocks(
     reader are unchanged; a run's blocks are adjacent, so the reader's
     contiguity merge already decodes each picked run in one pass."""
     return BGZF.pick(path, ratio, seed, run=run_blocks)
-
-
-def batch_picked_blocks(
-    picked: list[tuple[str, int]], batch_bytes: int = DEFAULT_BATCH_BYTES
-) -> list[tuple[str, list[int]]]:
-    """Pack picked (file, block_idx) units into per-task batches of
-    ~``batch_bytes`` compressed bytes, never crossing a file boundary
-    (a task holds one open file). The pick stays per-BLOCK — batching
-    changes scheduling, not sampling semantics; tests pin that the
-    batched read equals the per-block ownership oracle exactly."""
-    return BGZF.batches(picked, batch_bytes)
-
-
-class BgzfTextReader(UnitTextReader):
-    rung = BGZF
-
-
-class BgzfTextDataSource(UnitTextDataSource):
-    """format ``bgzf_text``; options: path, ratio, seed, batch_bytes,
-    run_blocks."""
-
-    reader_class = BgzfTextReader
 
 
 def read_text_bgzf_sampled(
@@ -792,6 +767,6 @@ def read_text_bgzf_sampled(
     example). Deliberately NOT applied automatically: the run key
     differs from the block key, so a default change would silently
     change which rows a seeded sample returns."""
-    knobs = {"batch_bytes": batch_bytes, "run_blocks": run_blocks}
-    source = BgzfTextDataSource
-    return read_sampled(spark, source, path, block_ratio, seed, row_config, **knobs)
+    return read_sampled(
+        spark, BGZF, path, block_ratio, seed, row_config, run=run_blocks, batch_bytes=batch_bytes
+    )

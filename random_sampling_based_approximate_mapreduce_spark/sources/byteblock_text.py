@@ -6,7 +6,7 @@ reader seeks past an unsampled page without buffering it
 tag scan, not a parse — but it still READS every byte of the stream.
 This source goes one step further down the same axis: hash-pick BYTE
 BLOCKS of each file driver-side (from file sizes alone — no I/O), and
-make the picked blocks the scan's partitions. Unpicked blocks are never
+make the picked blocks the scan's only work. Unpicked blocks are never
 opened, never read, never decoded — the text analog of the parquet
 row-group skipper (sources/rowgroup_parquet.py), completing the engine's
 cluster-sampling ladder:
@@ -25,8 +25,8 @@ discards the partial line it lands in (the previous block's reader
 finishes it, whether or not that block was picked), then emits lines
 until its end offset. Union over all blocks at ratio 1.0 is exactly the
 file, no loss, no duplication (tests/test_byteblock_text.py proves the
-partition-boundary algebra). The pick, the Spark source and the
-sampled-read wrapper are the shared ``unit_source`` ones.
+partition-boundary algebra). The pick, the batcher and the
+``mapInArrow`` scan are the shared ``unit_source`` ones.
 
 Estimator contract: blocks are CLUSTERS accepted independently with
 probability ``ratio`` (md5 of (seed, file, block index) — deterministic,
@@ -46,10 +46,13 @@ there — round 9); other codecs go to ``read_text_file_sampled``
 (file-level clusters) / ``read_text_sampled`` (row Bernoulli), which
 handle them transparently.
 
-100 TB shape: one picked block = one task = one contiguous ~``block_bytes``
-read — the natural text split. The pick is a driver-side stat() pass
-(O(files)); at extreme file counts distribute the listing like any
-catalog. Arrow batches carry rows into the JVM columnar-side.
+100 TB shape: each run of adjacent picked blocks is one contiguous
+read; picked blocks are packed into ~4 MiB scan rows (the shared
+``batch_units`` rule) spread over at most ``defaultParallelism`` tasks,
+so a small ``block_bytes`` does not multiply tasks. The pick is a
+driver-side stat() pass (O(files)); at extreme file counts distribute
+the listing like any catalog. Arrow batches carry rows into the JVM
+columnar-side.
 """
 
 from __future__ import annotations
@@ -57,14 +60,7 @@ from __future__ import annotations
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
 from .seam_text import SpanEntry, run_lines
-from .unit_source import (
-    ByteSpans,
-    TextRung,
-    UnitTextDataSource,
-    UnitTextReader,
-    pick_spans,
-    read_sampled,
-)
+from .unit_source import ByteSpans, TextRung, pick_spans, read_sampled
 
 DEFAULT_BLOCK_BYTES = 16 << 20
 
@@ -113,13 +109,10 @@ def read_block_run(path: str, table, start: int, stop: int) -> list[str]:
 
 
 BYTEBLOCK = TextRung(
-    name="byteblock_text",
     table=ByteSpans,
     read_run=read_block_run,
     check=_refuse_compressed,
     unit_tag="blk",
-    unit_option="block_bytes",
-    default_unit_bytes=DEFAULT_BLOCK_BYTES,
 )
 
 
@@ -133,16 +126,6 @@ def pick_blocks(
     raw byte offsets — the READER aligns them to line boundaries.
     """
     return pick_spans(BYTEBLOCK, path, ratio, block_bytes, seed)
-
-
-class ByteBlockTextReader(UnitTextReader):
-    rung = BYTEBLOCK
-
-
-class ByteBlockTextDataSource(UnitTextDataSource):
-    """format ``byteblock_text``; options: path, ratio, block_bytes, seed."""
-
-    reader_class = ByteBlockTextReader
 
 
 def read_text_byteblock_sampled(
@@ -160,5 +143,4 @@ def read_text_byteblock_sampled(
     ``row_config`` composes a within-block Bernoulli row stage (two-stage
     design, same algebra as the file-level and row-group samplers).
     """
-    source = ByteBlockTextDataSource
-    return read_sampled(spark, source, path, block_ratio, seed, row_config, block_bytes=block_bytes)
+    return read_sampled(spark, BYTEBLOCK, path, block_ratio, seed, row_config, block_bytes)

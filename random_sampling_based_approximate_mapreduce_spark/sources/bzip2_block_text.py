@@ -55,7 +55,7 @@ Honesty notes:
   there. bzip2 is the codec where the reference's semantics can be met
   honestly.
 
-100 TB shape: one picked range = one task = one contiguous
+100 TB shape: one picked range = one contiguous
 ~``range_bytes`` compressed read + a numpy bit-shift magic scan (8
 shifted copies of the range) + per-block decode (itself a numpy bulk
 bit-realign + one C ``bz2.decompress``). Decode dominates, as it
@@ -74,8 +74,6 @@ from ..sampling.sampled_frame import SampledFrame
 from .unit_source import (
     ByteSpans,
     TextRung,
-    UnitTextDataSource,
-    UnitTextReader,
     cluster_bytes,
     only_suffixes,
     pick_spans,
@@ -383,9 +381,10 @@ def suggest_range_bytes(
     the CORPUS: the range is the sampling unit, so the expected picked
     count is total_bytes * ratio / range_bytes — too-large ranges hit
     the pick floor and quantization (few units), too-small ranges pay
-    one task per pick plus whole-bzip2-block decode waste (a range
-    shorter than its ~100-250 KiB compressed block decodes the block
-    anyway). The x1000 grid
+    whole-bzip2-block decode waste (a range shorter than its ~100-250
+    KiB compressed block decodes the block anyway; when the grid below
+    was measured each pick was also its own task, where picks now share
+    ~4 MiB scan rows). The x1000 grid
     (docs/bench/LOG_BZIP2_RANGE_GRID_x1000.json, 2.5 GB corpus) pins
     both walls: at r=0.1 cold speedup rises 1.04x -> 6.9x from 64 KiB
     to 4 MiB ranges; at r=0.001 it falls 50.6x -> 15.2x from 256 KiB
@@ -547,13 +546,10 @@ def _read_range_run(path: str, table, start: int, stop: int) -> list[str]:
 
 
 BZIP2 = TextRung(
-    name="bzip2_block_text",
     table=ByteSpans,
     read_run=_read_range_run,
     check=_refuse_non_bz2,
     unit_tag="bzr",
-    unit_option="range_bytes",
-    default_unit_bytes=DEFAULT_RANGE_BYTES,
 )
 
 
@@ -569,16 +565,6 @@ def pick_ranges(
     picked_bytes, total_bytes).
     """
     return pick_spans(BZIP2, path, ratio, range_bytes, seed)
-
-
-class Bzip2BlockTextReader(UnitTextReader):
-    rung = BZIP2
-
-
-class Bzip2BlockTextDataSource(UnitTextDataSource):
-    """format ``bzip2_block_text``; options: path, ratio, range_bytes, seed."""
-
-    reader_class = Bzip2BlockTextReader
 
 
 def read_text_bzip2_sampled(
@@ -604,5 +590,4 @@ def read_text_bzip2_sampled(
     the pick key, so a default change would silently change which
     lines a seeded sample returns.
     """
-    source = Bzip2BlockTextDataSource
-    return read_sampled(spark, source, path, range_ratio, seed, row_config, range_bytes=range_bytes)
+    return read_sampled(spark, BZIP2, path, range_ratio, seed, row_config, range_bytes)

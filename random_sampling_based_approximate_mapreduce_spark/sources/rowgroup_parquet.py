@@ -27,23 +27,22 @@ variance adds to the Bernoulli bound exactly as documented for
 file-level sampling (sources/text.read_text_file_sampled); compose a
 within-group row sample for a two-stage design.
 
-Implementation: a Spark Python DataSource (same plug-in surface as
-``sampled_text_source``) whose partitions are the PICKED row groups; each
-task reads its row group via pyarrow and yields Arrow record batches, so
-the exchange into the JVM is columnar (Arrow), not row-by-row. At
-cluster scale one row group is one task — the natural parquet split —
-and the footer pass is a driver-side metadata read (at very large file
-counts, distribute it or use a ``_metadata`` sidecar).
+Implementation: the driver's pick becomes ``(path, rg)`` rows of the
+shared ``unit_source.scan_units`` scan; ``mapInArrow`` reads each
+picked row group via pyarrow and yields its Arrow record batches, so the
+exchange into the JVM is columnar (Arrow), not row-by-row. The rows
+spread over at most ``defaultParallelism`` tasks in pick order, and the
+footer pass is a driver-side metadata read (at very large file counts,
+distribute it or use a ``_metadata`` sidecar).
 """
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame, compose_cluster_row_stage
+from . import unit_source
 from .tables import parquet_schema, read_parquet
-from .unit_source import list_files, only_suffixes, pick_runs, unit_runs
+from .unit_source import list_files, only_suffixes, scan_units, unit_runs
 
 
 def _footers(path: str):
@@ -70,57 +69,13 @@ def pick_row_groups(
         (f, [(rg, meta.row_group(rg).num_rows) for rg in range(meta.num_row_groups)])
         for f, meta in _footers(path)
     ]
-    return pick_runs(by_file, rg_ratio, lambda f, rg: f"{seed}:{f}#rg{rg}")
+    return unit_source.pick_runs(by_file, rg_ratio, lambda f, rg: f"{seed}:{f}#rg{rg}")
 
 
-class _RowGroupPartition(InputPartition):
-    def __init__(self, path: str, row_group: int):
-        self.path = path
-        self.row_group = row_group
+def _read_row_group(path: str, rg: int):
+    import pyarrow.parquet as pq
 
-
-class RowGroupSampledParquetDataSource(DataSource):
-    """format name ``rowgroup_parquet``; options: path, ratio, seed.
-
-    The pick is recomputed in ``partitions()`` with the same hash as
-    ``pick_row_groups`` — deterministic, so a helper that already called
-    ``pick_row_groups`` for the estimator metadata sees the same sample.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "rowgroup_parquet"
-
-    def schema(self) -> str:
-        raise ValueError(
-            "rowgroup_parquet has no intrinsic schema; pass .schema(...) "
-            "(read_parquet_rowgroup_sampled does this from the footer)"
-        )
-
-    def reader(self, schema) -> "RowGroupSampledParquetReader":
-        return RowGroupSampledParquetReader(self.options, schema)
-
-
-class RowGroupSampledParquetReader(DataSourceReader):
-    def __init__(self, options, schema):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("rowgroup_parquet requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-        self.spark_schema = schema
-
-    def partitions(self):
-        picked, _, _ = pick_row_groups(self.path, self.ratio, self.seed)
-        return [_RowGroupPartition(f, rg) for f, rg in picked]
-
-    def read(self, partition: _RowGroupPartition):
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(partition.path)
-        # yield Arrow batches: columnar transfer into the JVM, no
-        # per-row Python conversion
-        yield from pf.iter_batches(row_groups=[partition.row_group])
+    return pq.ParquetFile(path).iter_batches(row_groups=[rg])
 
 
 def read_parquet_rowgroup_sampled(
@@ -138,18 +93,12 @@ def read_parquet_rowgroup_sampled(
     cluster sampling in one call): keep the coarse skip ratio here and
     the fine ratio in ``row_config``, exactly as for file-level sampling.
     """
-    spark.dataSource.register(RowGroupSampledParquetDataSource)
+    import pyarrow as pa
+
     schema = parquet_schema(spark, path)
-    _, picked_rows, total_rows = pick_row_groups(path, rg_ratio, seed)
+    picked, picked_rows, total_rows = pick_row_groups(path, rg_ratio, seed)
     achieved = picked_rows / total_rows if total_rows else 1.0
-    df = (
-        spark.read.format("rowgroup_parquet")
-        .schema(schema)
-        .option("path", path)
-        .option("ratio", str(rg_ratio))
-        .option("seed", str(seed))
-        .load()
-    )
+    df = scan_units(spark, picked, pa.field("rg", pa.int64()), _read_row_group, schema)
     return compose_cluster_row_stage(df, achieved, seed, row_config)
 
 
@@ -198,7 +147,9 @@ def rowgroup_id_ranges(
     def _band_key(f: str, idx: int) -> str:
         return f"{seed}:{f}#rg{idx}" if band_size == 1 else f"{seed}:{f}#band{idx}x{band_size}"
 
-    picked_units, picked_rows, total_rows = pick_runs(by_file, rg_ratio, _band_key, band_size)
+    picked_units, picked_rows, total_rows = unit_source.pick_runs(
+        by_file, rg_ratio, _band_key, band_size
+    )
     picked_set = set(picked_units)
     bands = []
     for f, j, rgs, _ in unit_runs(by_file, band_size):
@@ -235,16 +186,18 @@ def read_parquet_rowgroup_pruned(
     OR-of-BETWEEN filter that Catalyst pushes into the parquet source
     (``PushedFilters`` in the plan); parquet row-group statistics then
     eliminate every unpicked row group WITHOUT reading its pages. Unlike
-    the Python-source path this keeps the whole scan JVM-side and
-    vectorized — measured the only variant that beats the ``df.sample``
-    scan floor on a page-cached local disk (docs/SCALE.md).
+    the ``mapInArrow`` read of ``read_parquet_rowgroup_sampled`` (a
+    Python worker decodes each picked row group) this keeps the whole
+    scan JVM-side and vectorized — measured the only variant that beats
+    the ``df.sample`` scan floor on a page-cached local disk
+    (docs/SCALE.md).
 
     Scale note: one BETWEEN arm per picked row group is fine up to ~10^3
     arms; at 100 TB pass ``band_size`` > 1 to pick contiguous row-group
     BANDS (coarser clusters, same estimator, one arm per band) so the
-    predicate stays small, or use the direct reader whose partition list
-    is never a predicate. ``row_config`` adds the within-group Bernoulli
-    stage (two-stage design in one call).
+    predicate stays small, or use the direct reader whose picked row
+    groups are never a predicate. ``row_config`` adds the within-group
+    Bernoulli stage (two-stage design in one call).
     """
     from pyspark.sql import functions as F
 

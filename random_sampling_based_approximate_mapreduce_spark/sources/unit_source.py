@@ -4,8 +4,9 @@ Each rung cuts a file into ordered UNITS — raw byte blocks, compressed
 bzip2 ranges, seekable-zstd frames, BGZF blocks, parquet row groups —
 and samples whole units as clusters (the block is the sampling unit).
 What every rung shares lives here once: the file lister, the run pick
-over ``sampling.deterministic.pick_units``, the per-file task batcher,
-the Spark source of the text rungs and the ``suggest_*`` cluster rule.
+over ``sampling.deterministic.pick_units``, the per-file batcher,
+the ``mapInArrow`` scan over the driver's pick and the ``suggest_*``
+cluster rule.
 A text codec describes itself with a ``TextRung``: its unit table, its
 run reader (decode + ``seam_text`` line ownership) and its key tags.
 """
@@ -17,8 +18,6 @@ import os
 from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Callable
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame, compose_cluster_row_stage
@@ -109,25 +108,20 @@ class ByteSpans(Sequence):
 
 @dataclass(frozen=True)
 class TextRung:
-    """One text codec under the shared source. ``table(path,
+    """One text codec under the shared scan. ``table(path,
     unit_bytes)`` lists a file's units; ``read_run(path, table, start,
     stop)`` returns the lines OWNED by units ``[start, stop)``; pick keys
     are ``{seed}:{path}#{unit_tag}{idx}`` per unit and
-    ``{seed}:{path}#{run_tag}{K}:{j}`` per run of K > 1. ``unit_option``
-    / ``run_option`` name the DataSource knob; ``batched`` rungs pack
-    picks into ``batch_bytes`` tasks (else one unit per task);
-    ``pick_empty`` keeps data-less units as per-unit candidates."""
+    ``{seed}:{path}#{run_tag}{K}:{j}`` per run of K > 1, ``run_keyword``
+    naming the run-width argument in errors; ``pick_empty`` keeps
+    data-less units as per-unit candidates."""
 
-    name: str
     table: Callable[[str, int], Sequence[SpanEntry]]
     read_run: Callable[[str, Sequence[SpanEntry], int, int], list[str]]
     check: Callable[[list[str]], None]
     unit_tag: str
     run_tag: str = ""
-    unit_option: str = ""
-    default_unit_bytes: int = 0
-    run_option: str = ""
-    batched: bool = False
+    run_keyword: str = ""
     pick_empty: bool = True
     sidecar: str = ""
 
@@ -139,7 +133,7 @@ class TextRung:
         compressed bytes; runs of ``run`` adjacent data units are the
         clusters. Never empty."""
         if run < 1:
-            raise ValueError(f"{self.run_option} must be >= 1, got {run}")
+            raise ValueError(f"{self.run_keyword} must be >= 1, got {run}")
         tables = [(f, self.table(f, unit_bytes)) for f in self.files(path)]
         by_file = [(f, [(i, e.c_size) for i, e in enumerate(t)]) for f, t in tables]
         if run > 1 or not self.pick_empty:
@@ -189,10 +183,10 @@ def pick_spans(rung: TextRung, path: str, ratio: float, unit_bytes: int, seed: i
 
 
 def batch_units(picked, size_of, batch_bytes: int = DEFAULT_BATCH_BYTES) -> list[tuple[str, list[int]]]:
-    """Picked (file, idx) units packed into per-task batches of
+    """Picked (file, idx) units packed, in pick order, into batches of
     ~``batch_bytes`` (``size_of(file, idx)`` each; a batch overshoots by
-    at most its last unit), never crossing a file. Scheduling only: the
-    sample is the pick's."""
+    at most its last unit), never crossing a file: one scan row each.
+    Scheduling only: the sample is the pick's."""
     if batch_bytes < 1:
         raise ValueError(f"batch_bytes must be >= 1, got {batch_bytes}")
     out: list[tuple[str, list[int]]] = []
@@ -219,96 +213,71 @@ def contiguous_runs(idxs: list[int]) -> list[tuple[int, int]]:
     return runs
 
 
-class UnitBatch(InputPartition):
-    """One task: picked units ``idxs`` of ``path`` within span
-    ``[start, end)`` (the whole span when ``idxs`` is omitted)."""
+def read_units(rung: TextRung, path: str, idxs: list[int], unit_bytes: int):
+    """The lines owned by ``path``'s picked units ``idxs`` (ascending),
+    as ``value`` record batches of at most ``_BATCH_ROWS`` rows; each
+    contiguous run is read in one pass."""
+    import pyarrow as pa
 
-    def __init__(self, path: str, start: int, end: int, idxs: list[int] | None = None):
-        self.path, self.start, self.end = path, start, end
-        self.idxs = list(range(start, end)) if idxs is None else idxs
-
-
-class UnitTextReader(DataSourceReader):
-    """The reader of every text rung (a codec subclass sets ``rung``).
-    Options: path, ratio, seed, the rung's knob, and batch_bytes on
-    batched rungs."""
-
-    rung: TextRung
-
-    def __init__(self, options):
-        rung = self.rung
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError(f"{rung.name} requires .option('path', ...)")
-        self.ratio = float(options.get("ratio", "1.0"))
-        self.seed = int(options.get("seed", "42"))
-
-        def knob(name: str, default: int) -> int:
-            return int(options.get(name, str(default))) if name else default
-
-        self.unit_bytes = knob(rung.unit_option, rung.default_unit_bytes)
-        self.run = knob(rung.run_option, 1)
-        self.batch_bytes = knob("batch_bytes", DEFAULT_BATCH_BYTES) if rung.batched else 0
-
-    def partitions(self):
-        rung = self.rung
-        picked, _, _ = rung.pick(self.path, self.ratio, self.seed, self.unit_bytes, self.run)
-        if not rung.batched:
-            return [UnitBatch(f, i, i + 1) for f, i in picked]
-        batches = rung.batches(picked, self.batch_bytes, self.unit_bytes)
-        return [UnitBatch(f, idxs[0], idxs[-1] + 1, idxs) for f, idxs in batches]
-
-    def read(self, partition: UnitBatch):
-        import pyarrow as pa
-
-        table = self.rung.table(partition.path, self.unit_bytes)
-        buf: list[str] = []
-        for start, stop in contiguous_runs(partition.idxs):
-            buf.extend(self.rung.read_run(partition.path, table, start, stop))
-            while len(buf) >= _BATCH_ROWS:
-                chunk, buf = buf[:_BATCH_ROWS], buf[_BATCH_ROWS:]
-                yield pa.record_batch([pa.array(chunk, pa.string())], names=["value"])
-        if buf:
-            yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
+    table = rung.table(path, unit_bytes)
+    buf: list[str] = []
+    for start, stop in contiguous_runs(idxs):
+        buf.extend(rung.read_run(path, table, start, stop))
+        while len(buf) >= _BATCH_ROWS:
+            chunk, buf = buf[:_BATCH_ROWS], buf[_BATCH_ROWS:]
+            yield pa.record_batch([pa.array(chunk, pa.string())], names=["value"])
+    if buf:
+        yield pa.record_batch([pa.array(buf, pa.string())], names=["value"])
 
 
-class UnitTextDataSource(DataSource):
-    """The DataSource of every text rung: schema ``value string``, one
-    row per line like ``spark.read.text``; a codec subclass sets
-    ``reader_class``, whose rung names the format."""
+def scan_units(spark, rows, unit, read_row, schema):
+    """The scan of every unit-indexed rung: ``rows`` [(path, unit)] in
+    pick order become a local ``(path, <unit>)`` relation (``unit`` is
+    its ``pyarrow.Field``), which Spark cuts into contiguous slices over
+    at most ``defaultParallelism`` partitions (above
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes of rows,
+    one partition per Arrow batch instead). ``mapInArrow`` then yields
+    ``read_row(path, unit)``'s record batches of ``schema`` row by row,
+    so the sample is the driver's pick and only the task count comes
+    from the session."""
+    import pyarrow as pa
 
-    reader_class: type[UnitTextReader]
+    paths, units = zip(*rows)
+    table = pa.table({"path": pa.array(paths, pa.string()), unit.name: pa.array(units, unit.type)})
 
-    @classmethod
-    def name(cls) -> str:
-        return cls.reader_class.rung.name
+    def read(batches):
+        for b in batches:
+            for path, u in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                yield from read_row(path, u)
 
-    def schema(self) -> str:
-        return "value string"
-
-    def reader(self, schema) -> UnitTextReader:
-        return self.reader_class(self.options)
+    return spark.createDataFrame(table).mapInArrow(read, schema)
 
 
 def read_sampled(
     spark,
-    source: type[UnitTextDataSource],
+    rung: TextRung,
     path: str,
     ratio: float,
     seed: int,
     row_config: SamplingConfig | None,
-    **knobs: int,
+    unit_bytes: int = 0,
+    run: int = 1,
+    batch_bytes: int = DEFAULT_BATCH_BYTES,
 ) -> SampledFrame:
-    """Unit cluster sample through ``source`` -> SampledFrame. Every
-    line's inclusion probability is ``ratio``, so estimators HT-scale by
-    1/ratio; ``row_config`` composes a within-cluster Bernoulli stage.
-    The pick also runs here, driver-side, so a bad path or knob fails
-    with a clear error instead of an executor stack trace."""
-    spark.dataSource.register(source)
-    options = {"path": path, "ratio": str(ratio), "seed": str(seed)}
-    options.update((k, str(v)) for k, v in knobs.items())
-    source.reader_class(options).partitions()
-    df = spark.read.format(source.name()).options(**options).load()
+    """Unit cluster sample of ``rung`` -> SampledFrame of ``value``
+    lines. The pick runs once, here on the driver (a bad path or knob
+    fails with a clear error), and its units are packed into
+    ``batch_bytes`` rows for ``scan_units``. Every line's inclusion
+    probability is ``ratio``, so estimators HT-scale by 1/ratio;
+    ``row_config`` composes a within-cluster Bernoulli stage."""
+    import pyarrow as pa
+
+    picked, _, _ = rung.pick(path, ratio, seed, unit_bytes, run)
+    batches = rung.batches(picked, batch_bytes, unit_bytes)
+    unit = pa.field("idxs", pa.list_(pa.int64()))
+    df = scan_units(
+        spark, batches, unit, lambda f, idxs: read_units(rung, f, idxs, unit_bytes), "value string"
+    )
     return compose_cluster_row_stage(df, ratio, seed, row_config)
 
 

@@ -30,7 +30,7 @@ Sampling semantics: FRAMES are the clusters. ``pick_frames`` hash-picks
 frame indices deterministically (md5 of (seed, file, frame index) — the
 shared ``unit_source`` run pick, never-empty per pick) from
 the seek table alone, so the pick costs a tail read per file, not a
-scan. A picked frame becomes one partition that seeks straight to its
+scan. A picked frame is read by seeking straight to its
 compressed offset and decompresses ONLY itself (pyarrow's zstd codec;
 the seek table supplies the exact decompressed size the codec needs).
 Unpicked frames are never opened, never read, never decoded.
@@ -54,11 +54,12 @@ loudly — skipping inside a monolithic zstd stream cannot be honest —
 with the same fallback ladder as byteblock_text (file-level clusters or
 row Bernoulli through Spark's own codec).
 
-100 TB shape: the FRAME is the sampling unit, but the PARTITION is a
-batch of picked frames packed to ``batch_bytes`` (~4 MB compressed)
-per task, never crossing a file (round 13 — the BGZF task-batching
-carried over: the ×16000 grid measured a worker round-trip + boundary
-fetch per one-frame task, and at 100 TB / r=0.1 one task per 4 MB
+100 TB shape: the FRAME is the sampling unit, but the scan's row is a
+batch of picked frames packed to ``batch_bytes`` (~4 MB compressed),
+never crossing a file, and at most ``defaultParallelism`` tasks share
+the rows in pick order (round 13 — the BGZF task-batching carried
+over: the ×16000 grid measured a worker round-trip + boundary fetch
+per one-frame task, and at 100 TB / r=0.1 one task per 4 MB
 frame would be ~2.5M tasks); contiguous picked frames inside a batch
 decode in one sequential pass. The pick is O(files) tail reads
 driver-side.
@@ -88,8 +89,6 @@ from .tables import remember
 from .unit_source import (
     DEFAULT_BATCH_BYTES,
     TextRung,
-    UnitTextDataSource,
-    UnitTextReader,
     convert_parts,
     only_suffixes,
     read_sampled,
@@ -411,14 +410,12 @@ def read_frame_run_lines(
 
 
 ZSTD = TextRung(
-    name="zstd_seekable_text",
     table=lambda path, _unit_bytes: parse_seek_table(path),
     read_run=read_frame_run_lines,
     check=only_suffixes((".zst", ".zstd"), "zstd_seekable_text expects .zst/.zstd files"),
     unit_tag="frm",
     run_tag="frmrun",
-    run_option="run_frames",
-    batched=True,
+    run_keyword="run_frames",
 )
 
 
@@ -451,22 +448,6 @@ def pick_frames(
     return ZSTD.pick(path, ratio, seed, run=run_frames)
 
 
-def batch_picked_frames(
-    picked: list[tuple[str, int]], batch_bytes: int = DEFAULT_BATCH_BYTES
-) -> list[tuple[str, list[int]]]:
-    """Pack picked (file, frame_idx) units into per-task batches of
-    ~``batch_bytes`` compressed bytes, never crossing a file boundary
-    (a task holds one open file) — ``bgzf_text.batch_picked_blocks``
-    carried to the frame rung (round 13: the ×16000 grid showed the
-    one-task-per-frame layout pays a worker round-trip + boundary
-    fetch per 4 MB frame, which is what the run knob was compensating
-    for; at 100 TB and r=0.1 it would be ~2.5M tasks). The pick stays
-    per-FRAME — batching changes scheduling, not sampling semantics;
-    tests pin that the batched read equals the per-frame ownership
-    oracle exactly."""
-    return ZSTD.batches(picked, batch_bytes)
-
-
 def suggest_run_frames(
     ratio: float,
     frame_bytes: int = DEFAULT_FRAME_BYTES,
@@ -481,8 +462,9 @@ def suggest_run_frames(
     moderate-r cells (r=0.1 warm 0.57x -> 1.04x, cold 1.07x -> 2.68x,
     COLD_SKIP_zstd_runframes_x16000.json), which exposed that the
     dominant cost was ONE-TASK-PER-FRAME scheduling, fixed the same
-    round by ``batch_picked_frames`` (the BGZF task batching). On the
-    batched reader (COLD_SKIP_zstd_batched_x16000.json) singletons
+    round by packing picked frames into ``batch_bytes`` tasks (the BGZF
+    task batching). On the batched reader
+    (COLD_SKIP_zstd_batched_x16000.json) singletons
     already win every cell (r=0.1: 1.23x warm / 2.59x cold) and runs
     of 4 add a measured ~5-25% on top (1.29x / 3.0x; r=0.025: 2.46x ->
     3.02x warm, 5.41x -> 6.33x cold) — locality still pays, but the
@@ -495,17 +477,6 @@ def suggest_run_frames(
     return suggest_run_blocks(
         ratio, block_bytes=frame_bytes, target_cluster_bytes=target_cluster_bytes
     )
-
-
-class ZstdSeekableTextReader(UnitTextReader):
-    rung = ZSTD
-
-
-class ZstdSeekableTextDataSource(UnitTextDataSource):
-    """format ``zstd_seekable_text``; options: path, ratio, seed,
-    batch_bytes, run_frames."""
-
-    reader_class = ZstdSeekableTextReader
 
 
 def read_text_zstd_sampled(
@@ -530,6 +501,6 @@ def read_text_zstd_sampled(
     pick-floor granularity for sequential I/O locality (see
     ``pick_frames``; ``suggest_run_frames`` gives this rung's measured
     crossover)."""
-    knobs = {"batch_bytes": batch_bytes, "run_frames": run_frames}
-    source = ZstdSeekableTextDataSource
-    return read_sampled(spark, source, path, frame_ratio, seed, row_config, **knobs)
+    return read_sampled(
+        spark, ZSTD, path, frame_ratio, seed, row_config, run=run_frames, batch_bytes=batch_bytes
+    )

@@ -18,6 +18,7 @@ import pytest
 from random_sampling_based_approximate_mapreduce_spark.sampling.config import SamplingConfig
 from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic import md5_accept
 from random_sampling_based_approximate_mapreduce_spark.sources.bgzf_text import (
+    BGZF,
     BGZF_EOF,
     MAX_INPUT_BYTES,
     _list_bgzf_files,
@@ -554,28 +555,25 @@ class TestSparkSource:
             assert got == want, (ratio, seed)
 
     def test_partitions_are_batched_picked_blocks(self, spark, corpus):
-        """The pick is per-block but the PARTITION is a ~batch_bytes
-        pack of picked blocks (one task per 64 KiB block would be ~1.6B
-        tasks at 100 TB); values are identical across batch sizes."""
-        from random_sampling_based_approximate_mapreduce_spark.sources.bgzf_text import (
-            batch_picked_blocks,
-        )
-
+        """The pick is per-block but the scan row is a ~batch_bytes pack
+        of picked blocks, spread over at most defaultParallelism tasks
+        (one task per 64 KiB block would be ~1.6B tasks at 100 TB);
+        values are identical across batch sizes."""
         d, _, _ = corpus
         picked, picked_bytes, total_bytes = pick_blocks(d, 0.4, seed=9)
         assert 0 < picked_bytes < total_bytes
         # small batch target -> several batches per file; each batch
         # stays within one file and covers every picked block exactly once
-        batches = batch_picked_blocks(picked, batch_bytes=2000)
+        batches = BGZF.batches(picked, batch_bytes=2000)
         assert 1 < len(batches) < len(picked)
         assert [(f, i) for f, idxs in batches for i in idxs] == picked
         assert all(len({f}) == 1 for f, idxs in batches)
+        slots = spark.sparkContext.defaultParallelism
         sf_small = read_text_bgzf_sampled(spark, d, 0.4, seed=9, batch_bytes=2000)
-        assert sf_small.df.rdd.getNumPartitions() == len(batches)
+        assert sf_small.df.rdd.getNumPartitions() == min(len(batches), slots)
         sf_default = read_text_bgzf_sampled(spark, d, 0.4, seed=9)
-        assert sf_default.df.rdd.getNumPartitions() == len(
-            batch_picked_blocks(picked)
-        )
+        default_batches = BGZF.batches(picked)
+        assert sf_default.df.rdd.getNumPartitions() == min(len(default_batches), slots)
         assert sorted(r["value"] for r in sf_small.df.collect()) == sorted(
             r["value"] for r in sf_default.df.collect()
         )

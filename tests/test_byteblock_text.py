@@ -6,6 +6,7 @@ import pytest
 
 from random_sampling_based_approximate_mapreduce_spark.sampling.config import SamplingConfig
 from random_sampling_based_approximate_mapreduce_spark.sources.byteblock_text import (
+    BYTEBLOCK,
     _accept_block,
     pick_blocks,
     read_text_byteblock_sampled,
@@ -68,8 +69,14 @@ class TestByteBlockText:
         picked, picked_bytes, total_bytes = pick_blocks(d, 0.4, 512, seed=9)
         assert 0 < picked_bytes < total_bytes
         sf = read_text_byteblock_sampled(spark, d, 0.4, block_bytes=512, seed=9)
-        # one task per picked block — skipped blocks never become work
-        assert sf.df.rdd.getNumPartitions() == len(picked)
+        # the scan rows cover exactly the picked blocks, in pick order —
+        # skipped blocks never become work — over at most
+        # defaultParallelism tasks
+        units = [(f, start // 512) for f, start, _ in picked]
+        batches = BYTEBLOCK.batches(units, unit_bytes=512)
+        assert [(f, i) for f, idxs in batches for i in idxs] == units
+        tasks = min(len(batches), spark.sparkContext.defaultParallelism)
+        assert sf.df.rdd.getNumPartitions() == tasks
 
     def test_ht_scale_and_two_stage(self, spark, corpus):
         d, _ = corpus
@@ -110,25 +117,21 @@ class TestByteBlockText:
 
 class TestSeamProperties:
     """Hypothesis hammering of the reader pairing WITHOUT Spark: the
-    reader class is called directly per block, so hundreds of random
-    (corpus, block size) seam configurations run in seconds. Property:
+    per-batch read function is called directly, one block per batch, so
+    hundreds of random (corpus, block size) seam configurations run in
+    seconds. Property:
     at ratio 1.0 the union over all block partitions is the file's exact
     line sequence — every line exactly once, any seam placement."""
 
     def _read_all_blocks(self, path, block_bytes):
-        from random_sampling_based_approximate_mapreduce_spark.sources.byteblock_text import (
-            ByteBlockTextReader,
-        )
         from random_sampling_based_approximate_mapreduce_spark.sources.unit_source import (
-            UnitBatch as _BlockPartition,
+            read_units,
         )
 
-        reader = ByteBlockTextReader(
-            {"path": path, "ratio": "1.0", "block_bytes": str(block_bytes)}
-        )
+        picked, _, _ = BYTEBLOCK.pick(path, 1.0, 42, block_bytes)
         out = []
-        for part in reader.partitions():
-            for batch in reader.read(_BlockPartition(part.path, part.start, part.end)):
+        for f, i in picked:
+            for batch in read_units(BYTEBLOCK, f, [i], block_bytes):
                 out.extend(batch.column(0).to_pylist())
         return out
 

@@ -13,6 +13,7 @@ from random_sampling_based_approximate_mapreduce_spark.sampling.config import Sa
 from random_sampling_based_approximate_mapreduce_spark.sources.bzip2_block_text import (
     _FIRST_BLOCK_BIT,
     BLOCK_MAGIC,
+    BZIP2,
     FOOTER_MAGIC,
     _FileWindow,
     _decode_block_robust,
@@ -167,7 +168,13 @@ class TestBzip2BlockText:
         picked, picked_bytes, total_bytes = pick_ranges(d, 0.4, 2048, seed=9)
         assert 0 < picked_bytes < total_bytes
         sf = read_text_bzip2_sampled(spark, d, 0.4, range_bytes=2048, seed=9)
-        assert sf.df.rdd.getNumPartitions() == len(picked)
+        # the scan rows cover exactly the picked ranges, in pick order,
+        # over at most defaultParallelism tasks
+        units = [(f, start // 2048) for f, start, _ in picked]
+        batches = BZIP2.batches(units, unit_bytes=2048)
+        assert [(f, i) for f, idxs in batches for i in idxs] == units
+        tasks = min(len(batches), spark.sparkContext.defaultParallelism)
+        assert sf.df.rdd.getNumPartitions() == tasks
 
     def test_ht_scale_and_two_stage(self, spark, corpus):
         d, _, _ = corpus

@@ -62,3 +62,22 @@ def test_two_identical_writes_get_identical_names(tmp_path):
     na = [os.path.basename(p) for p in canonicalize_part_names(str(a))]
     nb = [os.path.basename(p) for p in canonicalize_part_names(str(b))]
     assert na == nb
+
+
+def test_checksums_follow_their_parts(tmp_path):
+    # Spark's local writer leaves a Hadoop checksum `.<part name>.crc`
+    # beside every part; it must move with the part, or the part loses
+    # its checksum and an orphan keeps the per-job uuid
+    uuid = "06defc4e-aaaa-bbbb-cccc-000000000000"
+    for i in range(3):
+        name = f"part-{i:05d}-{uuid}-c000.txt"
+        (tmp_path / name).write_text(f"row{i}")
+        (tmp_path / f".{name}.crc").write_bytes(b"crc%d" % i)
+    (tmp_path / "._SUCCESS.crc").write_bytes(b"")
+    out = canonicalize_part_names(str(tmp_path))
+    crcs = sorted(f for f in os.listdir(tmp_path) if f.endswith(".crc"))
+    assert not [f for f in crcs if uuid in f]
+    for i, p in enumerate(out):
+        crc = os.path.join(tmp_path, f".{os.path.basename(p)}.crc")
+        assert open(crc, "rb").read() == b"crc%d" % i
+    assert crcs == ["._SUCCESS.crc"] + [f".part-{i:05d}.txt.crc" for i in range(3)]

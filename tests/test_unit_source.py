@@ -120,3 +120,72 @@ def test_documents_layout_rebuild_is_identical(spark, sf_dir, tmp_path, monkeypa
     assert list(first) == list(second)
     assert len(first) >= 2 and all(name.startswith("part-0000") for name in first)
     assert first == second
+
+
+def test_rungs_read_without_python_datasource(spark, tmp_path, monkeypatch):
+    """Every byte-skip rung picks once, on the driver, and reads its
+    pick through ``mapInArrow`` over a local relation of picked units:
+    no Python DataSource scan, no second pick, and rows in pick order."""
+    import bz2
+
+    from random_sampling_based_approximate_mapreduce_spark.sources import unit_source
+    from random_sampling_based_approximate_mapreduce_spark.sources.bgzf_text import (
+        read_text_bgzf_sampled,
+        write_bgzf,
+    )
+    from random_sampling_based_approximate_mapreduce_spark.sources.byteblock_text import (
+        read_text_byteblock_sampled,
+    )
+    from random_sampling_based_approximate_mapreduce_spark.sources.bzip2_block_text import (
+        read_text_bzip2_sampled,
+    )
+    from random_sampling_based_approximate_mapreduce_spark.sources.rowgroup_parquet import (
+        read_parquet_rowgroup_sampled,
+    )
+    from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
+        read_text_zstd_sampled,
+        write_seekable_zstd,
+    )
+
+    # one bzip2 block (~80 KB of text): ranges after the first own no
+    # block, so that rung reads at ratio 1 to be never empty
+    lines = [f"line-{j:05d}-" + "x" * (j % 41) for j in range(3000)]
+    data = ("\n".join(lines) + "\n").encode()
+    for d in ("txt", "bz2", "zst", "bgzf"):
+        (tmp_path / d).mkdir()
+    text = tmp_path / "txt" / "part-0.txt"
+    text.write_bytes(data)
+    (tmp_path / "bz2" / "part-0.txt.bz2").write_bytes(bz2.compress(data, 1))
+    write_seekable_zstd(data, str(tmp_path / "zst" / "part-0.txt.zst"), frame_bytes=8192)
+    write_bgzf(data, str(tmp_path / "bgzf" / "part-0.txt.gz"), block_bytes=4096)
+    rg_path = str(tmp_path / "lines.parquet")
+    pq.write_table(pa.table({"id": list(range(len(lines))), "line": lines}), rg_path, row_group_size=300)
+
+    t = str(tmp_path)
+    reads = {
+        "byteblock": lambda: read_text_byteblock_sampled(spark, str(text), 1.0, block_bytes=256),
+        "bzip2": lambda: read_text_bzip2_sampled(spark, f"{t}/bz2", 1.0, range_bytes=2048),
+        "zstd": lambda: read_text_zstd_sampled(spark, f"{t}/zst", 0.5),
+        "bgzf": lambda: read_text_bgzf_sampled(spark, f"{t}/bgzf", 1.0, batch_bytes=2048),
+        "rowgroup": lambda: read_parquet_rowgroup_sampled(spark, rg_path, 0.5),
+    }
+    picks = []
+    real_pick = unit_source.pick_runs
+
+    def counting_pick(*args, **kwargs):
+        picks.append(args)
+        return real_pick(*args, **kwargs)
+
+    monkeypatch.setattr(unit_source, "pick_runs", counting_pick)
+    for name, read in reads.items():
+        picks.clear()
+        df = read().df
+        rows = df.collect()
+        assert rows and len(picks) == 1, (name, len(picks))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "BatchScan" not in plan, (name, plan)
+        if name in ("byteblock", "bgzf"):
+            # ratio 1 in pick order: the file's lines, in order, across
+            # every partition (bgzf's small batches make several)
+            assert [r.value for r in rows] == open(text).read().splitlines(), name
+    assert df.rdd.getNumPartitions() > 1

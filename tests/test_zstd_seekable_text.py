@@ -17,6 +17,7 @@ from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic im
 from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
     SEEKABLE_MAGIC,
     SKIPPABLE_MAGIC,
+    ZSTD,
     ZSTD_FRAME_MAGIC,
     decompress_file,
     parse_seek_table,
@@ -400,40 +401,29 @@ class TestSparkSource:
         d, _, _ = corpus
         picked, picked_bytes, total_bytes = pick_frames(d, 0.4, seed=9)
         assert 0 < picked_bytes < total_bytes
-        # batching packs picked frames into per-task batches (round 13);
-        # the partitions cover EXACTLY the picked frames, nothing else
-        from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
-            ZstdSeekableTextReader,
-            batch_picked_frames,
-        )
-
-        parts = ZstdSeekableTextReader(
-            {"path": d, "ratio": "0.4", "seed": "9"}
-        ).partitions()
-        assert [(p.path, i) for p in parts for i in p.idxs] == picked
+        # batching packs picked frames into scan rows (round 13); the
+        # rows cover EXACTLY the picked frames, in pick order, over at
+        # most defaultParallelism tasks
+        batches = ZSTD.batches(picked)
+        assert [(f, i) for f, idxs in batches for i in idxs] == picked
         sf = read_text_zstd_sampled(spark, d, 0.4, seed=9)
-        assert sf.df.rdd.getNumPartitions() == len(
-            batch_picked_frames(picked)
-        )
+        tasks = min(len(batches), spark.sparkContext.defaultParallelism)
+        assert sf.df.rdd.getNumPartitions() == tasks
 
     def test_batches_respect_bytes_and_files(self, corpus):
         """Batches never cross a file and roll over at batch_bytes of
         compressed data; a tiny batch_bytes degenerates to one frame
         per task (the pre-round-13 layout)."""
-        from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
-            batch_picked_frames,
-        )
-
         d, paths, _ = corpus
         picked, _, _ = pick_frames(d, 0.7, seed=3)
         assert len({f for f, _ in picked}) == len(paths)
-        batches = batch_picked_frames(picked, batch_bytes=1)
+        batches = ZSTD.batches(picked, batch_bytes=1)
         assert [(f, [i]) for f, i in picked] == batches
-        big = batch_picked_frames(picked, batch_bytes=1 << 30)
+        big = ZSTD.batches(picked, batch_bytes=1 << 30)
         assert len(big) == len(paths)  # one batch per file
         assert [(f, i) for f, idxs in big for i in idxs] == picked
         with pytest.raises(ValueError, match="batch_bytes"):
-            batch_picked_frames(picked, batch_bytes=0)
+            ZSTD.batches(picked, batch_bytes=0)
 
     def test_ht_scale_and_two_stage(self, spark, corpus):
         d, _, _ = corpus
@@ -535,32 +525,24 @@ class TestRunFrames:
         want = sorted(ln for raw in raws for ln in raw.decode().splitlines())
         assert got == want
 
-    def test_run_partitions_stay_bounded(self, corpus):
-        """At ratio 1.0 the batch roll-over caps each task: a file
-        never collapses into one giant partition, and every picked
-        frame lands in exactly one batch (batching is scheduling only;
-        runs compose with it because a run's frames are adjacent)."""
-        from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
-            ZstdSeekableTextReader,
-        )
-
+    def test_run_partitions_stay_bounded(self, spark, corpus):
+        """At ratio 1.0 the batch roll-over caps each scan row: a file
+        never collapses into one giant row, and every picked frame
+        lands in exactly one batch, in pick order (batching is
+        scheduling only; runs compose with it because a run's frames
+        are adjacent)."""
         d, paths, _ = corpus
-        parts = ZstdSeekableTextReader(
-            {
-                "path": d,
-                "ratio": "1.0",
-                "seed": "42",
-                "run_frames": "4",
-                "batch_bytes": "2048",
-            }
-        ).partitions()
         picked, _, _ = pick_frames(d, 1.0, seed=42, run_frames=4)
-        assert [(p.path, i) for p in parts for i in p.idxs] == picked
-        assert len(parts) > len(paths)  # roll-over actually split files
-        for p in parts:
-            sizes = parse_seek_table(p.path)
+        batches = ZSTD.batches(picked, batch_bytes=2048)
+        assert [(f, i) for f, idxs in batches for i in idxs] == picked
+        assert len(batches) > len(paths)  # roll-over actually split files
+        for f, idxs in batches:
+            sizes = parse_seek_table(f)
             # a batch exceeds the cap by at most its last frame
-            assert sum(sizes[i].c_size for i in p.idxs[:-1]) < 2048
+            assert sum(sizes[i].c_size for i in idxs[:-1]) < 2048
+        sf = read_text_zstd_sampled(spark, d, 1.0, run_frames=4, batch_bytes=2048)
+        tasks = min(len(batches), spark.sparkContext.defaultParallelism)
+        assert sf.df.rdd.getNumPartitions() == tasks
 
     def test_run_sample_equals_ownership_oracle(self, spark, corpus):
         """Sampled lines = lines whose OWNER frame sits in an accepted
