@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions.rounding import sql_round
+from ..session import reuse_barrier
 
 # ---------------------------------------------------------------------------
 # PII injection (deterministic synthetic) + redaction
@@ -282,8 +283,8 @@ def pack_sequences(
       3. partition totals -> driver (O(num_partitions) rows, like the
          IVF training sample) -> prefix offsets rejoined as a literal map.
 
-    The frame is localCheckpoint'd between (2) and (3) so the totals
-    action doesn't recompute the scan.
+    A reuse barrier between (2) and (3) keeps the totals action from
+    recomputing the scan.
     """
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
@@ -304,7 +305,7 @@ def pack_sequences(
                 run = int(pdf["_cum_incl"].iloc[-1])
             yield pdf
 
-    cum = ranged.mapInPandas(cumsum, schema=out_schema).localCheckpoint(eager=True)
+    cum = reuse_barrier(ranged.mapInPandas(cumsum, schema=out_schema), eager=True)
 
     totals = (
         cum.groupBy("_pid").agg(F.max("_cum_incl").alias("_tot")).orderBy("_pid").collect()

@@ -40,6 +40,7 @@ from ..functions.hashing import (
     hash64_sql,
     minhash_coefficients,
 )
+from ..session import reuse_barrier
 
 # Fixed MinHash-LSH geometry for the catalog queries: 12 hashes = 4 bands
 # x 3 rows -> s-curve threshold (1/4)^(1/3) ~= 0.63 Jaccard.
@@ -111,27 +112,19 @@ def lsh_band_keys(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def minhash_lsh_candidates(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", persist: bool = False
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Distinct candidate near-dup pairs (doc_a < doc_b) sharing any LSH band.
 
     One narrow signature projection + one shuffle on (band, key) + an
     in-bucket join: the scalable blocking step of near-dup detection.
 
-    ``persist`` caches the band relation before the self-join; without it
-    the tokenize->shingle->hash->sign pipeline runs once per join side.
-    Measured at test scale recompute is CHEAPER than materialization
-    (3.5s vs 4.4s at sf0.1), so the default is off; at corpus scale —
-    where recompute means re-scanning the document text — turn it on:
-    bands are (id, band, key), a few dozen bytes per doc. The cache is
-    NOT unpersisted here (the result is lazy; the bands must stay live
-    until the caller's action runs) — reuse ONE call's result rather
-    than calling repeatedly with persist=True, and release with
-    spark.catalog.clearCache() when done (review r8).
+    The tokenize->shingle->hash->sign pipeline runs once per join side:
+    at sf0.1 that recompute measured cheaper than materializing the band
+    relation (3.5s vs 4.4s). A caller whose ``docs`` is costly to produce
+    puts the reuse barrier on ``docs`` (``blocked_dup_clusters`` does).
     """
     bands = lsh_band_keys(minhash_signatures(docs, text_col, id_col), id_col)
-    if persist:
-        bands = bands.persist()
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -439,10 +432,10 @@ def ngram_jaccard_verify(
     pairs only after the groupBy). On a Zipf-ish corpus a hot shingle
     appears in a constant FRACTION of docs, so that equi-join's output
     is sum_s f_s^2 — QUADRATIC in corpus size despite the LSH bound on
-    pairs. Measured on the planted-dup corpus
-    (tools/measure_dedup_scale.py): 50k docs 4.8 s, 200k 73 s, 500k
-    ~1000 s (9.7x wall for 2.5x docs — the blow-up the docstring's old
-    O-claim denied); the pairwise-array form is linear (and ~10x faster
+    pairs. Measured on the planted-dup corpus (git show
+    bcf1e43:tools/measure_dedup_scale.py): 50k docs 4.8 s, 200k 73 s,
+    500k ~1000 s (9.7x wall for 2.5x docs — the blow-up the docstring's
+    old O-claim denied); the pairwise-array form is linear (and ~10x faster
     already at 200k). Candidate counts themselves stay linear (0.20 ->
     0.24 pairs/doc across 50k->500k), so the self-join really was the
     only quadratic term.
@@ -527,36 +520,27 @@ def blocked_dup_clusters(
     # normalize to the canonical (doc_id, text) names at the boundary:
     # ngram_jaccard_verify (and the pair columns downstream) are written
     # against them, so custom text_col/id_col inputs work uniformly
-    # LAZY localCheckpoint, not eager (round 16) and not persist()
-    # (ADVICE r16): reps and cand are each consumed twice inside the
-    # verify DAG (reps: minhash side + shingle side; cand: the broadcast
-    # cand_docs side + the pair list), so they need a reuse barrier —
-    # but the EAGER checkpoints serialized the pipeline into three extra
-    # materialization jobs before connected_components' probe collect
-    # ran a fourth. Lazy makes the probe collect the ONE job that
-    # computes the whole chain, storing the blocks on first touch
-    # (measured sf0.1: plan-build 2.26 s -> ~1.2 s, query total
-    # 3.3 s -> ~2.2 s). localCheckpoint rather than persist() because
-    # persist entries are held by the SQL CacheManager until an explicit
-    # unpersist (a long-lived driver would leak three entries per
-    # distinct input) AND are deduped by canonicalized plan, so a repeat
-    # call over the same input path would silently reuse stale cached
-    # data if the underlying files changed; checkpoint blocks instead
-    # die with the DataFrame refs (ContextCleaner) and are never shared
-    # across calls — the lifecycle the eager checkpoints always had.
-    reps = (
+    # reps and cand are each consumed twice inside the verify DAG (reps:
+    # minhash side + shingle side; cand: the broadcast cand_docs side +
+    # the pair list), so they sit behind reuse barriers. LAZY ones: the
+    # eager barriers of round 16 serialized the pipeline into three extra
+    # materialization jobs before connected_components' probe collect ran
+    # a fourth; lazy makes the probe collect the ONE job that computes
+    # the whole chain (measured sf0.1: plan-build 2.26 s -> ~1.2 s, query
+    # total 3.3 s -> ~2.2 s).
+    reps = reuse_barrier(
         with_fp.join(groups.select("__fp", "__rep"), "__fp")
         .where(F.col(id_col) == F.col("__rep"))
-        .select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .localCheckpoint(eager=False)
+        .select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+        eager=False,
     )
-    cand = minhash_lsh_candidates(reps).localCheckpoint(eager=False)
+    cand = reuse_barrier(minhash_lsh_candidates(reps), eager=False)
     # verified gets the lazy barrier too: the driver-union-find path
     # consumes it once (the probe collect), but the distributed CC
     # fallback would otherwise recompute the whole LSH+verify chain when
     # it builds its edge list after the probe.
-    verified = ngram_jaccard_verify(reps, cand, threshold).localCheckpoint(
-        eager=False
+    verified = reuse_barrier(
+        ngram_jaccard_verify(reps, cand, threshold), eager=False
     )
     rep_comp = connected_components(verified).withColumnRenamed("node", "__rep")
     shingleable = F.size(T.word_tokens(F.col(text_col))) >= F.lit(SHINGLE_K)
@@ -599,8 +583,9 @@ def connected_components(
       neighbors; stop when nothing changed. Rounds = graph diameter
       (near-dup clusters are shallow; ``max_iters`` bounds pathological
       chains). Each round is one join + one groupBy on the EDGE list only
-      — document text is long gone. localCheckpoint breaks lineage so
-      plan size stays O(1) per round (the GraphFrames-CC discipline).
+      — document text is long gone. An eager reuse barrier per round
+      cuts lineage so plan size stays O(1) per round (the GraphFrames-CC
+      discipline).
     """
     probe = pairs.select(F.col(a_col), F.col(b_col)).limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
@@ -636,17 +621,17 @@ def connected_components(
         )
         return pairs.sparkSession.createDataFrame(rows, schema)
 
-    edges = (
+    edges = reuse_barrier(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
-    labels = (
+    labels = reuse_barrier(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
+        .select("node", F.col("node").alias("component")),
+        eager=True,
     )
     for _ in range(max_iters):
         neighbor_min = (
@@ -654,15 +639,14 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
+        new_labels = reuse_barrier(
+            labels.join(neighbor_min, labels.node == neighbor_min.src, "left").select(
                 "node",
                 F.least(
                     F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
                 ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         changed = (
             new_labels.alias("n")

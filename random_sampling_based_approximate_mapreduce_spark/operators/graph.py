@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reuse_barrier
+
 
 def canonical_edges(df: DataFrame, a: str, b: str) -> DataFrame:
     """Distinct undirected edges as (lo, hi) with self-loops dropped."""
@@ -81,13 +83,11 @@ def triangle_count(df: DataFrame, a: str, b: str) -> DataFrame:
     BroadcastNestedLoopJoin and trip the cartesian audit for no benefit.
     """
     # The canonical edge relation feeds four consumers (degree build, both
-    # wedge sides, the closing probe, node/edge counts); without a
-    # checkpoint each union branch re-runs the events scan + distinct.
-    # localCheckpoint materializes the |E|-bounded relation once — the
-    # same lineage-break the dedup pair lists use (dedup.py:449) — and
-    # the oriented relation likewise (three self-references).
-    edges = canonical_edges(df, a, b).localCheckpoint(eager=True)
-    o = oriented_edges(edges).localCheckpoint(eager=True)
+    # wedge sides, the closing probe, node/edge counts); without a barrier
+    # each union branch re-runs the events scan + distinct. The oriented
+    # relation has three self-references and gets one too.
+    edges = reuse_barrier(canonical_edges(df, a, b), eager=True)
+    o = reuse_barrier(oriented_edges(edges), eager=True)
     e1 = o.select(F.col("src").alias("w_a"), F.col("dst").alias("w_b"))
     e2 = o.select(F.col("src").alias("w_b2"), F.col("dst").alias("w_c"))
     wedges = e1.join(e2, F.col("w_b") == F.col("w_b2"))

@@ -17,6 +17,7 @@ from ._base import (
     register,
     sql_round,
 )
+from ..session import reuse_barrier
 
 # ===========================================================================
 # 6. Dedup (exact + fingerprint; MinHash/SimHash/Jaccard in operators/dedup)
@@ -176,11 +177,11 @@ def _register_dedup():
         "oracle is a recursive CTE reaching the same fixpoint)",
     )
     def q_dedup_clusters(spark, sf_dir):
-        # localCheckpoint: see q_dedup_clusters_blocked — the edge list is
-        # tiny but connected_components references it repeatedly
-        pairs = D.ngram_jaccard_pairs(
-            load(spark, sf_dir, "documents"), 0.5
-        ).localCheckpoint(eager=True)
+        # the edge list is tiny but connected_components reads it more
+        # than once (the probe collect, then any distributed rounds)
+        pairs = reuse_barrier(
+            D.ngram_jaccard_pairs(load(spark, sf_dir, "documents"), 0.5), eager=True
+        )
         return D.connected_components(pairs)
 
     @register(

@@ -19,6 +19,7 @@ from ._base import (
     load,
     register,
 )
+from ..session import reuse_barrier
 
 # ===========================================================================
 # 11. Structured Streaming (real streaming jobs run to completion with an
@@ -641,14 +642,12 @@ def q_corpus_pipeline_full(spark, sf_dir):
     # contaminated-id list alone measured no faster in r16), but the
     # plan's two copies of the SPINE (documents scan -> train filter ->
     # anti join) have no exchange boundary to reuse, so the corpus was
-    # scanned and anti-joined twice. A lazy localCheckpoint merges the
+    # scanned and anti-joined twice. A lazy reuse barrier merges the
     # spines: one scan+anti, second consumer reads stored blocks
     # (round 17 A/B: 2.98 -> 2.51 s min-of-6 alternated, action jobs
-    # 13 -> 12). At cluster scale this materializes the cleaned corpus
-    # once — the boundary real corpus pipelines persist anyway — and
-    # the blocks free via ContextCleaner when the query's refs die.
+    # 13 -> 12).
     cont = C.ngram_contamination(train, eval_docs, k=3).select("doc_id")
-    clean = train.join(cont, "doc_id", "left_anti").localCheckpoint(eager=False)
+    clean = reuse_barrier(train.join(cont, "doc_id", "left_anti"), eager=False)
     kept = C.keep_best_by_fingerprint(clean).select(
         F.col("kept_doc").alias("doc_id")
     )

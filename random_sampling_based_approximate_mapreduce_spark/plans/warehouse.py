@@ -20,6 +20,7 @@ from ._base import (
     register,
     sql_round,
 )
+from ..session import reuse_barrier
 
 # ===========================================================================
 # 12. Analytic-join coverage + value-oracled sketches (round-4 widening)
@@ -433,7 +434,10 @@ def q_tfidf_top_terms(spark, sf_dir):
     # count aggregates map-side over already-distinct-per-doc words and
     # ONE exchange (word) remains; the exchange also no longer carries
     # doc_id. Same df values by construction: distinct-per-doc explode
-    # emits each (doc, word) once.
+    # emits each (doc, word) once. That holds only while documents.doc_id
+    # is unique (one row per doc): two rows of one doc_id would count a
+    # shared word twice where the oracle's DISTINCT (doc_id, word) counts
+    # it once. tests/test_analytics.py::TestTfIdf checks the key at sf0.01.
     df_tbl = (
         docs.select(
             F.explode_outer(F.array_distinct(T.words("text"))).alias("word")
@@ -507,20 +511,20 @@ def q_tfidf_top_terms(spark, sf_dir):
     "combine), then only the surviving rare grams aggregate posting "
     "lists, so no collect_list ever runs on a stopword-gram key (the "
     "unbounded-posting-list OOM at scale); the df band relation "
-    "broadcasts, and the gram relation is localCheckpoint'd so both "
-    "passes share ONE tokenize (measured at 20x corpus, "
-    "tools/measure_index_twopass.py: 0.7 vs 20.9 MB shuffle AND 1.1 vs "
-    "5.2 s wall against the one-pass form — without the checkpoint the "
-    "double tokenize costs 10.8 s). Postings serialize as a sorted CSV "
-    "string so the value oracle compares engine-neutral scalars",
+    "broadcasts, and the gram relation sits behind a lazy reuse barrier so "
+    "both passes share ONE tokenize (measured with an eager barrier at 20x "
+    "corpus, git show 204ae3d:tools/measure_index_twopass.py: 0.7 vs 20.9 "
+    "MB shuffle AND 1.1 vs 5.2 s wall against the one-pass form — without "
+    "the barrier the double tokenize costs 10.8 s). Postings serialize as "
+    "a sorted CSV string so the value oracle compares engine-neutral scalars",
 )
 def q_bigram_inverted_index(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    bg = (
+    bg = reuse_barrier(
         T.with_word_shingles(docs, "text", 2)
         .select("doc_id", F.explode_outer("shingles").alias("bigram"))
-        .where(F.col("bigram").isNotNull())
-        .localCheckpoint(eager=False)
+        .where(F.col("bigram").isNotNull()),
+        eager=False,
     )
     dfx = (
         bg.groupBy("bigram")

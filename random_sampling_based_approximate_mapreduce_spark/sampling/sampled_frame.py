@@ -825,7 +825,6 @@ class SampledFrame:
         other: "SampledFrame",
         left_on: str,
         right_on: str,
-        persist_right: bool = False,
     ) -> DataFrame:
         """LEFT equi-join of two independently-sampled frames with per-row
         inclusion weights — the outer-join extension ``join_sampled``
@@ -862,20 +861,6 @@ class SampledFrame:
         and a per-key count aggregate whose output is one row per
         DISTINCT right key (small; AQE typically broadcasts it back).
         No driver materialization, no skew beyond the join's own.
-
-        ``persist_right`` (VERDICT r16 item 3, default OFF): the right
-        frame is consumed twice (pair join + kept-match count aggregate),
-        so by default its sample scan runs twice. True inserts a lazy
-        ``localCheckpoint`` reuse barrier so the sampled right side is
-        computed once and the second consumer reads stored blocks. Worth
-        it exactly when producing the right frame is expensive relative
-        to re-reading its survivors — a decode-heavy source, a costly
-        upstream transform, or a low keep ratio over a wide table; NOT
-        worth it when the sample is a cheap pushed-filter scan (measured
-        at bench scale: cache write ≈ second scan — r16 rejected
-        experiment #7; the x10 A/B in docs/bench/AB_r17_persist_right
-        .json quantifies both regimes). Blocks free via ContextCleaner
-        when the result's refs die.
         """
         overlap = set(self.df.columns) & set(other.df.columns)
         if overlap:
@@ -898,15 +883,12 @@ class SampledFrame:
         t = 0.0 if r2 >= 1.0 else 1.0 - 1.0 / r2
         left_cols = self.df.columns
         right_cols = other.df.columns
-        right_df = (
-            other.df.localCheckpoint(eager=False) if persist_right else other.df
-        )
         matched = (
-            self.df.join(right_df, F.col(left_on) == F.col(right_on), "inner")
+            self.df.join(other.df, F.col(left_on) == F.col(right_on), "inner")
             .withColumn("__weight", F.lit(1.0 / (r1 * r2)))
             .select(*left_cols, *right_cols, "__weight")
         )
-        counts = right_df.groupBy(F.col(right_on).alias("__rk")).agg(
+        counts = other.df.groupBy(F.col(right_on).alias("__rk")).agg(
             F.count(F.lit(1)).alias("__k")
         )
         lk = self.df.join(counts, F.col(left_on) == F.col("__rk"), "left")
@@ -930,7 +912,6 @@ class SampledFrame:
         other: "SampledFrame",
         left_on: str,
         right_on: str,
-        persist_left: bool = False,
     ) -> DataFrame:
         """RIGHT equi-join composition — the exact mirror of
         ``join_weighted_left`` (matched pairs at 1/(r1*r2); every kept
@@ -940,12 +921,8 @@ class SampledFrame:
         (left columns, right columns, __weight). The variance caveat
         mirrors too: prefer the LEFT side sampled at >= 0.5 here (the
         delegated warning text speaks in the swapped orientation).
-        ``persist_left`` mirrors ``persist_right``: here the LEFT frame
-        is the double-consumed one.
         """
-        out = other.join_weighted_left(
-            self, right_on, left_on, persist_right=persist_left
-        )
+        out = other.join_weighted_left(self, right_on, left_on)
         return out.select(*self.df.columns, *other.df.columns, "__weight")
 
     def join_weighted_full(
@@ -953,7 +930,6 @@ class SampledFrame:
         other: "SampledFrame",
         left_on: str,
         right_on: str,
-        persist_sides: bool = False,
     ) -> DataFrame:
         """FULL OUTER equi-join of two independently-sampled frames with
         per-row inclusion weights — completing the sampled-join family
@@ -988,14 +964,6 @@ class SampledFrame:
         100 TB shape: three equi-shuffles on the join key (pair join +
         one per-key count aggregate per side, each one row per distinct
         key); no driver materialization, no skew beyond the join's own.
-
-        ``persist_sides`` (VERDICT r16 item 3, default OFF): BOTH frames
-        are consumed three times here (pair join + own count aggregate +
-        own null-stratum scan); True inserts a lazy ``localCheckpoint``
-        barrier on each so every sampled side computes once. Same
-        cost model as ``join_weighted_left.persist_right`` — a win when
-        producing the frames is expensive, a wash for cheap
-        pushed-filter scans.
         """
         overlap = set(self.df.columns) & set(other.df.columns)
         if overlap:
@@ -1020,23 +988,17 @@ class SampledFrame:
         right_cols = other.df.columns
         left_schema = {f.name: f.dataType for f in self.df.schema.fields}
         right_schema = {f.name: f.dataType for f in other.df.schema.fields}
-        left_df = (
-            self.df.localCheckpoint(eager=False) if persist_sides else self.df
-        )
-        right_df = (
-            other.df.localCheckpoint(eager=False) if persist_sides else other.df
-        )
         matched = (
-            left_df.join(right_df, F.col(left_on) == F.col(right_on), "inner")
+            self.df.join(other.df, F.col(left_on) == F.col(right_on), "inner")
             .withColumn("__weight", F.lit(1.0 / (r1 * r2)))
             .select(*left_cols, *right_cols, "__weight")
         )
         k = F.coalesce(F.col("__k"), F.lit(0)).cast("double")
-        rcounts = right_df.groupBy(F.col(right_on).alias("__rk")).agg(
+        rcounts = other.df.groupBy(F.col(right_on).alias("__rk")).agg(
             F.count(F.lit(1)).alias("__k")
         )
         left_null = (
-            left_df.join(rcounts, F.col(left_on) == F.col("__rk"), "left")
+            self.df.join(rcounts, F.col(left_on) == F.col("__rk"), "left")
             .select(
                 *left_cols,
                 *[F.lit(None).cast(right_schema[c]).alias(c) for c in right_cols],
@@ -1044,11 +1006,11 @@ class SampledFrame:
             )
             .where(F.col("__weight") != 0)
         )
-        lcounts = left_df.groupBy(F.col(left_on).alias("__lk")).agg(
+        lcounts = self.df.groupBy(F.col(left_on).alias("__lk")).agg(
             F.count(F.lit(1)).alias("__k")
         )
         right_null = (
-            right_df.join(lcounts, F.col(right_on) == F.col("__lk"), "left")
+            other.df.join(lcounts, F.col(right_on) == F.col("__lk"), "left")
             .select(
                 *[F.lit(None).cast(left_schema[c]).alias(c) for c in left_cols],
                 *right_cols,

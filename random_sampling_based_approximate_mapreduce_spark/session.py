@@ -11,7 +11,8 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
@@ -98,3 +99,39 @@ def configure_existing(spark: SparkSession) -> SparkSession:
             stacklevel=2,
         )
     return spark
+
+
+def reuse_barrier(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Store ``df`` once so that its later consumers read stored blocks
+    instead of re-running its lineage. The package's one reuse barrier.
+
+    Lifecycle: a local checkpoint, not ``persist()``. A persisted plan is
+    registered in the SQL CacheManager until someone calls ``unpersist``,
+    and the CacheManager matches by canonicalized plan, so a repeat call
+    over the same input path would reuse the first call's data after the
+    files changed. Checkpoint blocks belong to the returned DataFrame
+    alone: no cache entry, no reuse across calls, and ContextCleaner
+    frees them once the DataFrame is garbage-collected.
+
+    ``eager=True`` runs one job now. Use it when the driver goes on to
+    run several actions over the result (a loop of rounds, a probe then
+    a build), or to cut a plan that would otherwise grow per round.
+    ``eager=False`` stores the blocks during the first action that reads
+    them, so the one later job computes the chain once and its other
+    consumers of ``df`` read the stored blocks; it adds no job.
+
+    Executor loss: a checkpoint cuts the lineage, so a lost block cannot
+    be recomputed. On a ``local``/``local[...]`` master the only executor
+    is the driver, whose loss ends the application anyway, and the
+    default storage level is kept (a replicated level there has no peer
+    to copy to and warns once per block). On any other master,
+    ``local-cluster[...]`` included, the blocks are stored
+    ``MEMORY_AND_DISK_2``: each has a copy on a second executor, so
+    losing one executor costs a re-read, not the query.
+    Losing every executor that holds a block still fails the job with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+    """
+    master = df.sparkSession.sparkContext.master
+    if master == "local" or master.startswith("local["):
+        return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK_2)

@@ -76,6 +76,18 @@ class TestTfIdf:
             for t in terms:
                 assert t.tf >= 1 and t.df >= 1
 
+    def test_documents_doc_id_is_unique(self, spark, sf_correct_dir):
+        # df counts distinct words per row (array_distinct), which equals
+        # the oracle's DISTINCT (doc_id, word) only while doc_id is unique
+        from random_sampling_based_approximate_mapreduce_spark.operators.quality import (
+            uniqueness_violations,
+        )
+        from random_sampling_based_approximate_mapreduce_spark.sources.tables import load
+
+        docs = load(spark, sf_correct_dir, "documents")
+        (row,) = uniqueness_violations(docs, ["doc_id"], "doc_id_unique").collect()
+        assert row["violations"] == 0
+
 
 class TestScalarSubquery:
     def test_threshold_is_global_average(self, spark, sf_correct_dir):

@@ -2719,59 +2719,3 @@ class TestUnseededSampling:
         )
         assert a == b
 
-
-class TestPersistKnobs:
-    """VERDICT r16 item 3: the persist_right / persist_sides reuse-barrier
-    knobs must be pure performance toggles — byte-identical results with
-    the knob on and off (deterministic modulo samples so both runs see the
-    same kept rows)."""
-
-    @pytest.fixture(scope="class")
-    def frames(self, spark):
-        left = [(i, i % 4) for i in range(80)]
-        right = [(i, j, 10 * i + j) for i, m in left for j in range(m)]
-        ldf = spark.createDataFrame(left, ["lkey", "m"])
-        rdf = spark.createDataFrame(right, ["rkey", "j", "val"])
-        sl = SampledFrame(
-            df=ldf.where(F.col("lkey") % 2 == 0),
-            ratio=0.5,
-            config=SamplingConfig(ratio=0.5, seed=1),
-        )
-        sr = SampledFrame(
-            df=rdf.where((F.col("rkey") + F.col("j")) % 2 == 0),
-            ratio=0.5,
-            config=SamplingConfig(ratio=0.5, seed=2),
-        )
-        return sl, sr
-
-    @staticmethod
-    def _key(rows):
-        # None-safe canonical ordering (null-extended rows sort stably)
-        return sorted(
-            (tuple(r) for r in rows),
-            key=lambda t: tuple((v is None, 0 if v is None else v) for v in t),
-        )
-
-    def test_left_persist_right_identical(self, frames):
-        sl, sr = frames
-        base = sl.join_weighted_left(sr, "lkey", "rkey").collect()
-        knob = sl.join_weighted_left(
-            sr, "lkey", "rkey", persist_right=True
-        ).collect()
-        assert self._key(base) == self._key(knob)
-
-    def test_full_persist_sides_identical(self, frames):
-        sl, sr = frames
-        base = sl.join_weighted_full(sr, "lkey", "rkey").collect()
-        knob = sl.join_weighted_full(
-            sr, "lkey", "rkey", persist_sides=True
-        ).collect()
-        assert self._key(base) == self._key(knob)
-
-    def test_right_persist_left_identical(self, frames):
-        sl, sr = frames
-        base = sl.join_weighted_right(sr, "lkey", "rkey").collect()
-        knob = sl.join_weighted_right(
-            sr, "lkey", "rkey", persist_left=True
-        ).collect()
-        assert self._key(base) == self._key(knob)
