@@ -25,7 +25,10 @@ from committed files alone. Full-line shape:
   code (the r4 log_host_sampled episode, docs/SCALE.md).
 - ``vs_prev`` compares this run's mins against the newest BENCH_r*.json
   medians on the shared query set, so the round-over-round ratio is in
-  the artifact itself instead of hand-computed in round notes.
+  the artifact itself instead of hand-computed in round notes. A
+  scaling re-run compares against its own round's full-core artifact,
+  or reports ``vs_prev: null`` with ``vs_prev_reason`` (see
+  ``previous_artifact``).
 - ``tpch_x10`` runs the 22 TPC-H shapes on a 10x key-consistent
   replication of the bench corpus (~sf1; sources/scale_up.py), min-of-2
   (VERDICT r4 item 7): at sf0.1 every TPC-H query sits on the plan floor,
@@ -80,6 +83,76 @@ try:
 except ValueError:
     _ENV_CPUS = 0
 _SCALING_RERUN = 0 < _ENV_CPUS < (os.cpu_count() or _ENV_CPUS)
+
+
+
+def previous_artifact(
+    here: str, env_round: int = 0, scaling_rerun: bool = False
+) -> tuple[int, str | None, dict | None, str | None]:
+    """The run's round number and the artifact ``vs_prev`` compares with.
+
+    Returns ``(cur_round, prev_path, parsed_prev, reason)``. The round
+    defaults to (newest ``BENCH_r*.json`` under ``here`` + 1): the driver
+    records ``BENCH_r{N}.json`` only at round end, so during a round the
+    newest file IS the previous round's. Set ``env_round``
+    (SPARK_GRAFT_ROUND) when re-running within a recorded round, so the
+    run does not compare against its own round and report ~1.0 (ADVICE
+    r5).
+
+    A scaling re-run (``scaling_rerun``: fewer cores than the box, run
+    AFTER the round's ``BENCH_r{N}.json`` is recorded) re-measures the
+    newest round (r16: the 8-core run minted BENCH_r17_full.json).
+    Its baseline is the same round's full-core
+    ``docs/bench/BENCH_r{N}_full.json``; the previous round ran at full
+    core count, so comparing with it would mix the core-count effect
+    into the round-over-round ratio (ADVICE r17). Without that artifact
+    ``parsed_prev`` is None and ``reason`` says why.
+
+    A normal run compares with the newest prior round's file, falling
+    back to its ``docs/bench`` full artifact, then the one-time partial
+    reconstruction of r5, when the recorded file is tail-only
+    (``parsed: null``, as in BENCH_r05.json). ``prev_path`` and
+    ``parsed_prev`` are None when there is no prior round.
+    """
+    # parse each filename's round number ONCE into (round, path)
+    # (review r9: the same regex was re-applied at five sites)
+    rounds = sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
+    )
+    env_round = max(env_round, 0)  # a negative round would name a junk artifact
+    cur_round = env_round or (rounds[-1][0] + (0 if scaling_rerun else 1) if rounds else 1)
+    if scaling_rerun:
+        full = os.path.join(here, f"docs/bench/BENCH_r{cur_round:02d}_full.json")
+        if not os.path.exists(full):
+            return cur_round, None, None, (
+                f"scaling re-run of round {cur_round}: no full-core artifact "
+                f"docs/bench/BENCH_r{cur_round:02d}_full.json to compare with; "
+                "the previous round ran at a different core count"
+            )
+        with open(full) as fh:
+            return cur_round, full, json.load(fh), None
+    rounds = [(n, p) for n, p in rounds if n < cur_round]
+    if not rounds:
+        return cur_round, None, None, None
+    prev_round, prev_path = rounds[-1]
+    with open(prev_path) as fh:
+        prev_doc = json.load(fh)
+    parsed_prev = prev_doc.get("parsed") or prev_doc
+    if not (parsed_prev.get("queries_min") or parsed_prev.get("queries")):
+        for alt in (
+            f"docs/bench/BENCH_r{prev_round:02d}_full.json",
+            f"docs/bench/BENCH_r{prev_round:02d}_partial.json",
+        ):
+            alt_path = os.path.join(here, alt)
+            if os.path.exists(alt_path):
+                with open(alt_path) as fh:
+                    parsed_prev = json.load(fh)
+                prev_path = alt_path
+                break
+    return cur_round, prev_path, parsed_prev, None
+
 
 # the 22 TPC-H query shapes (catalog names), run on the 10x replica
 TPCH_SUITE = [
@@ -394,66 +467,25 @@ def main() -> None:
     sentinel["post"] = sentinel_batteries[-1]
     sentinel["scan_path"] = _SENTINEL_SCAN_PATH if _sentinel_has_scan else None
 
-    # round-over-round comparison against the newest recorded BENCH file
-    # of a PRIOR round, on the shared query set, using THIS run's min
-    # (noise-robust) and the prior run's recorded values. The current
-    # round defaults to (newest recorded round + 1) — the driver records
-    # BENCH_r{N}.json only at round end, so during a round the newest file
-    # IS the previous round's. When re-running within an already-recorded
-    # round, set SPARK_GRAFT_ROUND so the run does not silently compare
-    # against its own round's artifact and report ~1.0 as round-over-round
-    # (ADVICE r5).
+    # round-over-round comparison (see previous_artifact for the choice
+    # of baseline), on the shared query set, using THIS run's min
+    # (noise-robust) and the prior run's recorded values
     vs_prev = None
+    vs_prev_reason = None
     here = os.path.dirname(os.path.abspath(__file__))
     cur_round = 0  # safe fallback for the artifact path if detection fails
     try:
         # everything below is advisory; a stray non-matching BENCH_r*
         # filename or a malformed SPARK_GRAFT_ROUND must never abort the
-        # benchmark itself (review r6: the glob key and int() had drifted
-        # out of the try block)
-        # parse each filename's round number ONCE into (round, path)
-        # (review r9: the same regex was re-applied at five sites, with
-        # .group(1) correctness depending on a filter elsewhere)
-        rounds = sorted(
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        )
+        # benchmark itself (review r6)
         try:
             env_round = int(os.environ.get("SPARK_GRAFT_ROUND", 0))
         except ValueError:
             env_round = 0  # malformed env var -> fall back to glob detection
-        if env_round < 0:
-            env_round = 0  # a negative round would name a junk artifact
-        # A reduced-core run (the driver's scaling pass: SPARK_GRAFT_CPUS
-        # below the box's core count) happens AFTER the round's BENCH_r{N}
-        # .json is recorded, so "newest + 1" would squat the NEXT round's
-        # artifact name (r16: the 8-core run minted BENCH_r17_full.json).
-        # It is a re-measurement OF the newest recorded round — name it so.
-        cur_round = env_round or (
-            rounds[-1][0] + (0 if _SCALING_RERUN else 1) if rounds else 1
+        cur_round, prev_path, parsed_prev, vs_prev_reason = previous_artifact(
+            here, env_round, _SCALING_RERUN
         )
-        rounds = [(n, p) for n, p in rounds if n < cur_round]
-        if rounds:
-            prev_round, prev_path = rounds[-1]
-            with open(prev_path) as fh:
-                prev_doc = json.load(fh)
-            parsed_prev = prev_doc.get("parsed") or prev_doc
-            # fallback chain when the driver-recorded file is tail-only
-            # (parsed: null, as in BENCH_r05.json): the full artifact this
-            # script commits per round, else the one-time partial
-            # reconstruction of r5's tail
-            if not (parsed_prev.get("queries_min") or parsed_prev.get("queries")):
-                for alt in (
-                    f"docs/bench/BENCH_r{prev_round:02d}_full.json",
-                    f"docs/bench/BENCH_r{prev_round:02d}_partial.json",
-                ):
-                    alt_path = os.path.join(here, alt)
-                    if os.path.exists(alt_path):
-                        with open(alt_path) as fh:
-                            parsed_prev = json.load(fh)
-                        prev_path = alt_path
-                        break
+        if parsed_prev is not None:
             # compare like with like: min-to-min once the previous round
             # recorded queries_min (r5+), else min-vs-median with the
             # basis recorded — min-of-3 sits below median-of-3 in
@@ -466,9 +498,8 @@ def main() -> None:
                 # say WHY the graded ratio is missing instead of a silent
                 # null indistinguishable from "no prior round" (review r9)
                 vs_prev = {
-                    "error": f"round {prev_round} has no per-query data "
-                    f"(checked {os.path.basename(prev_path)} and the "
-                    "docs/bench fallbacks)"
+                    "error": f"{os.path.basename(prev_path)} has no per-query "
+                    "data (docs/bench fallbacks checked too)"
                 }
             if shared:
                 cur = sum(timings_min[q] for q in shared)
@@ -635,6 +666,7 @@ def main() -> None:
         "bracket": bracket,
         "sentinel": sentinel,
         "vs_prev": vs_prev,
+        "vs_prev_reason": vs_prev_reason,
         "tpch_x10": tpch_x10,
         "reference_x10": reference_x10,
         "sf": sf_val,
@@ -668,6 +700,7 @@ def main() -> None:
         "bracket_value_min_over_runs": bracket["value_min_over_runs"],
         "sentinel_sec": sentinel["sec"],
         "vs_prev": vs_prev,
+        "vs_prev_reason": vs_prev_reason,
         "tpch_x10_total_sec": tpch_x10.get("total_sec"),
         "reference_x10_speedup_sampled": reference_x10.get("speedup_sampled"),
         "full_artifact": full_rel,

@@ -49,6 +49,12 @@ def hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def hash64_expr(expr: str) -> str:
+    """Spark SQL spelling of ``hash64`` over the SQL expression ``expr``,
+    for builders written as JVM-parsed SQL strings."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def hash64_sql(expr: str) -> str:
     """DuckDB SQL rendering of ``hash64`` for oracle queries."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"

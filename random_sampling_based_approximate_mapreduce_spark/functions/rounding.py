@@ -35,12 +35,17 @@ Implementation notes:
   is exact). Then half-away is ``t + 1 if frac >= 0.5 else t``.
 - Everything is built-in Column arithmetic — whole-stage codegen, no
   UDF, negligible cost over ``F.round``.
+- ``sql_round_sql`` is the same recipe spelled as Spark SQL text, for
+  builders that hand the JVM one expression string; ``sql_round`` stays
+  for Column inputs. tests/test_rounding.py pins the two bit-identical.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .quoting import sql_double
 
 
 def sql_round(col: "Column | str", digits: int = 0) -> Column:
@@ -56,6 +61,17 @@ def sql_round(col: "Column | str", digits: int = 0) -> Column:
     frac = ax - t
     fl = F.when(frac >= F.lit(0.5), t + F.lit(1.0)).otherwise(t)
     return F.when(x < F.lit(0.0), -fl).otherwise(fl) / scale
+
+
+def sql_round_sql(expr: str, digits: int = 0) -> str:
+    """``sql_round`` over the Spark SQL expression ``expr``, as Spark SQL:
+    the same operations in the same order, so it parses to the same plan."""
+    scale = sql_double(10.0 ** digits)
+    x = f"(CAST({expr} AS DOUBLE) * {scale})"
+    ax = f"abs({x})"
+    t = f"(CASE WHEN {ax} < {sql_double(9.0e18)} THEN CAST(CAST({ax} AS BIGINT) AS DOUBLE) ELSE {ax} END)"
+    fl = f"(CASE WHEN {ax} - {t} >= 0.5D THEN {t} + 1.0D ELSE {t} END)"
+    return f"(CASE WHEN {x} < 0.0D THEN -{fl} ELSE {fl} END / {scale})"
 
 
 def np_sql_round(x, digits: int = 6):

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .quoting import ident, sql_str
 from .rounding import sql_round
 
 # Word boundary for the oracle-checked word pipeline: after lowercasing,
@@ -48,29 +49,19 @@ def normalize_line(col: Column) -> Column:
     return F.url_decode(c)
 
 
-def _ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(value: str) -> str:
-    """``value`` as a single-quoted SQL string literal."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def drop_digit_lines(df: DataFrame, col: str) -> DataFrame:
     """P2: drop the whole line if it contains any digit.
 
     The tokenizer builders here are SQL strings, parsed in the JVM in one
     call: every ``pyspark.sql.functions`` call is a py4j round trip, and
     each DataFrame op is analysed on its own."""
-    return df.where(f"NOT {_ident(col)} RLIKE {_sql_str(DIGIT_RE)}")
+    return df.where(f"NOT {ident(col)} RLIKE {sql_str(DIGIT_RE)}")
 
 
 def _words_sql(col: str, split_re: str) -> str:
     """P3 over column ``col`` as SQL: lowercase then split. The one
     spelling of the rule; ``words`` and ``explode_words`` build on it."""
-    return f"split(lower({_ident(col)}), {_sql_str(split_re)})"
+    return f"split(lower({ident(col)}), {sql_str(split_re)})"
 
 
 def words(col: str, split_re: str = WORD_SPLIT_RE) -> Column:
@@ -86,9 +77,9 @@ def explode_words(df: DataFrame, col: str, out: str = "word") -> DataFrame:
     with the full split expression substituted — doubling the regex work
     per row. The length>0 predicate already drops the outer-null rows.
     """
-    o = _ident(out)
+    o = ident(out)
     return df.selectExpr(f"explode_outer({_words_sql(col, WORD_SPLIT_RE)}) AS {o}").where(
-        f"length({o}) > 0 AND NOT {o} RLIKE {_sql_str(NUMERIC_TOKEN_RE)}"
+        f"length({o}) > 0 AND NOT {o} RLIKE {sql_str(NUMERIC_TOKEN_RE)}"
     )
 
 

@@ -23,7 +23,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import sql_round
+from ..functions.quoting import sql_double
+from ..functions.rounding import sql_round, sql_round_sql
 from ..functions import text as T
 from ..operators.quality import psi_bucketize, psi_from_counts
 from ..sampling.config import SamplingConfig

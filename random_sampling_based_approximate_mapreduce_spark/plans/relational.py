@@ -50,21 +50,23 @@ from ._base import (
     doc="TPC-H Q1 pricing summary: multi-agg groupBy with exact decimal math",
 )
 def q_tpch_q1(spark, sf_dir):
-    l = load(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
-    price, disc, tax = _dec("l_extendedprice"), _dec("l_discount", 4, 2), _dec("l_tax", 4, 2)
-    one = F.lit("1.00").cast("decimal(4,2)")
-    qty_l = F.col("l_quantity").cast("bigint")
-    n = F.count(F.lit(1))
-    return l.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(qty_l).alias("sum_qty"),
-        F.sum(price).cast("double").alias("sum_base_price"),
-        F.sum(price * (one - disc)).cast("double").alias("sum_disc_price"),
-        F.sum(price * (one - disc) * (one + tax)).cast("double").alias("sum_charge"),
-        (F.sum(qty_l).cast("double") / n).alias("avg_qty"),
-        (F.sum(price).cast("double") / n).alias("avg_price"),
-        (F.sum(disc).cast("double") / n).alias("avg_disc"),
-        n.cast("long").alias("count_order"),
+    # JVM-parsed SQL: one parse per aggregate (docs/SCALE.md, "Plan build")
+    l = load(spark, sf_dir, "lineitem").where("l_shipdate <= CAST('2000-09-02' AS TIMESTAMP)")
+    price = "CAST(l_extendedprice AS DECIMAL(12,2))"
+    disc, tax = "CAST(l_discount AS DECIMAL(4,2))", "CAST(l_tax AS DECIMAL(4,2))"
+    one = "CAST('1.00' AS DECIMAL(4,2))"
+    qty_l = "CAST(l_quantity AS BIGINT)"
+    aggs = (
+        f"sum({qty_l}) AS sum_qty",
+        f"CAST(sum({price}) AS DOUBLE) AS sum_base_price",
+        f"CAST(sum({price} * ({one} - {disc})) AS DOUBLE) AS sum_disc_price",
+        f"CAST(sum({price} * ({one} - {disc}) * ({one} + {tax})) AS DOUBLE) AS sum_charge",
+        f"CAST(sum({qty_l}) AS DOUBLE) / count(1) AS avg_qty",
+        f"CAST(sum({price}) AS DOUBLE) / count(1) AS avg_price",
+        f"CAST(sum({disc}) AS DOUBLE) / count(1) AS avg_disc",
+        "CAST(count(1) AS BIGINT) AS count_order",
     )
+    return l.groupBy("l_returnflag", "l_linestatus").agg(*[F.expr(a) for a in aggs])
 
 
 @register(

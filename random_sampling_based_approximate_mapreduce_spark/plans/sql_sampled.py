@@ -15,7 +15,9 @@ from ._base import (
     _dec,
     load,
     register,
+    sql_double,
     sql_round,
+    sql_round_sql,
 )
 
 # ===========================================================================
@@ -857,30 +859,28 @@ def q_approx_sum_ci_families(spark, sf_dir):
     from ..sampling import stats as _stats
     from ..sampling.deterministic import hash_bernoulli
 
-    z = _stats.z_score(0.95)
+    # JVM-parsed SQL: one parse per projection (docs/SCALE.md, "Plan build")
+    z = sql_double(_stats.z_score(0.95))
     li = load(spark, sf_dir, "lineitem").withColumn(
-        "__k", F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
+        "__k", F.expr("concat_ws('-', l_orderkey, l_linenumber)")
     )
     sampled = hash_bernoulli(li, "__k", 0.1, seed=42)
-    q = F.col("l_quantity").cast("bigint")
+    q = "CAST(l_quantity AS BIGINT)"
     agg = sampled.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.sum(q).alias("__sq"),
-        F.sum(q * q).alias("__sqq"),
+        F.expr("count(1) AS n_sampled"),
+        F.expr(f"sum({q}) AS __sq"),
+        F.expr(f"sum({q} * {q}) AS __sqq"),
     )
-    n = F.col("n_sampled").cast("double")
-    big_n = n / F.lit(0.1)
-    return agg.select(
+    n = "CAST(n_sampled AS DOUBLE)"
+    big_n = f"({n} / 0.1D)"
+    ci_sum = f"{z} * sqrt(0.9D * CAST(__sqq AS DOUBLE)) / 0.1D"
+    ci_rel = f"sqrt(0.25D / {n}) * {z} * sqrt(({big_n} - {n}) / ({big_n} - 1.0D))"
+    return agg.selectExpr(
         "l_returnflag",
         "n_sampled",
-        (F.col("__sq").cast("double") / F.lit(0.1)).alias("est_qty"),
-        sql_round(
-            F.lit(z) * F.sqrt(F.lit(0.9) * F.col("__sqq").cast("double")) / F.lit(0.1), 6
-        ).alias("ci_sum"),
-        sql_round(
-            F.sqrt(F.lit(0.25) / n) * F.lit(z) * F.sqrt((big_n - n) / (big_n - F.lit(1.0))),
-            6,
-        ).alias("ci_reference_rel"),
+        "CAST(__sq AS DOUBLE) / 0.1D AS est_qty",
+        f"{sql_round_sql(ci_sum, 6)} AS ci_sum",
+        f"{sql_round_sql(ci_rel, 6)} AS ci_reference_rel",
     )
 
 

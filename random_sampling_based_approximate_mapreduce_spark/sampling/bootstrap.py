@@ -39,8 +39,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.quoting import ident, sql_double
 from . import stats
-from .deterministic import _BUCKETS, _priority, _priority_sql
+from .deterministic import _BUCKETS, _bucket, _priority_sql
 
 # cumulative Poisson(1) CDF, k = 0..7; P(K >= 8) ~ 1e-6 truncated to 8
 # (bias ~1e-6 on E[m], far below replicate noise). Python-computed
@@ -52,16 +53,14 @@ for _k in range(8):
     _POISSON1_CUM.append(_acc)
 
 
-def _uniform(key: Column, rep: Column, seed: int) -> Column:
-    # F.concat (NULL-propagating, like SQL ||), NOT concat_ws (which
+def _uniform(key: str, rep: str, seed: int) -> Column:
+    # concat (NULL-propagating, like SQL ||), NOT concat_ws (which
     # skips NULLs): a NULL key then yields a NULL uniform, every CASE
     # branch misses, and BOTH engines land on the constant tail
     # multiplier — mirror-consistent, though statistically degenerate;
     # callers must provide row-identifying non-null keys (docstring).
-    keyrep = F.concat(key.cast("string"), F.lit("|"), rep.cast("string"))
-    return F.pmod(_priority(keyrep, seed), F.lit(_BUCKETS)).cast("double") / F.lit(
-        float(_BUCKETS)
-    )
+    keyrep = f"concat(CAST({ident(key)} AS STRING), '|', CAST({ident(rep)} AS STRING))"
+    return F.expr(f"CAST({_bucket(keyrep, seed)} AS DOUBLE) / {sql_double(_BUCKETS)}")
 
 
 def _uniform_sql(key_expr: str, rep_expr: str, seed: int) -> str:
@@ -141,7 +140,7 @@ def poisson_bootstrap_sum(
         F.col(key_col).alias("__bk"),
         F.col(value_col).alias("__x"),
     ).withColumn("__rep", reps)
-    m = _multiplier(_uniform(F.col("__bk"), F.col("__rep"), seed))
+    m = _multiplier(_uniform("__bk", "__rep", seed))
     per = d.groupBy(*gs, F.col("__rep")).agg(
         F.sum(F.col("__x") * m).alias("__sr"),
         # plain sum materialized only in replicate 0's row; NULL elsewhere
@@ -231,7 +230,7 @@ def weighted_quantile_bootstrap(
         F.col(weight_col).cast("double").alias("__w"),
     ).withColumn("__rep", reps)
     m = F.when(F.col("__rep") == F.lit(-1), F.lit(1)).otherwise(
-        _multiplier(_uniform(F.col("__bk"), F.col("__rep"), seed))
+        _multiplier(_uniform("__bk", "__rep", seed))
     )
     d = d.withColumn("__wm", F.col("__w") * m.cast("double"))
     per = weighted_quantile(

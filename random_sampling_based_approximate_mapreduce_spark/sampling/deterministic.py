@@ -24,13 +24,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash64, hash64_sql
+from ..functions.hashing import hash64_expr, hash64_sql
+from ..functions.quoting import ident, sql_double, sql_str
 
 _BUCKETS = 1_000_000
 
 
-def _priority(key: Column, seed: int) -> Column:
-    return hash64(F.concat(key.cast("string"), F.lit(f"#{seed}")))
+def _priority(key_expr: str, seed: int) -> str:
+    """The hash priority of the Spark SQL expression ``key_expr`` under
+    ``seed``, as Spark SQL (one JVM parse, no per-function round trip)."""
+    return hash64_expr(f"concat(CAST({key_expr} AS STRING), {sql_str(f'#{seed}')})")
+
+
+def _bucket(key_expr: str, seed: int) -> str:
+    """``_priority`` reduced to the ``_BUCKETS`` grid, as Spark SQL."""
+    return f"pmod({_priority(key_expr, seed)}, {_BUCKETS})"
+
+
+def _accept(key_col: str, ratio: float, seed: int) -> str:
+    """The hash-Bernoulli keep predicate on column ``key_col``, as Spark SQL."""
+    return f"{_bucket(ident(key_col), seed)} < {bucket_threshold(ratio)}"
 
 
 def _priority_sql(key_expr: str, seed: int) -> str:
@@ -61,8 +74,7 @@ def bucket_threshold(ratio: float, buckets: int = _BUCKETS) -> int:
 
 def hash_bernoulli(df: DataFrame, key_col: str, ratio: float, seed: int = 42) -> DataFrame:
     """Deterministic Bernoulli(ratio) by key hash; HT scale-up = 1/ratio."""
-    pri = F.pmod(_priority(F.col(key_col), seed), F.lit(_BUCKETS))
-    return df.where(pri < bucket_threshold(ratio))
+    return df.where(_accept(key_col, ratio, seed))
 
 
 def hash_bernoulli_sql(key_expr: str, ratio: float, seed: int = 42) -> str:
@@ -121,7 +133,7 @@ def stratified_hash_weight(
     places)."""
     if not fractions:
         raise ValueError("fractions must be a non-empty {stratum: ratio} dict")
-    pri = F.pmod(_priority(F.col(key_col), seed), F.lit(_BUCKETS))
+    pri = F.expr(_bucket(ident(key_col), seed))
     w = None
     for t, r in fractions.items():
         # validate the fraction first: its error messages name the
@@ -174,9 +186,7 @@ def weighted_bernoulli(
     pass; hash-determinism makes the SAMPLE ITSELF value-checkable
     against the SQL oracle, per the module contract.
     """
-    u = F.pmod(_priority(F.col(key_col), seed), F.lit(_BUCKETS)).cast(
-        "double"
-    ) / F.lit(float(_BUCKETS))
+    u = F.expr(f"CAST({_bucket(ident(key_col), seed)} AS DOUBLE) / {sql_double(_BUCKETS)}")
     pi = F.least(
         F.lit(1.0),
         F.lit(target_ratio) * F.col(weight_col).cast("double") / F.lit(float(mean_weight)),
@@ -207,7 +217,7 @@ def exact_k_sample(df: DataFrame, key_col: str, k: int, seed: int = 42) -> DataF
     partition keeps its local top-k and the driver merges, no global
     sort exchange (verify with .explain).
     """
-    pri = _priority(F.col(key_col), seed)
+    pri = F.expr(_priority(ident(key_col), seed))
     return df.orderBy(pri.asc(), F.col(key_col).asc()).limit(k)
 
 

@@ -35,6 +35,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..functions.quoting import ident, sql_double
 from ..functions.rounding import sql_round
 from . import stats
 from .config import SamplingConfig
@@ -130,10 +131,10 @@ def report_frame(
     ``stats.achieved_error`` path on the same counts, so the query and
     the library report can never drift apart.
     """
-    from .deterministic import _BUCKETS, _priority, bucket_threshold
+    from .deterministic import _accept
 
     z = stats.z_score(confidence)
-    keep = F.pmod(_priority(F.col(key_col), seed), F.lit(_BUCKETS)) < bucket_threshold(ratio)
+    keep = F.expr(_accept(key_col, ratio, seed))
     agg = df.agg(
         F.count(F.lit(1)).alias("total_records"),
         F.count_if(keep).alias("sampled_records"),
@@ -207,6 +208,11 @@ def _support_cols(min_support: int, n=None) -> list:
         n.alias("n_sampled"),
         (n < F.lit(int(min_support))).alias("low_support"),
     ]
+
+
+def _support_sql(min_support: int, n: str) -> list[str]:
+    """``_support_cols`` as Spark SQL select items over the count column ``n``."""
+    return [f"{n} AS n_sampled", f"{n} < {int(min_support)} AS low_support"]
 
 
 def compose_cluster_row_stage(
@@ -1030,7 +1036,7 @@ class SampledFrame:
 
     def _joined_cluster_agg(
         self,
-        x,
+        x: str,
         group_cols,
         alias: str,
         min_support: int | None,
@@ -1046,7 +1052,7 @@ class SampledFrame:
         combines them per the derivation in ``join_sampled``'s docstring.
         Two shuffles keyed (group, row-id) with partial aggregation, one
         tiny union-pivot per group — no driver math, no extra pass over
-        pairs.
+        pairs. ``x`` is the per-pair value as Spark SQL (``"1"`` counts).
         """
         r1, r2 = self.join_ratios
         lid, rid = self.join_ids
@@ -1056,30 +1062,21 @@ class SampledFrame:
         ids = [
             c for c in dict.fromkeys(list(lid) + list(rid)) if c not in gs
         ]
-        d = self.df.select(
-            *[F.col(c) for c in gs],
-            *[F.col(c) for c in ids],
-            x.cast("double").alias("__x"),
-        )
+        d = self.df.selectExpr(*[ident(c) for c in gs + ids], f"CAST({x} AS DOUBLE) AS __x")
         z = stats.z_score(self.config.confidence)
         r = self.ratio
 
         joined = self._joined_cluster_moments(d, gs)
         var = (
-            F.lit(1.0 - r) * F.col("__pl")
-            + F.lit(1.0 - r1) * F.col("__dl")
-            + F.lit(1.0 - r2) * F.col("__dr")
-        ) / F.lit(r * r)
-        cols: list = [F.col(c) for c in gs]
-        cols.append((F.col("__sxl") * F.lit(self.scale)).alias(alias))
-        cols.append(
-            (F.lit(z) * F.sqrt(F.greatest(var, F.lit(0.0)))).alias(f"{alias}_ci")
+            f"({sql_double(1.0 - r)} * __pl + {sql_double(1.0 - r1)} * __dl"
+            f" + {sql_double(1.0 - r2)} * __dr) / {sql_double(r * r)}"
         )
+        cols = [ident(c) for c in gs]
+        cols.append(f"__sxl * {sql_double(self.scale)} AS {ident(alias)}")
+        cols.append(f"{sql_double(z)} * sqrt(greatest({var}, 0.0D)) AS {ident(alias + '_ci')}")
         if min_support is not None:
-            n = F.col("__nl")
-            cols.append(n.alias("n_sampled"))
-            cols.append((n < F.lit(int(min_support))).alias("low_support"))
-        return joined.select(*cols)
+            cols.extend(_support_sql(min_support, "__nl"))
+        return joined.selectExpr(*cols)
 
     def _joined_cluster_moments(self, d, gs):
         """The two 2-level aggregation chains shared by every
@@ -1304,26 +1301,21 @@ class SampledFrame:
         ``join_sampled``); the point estimate is unchanged.
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_agg(
-                F.lit(1), group_cols, alias, min_support
-            )
-        base = self.df.groupBy(*[F.col(c) for c in group_cols]) if group_cols else self.df.groupBy()
-        agg = base.agg(F.count(F.lit(1)).alias("__n"))
-        n = F.col("__n")
-        cols: list = [F.col(c) for c in group_cols]
-        cols.append((n * F.lit(self.scale)).alias(alias))
+            return self._joined_cluster_agg("1", group_cols, alias, min_support)
+        # JVM-parsed SQL strings, not Column trees: this is the hot
+        # estimator of the flagship queries (docs/SCALE.md, "Plan build")
+        agg = self.df.groupBy(*group_cols).agg(F.expr("count(1) AS __n"))
+        cols = [ident(c) for c in group_cols]
+        cols.append(f"__n * {sql_double(self.scale)} AS {ident(alias)}")
         if ci and self.ratio < 1.0:
             z = stats.z_score(self.config.confidence)
             cols.append(
-                (
-                    F.lit(z)
-                    * F.sqrt(n.cast("double") * F.lit(max(0.0, 1.0 - self.ratio)))
-                    / F.lit(self.ratio)
-                ).alias(f"{alias}_ci")
+                f"{sql_double(z)} * sqrt(CAST(__n AS DOUBLE) * {sql_double(max(0.0, 1.0 - self.ratio))})"
+                f" / {sql_double(self.ratio)} AS {ident(alias + '_ci')}"
             )
         if min_support is not None and self.ratio < 1.0:
-            cols.extend(_support_cols(min_support, n=n))
-        return agg.select(*cols)
+            cols.extend(_support_sql(min_support, "__n"))
+        return agg.selectExpr(*cols)
 
     def approx_sum(
         self,
@@ -1363,9 +1355,7 @@ class SampledFrame:
         ``join_sampled``); the point estimate is unchanged.
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_agg(
-                F.col(value_col), group_cols, alias, min_support
-            )
+            return self._joined_cluster_agg(ident(value_col), group_cols, alias, min_support)
         est = (F.sum(F.col(value_col)) * F.lit(self.scale)).alias(alias)
         base = self.df.groupBy(*[F.col(c) for c in group_cols]) if group_cols else self.df.groupBy()
         aggs = [est]

@@ -116,21 +116,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from ..session import configure_existing
 
     configure_existing(spark)
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (reads as long
         # under nanosAsLong) and as TIMESTAMP(MICROS, isAdjustedToUTC=false)
         # (reads as TIMESTAMP_NTZ). Normalize both to a UTC TIMESTAMP_LTZ:
         # event-time watermarks require LTZ, and with the session pinned to
         # UTC the wall-clock values match DuckDB's naive reading, so oracles
-        # agree either way.
+        # agree either way. The type comes from the cached schema (no
+        # ``df.schema`` round trip) and the cast is JVM-parsed SQL.
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS LONG)")))
-        elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        ts = schema["ts"].dataType
+        if isinstance(ts, LongType):
+            df = df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))"))
+        elif isinstance(ts, TimestampNTZType):
+            df = df.withColumn("ts", F.expr("CAST(ts AS TIMESTAMP)"))
     return df
 
 

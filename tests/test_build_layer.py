@@ -1,26 +1,41 @@
 """The driver-side build layer: the parquet schema cache behind
-``sources.tables.load`` and the SQL-string tokenizer builders.
+``sources.tables.load`` and the SQL-string builders (tokenizer, Apache
+log round trip, hash sampling, ``approx_count``, TPC-H Q1, the CI
+families).
 
 A plan build should launch no Spark job and make few py4j calls; these
-tests pin what the two shortcuts must not change: the schema a read
-sees, the attribute IDs of each read, and the optimized tokenizer plan.
+tests pin what the shortcuts must not change: the schema a read sees,
+the attribute IDs of each read, and each optimized plan, which must
+equal the plan of a Column-API reference written out here. A budget
+test caps the py4j round trips of one warm build.
 """
 
 from __future__ import annotations
 
+import gc
 import hashlib
 import os
 import re
 import shutil
+import struct
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType, TimestampType
+from pyspark.sql.types import BinaryType, DoubleType, StringType, TimestampType
 
 from random_sampling_based_approximate_mapreduce_spark import session
 from random_sampling_based_approximate_mapreduce_spark.functions import text as T
+from random_sampling_based_approximate_mapreduce_spark.functions.hashing import hash64
+from random_sampling_based_approximate_mapreduce_spark.functions.quoting import sql_double
+from random_sampling_based_approximate_mapreduce_spark.functions.rounding import sql_round
+from random_sampling_based_approximate_mapreduce_spark.plans.catalog import QUERIES
+from random_sampling_based_approximate_mapreduce_spark.sampling import stats
+from random_sampling_based_approximate_mapreduce_spark.sampling.config import SamplingConfig
+from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic import hash_bernoulli
+from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import SampledFrame
+from random_sampling_based_approximate_mapreduce_spark.sources import apache_log as AL
 from random_sampling_based_approximate_mapreduce_spark.sources import scale_up, tables
 from random_sampling_based_approximate_mapreduce_spark.sources.tables import (
     load,
@@ -125,7 +140,10 @@ def _column_api_words(df, col, out="word"):
 
 
 def _optimized(df) -> str:
-    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().optimizedPlan().toString())
+    """The optimized plan with attribute IDs and the session-wide
+    ``_common_expr_N`` counter (``nullif``'s shared operand) normalized."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"_common_expr_\d+", "_common_expr_", re.sub(r"#\d+L?", "#", plan))
 
 
 def test_sql_string_tokenizer_plan_matches_column_api(spark, sf_dir):
@@ -185,3 +203,235 @@ def test_scale_up_signature_is_unchanged(tmp_path):
     )
     assert scale_up._signature(str(src), 2, names) == hashlib.md5(raw.encode()).hexdigest()[:12]
     assert tables.file_signature(str(src / "documents.parquet")) == [old_sig(str(src / "documents.parquet"))]
+
+
+def test_sql_double_reads_back_as_the_same_double(spark):
+    """A bare ``0.1`` would parse as DECIMAL; the rendered literal is the
+    DOUBLE ``F.lit`` makes, bit for bit, negatives and subnormals too."""
+    xs = [0.1, -0.5, 1 / 3, 1e-300, 5e-324, 1e16, 9.0e18, -0.0]
+    df = spark.range(1).selectExpr(*[f"{sql_double(x)} AS c{i}" for i, x in enumerate(xs)])
+    assert all(isinstance(f.dataType, DoubleType) for f in df.schema.fields)
+    got = df.first()
+    assert [struct.pack("<d", v) for v in got] == [struct.pack("<d", x) for x in xs]
+
+
+# --- Column-API references of the SQL-string builders ----------------------
+
+
+def _column_api_raw_log(events):
+    """``synthesize_raw_log`` written with ``pyspark.sql.functions``."""
+    e = events
+    is_hack = (e.event_type == "error") & (e.event_id % 7 < 3)
+    hack_path = F.element_at(F.array(*[F.lit(p) for p in AL.HACK_PATHS]), (e.event_id % 9 + 1).cast("int"))
+    page_path = F.concat(F.lit("/page/"), e.event_type, F.lit("/"), (e.event_id % 20).cast("string"))
+    query = F.when(e.event_id % 5 == 0, F.concat(F.lit("?q="), e.user_id.cast("string"))).otherwise(F.lit(""))
+    status = (
+        F.when(e.event_type == "error", F.when(e.event_id % 2 == 0, 404).otherwise(500))
+        .when(e.event_type == "purchase", 201)
+        .otherwise(200)
+        .cast("int")
+    )
+    line = F.format_string(
+        '%s - - [%s] "%s %s%s HTTP/1.1" %d %d',
+        F.concat(F.lit("host-"), (e.user_id % 50).cast("string")),
+        F.date_format(e.ts, AL.APACHE_TS_FMT),
+        F.when(e.event_type.isin("purchase", "signup"), "POST").otherwise("GET"),
+        F.when(is_hack, hack_path).otherwise(page_path),
+        query,
+        status,
+        (F.floor(e.value * 37) + 100).cast("long"),
+    )
+    return events.select(line.alias("line"))
+
+
+def _column_api_parse(raw, col="line", keep=()):
+    """``parse_apache_log`` written with ``pyspark.sql.functions``."""
+    c, rx = F.col(col), AL._LOG_RE
+    extracted = raw.select(
+        *[F.col(k) for k in keep],
+        F.nullif(F.regexp_extract(c, rx, 1), F.lit("")).alias("host"),
+        F.try_to_timestamp(F.regexp_extract(c, rx, 2), F.lit(AL.APACHE_TS_FMT)).alias("ts"),
+        F.regexp_extract(c, rx, 3).alias("method"),
+        F.regexp_extract(c, rx, 4).alias("request_path"),
+        F.regexp_extract(c, rx, 5).alias("proto"),
+        F.regexp_extract(c, rx, 6).cast("int").alias("status"),
+        F.regexp_extract(c, rx, 7).try_cast("long").alias("bytes"),
+    )
+    return extracted.select(
+        *keep,
+        "host",
+        "ts",
+        "method",
+        F.regexp_extract(F.col("request_path"), r"^([^?]*)", 1).alias("path"),
+        F.nullif(F.regexp_extract(F.col("request_path"), r"\?(.*)$", 1), F.lit("")).alias("query"),
+        "proto",
+        "status",
+        "bytes",
+    ).where(F.col("host").isNotNull() & F.col("ts").isNotNull() & F.col("status").isNotNull())
+
+
+def _cnt(log, key):
+    return log.groupBy(key).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+_COLUMN_API_TASKS = {
+    "hack": lambda log: _cnt(log.where(F.col("path").rlike("^(" + "|".join(AL.HACK_PREFIXES) + ")")), "host"),
+    "host": lambda log: _cnt(log, "host"),
+    "dateweek": lambda log: _cnt(log.select(F.date_format("ts", "EEE HH").alias("dateweek")), "dateweek"),
+    "size": lambda log: _cnt(
+        log.select((F.floor(F.col("bytes") / 100) * 100).cast("long").alias("size_bucket")), "size_bucket"
+    ),
+    "totalsize": lambda log: log.agg(F.sum("bytes").alias("total_bytes")),
+    "pagesize": lambda log: log.groupBy("path").agg(F.sum("bytes").alias("total_bytes")),
+    "page": lambda log: _cnt(log, "path"),
+}
+
+
+def _column_api_hash_bernoulli(df, key_col, ratio, seed):
+    pri = hash64(F.concat(F.col(key_col).cast("string"), F.lit(f"#{seed}")))
+    return df.where(F.pmod(pri, F.lit(1_000_000)) < round(ratio * 1_000_000))
+
+
+def _events(spark, sf_dir):
+    return load(spark, sf_dir, "events")
+
+
+@pytest.mark.parametrize("task", sorted(AL.LOG_TASKS))
+def test_log_task_plan_matches_column_api(spark, sf_dir, task):
+    events = _events(spark, sf_dir)
+    got = AL.LOG_TASKS[task](AL.access_log(events))
+    want = _COLUMN_API_TASKS[task](
+        _column_api_parse(_column_api_raw_log(tables.ensure_parallelism(events)))
+    )
+    assert _optimized(got) == _optimized(want)
+
+
+def test_parse_with_keep_plan_matches_column_api(spark, sf_dir):
+    raw = AL.synthesize_raw_log(_events(spark, sf_dir)).withColumn("cluster id", F.lit(7))
+    got = AL.parse_apache_log(raw, keep=("cluster id",))
+    assert got.columns[0] == "cluster id"
+    assert _optimized(got) == _optimized(_column_api_parse(raw, keep=("cluster id",)))
+
+
+def test_hash_bernoulli_plan_matches_column_api(spark, sf_dir):
+    events = _events(spark, sf_dir).withColumn("__k", F.col("event_id").cast("string"))
+    got = hash_bernoulli(events, "__k", 0.1, seed=7)
+    assert _optimized(got) == _optimized(_column_api_hash_bernoulli(events, "__k", 0.1, 7))
+
+
+def _column_api_tpch_q1(spark, sf_dir):
+    l = load(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc, tax = F.col("l_discount").cast("decimal(4,2)"), F.col("l_tax").cast("decimal(4,2)")
+    one = F.lit("1.00").cast("decimal(4,2)")
+    qty_l = F.col("l_quantity").cast("bigint")
+    n = F.count(F.lit(1))
+    return l.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum(qty_l).alias("sum_qty"),
+        F.sum(price).cast("double").alias("sum_base_price"),
+        F.sum(price * (one - disc)).cast("double").alias("sum_disc_price"),
+        F.sum(price * (one - disc) * (one + tax)).cast("double").alias("sum_charge"),
+        (F.sum(qty_l).cast("double") / n).alias("avg_qty"),
+        (F.sum(price).cast("double") / n).alias("avg_price"),
+        (F.sum(disc).cast("double") / n).alias("avg_disc"),
+        n.cast("long").alias("count_order"),
+    )
+
+
+def _column_api_ci_families(spark, sf_dir):
+    z = stats.z_score(0.95)
+    li = load(spark, sf_dir, "lineitem").withColumn(
+        "__k", F.concat_ws("-", F.col("l_orderkey"), F.col("l_linenumber"))
+    )
+    q = F.col("l_quantity").cast("bigint")
+    agg = _column_api_hash_bernoulli(li, "__k", 0.1, 42).groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n_sampled"),
+        F.sum(q).alias("__sq"),
+        F.sum(q * q).alias("__sqq"),
+    )
+    n = F.col("n_sampled").cast("double")
+    big_n = n / F.lit(0.1)
+    return agg.select(
+        "l_returnflag",
+        "n_sampled",
+        (F.col("__sq").cast("double") / F.lit(0.1)).alias("est_qty"),
+        sql_round(
+            F.lit(z) * F.sqrt(F.lit(0.9) * F.col("__sqq").cast("double")) / F.lit(0.1), 6
+        ).alias("ci_sum"),
+        sql_round(
+            F.sqrt(F.lit(0.25) / n) * F.lit(z) * F.sqrt((big_n - n) / (big_n - F.lit(1.0))), 6
+        ).alias("ci_reference_rel"),
+    )
+
+
+@pytest.mark.parametrize(
+    "name, reference",
+    [("tpch_q1", _column_api_tpch_q1), ("approx_sum_ci_families", _column_api_ci_families)],
+)
+def test_catalog_plan_matches_column_api(spark, sf_dir, name, reference):
+    got = QUERIES[name].spark(spark, sf_dir)
+    assert _optimized(got) == _optimized(reference(spark, sf_dir))
+
+
+def _column_api_approx_count(sf, group_cols, ci, min_support, alias):
+    agg = sf.df.groupBy(*[F.col(c) for c in group_cols]).agg(F.count(F.lit(1)).alias("__n"))
+    n = F.col("__n")
+    cols = [F.col(c) for c in group_cols] + [(n * F.lit(sf.scale)).alias(alias)]
+    if ci:
+        z = stats.z_score(sf.config.confidence)
+        ci_half = F.lit(z) * F.sqrt(n.cast("double") * F.lit(1.0 - sf.ratio)) / F.lit(sf.ratio)
+        cols.append(ci_half.alias(f"{alias}_ci"))
+    if min_support is not None:
+        cols += [n.alias("n_sampled"), (n < F.lit(min_support)).alias("low_support")]
+    return agg.select(*cols)
+
+
+@pytest.mark.parametrize(
+    "group_cols, ci, min_support",
+    [
+        (("event_type",), False, None),
+        (("event_type", "user_id"), True, None),
+        ((), False, 30),
+        (("event_type",), True, 5),
+    ],
+)
+def test_approx_count_plan_matches_column_api(spark, sf_dir, group_cols, ci, min_support):
+    sf = SampledFrame.from_dataframe(
+        _events(spark, sf_dir), SamplingConfig(ratio=0.25, seed=11), observe=False
+    )
+    got = sf.approx_count(*group_cols, ci=ci, min_support=min_support, alias="est `n`")
+    want = _column_api_approx_count(sf, group_cols, ci, min_support, "est `n`")
+    assert got.columns == want.columns
+    assert _optimized(got) == _optimized(want)
+
+
+@pytest.mark.parametrize("name", ["log_host", "log_host_sampled", "tpch_q1", "approx_sum_ci_families"])
+def test_warm_build_round_trip_budget(spark, sf_dir, name):
+    """One warm build stays at or under 300 py4j round trips (the
+    Column-API builders made 500-1,300). Each ``send_command`` call is
+    one round trip; the minimum of three builds drops the object-release
+    commands a garbage collection can flush into a build."""
+    import py4j.clientserver as cs
+
+    build = QUERIES[name].spark
+    build(spark, sf_dir)  # cold: schema inference and layouts
+    calls = [0]
+    orig = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return orig(self, command)
+
+    counts, kept = [], []
+    gc.collect()
+    gc.disable()
+    try:
+        cs.ClientServerConnection.send_command = counting
+        for _ in range(3):
+            calls[0] = 0
+            kept.append(build(spark, sf_dir))
+            counts.append(calls[0])
+    finally:
+        cs.ClientServerConnection.send_command = orig
+        gc.enable()
+    assert min(counts) <= 300, counts

@@ -11,12 +11,16 @@ diverged in production sweeps)."""
 
 import math
 import random
+import struct
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from random_sampling_based_approximate_mapreduce_spark.functions.rounding import sql_round
+from random_sampling_based_approximate_mapreduce_spark.functions.rounding import (
+    sql_round,
+    sql_round_sql,
+)
 
 ADVERSARIAL = [
     3.075, -3.075, 263.07075, 2.675, -2.675, 0.125, -0.125, 0.5, -0.5,
@@ -54,6 +58,23 @@ def test_sql_round_matches_duckdb_exactly(spark, values, digits):
             assert g == w, f"v={v!r} digits={digits}: spark={g!r} duckdb={w!r}"
 
 
+@pytest.mark.parametrize("digits", [0, 2, 4, 6, 9])
+def test_sql_round_sql_is_bit_identical_to_the_column_form(spark, values, digits):
+    """The Spark SQL spelling returns the same doubles, bit for bit, as
+    the Column form (and so as DuckDB, by the test above)."""
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    rows = df.selectExpr(
+        "v", f"{sql_round_sql('v', digits)} AS s"
+    ).select("v", "s", sql_round(F.col("v"), digits).alias("c")).collect()
+    assert len(rows) == len(values)
+    for r in rows:
+        if r["c"] is None:
+            assert r["s"] is None, r
+        else:
+            bits = [struct.pack("<d", r[k]) for k in ("s", "c")]
+            assert bits[0] == bits[1], f"v={r['v']!r} digits={digits}: sql={r['s']!r} column={r['c']!r}"
+
+
 def test_f_round_would_fail_the_same_property(spark):
     """Documents WHY sql_round exists: Spark's F.round disagrees with
     DuckDB on shortest-repr half-grid ties (it rounds the decimal string
@@ -73,14 +94,18 @@ def test_f_round_would_fail_the_same_property(spark):
     assert spark_round != duck  # the divergence sql_round eliminates
 
 
-def test_sql_round_stays_whole_stage_codegen(spark):
-    df = spark.range(10).select((F.col("id") / 7.0).alias("v"))
-    plan = (
-        df.select(sql_round(F.col("v"), 4))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+def _assert_whole_stage_codegen(rounded):
+    plan = rounded._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     # "*(n)" is the whole-stage-codegen marker in executedPlan toString
     assert "*(1) Project" in plan
+
+
+def test_sql_round_stays_whole_stage_codegen(spark):
+    df = spark.range(10).select((F.col("id") / 7.0).alias("v"))
+    _assert_whole_stage_codegen(df.select(sql_round(F.col("v"), 4)))
+
+
+def test_sql_round_sql_stays_whole_stage_codegen(spark):
+    df = spark.range(10).select((F.col("id") / 7.0).alias("v"))
+    _assert_whole_stage_codegen(df.selectExpr(sql_round_sql("v", 4)))
