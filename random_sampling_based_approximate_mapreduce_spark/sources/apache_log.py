@@ -104,60 +104,52 @@ def parse_apache_log(
     (e.g. a cluster/provenance id), so per-partition oracles can group
     parsed fields by origin without re-deriving the parse.
 
-    Plan-shape note (measured): one regexp_extract per field looks like 7x
-    regex work, but the alternative — packing all groups in one
-    regexp_replace pass and splitting — benches 40% SLOWER end-to-end
-    (3.6s vs 2.5s at sf0.1) because the malformed-row filter below is
-    predicate-pushed with its input expression SUBSTITUTED: the packed
-    mega-expression then re-evaluates inside a Filter under the exchange,
-    single-threaded, erasing the single-pass win. Seven independent
-    extracts keep the substituted filter down to three cheap regexes.
+    Plan shape: the three fields the malformed-line check reads (host,
+    ts, status) come out of one ``inline(array(struct(...)))`` Generate
+    that also carries the raw line; the check filters above it, and the
+    other fields are derived from the carried line above the filter. A
+    filter on a Generate's output cannot be pushed below it, so the
+    line's own expression (under ``access_log``, the synthesized
+    ``format_string``) runs once per row, after any exchange beneath,
+    rather than once per field read. Fields no consumer reads are pruned;
+    the rest run only on rows that passed the check.
 
-    Known waste, kept so the plan stays as it is: under ``access_log`` the
-    substituted filter lands below the round-robin exchange with the
-    SYNTHESIZED line substituted in too, so ``format_string`` /
-    ``date_format`` and the regex run once for each field the filter and
-    the projection read (host, ts and status in the filter, then every
-    projected field): the optimized plan of a host+path extract holds
-    ``format_string`` four times. On a 20k-row replica of the sf0.01
-    events table (``local[2]`` on 4 vCPUs, ``noop`` sink, median of 5)
-    the host count took 1.21 s, that two-field extract 0.91 s and
-    synthesis alone 0.44 s.
+    ANSI: no filter guards the struct's fields, and a non-matching line
+    extracts ``''`` for every group, so each field is null-safe on its
+    own (``try_to_timestamp``, ``TRY_CAST``); on a matching line
+    ``TRY_CAST`` of the three-digit status group equals ``CAST``. See
+    docs/SCALE.md, "Log parse".
 
-    Also measured: a regex-free positional parse (substring_index chains,
-    semantically identical on the synthesized corpus) benches the same or
-    slightly slower (2.8-3.6s vs 2.3-2.6s warm at sf0.1) — the cost here
-    is try_to_timestamp, not regex matching, so there is nothing left to
-    win in the field extraction.
+    Also measured: a regex-free positional parse (substring_index chains)
+    benches the same or slightly slower (2.8-3.6s vs 2.3-2.6s warm at
+    sf0.1): the cost is try_to_timestamp, not regex matching.
     """
-    c = ident(col)
     kept = [ident(k) for k in keep]
-    extracted = raw.selectExpr(
+    # the raw line under a private name, so ``keep`` may hold ``col`` itself
+    c, line = ident(col), "__log_line"
+    checked = raw.selectExpr(
         *kept,
-        f"nullif({_field(c, 1)}, '') AS host",
-        # try_to_timestamp: malformed datetimes -> null -> dropped (P7),
-        # instead of to_timestamp's ANSI-mode exception
-        f"try_to_timestamp({_field(c, 2)}, {sql_str(APACHE_TS_FMT)}) AS ts",
-        f"{_field(c, 3)} AS method",
-        f"{_field(c, 4)} AS request_path",
-        f"{_field(c, 5)} AS proto",
-        f"CAST({_field(c, 6)} AS INT) AS status",
-        # non-numeric bytes field ('-') -> null via TRY_CAST (ANSI-safe),
-        # like the reference's permissive drop
-        f"TRY_CAST({_field(c, 7)} AS BIGINT) AS bytes",
-    )
-    return extracted.selectExpr(
+        f"""inline(array(struct(
+          nullif({_field(c, 1)}, '') AS host,
+          try_to_timestamp({_field(c, 2)}, {sql_str(APACHE_TS_FMT)}) AS ts,
+          TRY_CAST({_field(c, 6)} AS INT) AS status,
+          {c} AS {line})))""",
+    ).where("host IS NOT NULL AND ts IS NOT NULL AND status IS NOT NULL")
+    request = _field(line, 4)
+    return checked.selectExpr(
         *kept,
         "host",
         "ts",
-        "method",
+        f"{_field(line, 3)} AS method",
         # P11: path = request sans query string
-        f"regexp_extract(request_path, {sql_str(_PATH_RE)}, 1) AS path",
-        f"nullif(regexp_extract(request_path, {sql_str(_QUERY_RE)}, 1), '') AS query",
-        "proto",
+        f"regexp_extract({request}, {sql_str(_PATH_RE)}, 1) AS path",
+        f"nullif(regexp_extract({request}, {sql_str(_QUERY_RE)}, 1), '') AS query",
+        f"{_field(line, 5)} AS proto",
         "status",
-        "bytes",
-    ).where("host IS NOT NULL AND ts IS NOT NULL AND status IS NOT NULL")
+        # non-numeric bytes field ('-') -> null via TRY_CAST (ANSI-safe),
+        # like the reference's permissive drop
+        f"TRY_CAST({_field(line, 7)} AS BIGINT) AS bytes",
+    )
 
 
 def access_log(events: DataFrame) -> DataFrame:

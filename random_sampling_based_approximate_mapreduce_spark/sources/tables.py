@@ -156,18 +156,16 @@ def ensure_parallelism(
     repartition only fires on the small-file artifact, so no 100 TB shuffle
     is ever introduced.
 
-    Partition count is ESTIMATED from the scan's input files and
-    ``maxPartitionBytes`` (driver-side metadata already resolved by the
-    scan relation) — ``df.rdd.getNumPartitions()`` would be exact but
-    pays a Python-RDD conversion/analysis pass per call; the estimate is
-    exact in the only regime where the answer matters (small inputs that
-    bin-pack into fewer-than-core splits) and errs toward "plenty of
-    partitions" on big inputs, where this function must be a no-op
-    anyway. Non-file-backed plans (post-shuffle, in-memory) fall back to
-    the exact check. Contract: call this on SCAN-ADJACENT frames (load +
-    projection/filter/broadcast-join) — a frame downstream of a shuffle
-    already has ``shuffle.partitions`` tasks and must not be passed here
-    (the file-size estimate would see only the leaves).
+    Partition count is ESTIMATED from the scan's input files and the
+    session's file-split confs (driver-side metadata already resolved by
+    the scan relation; see ``_file_partitions``) —
+    ``df.rdd.getNumPartitions()`` would be exact but pays a Python-RDD
+    conversion/analysis pass per call. Non-file-backed plans
+    (post-shuffle, in-memory) fall back to the exact check. Contract: call
+    this on SCAN-ADJACENT frames (load + projection/filter/broadcast-join)
+    — a frame downstream of a shuffle already has ``shuffle.partitions``
+    tasks and must not be passed here (the file-size estimate would see
+    only the leaves).
 
     ``skip_below_bytes``: escape hatch for CHEAP per-row pipelines
     (built-in tokenize/regex, no Python hashing or decode) where the
@@ -180,7 +178,6 @@ def ensure_parallelism(
     (shingling, MinHash, decode UDFs) must NOT set it — for them the
     shuffle always pays (measured in round 1: up to 14x).
     """
-    import math
     import os
 
     spark = df.sparkSession
@@ -191,24 +188,55 @@ def ensure_parallelism(
         files = []
     max_bytes = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
     if files and max_bytes:
-        total = 0
-        for f in files:
-            p = f[7:] if f.startswith("file://") else f
-            try:
-                total += os.path.getsize(p)
-            except OSError:
-                total = None
-                break
-        if total is not None:
+        try:
+            sizes = [os.path.getsize(f[7:] if f.startswith("file://") else f) for f in files]
+        except OSError:
+            sizes = None
+        if sizes is not None:
+            total = sum(sizes)
             if skip_below_bytes is not None and total < skip_below_bytes:
                 return df
-            est_partitions = max(1, math.ceil(total / max(max_bytes, 1)))
-            if est_partitions >= target:
+            if _file_partitions(spark, sizes, max_bytes) >= target:
                 return df
             return df.repartition(target)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _file_partitions(spark: SparkSession, sizes: list[int], max_bytes: int) -> int:
+    """How many partitions a file scan of files of these ``sizes`` makes:
+    the larger of ``ceil(total / maxPartitionBytes)`` and the count
+    Spark's ``FilePartition`` rule packs the files into, each kept whole.
+
+    Spark's rule: ``maxSplitBytes = min(maxPartitionBytes, max(openCost,
+    sum(size + openCost) / minPartitionNum))``, where ``minPartitionNum``
+    is ``spark.sql.files.minPartitionNum``, else
+    ``spark.sql.leafNodeDefaultParallelism``, else the default
+    parallelism; then files, largest first, go into the current partition
+    until the next one would take it past ``maxSplitBytes`` (each file
+    adds its size plus ``openCost``). Each packed partition holds at
+    least one whole file, hence at least one row group, so a packed
+    count means that many tasks get data, and a single one-row-group
+    file counts one. Spark also cuts a file larger than ``maxSplitBytes``
+    into splits; the packing keeps it whole, because a split that holds
+    no row-group start reads nothing. When no file is that large, the
+    count is exactly the scan's partition count."""
+    import math
+
+    open_cost = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")) or 0
+    min_parts = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    split = min(max_bytes, max(open_cost, sum(s + open_cost for s in sizes) // min_parts))
+    packed, current = 0, 0
+    for size in sorted(sizes, reverse=True):
+        if packed == 0 or current + size > split:
+            packed, current = packed + 1, 0
+        current += size + open_cost
+    return max(math.ceil(sum(sizes) / max_bytes), packed)
 
 
 def assert_layout_shape(

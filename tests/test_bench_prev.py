@@ -1,5 +1,5 @@
 """bench.py's choice of the artifact ``vs_prev`` compares with, on
-temporary artifact trees (no Spark)."""
+temporary artifact trees, and its final stdout line (no Spark)."""
 
 from __future__ import annotations
 
@@ -71,3 +71,56 @@ def test_tail_only_record_falls_back_to_the_full_artifact(bench, tree):
 def test_no_recorded_round(bench, tmp_path):
     assert bench.previous_artifact(str(tmp_path)) == (1, None, None, None)
     assert bench.previous_artifact(str(tmp_path), env_round=-3) == (1, None, None, None)
+
+
+def _full_doc(bench, reason=None):
+    """A full artifact of the 69 headline queries, each min just below
+    10 s (every recorded headline min is far below)."""
+    mins = {q: 9.994 for q in bench.BENCH_QUERIES}
+    return {
+        "value": round(sum(mins.values()), 3),
+        "sf": 0.1,
+        "queries_min": mins,
+        "sentinel": {"cpu_sec": 1.234, "shuffle_sec": 2.345, "sec": 12.345},
+        "tpch_x10": {"total_sec": 123.456},
+        "vs_prev": {"ratio_min_vs_prev": 1.052, "sentinel_ratio": 1.01, "ratio_code_normalized": 1.042},
+        "vs_prev_reason": reason,
+    }
+
+
+@pytest.mark.parametrize("reason", [None, "scaling re-run of round 17: " + "no full-core artifact " * 20])
+def test_final_line_carries_mins_and_aggregates_within_the_tail(bench, reason):
+    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES)) == 69
+    line = bench.final_line(_full_doc(bench, reason))
+    assert len(line.encode()) <= bench.FINAL_LINE_BYTES == 1900
+    got = json.loads(line)
+    assert got["queries_cs"] == {q: 999 for q in bench.BENCH_QUERIES}
+    assert (got["value"], got["unit"], got["sf"]) == (689.586, "sec", 0.1)
+    assert (got["sentinel_sec"], got["tpch_x10_total_sec"], got["vs_prev"]) == (12.345, 123.456, 1.042)
+    if reason is None:
+        assert got["vs_prev_reason"] is None
+    else:
+        assert got["vs_prev_reason"] and reason.startswith(got["vs_prev_reason"])
+
+
+def test_final_line_without_a_comparison(bench):
+    doc = {
+        **_full_doc(bench),
+        "queries_min": {q: 0.5 for q in bench.BENCH_QUERIES},
+        "vs_prev": {"error": "BENCH_r17.json has no per-query data"},
+        "tpch_x10": {},
+    }
+    got = json.loads(bench.final_line(doc))
+    assert (got["vs_prev"], got["vs_prev_reason"], got["tpch_x10_total_sec"]) == (
+        None,
+        "BENCH_r17.json has no per-query data",
+        None,
+    )
+
+
+def test_recorded_final_line_is_read_back_in_seconds(bench, tree):
+    line = json.loads(bench.final_line({**_full_doc(bench), "queries_min": {"q": 18.004}}))
+    _write(tree / "BENCH_r18.json", {"parsed": line})
+    _, path, prev, _ = bench.previous_artifact(str(tree))
+    assert path == str(tree / "BENCH_r18.json")
+    assert prev["queries_min"] == {"q": 18.0}

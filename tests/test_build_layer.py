@@ -245,29 +245,36 @@ def _column_api_raw_log(events):
 
 
 def _column_api_parse(raw, col="line", keep=()):
-    """``parse_apache_log`` written with ``pyspark.sql.functions``."""
+    """``parse_apache_log`` written with ``pyspark.sql.functions``: the
+    checked fields and the carried line out of one Generate, the check
+    above it, the other fields derived from the carried line above that."""
     c, rx = F.col(col), AL._LOG_RE
-    extracted = raw.select(
+    checked = raw.select(
         *[F.col(k) for k in keep],
-        F.nullif(F.regexp_extract(c, rx, 1), F.lit("")).alias("host"),
-        F.try_to_timestamp(F.regexp_extract(c, rx, 2), F.lit(AL.APACHE_TS_FMT)).alias("ts"),
-        F.regexp_extract(c, rx, 3).alias("method"),
-        F.regexp_extract(c, rx, 4).alias("request_path"),
-        F.regexp_extract(c, rx, 5).alias("proto"),
-        F.regexp_extract(c, rx, 6).cast("int").alias("status"),
-        F.regexp_extract(c, rx, 7).try_cast("long").alias("bytes"),
-    )
-    return extracted.select(
-        *keep,
+        F.inline(
+            F.array(
+                F.struct(
+                    F.nullif(F.regexp_extract(c, rx, 1), F.lit("")).alias("host"),
+                    F.try_to_timestamp(F.regexp_extract(c, rx, 2), F.lit(AL.APACHE_TS_FMT)).alias("ts"),
+                    F.regexp_extract(c, rx, 6).try_cast("int").alias("status"),
+                    c.alias("__log_line"),
+                )
+            )
+        ),
+    ).where(F.col("host").isNotNull() & F.col("ts").isNotNull() & F.col("status").isNotNull())
+    line = F.col("__log_line")
+    request = F.regexp_extract(line, rx, 4)
+    return checked.select(
+        *[F.col(k) for k in keep],
         "host",
         "ts",
-        "method",
-        F.regexp_extract(F.col("request_path"), r"^([^?]*)", 1).alias("path"),
-        F.nullif(F.regexp_extract(F.col("request_path"), r"\?(.*)$", 1), F.lit("")).alias("query"),
-        "proto",
+        F.regexp_extract(line, rx, 3).alias("method"),
+        F.regexp_extract(request, r"^([^?]*)", 1).alias("path"),
+        F.nullif(F.regexp_extract(request, r"\?(.*)$", 1), F.lit("")).alias("query"),
+        F.regexp_extract(line, rx, 5).alias("proto"),
         "status",
-        "bytes",
-    ).where(F.col("host").isNotNull() & F.col("ts").isNotNull() & F.col("status").isNotNull())
+        F.regexp_extract(line, rx, 7).try_cast("long").alias("bytes"),
+    )
 
 
 def _cnt(log, key):
@@ -311,6 +318,17 @@ def test_parse_with_keep_plan_matches_column_api(spark, sf_dir):
     got = AL.parse_apache_log(raw, keep=("cluster id",))
     assert got.columns[0] == "cluster id"
     assert _optimized(got) == _optimized(_column_api_parse(raw, keep=("cluster id",)))
+
+
+def test_access_log_formats_each_line_once(spark, sf_dir):
+    """The malformed-line check filters above the parse's Generate, so it
+    is not pushed below the exchange with the synthesized line
+    substituted in: one ``format_string`` per row, not one per field."""
+    plan = _optimized(AL.access_log(_events(spark, sf_dir)).select("host", "path"))
+    assert plan.count("format_string(") == 1
+    lines = plan.splitlines()
+    check = next(i for i, l in enumerate(lines) if "Filter" in l and "isnotnull(host" in l)
+    assert "Generate inline(" in lines[check + 1]
 
 
 def test_hash_bernoulli_plan_matches_column_api(spark, sf_dir):

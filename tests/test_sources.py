@@ -37,6 +37,35 @@ class TestApacheLogParse:
         df = AL.parse_apache_log(spark.createDataFrame([(line,)], ["line"]))
         assert df.collect()[0]["bytes"] is None
 
+    _GOOD = '1.2.3.4 - - [12/Mar/2024:14:03:22 +0000] "GET / HTTP/1.1" 200 10'
+
+    @pytest.mark.parametrize(
+        "bad",
+        [
+            "not a log line at all",
+            '1.2.3.4 - - [12/Mar/2024:14:03:22 +0000] "GET / HTTP/1.1" 2x0 10',
+            '1.2.3.4 - - [12/Mar/2024:14:03:22 +0000] "GET / HTTP/1.1" 2000 10',
+        ],
+    )
+    def test_ansi_unparsable_line_is_dropped_not_raised(self, spark, bad):
+        """The checked fields are computed before the check filters them,
+        so each must be null, not an ANSI cast error, on a line the regex
+        does not match (a status field that is not three digits included)."""
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        df = AL.parse_apache_log(spark.createDataFrame([(bad,), (self._GOOD,)], ["line"]))
+        assert [(r["host"], r["status"], r["bytes"]) for r in df.collect()] == [("1.2.3.4", 200, 10)]
+
+    def test_ansi_dash_bytes_is_null_not_raised(self, spark):
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        dash = '1.2.3.4 - - [12/Mar/2024:14:03:22 +0000] "HEAD / HTTP/1.1" 304 -'
+        rows = AL.parse_apache_log(spark.createDataFrame([(dash,)], ["line"])).collect()
+        assert [(r["status"], r["bytes"]) for r in rows] == [(304, None)]
+
+    def test_keep_may_name_the_parsed_column(self, spark):
+        df = AL.parse_apache_log(spark.createDataFrame([(self._GOOD,)], ["line"]), keep=("line",))
+        assert df.columns == ["line", "host", "ts", "method", "path", "query", "proto", "status", "bytes"]
+        assert df.collect()[0]["line"] == self._GOOD
+
     def test_round_trip_preserves_rowcount(self, spark, sf_dir):
         from random_sampling_based_approximate_mapreduce_spark.sources.tables import load
 
@@ -322,6 +351,59 @@ class TestEnsureParallelism:
             assert out is base  # no repartition node added
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+    @pytest.fixture(scope="class")
+    def replica(self, spark, sf_dir, tmp_path_factory):
+        """The 8-file events replica ``ensure_scaled_tables`` builds."""
+        from random_sampling_based_approximate_mapreduce_spark.sources.scale_up import (
+            ensure_scaled_tables,
+        )
+
+        root = str(tmp_path_factory.mktemp("replica"))
+        return ensure_scaled_tables(spark, sf_dir, ("events",), copies=2, cache_root=root)
+
+    @staticmethod
+    def _estimate(df):
+        import os
+
+        from random_sampling_based_approximate_mapreduce_spark.sources import tables
+
+        spark = df.sparkSession
+        sizes = [os.path.getsize(f[7:] if f.startswith("file://") else f) for f in df.inputFiles()]
+        max_bytes = tables._parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+        return tables._file_partitions(spark, sizes, max_bytes), len(sizes)
+
+    @pytest.mark.parametrize("layout", ["one_small_file", "replica", "lowered_max_bytes"])
+    def test_estimate_is_the_scans_partition_count(self, spark, sf_dir, replica, layout):
+        from random_sampling_based_approximate_mapreduce_spark.sources.tables import load
+
+        old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        try:
+            if layout == "lowered_max_bytes":
+                spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+            df = load(spark, replica if layout == "replica" else sf_dir, "events")
+            est, n_files = self._estimate(df)
+            assert n_files == (8 if layout == "replica" else 1)
+            assert est == df.rdd.getNumPartitions()
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+    def test_replica_spark_already_splits_is_left_alone(self, spark, replica):
+        """At ``local[2]`` (two cores: Spark's split size and the target
+        both follow the parallelism) the 8 files pack into 2 partitions,
+        so no round-robin exchange is added."""
+        from random_sampling_based_approximate_mapreduce_spark.sources.tables import (
+            ensure_parallelism,
+            load,
+        )
+
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", "2")
+        try:
+            df = load(spark, replica, "events")
+            assert self._estimate(df)[0] == df.rdd.getNumPartitions() == 2
+            assert ensure_parallelism(df, min_partitions=2) is df
+        finally:
+            spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
 
     def test_conf_suffix_parsing(self):
         from random_sampling_based_approximate_mapreduce_spark.sources.tables import _parse_bytes
