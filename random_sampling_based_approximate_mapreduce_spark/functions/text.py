@@ -1,6 +1,6 @@
 """Text transforms: the reference's map-stage string ops (SURVEY.md §2.3
-P1-P5) plus the training-data text-analysis family (language ID, quality
-scoring, token counting, fingerprinting).
+P1-P5) plus the training-data text-analysis family (language ID,
+punctuation ratio, token counting, fingerprinting).
 
 Everything here is a pure Column expression — JVM-side, whole-stage
 codegen, no Python in the hot path — and each op has an exact ANSI-SQL
@@ -20,12 +20,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .quoting import ident, sql_str
-from .rounding import sql_round
 
-# Word boundary for the oracle-checked word pipeline: after lowercasing,
-# anything outside [a-z0-9'] splits. (The reference's delimiter set at
-# RandomizedWordCount.java:31 is a superset of this; see words_reference.)
-WORD_SPLIT_RE = "[^a-z0-9']+"
+# P3 for the oracle-checked word pipeline: after lowercasing, a word is a
+# maximal run of [a-z0-9']. (The reference's own delimiter set at
+# RandomizedWordCount.java:31 differs; see explode_words_reference.)
+# Tokens are matched as runs of the class to keep, not split out on its
+# negation: the runs are exactly the non-empty split pieces, and the JVM
+# extracts them about 3x faster (docs/SCALE.md, "Tokenize by matching
+# runs").
+WORD_RE = "[a-z0-9']+"
 
 # P2 / P4: a digit anywhere in the line; a token of digits only.
 DIGIT_RE = r"\d"
@@ -58,27 +61,30 @@ def drop_digit_lines(df: DataFrame, col: str) -> DataFrame:
     return df.where(f"NOT {ident(col)} RLIKE {sql_str(DIGIT_RE)}")
 
 
-def _words_sql(col: str, split_re: str) -> str:
-    """P3 over column ``col`` as SQL: lowercase then split. The one
-    spelling of the rule; ``words`` and ``explode_words`` build on it."""
-    return f"split(lower({ident(col)}), {sql_str(split_re)})"
+def _words_sql(col: str) -> str:
+    """P3 over column ``col`` as SQL: lowercase, then every maximal run of
+    ``WORD_RE`` in order. The SQL spelling of the rule; ``words``,
+    ``explode_words`` and the TABLESAMPLE query build on it."""
+    return f"regexp_extract_all(lower({ident(col)}), {sql_str(WORD_RE)}, 0)"
 
 
-def words(col: str, split_re: str = WORD_SPLIT_RE) -> Column:
-    """P3 as an array column over column ``col``; empties filtered later."""
-    return F.expr(_words_sql(col, split_re))
+def words(col: str) -> Column:
+    """P3 as an array column over column ``col``: the non-empty tokens in
+    order (an empty array for text with no word; null for null text)."""
+    return F.expr(_words_sql(col))
 
 
 def explode_words(df: DataFrame, col: str, out: str = "word") -> DataFrame:
-    """P3+P4: one row per non-empty, non-numeric token.
+    """P3+P4: one row per non-numeric token.
 
     explode_outer everywhere in this module: plain explode triggers
     InferFiltersFromGenerate, whose size()>0 filter is predicate-pushed
-    with the full split expression substituted — doubling the regex work
-    per row. The length>0 predicate already drops the outer-null rows.
+    with the full tokenizer expression substituted — doubling the regex
+    work per row. Tokens are never empty, so the length>0 predicate only
+    drops the outer-null rows (null text, or text with no word).
     """
     o = ident(out)
-    return df.selectExpr(f"explode_outer({_words_sql(col, WORD_SPLIT_RE)}) AS {o}").where(
+    return df.selectExpr(f"explode_outer({_words_sql(col)}) AS {o}").where(
         f"length({o}) > 0 AND NOT {o} RLIKE {sql_str(NUMERIC_TOKEN_RE)}"
     )
 
@@ -161,40 +167,23 @@ def punct_ratio(col: Column) -> Column:
     return F.when(nonspace == 0, F.lit(0.0)).otherwise(punct.cast("double") / nonspace)
 
 
-def stopword_ratio(col: Column) -> Column:
-    """Fraction of whitespace tokens that are common-English stopwords."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    stop = F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS["en"], "a", "in", "it", "that")))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(stop.cast("double") / F.size(toks))
-
-
-def quality_score(col: Column) -> Column:
-    """Heuristic quality in [0,1]: length band + low punct + stopword presence.
-
-    Components (equal thirds):
-    - length: 1 if 50 <= n_chars <= 5000 else n/50 (short) or 5000/n (long)
-    - punct : 1 - min(1, punct_ratio * 4)
-    - stop  : min(1, stopword_ratio * 5)
-    """
-    n = F.length(col).cast("double")
-    len_comp = (
-        F.when(n < 50, n / F.lit(50.0))
-        .when(n > 5000, F.lit(5000.0) / n)
-        .otherwise(F.lit(1.0))
-    )
-    punct_comp = F.lit(1.0) - F.least(F.lit(1.0), punct_ratio(col) * F.lit(4.0))
-    stop_comp = F.least(F.lit(1.0), stopword_ratio(col) * F.lit(5.0))
-    return sql_round((len_comp + punct_comp + stop_comp) / F.lit(3.0), 6)
+def _normalized(col: Column) -> Column:
+    """Lowercase, keep only [a-z0-9] and whitespace, collapse whitespace
+    runs to one space, trim. The kept characters are gathered as runs of
+    the class and joined, the same string as deleting every character
+    outside it, for the reason ``WORD_RE`` gives."""
+    kept = F.array_join(F.regexp_extract_all(F.lower(col), F.lit(r"[a-z0-9\s]+"), F.lit(0)), "")
+    return F.trim(F.regexp_replace(kept, r"\s+", " "))
 
 
 def fingerprint(col: Column) -> Column:
     """Canonical document fingerprint: 60-bit hash of the normalized text
-    (lowercase, punctuation stripped, whitespace collapsed). Equal
-    fingerprints = near-identical documents modulo casing/punct/spacing."""
+    (lowercase, punctuation stripped, whitespace collapsed; see
+    ``_normalized``). Equal fingerprints = near-identical documents modulo
+    casing/punct/spacing. Null text gives a null fingerprint."""
     from .hashing import hash64
 
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", ""), r"\s+", " "))
-    return hash64(norm)
+    return hash64(_normalized(col))
 
 
 def prefix_fingerprint(col: Column, n_chars: int = 120) -> Column:
@@ -205,8 +194,7 @@ def prefix_fingerprint(col: Column, n_chars: int = 120) -> Column:
     standard prefix-keyed dedup used on web corpora."""
     from .hashing import hash64
 
-    norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), r"[^a-z0-9\s]", ""), r"\s+", " "))
-    return hash64(F.substring(norm, 1, n_chars))
+    return hash64(F.substring(_normalized(col), 1, n_chars))
 
 
 def char_ngrams(col: Column, n: int) -> Column:
@@ -219,8 +207,10 @@ def char_ngrams(col: Column, n: int) -> Column:
 
 
 def word_tokens(col: Column) -> Column:
-    """Non-empty lowercase word tokens (the shingle tokenizer)."""
-    return F.filter(F.split(F.lower(col), WORD_SPLIT_RE), lambda t: F.length(t) > 0)
+    """P3 over a Column (the shingle tokenizer): the maximal runs of
+    ``WORD_RE`` in the lowercased text, in order, never empty; the same
+    array ``words`` builds from a column name."""
+    return F.regexp_extract_all(F.lower(col), F.lit(WORD_RE), F.lit(0))
 
 
 def shingles_from_tokens(toks: Column, k: int) -> Column:

@@ -32,13 +32,3 @@ def cosine(a: Column, b: Column) -> Column:
     denom = norm(a) * norm(b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
-
-def l2_distance(a: Column, b: Column) -> Column:
-    """Euclidean distance between two equal-length numeric arrays."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -47,18 +47,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hash64, hash64_sql
+from ..functions.hashing import hash64
 
 DEFAULT_BUCKETS = 1 << 20
 
 
 def _bucket(key: Column, n_buckets: int) -> Column:
     return F.pmod(hash64(key.cast("string")), F.lit(n_buckets))
-
-
-def bucket_sql(key_expr: str, n_buckets: int = DEFAULT_BUCKETS) -> str:
-    """DuckDB rendering of the bucket expression (oracle mirrors)."""
-    return f"({hash64_sql(f'({key_expr})::VARCHAR')} % {n_buckets})"
 
 
 def key_buckets(df: DataFrame, key_col: str, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:

@@ -329,19 +329,6 @@ def pack_sequences(
     )
 
 
-def pack_sequences_sql(
-    source_sql: str, budget: int, order_col: str = "doc_id", tokens_col: str = "n_tokens"
-) -> str:
-    """DuckDB mirror of :func:`pack_sequences` via a window prefix sum."""
-    return f"""
-    SELECT *, CAST(floor(
-        CAST(coalesce(sum({tokens_col}) OVER (ORDER BY {order_col}
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE)
-        / {budget}) AS BIGINT) AS bin_id
-    FROM ({source_sql})
-    """
-
-
 # ---------------------------------------------------------------------------
 # Boilerplate n-gram detection
 # ---------------------------------------------------------------------------

@@ -208,9 +208,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         ensure_parallelism(docs.select(F.col(id_col), F.col(text_col)))
         .select(
             F.col(id_col),
-            F.explode_outer(
-                F.filter(F.split(F.lower(F.col(text_col)), T.WORD_SPLIT_RE), lambda t: F.length(t) > 0)
-            ).alias("tok"),
+            F.explode_outer(T.words(text_col)).alias("tok"),
         )
         .where(F.col("tok").isNotNull())
     )

@@ -131,6 +131,9 @@ def codec_layout(name, key, write=None, src=None, convert=None, count_units=None
 # --- helpers shared across family modules (hoisted in the round-8
 # catalog split; definitions unchanged) ---
 
+# P3 in the DuckDB oracles: split on the negated class. The Spark side
+# extracts the runs of functions/text.WORD_RE instead; the non-empty
+# pieces of this split are exactly those runs.
 _WORD_SPLIT_SQL = "[^a-z0-9'']+"
 
 # word_count's oracle, shared by every layout twin that must reproduce it

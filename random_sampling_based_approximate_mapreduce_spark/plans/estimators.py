@@ -797,12 +797,7 @@ def q_sampled_topk_tokens(spark, sf_dir):
     s = hash_bernoulli(docs, "__k", 0.1, seed=21)
     toks = s.select(
         "doc_id",
-        F.explode_outer(
-            F.filter(
-                F.split(F.lower(F.col("text")), T.WORD_SPLIT_RE),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("tok"),
+        F.explode_outer(T.words("text")).alias("tok"),
     ).where(F.col("tok").isNotNull())
     x = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("x"))
     sf = SampledFrame(df=x, ratio=0.1, config=SamplingConfig(ratio=0.1, seed=21))

@@ -12,6 +12,7 @@ from ._base import (
     F,
     SampledFrame,
     SamplingConfig,
+    T,
     _dec,
     load,
     register,
@@ -938,10 +939,10 @@ def q_events_ewma(spark, sf_dir):
 def q_tablesample_words(spark, sf_dir):
     load(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
-        """
+        f"""
         SELECT word, count(*) / 0.25 AS est_cnt
         FROM (
-          SELECT explode(filter(split(lower(text), "[^a-z0-9']+"), t -> length(t) > 0)) AS word
+          SELECT explode_outer({T._words_sql("text")}) AS word
           FROM documents TABLESAMPLE (25 PERCENT) REPEATABLE (42)
         )
         WHERE NOT word RLIKE '^[0-9]+$'

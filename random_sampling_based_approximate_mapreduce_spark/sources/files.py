@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 from ..sampling.config import SamplingConfig
 from ..sampling.sampled_frame import SampledFrame
-from .tables import read_parquet
+
 
 def read_csv_sampled(
     spark: SparkSession,
@@ -53,16 +53,6 @@ def read_json_sampled(
     if schema is not None:
         reader = reader.schema(schema)
     return SampledFrame.from_dataframe(reader.json(path), config)
-
-
-def read_parquet_sampled(
-    spark: SparkSession,
-    path: str,
-    config: SamplingConfig | None = None,
-) -> SampledFrame:
-    """Parquet scan -> SampledFrame (column pruning/pushdown still apply
-    below the Sample node — project/filter ``.df`` and check the plan)."""
-    return SampledFrame.from_dataframe(read_parquet(spark, path), config)
 
 
 def pick_files(spark: SparkSession, path: str, file_ratio: float, seed: int = 42) -> tuple[list[str], float]:

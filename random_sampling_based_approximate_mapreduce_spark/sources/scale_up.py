@@ -162,6 +162,7 @@ def ensure_scaled_tables(
     # recycled ghost of itself; review r8 — the TTL must never delete
     # an active builder's staging mid-build and let it publish a
     # partial replica).
+    os.makedirs(cache_root, exist_ok=True)
     now = time.time()
     for name in os.listdir(cache_root):
         if not name.startswith(family) or name == os.path.basename(dest):

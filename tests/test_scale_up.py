@@ -192,6 +192,16 @@ class TestStagingPrune:
         os.rmdir(fresh_foreign)
         os.rmdir(aged_own)
 
+    def test_fresh_cache_root_is_created(self, spark, sf_dir, tmp_path):
+        """A ``cache_root`` that does not exist yet is created before the
+        stale-generation sweep lists it."""
+        import os
+
+        root = tmp_path / "not" / "yet"
+        d = ensure_scaled_tables(spark, sf_dir, ("events",), copies=2, cache_root=str(root))
+        assert os.path.dirname(d) == str(root)
+        assert os.path.exists(os.path.join(d, "_SUCCESS"))
+
 
 class TestFooterSampleBound:
     def test_stride_honors_budget(self):

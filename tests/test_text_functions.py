@@ -84,6 +84,75 @@ class TestNormalizeLineP1:
         ]
 
 
+class TestRunFormEqualsSplitForm:
+    """The tokenizer and the dedup normalizer match the runs of the class
+    to keep; the forms they replaced split on, or delete, its negation.
+    Both must give the same answer on every string."""
+
+    OLD_SPLIT = "[^a-z0-9']+"
+    OLD_STRIP = r"[^a-z0-9\s]"
+
+    @staticmethod
+    def _strings():
+        import random
+
+        fixed = [
+            "", None, " ,;-- ", "\t\n", ",leading and trailing,", "  both  ",
+            "'", "'''", "it's o'clock ''quoted''", "123 4567 a1b2 007 '9'",
+            "HELLO World MiXeD", "İstanbul", "straße", "ΩMEGA ωmega", "emoji😀inside 😀",
+            "non\u00a0breaking\u00a0space", "a\tb", "a\nb", "a\x0bb", "a\fb", "a\rb",
+            "\t\n\x0b\f\r",
+        ]
+        alphabet = list("abzAZ09' \u00a0,.-_\t\n\x0b\f\r") + ["İ", "ß", "Ω", "é", "\u0301", "\u00a0", "😀"]
+        rnd = random.Random(20211)
+        fuzz = ["".join(rnd.choice(alphabet) for _ in range(rnd.randrange(0, 200))) for _ in range(200)]
+        return fixed + fuzz
+
+    def test_arrays_and_fingerprints(self, spark):
+        from random_sampling_based_approximate_mapreduce_spark.functions.hashing import hash64
+
+        strings = self._strings()
+        df = spark.createDataFrame(list(enumerate(strings)), "id int, s string")
+        s = F.col("s")
+        old_toks = F.filter(F.split(F.lower(s), self.OLD_SPLIT), lambda t: F.length(t) > 0)
+        old_norm = F.trim(F.regexp_replace(F.regexp_replace(F.lower(s), self.OLD_STRIP, ""), r"\s+", " "))
+        rows = df.select(
+            "id",
+            T.words("s").alias("words"),
+            T.word_tokens(s).alias("word_tokens"),
+            old_toks.alias("old_toks"),
+            T.fingerprint(s).alias("fp"),
+            hash64(old_norm).alias("old_fp"),
+            T.prefix_fingerprint(s).alias("pfp"),
+            hash64(F.substring(old_norm, 1, 120)).alias("old_pfp"),
+            T.prefix_fingerprint(s, 5).alias("pfp5"),
+            hash64(F.substring(old_norm, 1, 5)).alias("old_pfp5"),
+        ).collect()
+        assert len(rows) == len(strings)
+        for r in rows:
+            case = repr(strings[r["id"]])
+            assert r["words"] == r["old_toks"], case
+            assert r["word_tokens"] == r["old_toks"], case
+            assert (r["fp"], r["pfp"], r["pfp5"]) == (r["old_fp"], r["old_pfp"], r["old_pfp5"]), case
+        by_id = {r["id"]: r for r in rows}
+        assert by_id[1]["words"] is None and by_id[1]["fp"] is None
+        assert by_id[0]["words"] == [] and by_id[2]["words"] == []
+        assert by_id[9]["words"] == ["123", "4567", "a1b2", "007", "'9'"]
+
+    def test_explode_words(self, spark):
+        from collections import Counter
+
+        df = spark.createDataFrame([(x,) for x in self._strings()], "s string")
+        old = (
+            df.select(F.explode_outer(F.split(F.lower("s"), self.OLD_SPLIT)).alias("word"))
+            .where(F.length("word") > 0)
+            .where(~F.col("word").rlike("^[0-9]+$"))
+        )
+        got = Counter(r[0] for r in T.explode_words(df, "s").collect())
+        assert got == Counter(r[0] for r in old.collect())
+        assert got["it's"] == 1 and got["'''"] == 1 and "123" not in got
+
+
 class TestZOrder:
     def test_zvalue_matches_reference_bit_interleave(self, spark):
         from pyspark.sql import functions as F

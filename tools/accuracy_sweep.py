@@ -173,7 +173,7 @@ def _word_count_m2(df):
     # through a manual explode with the same tokenizer + filters
     kept = T.drop_digit_lines(df.withColumn("__rid", F.monotonically_increasing_id()), "text")
     tokens = kept.select(
-        "__rid", F.explode_outer(T.words(F.col("text"))).alias("key")
+        "__rid", F.explode_outer(T.words("text")).alias("key")
     ).where((F.length("key") > 0) & ~F.col("key").rlike("^[0-9]+$"))
     per_row = tokens.groupBy("__rid", "key").agg(F.count(F.lit(1)).alias("m"))
     return per_row.groupBy("key").agg(F.sum(F.col("m") * F.col("m")).alias("m2"))
@@ -674,7 +674,7 @@ def sweep_cluster_runs(
             # the explode_words tokenizer with the cluster column
             # retained (explode_words itself projects to the token)
             return kept.select(
-                *keep, F.explode_outer(TT.words(F.col("value"))).alias("key")
+                *keep, F.explode_outer(TT.words("value")).alias("key")
             ).where((F.length("key") > 0) & ~F.col("key").rlike("^[0-9]+$"))
         parsed = parse_apache_log(df, "value", keep=keep)
         if workload == "log_hack":
