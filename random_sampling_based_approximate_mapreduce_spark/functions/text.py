@@ -80,12 +80,12 @@ def explode_words(df: DataFrame, col: str, out: str = "word") -> DataFrame:
     explode_outer everywhere in this module: plain explode triggers
     InferFiltersFromGenerate, whose size()>0 filter is predicate-pushed
     with the full tokenizer expression substituted — doubling the regex
-    work per row. Tokens are never empty, so the length>0 predicate only
-    drops the outer-null rows (null text, or text with no word).
+    work per row. Tokens are never empty, and the RLIKE test drops the
+    outer-null rows (null text, or text with no word).
     """
     o = ident(out)
     return df.selectExpr(f"explode_outer({_words_sql(col)}) AS {o}").where(
-        f"length({o}) > 0 AND NOT {o} RLIKE {sql_str(NUMERIC_TOKEN_RE)}"
+        f"NOT {o} RLIKE {sql_str(NUMERIC_TOKEN_RE)}"
     )
 
 

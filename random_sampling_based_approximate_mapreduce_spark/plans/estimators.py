@@ -1309,7 +1309,6 @@ def q_docs_token_entropy_by_lang(spark, sf_dir):
     # functions/text.explode_words docstring)
     tok = (
         kept.select("lang", F.explode_outer(T.words("text")).alias("word"))
-        .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -359,10 +359,12 @@ def _sampled_join_cluster_ci_oracle() -> str:
     )
     scale = 1.0 / r
     a, b, c, rr = 1.0 - r, 1.0 - r1, 1.0 - r2, r * r
-    # mirrors _joined_cluster_agg literally: every moment (P, L2, R2) is
-    # an exact integer sum; the variance combine uses the SAME double
-    # literals and left-associated order as the Spark expression, so
-    # both engines produce identical doubles. The right-side excess R2
+    # mirrors SampledFrame._joined_cluster literally: every moment (P,
+    # L2, R2) is an exact integer sum; its one cluster combine
+    # A_uv = (1-r)*P + (1-r1)*D_l + (1-r2)*D_r and the count, sum and
+    # mean projections of _joined_stats use the SAME double literals and
+    # left-associated order as the Spark SQL, so both engines produce
+    # identical doubles. The right-side excess R2
     # is NOT zero here: the synthetic lineitem has duplicate
     # (l_orderkey, l_linenumber) keys, and hash_bernoulli keeps/drops
     # all rows of a key together — so key-sharing rows are fully

@@ -423,7 +423,6 @@ def q_tfidf_top_terms(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tok = (
         docs.select("doc_id", F.explode_outer(T.words("text")).alias("word"))
-        .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))
     )
     # df counts DISTINCT docs per word. Deduplicate INSIDE the row with
@@ -442,7 +441,6 @@ def q_tfidf_top_terms(spark, sf_dir):
         docs.select(
             F.explode_outer(F.array_distinct(T.words("text"))).alias("word")
         )
-        .where(F.length("word") > 0)
         .where(~F.col("word").rlike("^[0-9]+$"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("df"))

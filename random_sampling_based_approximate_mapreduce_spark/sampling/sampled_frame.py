@@ -29,6 +29,7 @@ Scale-at-100TB notes:
 from __future__ import annotations
 
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -565,6 +566,28 @@ def weighted_quantile(
     return base.agg(*aggs)
 
 
+def _nonneg(v: str) -> str:
+    """``greatest(v, 0.0D)`` as SQL that keeps a NULL ``v`` NULL, where
+    ``greatest`` would skip it and return 0."""
+    return f"IF({v} < 0.0D, 0.0D, {v})"
+
+
+def _sql_over(df: DataFrame, query) -> DataFrame:
+    """``query(view)``, one SQL statement over ``df`` as the temporary
+    view ``view``: the JVM parses a whole aggregation chain in one call,
+    where each ``groupBy``/``agg``/``F.expr`` would be py4j round trips
+    of its own. The view is dropped before returning; the returned
+    frame holds its analyzed plan, not the name. This is what
+    ``spark.sql(text, df=df)`` does, without reading the braces of
+    quoted column names as format fields."""
+    view = f"__rsmr_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(view)
+    try:
+        return df.sparkSession.sql(query(ident(view)))
+    finally:
+        df.sparkSession.catalog.dropTempView(view)
+
+
 def _nullsafe_join(left: DataFrame, right: DataFrame, cols, how: str = "inner"):
     """Equi-join on ``cols`` that treats NULL keys as EQUAL (<=>), so
     NULL-valued group keys survive the join instead of silently
@@ -868,50 +891,7 @@ class SampledFrame:
         DISTINCT right key (small; AQE typically broadcasts it back).
         No driver materialization, no skew beyond the join's own.
         """
-        overlap = set(self.df.columns) & set(other.df.columns)
-        if overlap:
-            raise ValueError(
-                f"join_weighted_left requires disjoint column names; rename "
-                f"overlapping columns first: {sorted(overlap)}"
-            )
-        r1, r2 = self.ratio, other.ratio
-        if r2 < 0.5:
-            import warnings
-
-            warnings.warn(
-                f"join_weighted_left with right ratio {r2} < 0.5: the "
-                "null-stratum correction weights |1-1/r2|^K exceed 1, so "
-                "unmatched-side estimates are unbiased but high-variance; "
-                "prefer sampling the LEFT side harder and the right side "
-                "at >= 0.5",
-                stacklevel=2,
-            )
-        t = 0.0 if r2 >= 1.0 else 1.0 - 1.0 / r2
-        left_cols = self.df.columns
-        right_cols = other.df.columns
-        matched = (
-            self.df.join(other.df, F.col(left_on) == F.col(right_on), "inner")
-            .withColumn("__weight", F.lit(1.0 / (r1 * r2)))
-            .select(*left_cols, *right_cols, "__weight")
-        )
-        counts = other.df.groupBy(F.col(right_on).alias("__rk")).agg(
-            F.count(F.lit(1)).alias("__k")
-        )
-        lk = self.df.join(counts, F.col(left_on) == F.col("__rk"), "left")
-        k = F.coalesce(F.col("__k"), F.lit(0)).cast("double")
-        right_schema = {f.name: f.dataType for f in other.df.schema.fields}
-        null_rows = (
-            lk.select(
-                *left_cols,
-                *[
-                    F.lit(None).cast(right_schema[c]).alias(c)
-                    for c in right_cols
-                ],
-                (F.pow(F.lit(t), k) / F.lit(r1)).alias("__weight"),
-            )
-            .where(F.col("__weight") != 0)
-        )
-        return matched.unionByName(null_rows)
+        return self._weighted_join(other, left_on, right_on, "left")
 
     def join_weighted_right(
         self,
@@ -922,14 +902,11 @@ class SampledFrame:
         """RIGHT equi-join composition — the exact mirror of
         ``join_weighted_left`` (matched pairs at 1/(r1*r2); every kept
         RIGHT row emits a null-extended correction row with weight
-        (1-1/r1)^K / r2, K = its kept-left-match count). Implemented by
-        delegation with the sides swapped, columns reordered back to
-        (left columns, right columns, __weight). The variance caveat
-        mirrors too: prefer the LEFT side sampled at >= 0.5 here (the
-        delegated warning text speaks in the swapped orientation).
+        (1-1/r1)^K / r2, K = its kept-left-match count), in (left
+        columns, right columns, __weight) order. The variance caveat
+        mirrors too: prefer the LEFT side sampled at >= 0.5 here.
         """
-        out = other.join_weighted_left(self, right_on, left_on)
-        return out.select(*self.df.columns, *other.df.columns, "__weight")
+        return self._weighted_join(other, left_on, right_on, "right")
 
     def join_weighted_full(
         self,
@@ -971,60 +948,67 @@ class SampledFrame:
         one per-key count aggregate per side, each one row per distinct
         key); no driver materialization, no skew beyond the join's own.
         """
+        return self._weighted_join(other, left_on, right_on, "full")
+
+    def _weighted_join(
+        self, other: "SampledFrame", left_on: str, right_on: str, how: str
+    ) -> DataFrame:
+        """The matched pairs at 1/(r1*r2) plus the null stratum of each
+        side ``how`` keeps (``left``, ``right`` or both for ``full``),
+        in (left columns, right columns, __weight) order."""
         overlap = set(self.df.columns) & set(other.df.columns)
         if overlap:
             raise ValueError(
-                f"join_weighted_full requires disjoint column names; rename "
+                f"join_weighted_{how} requires disjoint column names; rename "
                 f"overlapping columns first: {sorted(overlap)}"
             )
         r1, r2 = self.ratio, other.ratio
-        if min(r1, r2) < 0.5:
+        # a null stratum's correction weights |1-1/r|^K exceed 1 when the
+        # OTHER side's ratio r is below 0.5
+        opposite = {"left": (r2,), "right": (r1,), "full": (r1, r2)}[how]
+        if min(opposite) < 0.5:
             import warnings
 
             warnings.warn(
-                f"join_weighted_full with ratios ({r1}, {r2}): a side "
-                "below 0.5 makes the OTHER side's null-stratum correction "
-                "weights exceed 1 in magnitude — unbiased but "
-                "high-variance; sample both sides at >= 0.5",
-                stacklevel=2,
+                f"join_weighted_{how} with ratios ({r1}, {r2}): a side "
+                "sampled below 0.5 gives the other side's null-stratum "
+                "correction weights |1-1/r|^K above 1, so unmatched-side "
+                "estimates are unbiased but high-variance; sample the "
+                "side opposite each null stratum at >= 0.5",
+                stacklevel=3,
             )
-        tl = 0.0 if r2 >= 1.0 else 1.0 - 1.0 / r2
-        tr = 0.0 if r1 >= 1.0 else 1.0 - 1.0 / r1
-        left_cols = self.df.columns
-        right_cols = other.df.columns
-        left_schema = {f.name: f.dataType for f in self.df.schema.fields}
-        right_schema = {f.name: f.dataType for f in other.df.schema.fields}
-        matched = (
+        out = (
             self.df.join(other.df, F.col(left_on) == F.col(right_on), "inner")
             .withColumn("__weight", F.lit(1.0 / (r1 * r2)))
-            .select(*left_cols, *right_cols, "__weight")
+            .select(*self.df.columns, *other.df.columns, "__weight")
+        )
+        if how in ("left", "full"):
+            out = out.unionByName(self._null_stratum(other, left_on, right_on))
+        if how in ("right", "full"):
+            out = out.unionByName(other._null_stratum(self, right_on, left_on))
+        return out
+
+    def _null_stratum(self, other: "SampledFrame", on: str, other_on: str) -> DataFrame:
+        """Every kept row of this side, null-extended with ``other``'s
+        columns, at weight (1-1/r_other)^K / r_self, K = its kept
+        matches in ``other`` (the indicator identity in
+        ``join_weighted_left``). Weight-0 rows (r_other = 1, K > 0) are
+        dropped. Columns: this side's, ``other``'s, ``__weight``."""
+        t = 0.0 if other.ratio >= 1.0 else 1.0 - 1.0 / other.ratio
+        counts = other.df.groupBy(F.col(other_on).alias("__ok")).agg(
+            F.count(F.lit(1)).alias("__k")
         )
         k = F.coalesce(F.col("__k"), F.lit(0)).cast("double")
-        rcounts = other.df.groupBy(F.col(right_on).alias("__rk")).agg(
-            F.count(F.lit(1)).alias("__k")
-        )
-        left_null = (
-            self.df.join(rcounts, F.col(left_on) == F.col("__rk"), "left")
+        schema = {f.name: f.dataType for f in other.df.schema.fields}
+        return (
+            self.df.join(counts, F.col(on) == F.col("__ok"), "left")
             .select(
-                *left_cols,
-                *[F.lit(None).cast(right_schema[c]).alias(c) for c in right_cols],
-                (F.pow(F.lit(tl), k) / F.lit(r1)).alias("__weight"),
+                *self.df.columns,
+                *[F.lit(None).cast(schema[c]).alias(c) for c in other.df.columns],
+                (F.pow(F.lit(t), k) / F.lit(self.ratio)).alias("__weight"),
             )
             .where(F.col("__weight") != 0)
         )
-        lcounts = self.df.groupBy(F.col(left_on).alias("__lk")).agg(
-            F.count(F.lit(1)).alias("__k")
-        )
-        right_null = (
-            other.df.join(lcounts, F.col(right_on) == F.col("__lk"), "left")
-            .select(
-                *[F.lit(None).cast(left_schema[c]).alias(c) for c in left_cols],
-                *right_cols,
-                (F.pow(F.lit(tr), k) / F.lit(r2)).alias("__weight"),
-            )
-            .where(F.col("__weight") != 0)
-        )
-        return matched.unionByName(left_null).unionByName(right_null)
 
     # -- estimator-aware aggregations ------------------------------------
 
@@ -1034,162 +1018,129 @@ class SampledFrame:
     # (it applies one global p=0.5 bound; SURVEY.md §7 "hard parts").
     # Inlined in approx_count so the CI reads the exact integer count.
 
-    def _joined_cluster_agg(
-        self,
-        x: str,
-        group_cols,
-        alias: str,
-        min_support: int | None,
-    ) -> DataFrame:
-        """Count/sum aggregation with the cluster-variance CI for
-        join-composed frames carrying row ids (see ``join_sampled``).
+    def _joined_cluster(self, group_cols, terms: dict, pairs, items) -> DataFrame:
+        """The one moments chain under every cluster-CI estimator of a
+        join-composed frame carrying row ids (``join_sampled`` with
+        ``left_id``/``right_id``), built as one JVM-parsed SQL query.
 
-        One pair-level projection feeds two 2-level aggregation chains —
-        per (group, left-row-id) then per group, and per (group,
-        right-row-id) then per group — giving, per output group:
-        sum x (the HT numerator), P = sum x^2 over pairs, and the two
-        same-row excess terms D_side = sum_rows (S^2 - Q). The variance
-        combines them per the derivation in ``join_sampled``'s docstring.
-        Two shuffles keyed (group, row-id) with partial aggregation, one
-        tiny union-pivot per group — no driver math, no extra pass over
-        pairs. ``x`` is the per-pair value as Spark SQL (``"1"`` counts).
+        ``terms`` maps a one-letter name u to a per-pair DOUBLE SQL
+        expression. Per (group, side-row-id) the chain sums S_u = sum u
+        and Q_uv = sum u*v for each (u, v) in ``pairs``; per group it
+        sums T_u = sum u, P_uv = sum u*v over pairs and, per side, the
+        same-row excess D_uv = sum_rows (S_u S_v - Q_uv). Pairs sharing
+        a kept row are positively correlated, and the cluster design's
+        (co)variance estimate of the HT totals, times (r1 r2)^2, is
+
+            A_uv = (1-r1r2) * P_uv + (1-r1) * D_uv,left + (1-r2) * D_uv,right
+
+        (derived in ``join_sampled``). On unique keys both excesses
+        vanish and A_uv is the classical (1-r) * P_uv. ``items`` are the
+        output select items over ``__t_u``, ``__a_uv`` and ``__n`` (the
+        group's pair count), written after the group columns.
+
+        The two sides meet by UNION ALL and a conditional pivot, not by
+        an equi-join on the group columns, which could not match a NULL
+        group key to itself. 100 TB shape: two partial-aggregated
+        shuffles keyed (group, row-id), each collapsing to one row per
+        group, then the two-row-per-group pivot; no driver math.
         """
         r1, r2 = self.join_ratios
-        lid, rid = self.join_ids
-        gs = list(group_cols)
-        # dedupe, and drop id columns already present as group columns
-        # (selecting a name twice would make the groupBy ambiguous)
-        ids = [
-            c for c in dict.fromkeys(list(lid) + list(rid)) if c not in gs
+        gs = [ident(c) for c in group_cols]
+        group_by = f" GROUP BY {', '.join(gs)}" if gs else ""
+        per_id = [f"sum(__u_{u}) AS __s_{u}" for u in terms]
+        per_id += [f"sum(__u_{u} * __u_{v}) AS __q_{u}{v}" for u, v in pairs]
+        per_id.append("count(1) AS __c")
+        per_group = [f"sum(__s_{u}) AS __t_{u}" for u in terms]
+        for u, v in pairs:
+            per_group.append(f"sum(__q_{u}{v}) AS __p_{u}{v}")
+            per_group.append(f"sum(__s_{u} * __s_{v} - __q_{u}{v}) AS __d_{u}{v}")
+        per_group.append("sum(__c) AS __n")
+
+        def pick(col, tag="l"):
+            return f"max(IF(__side = '{tag}', {col}, NULL))"
+
+        a, b, c = (sql_double(1.0 - q) for q in (self.ratio, r1, r2))
+        moments = [f"{pick(f'__t_{u}')} AS __t_{u}" for u in terms]
+        moments.append(f"{pick('__n')} AS __n")
+        moments += [
+            f"{a} * {pick(f'__p_{u}{v}')} + {b} * {pick(f'__d_{u}{v}')}"
+            f" + {c} * {pick(f'__d_{u}{v}', 'r')} AS __a_{u}{v}"
+            for u, v in pairs
         ]
-        d = self.df.selectExpr(*[ident(c) for c in gs + ids], f"CAST({x} AS DOUBLE) AS __x")
-        z = stats.z_score(self.config.confidence)
-        r = self.ratio
 
-        joined = self._joined_cluster_moments(d, gs)
-        var = (
-            f"({sql_double(1.0 - r)} * __pl + {sql_double(1.0 - r1)} * __dl"
-            f" + {sql_double(1.0 - r2)} * __dr) / {sql_double(r * r)}"
-        )
-        cols = [ident(c) for c in gs]
-        cols.append(f"__sxl * {sql_double(self.scale)} AS {ident(alias)}")
-        cols.append(f"{sql_double(z)} * sqrt(greatest({var}, 0.0D)) AS {ident(alias + '_ci')}")
-        if min_support is not None:
-            cols.extend(_support_sql(min_support, "__nl"))
-        return joined.selectExpr(*cols)
+        def query(view):
+            cols = dict.fromkeys([*group_cols, *self.join_ids[0], *self.join_ids[1]])
+            d = [ident(x) for x in cols] + [f"{e} AS __u_{u}" for u, e in terms.items()]
+            pair_rows = f"(SELECT {', '.join(d)} FROM {view})"
 
-    def _joined_cluster_moments(self, d, gs):
-        """The two 2-level aggregation chains shared by every
-        single-value-column joined cluster estimator (count, sum, mean,
-        and the fused ``approx_join_stats``; the two-column ratio has
-        its own bilinear chain): per (group, side-row-id) partial sums
-        of (S = sum x, Q = sum x^2, C = row count, C2 = non-null-x
-        count), then per group the totals plus the same-row excess
-        terms Dxx = sum(S^2 - Q), Dx1 = sum(S*C2 - S),
-        D11n = sum(C2^2 - C2), D11 = sum(C^2 - C) — the cross-moment
-        analogues for sums (Dxx), the value/non-null-count covariance
-        the mean needs (Dx1, D11n), and all-row counts (D11).
-        The two sides are combined by UNION + conditional pivot, not an
-        equi-join on the group columns — an equi-join cannot match a
-        NULL group key to itself, so NULL-valued groups would silently
-        vanish from the ci=True output while ci=False kept them
-        (review r8)."""
-        lid, rid = self.join_ids
-        names = ("__sx", "__p", "__d", "__dx1", "__d11n", "__d11", "__n", "__n2")
+            def side(tag, ids):
+                keys = ", ".join(ident(x) for x in dict.fromkeys([*group_cols, *ids]))
+                per = f"SELECT {keys}, {', '.join(per_id)} FROM {pair_rows} GROUP BY {keys}"
+                select = ", ".join([*gs, f"'{tag}' AS __side", *per_group])
+                return f"SELECT {select} FROM ({per}){group_by}"
 
-        def side(idcols, tag):
-            keys = list(dict.fromkeys(gs + list(idcols)))
-            per = d.groupBy(*[F.col(c) for c in keys]).agg(
-                F.coalesce(F.sum("__x"), F.lit(0.0)).alias("__s"),
-                F.coalesce(F.sum(F.col("__x") * F.col("__x")), F.lit(0.0)).alias("__q"),
-                F.count(F.lit(1)).alias("__c"),
-                F.count("__x").alias("__c2"),
+            both = f"{side('l', self.join_ids[0])} UNION ALL {side('r', self.join_ids[1])}"
+            return (
+                f"SELECT {', '.join(gs + items)} FROM"
+                f" (SELECT {', '.join(gs + moments)} FROM ({both}){group_by})"
             )
-            base = per.groupBy(*[F.col(c) for c in gs]) if gs else per.groupBy()
-            s, q = F.col("__s"), F.col("__q")
-            c, c2 = F.col("__c"), F.col("__c2")
-            return base.agg(
-                F.sum("__s").alias("__sx"),
-                F.sum("__q").alias("__p"),
-                F.sum(s * s - q).alias("__d"),
-                F.sum(s * c2.cast("double") - s).alias("__dx1"),
-                F.sum(c2 * c2 - c2).alias("__d11n"),
-                F.sum(c * c - c).alias("__d11"),
-                F.sum("__c").alias("__n"),
-                F.sum("__c2").alias("__n2"),
-            ).withColumn("__side", F.lit(tag))
 
-        u = side(lid, "l").unionByName(side(rid, "r"))
-        base = u.groupBy(*[F.col(c) for c in gs]) if gs else u.groupBy()
-        return base.agg(
-            *[
-                F.max(F.when(F.col("__side") == tag, F.col(name))).alias(
-                    f"{name}{tag}"
-                )
-                for name in names
-                for tag in ("l", "r")
-            ]
-        )
+        return _sql_over(self.df, query)
 
-    def _joined_cluster_mean(
+    def _joined_stats(
         self,
-        value_col: str,
+        value_col: str | None,
         group_cols,
-        alias: str,
         min_support: int | None,
+        *,
+        count_alias: str | None = None,
+        sum_alias: str | None = None,
+        mean_alias: str | None = None,
     ) -> DataFrame:
-        """Mean with the delta-method cluster CI for join-composed frames
-        carrying row ids. mean = T_x / T_1 (HT scales cancel); by the
-        delta method Var(mean) ~= [Var(T_x) - 2m Cov(T_x, T_1)
-        + m^2 Var(T_1)] / T_1^2, each (co)variance from the cluster
-        design formula with the matching moment (x*x, x*1, 1*1):
+        """Count, sum and mean with their cluster CIs: the columns of
+        ``approx_join_stats``, and of the joined ``approx_count``,
+        ``approx_sum`` and ``approx_mean`` when only their alias is set.
 
-            A_uv = (1-r1r2) * sum_pairs u*v
-                 + (1-r1) * sum_left  (S_u S_v - sum u*v)
-                 + (1-r2) * sum_right (S_u S_v - sum u*v)
-
-        so Var(mean) ~= (A_xx - 2m A_x1 + m^2 A_11) / N^2 with N the
-        kept pair count (the (r1r2)^2 factors cancel against T_1^2).
-        On unique keys every excess term vanishes and this reduces to
-        (1-r) * sum(x - m)^2 / N^2 — the classical z*s/sqrt(n) width
-        WITH the finite-population factor the iid formula lacks (the
-        HT derivation includes it naturally; coverage seed-swept).
-        NULL values are excluded, matching ``approx_mean``/``avg``.
+        Count: T_1 / r with Var = A_11 / r^2 over the all-pairs term.
+        Sum: T_x / r with Var = A_xx / r^2. Mean: m = T_x / T_n (the HT
+        scales cancel; n is the non-null indicator, so NULL values are
+        excluded as ``avg`` excludes them) with the delta-method
+        Var(m) ~= (A_xx - 2m A_xn + m^2 A_nn) / T_n^2, which on unique
+        keys is (1-r) * sum(x - m)^2 / n^2: the classical z*s/sqrt(n)
+        width WITH the finite-population factor. A group whose values
+        are all NULL keeps its row with a NULL sum, mean and CIs, as the
+        plain estimators keep it. ``n_sampled`` counts all pairs, except
+        for the mean alone, which stands on its non-null values.
         """
-        r1, r2 = self.join_ratios
-        gs = list(group_cols)
-        ids = [
-            c
-            for c in dict.fromkeys(list(self.join_ids[0]) + list(self.join_ids[1]))
-            if c not in gs
-        ]
-        d = self.df.where(F.col(value_col).isNotNull()).select(
-            *[F.col(c) for c in gs],
-            *[F.col(c) for c in ids],
-            F.col(value_col).cast("double").alias("__x"),
-        )
-        z = stats.z_score(self.config.confidence)
-        r = self.ratio
-        joined = self._joined_cluster_moments(d, gs)
-        a, b, c = F.lit(1.0 - r), F.lit(1.0 - r1), F.lit(1.0 - r2)
-        # d is pre-filtered to non-null values, so the non-null-count
-        # moment family (c2) IS the row-count family here
-        axx = a * F.col("__pl") + b * F.col("__dl") + c * F.col("__dr")
-        ax1 = a * F.col("__sxl") + b * F.col("__dx1l") + c * F.col("__dx1r")
-        a11 = a * F.col("__n2l").cast("double") + b * F.col("__d11nl") + c * F.col("__d11nr")
-        n = F.col("__n2l").cast("double")
-        m = F.col("__sxl") / n
-        var = F.greatest(
-            axx - F.lit(2.0) * m * ax1 + m * m * a11, F.lit(0.0)
-        )
-        cols: list = [F.col(x) for x in gs]
-        cols.append(m.alias(alias))
-        cols.append((F.lit(z) * F.sqrt(var) / n).alias(f"{alias}_ci"))
+        z = sql_double(stats.z_score(self.config.confidence))
+        rr = sql_double(self.ratio * self.ratio)
+        scale = sql_double(self.scale)
+        x = f"CAST({ident(value_col)} AS DOUBLE)" if value_col is not None else None
+        terms, pairs, items = {}, [], []
+        if count_alias is not None:
+            terms["c"] = "1.0D"
+            pairs.append(("c", "c"))
+            items.append(f"__t_c * {scale} AS {ident(count_alias)}")
+            items.append(f"{z} * sqrt({_nonneg('__a_cc / ' + rr)}) AS {ident(count_alias + '_ci')}")
+        if sum_alias is not None or mean_alias is not None:
+            terms["x"] = x
+            pairs.append(("x", "x"))
+        if sum_alias is not None:
+            items.append(f"__t_x * {scale} AS {ident(sum_alias)}")
+            items.append(f"{z} * sqrt({_nonneg('__a_xx / ' + rr)}) AS {ident(sum_alias + '_ci')}")
+        support = "__n"
+        if mean_alias is not None:
+            terms["n"] = f"IF({x} IS NULL, 0.0D, 1.0D)"
+            pairs += [("x", "n"), ("n", "n")]
+            m = "try_divide(__t_x, __t_n)"
+            var = f"__a_xx - 2.0D * {m} * __a_xn + {m} * {m} * __a_nn"
+            items.append(f"{m} AS {ident(mean_alias)}")
+            items.append(f"try_divide({z} * sqrt({_nonneg(var)}), __t_n) AS {ident(mean_alias + '_ci')}")
+            if count_alias is None and sum_alias is None:
+                support = "CAST(__t_n AS BIGINT)"
         if min_support is not None:
-            nn = F.col("__nl")
-            cols.append(nn.alias("n_sampled"))
-            cols.append((nn < F.lit(int(min_support))).alias("low_support"))
-        return joined.select(*cols)
+            items.extend(_support_sql(min_support, support))
+        return self._joined_cluster(group_cols, terms, pairs, items)
 
     def approx_join_stats(
         self,
@@ -1205,77 +1156,29 @@ class SampledFrame:
         calling ``approx_count``/``approx_sum``/``approx_mean`` and
         joining (which costs three (group, row-id) aggregation chains
         and two joins; measured 21 exchanges vs 7 on the catalog twin).
-        All three estimators read the same per-(group, row-id) partial
-        sums: the count moments are the C-column family (S=C, Q=C for
-        x=1), the sum/mean moments the X-column family, so one chain
-        carries everything. Requires ``join_ratios``/``join_ids`` (see
-        ``join_sampled``); output columns and values are identical to
-        the separate methods (pinned in tests).
+        All three are projections of one ``_joined_cluster`` chain over
+        the all-pairs, value and non-null terms. Requires
+        ``join_ratios``/``join_ids`` (see ``join_sampled``); output
+        columns and values are identical to the separate methods
+        (pinned in tests).
 
         NULL handling matches the separates: the count covers ALL pairs
         (rows), the sum skips NULL values, the mean divides by the
-        NON-NULL count — the per-id aggregates carry both row counts.
+        NON-NULL count, and ``n_sampled`` counts all pairs.
         """
         if self.join_ids is None or self.join_ratios is None:
             raise ValueError(
                 "approx_join_stats needs a join-composed frame with row "
                 "ids (join_sampled with left_id/right_id)"
             )
-        r1, r2 = self.join_ratios
-        gs = list(group_cols)
-        ids = [
-            c
-            for c in dict.fromkeys(list(self.join_ids[0]) + list(self.join_ids[1]))
-            if c not in gs
-        ]
-        d = self.df.select(
-            *[F.col(c) for c in gs],
-            *[F.col(c) for c in ids],
-            F.col(value_col).cast("double").alias("__x"),
+        return self._joined_stats(
+            value_col,
+            group_cols,
+            min_support,
+            count_alias=count_alias,
+            sum_alias=sum_alias,
+            mean_alias=mean_alias,
         )
-        z = stats.z_score(self.config.confidence)
-        r = self.ratio
-        joined = self._joined_cluster_moments(d, gs)
-        a, b, c = F.lit(1.0 - r), F.lit(1.0 - r1), F.lit(1.0 - r2)
-        rr = F.lit(r * r)
-        # count: x = 1 moments are the C family
-        n_all = F.col("__nl").cast("double")
-        cnt_var = (a * n_all + b * F.col("__d11l") + c * F.col("__d11r")) / rr
-        # sum: the X family
-        sum_var = (
-            a * F.col("__pl") + b * F.col("__dl") + c * F.col("__dr")
-        ) / rr
-        # mean: delta method over X and non-null-count moments
-        n2 = F.col("__n2l").cast("double")
-        axx = a * F.col("__pl") + b * F.col("__dl") + c * F.col("__dr")
-        ax1 = a * F.col("__sxl") + b * F.col("__dx1l") + c * F.col("__dx1r")
-        a11 = a * n2 + b * F.col("__d11nl") + c * F.col("__d11nr")
-        m = F.col("__sxl") / n2
-        mean_var = F.greatest(
-            axx - F.lit(2.0) * m * ax1 + m * m * a11, F.lit(0.0)
-        )
-        cols: list = [F.col(x) for x in gs]
-        cols.append((n_all * F.lit(self.scale)).alias(count_alias))
-        cols.append(
-            (F.lit(z) * F.sqrt(F.greatest(cnt_var, F.lit(0.0)))).alias(
-                f"{count_alias}_ci"
-            )
-        )
-        cols.append((F.col("__sxl") * F.lit(self.scale)).alias(sum_alias))
-        cols.append(
-            (F.lit(z) * F.sqrt(F.greatest(sum_var, F.lit(0.0)))).alias(
-                f"{sum_alias}_ci"
-            )
-        )
-        cols.append(m.alias(mean_alias))
-        cols.append(
-            (F.lit(z) * F.sqrt(mean_var) / n2).alias(f"{mean_alias}_ci")
-        )
-        if min_support is not None:
-            nn = F.col("__nl")
-            cols.append(nn.alias("n_sampled"))
-            cols.append((nn < F.lit(int(min_support))).alias("low_support"))
-        return joined.select(*cols)
 
     def approx_count(
         self,
@@ -1301,7 +1204,7 @@ class SampledFrame:
         ``join_sampled``); the point estimate is unchanged.
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_agg("1", group_cols, alias, min_support)
+            return self._joined_stats(None, group_cols, min_support, count_alias=alias)
         # JVM-parsed SQL strings, not Column trees: this is the hot
         # estimator of the flagship queries (docs/SCALE.md, "Plan build")
         agg = self.df.groupBy(*group_cols).agg(F.expr("count(1) AS __n"))
@@ -1355,7 +1258,7 @@ class SampledFrame:
         ``join_sampled``); the point estimate is unchanged.
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_agg(ident(value_col), group_cols, alias, min_support)
+            return self._joined_stats(value_col, group_cols, min_support, sum_alias=alias)
         est = (F.sum(F.col(value_col)) * F.lit(self.scale)).alias(alias)
         base = self.df.groupBy(*[F.col(c) for c in group_cols]) if group_cols else self.df.groupBy()
         aggs = [est]
@@ -1395,7 +1298,7 @@ class SampledFrame:
         ``left_id``/``right_id``) the CI uses the delta-method cluster
         variance instead — joined pairs sharing a kept row are not iid,
         so the classical s/sqrt(n) width understates on hot keys just
-        like the count/sum case (see ``_joined_cluster_mean``). On that
+        like the count/sum case (see ``_joined_stats``). On that
         path ``n_sampled`` counts NON-NULL values — the support the
         mean estimator actually stands on — whereas the plain path's
         ``n_sampled`` counts all rows (review r8: the difference only
@@ -1404,9 +1307,7 @@ class SampledFrame:
         fused ``approx_join_stats``).
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_mean(
-                value_col, group_cols, alias, min_support
-            )
+            return self._joined_stats(value_col, group_cols, min_support, mean_alias=alias)
         est = F.avg(F.col(value_col)).alias(alias)
         base = self.df.groupBy(*[F.col(c) for c in group_cols]) if group_cols else self.df.groupBy()
         aggs = [est]
@@ -1420,97 +1321,6 @@ class SampledFrame:
         if min_support is not None and self.ratio < 1.0:
             aggs.extend(_support_cols(min_support))
         return base.agg(*aggs)
-
-    def _joined_cluster_ratio(
-        self,
-        num_col: str,
-        den_col: str,
-        group_cols,
-        alias: str,
-        min_support: int | None,
-    ) -> DataFrame:
-        """Ratio-of-sums with the cluster-design Taylor CI for
-        join-composed frames carrying row ids: Var(R^) ~= [A_xx
-        + R^2 A_yy - 2R A_xy] / (sum y)^2 with each bilinear A_uv the
-        cluster combine (1-r1r2)*sum uv + (1-r1)*excess_left
-        + (1-r2)*excess_right over (x,x), (y,y), (x,y) moments — the
-        two-column generalization of ``_joined_cluster_mean`` (mean is
-        this with y = 1). On unique keys every excess vanishes and the
-        value equals the classical Taylor form in ``approx_ratio``.
-        NULLs contribute 0 to every moment, matching the plain path's
-        null-skipping sums."""
-        r1, r2 = self.join_ratios
-        gs = list(group_cols)
-        ids = [
-            c
-            for c in dict.fromkeys(list(self.join_ids[0]) + list(self.join_ids[1]))
-            if c not in gs
-        ]
-        d = self.df.select(
-            *[F.col(c) for c in gs],
-            *[F.col(c) for c in ids],
-            F.coalesce(F.col(num_col).cast("double"), F.lit(0.0)).alias("__x"),
-            F.coalesce(F.col(den_col).cast("double"), F.lit(0.0)).alias("__y"),
-        )
-        z = stats.z_score(self.config.confidence)
-        r = self.ratio
-
-        rnames = ("__tx", "__ty", "__pxx", "__pyy", "__pxy", "__dxx", "__dyy", "__dxy", "__n")
-
-        def side(idcols, tag):
-            keys = list(dict.fromkeys(gs + list(idcols)))
-            xx, yy = F.col("__x"), F.col("__y")
-            per = d.groupBy(*[F.col(c) for c in keys]).agg(
-                F.sum("__x").alias("__sx"),
-                F.sum("__y").alias("__sy"),
-                F.sum(xx * xx).alias("__qxx"),
-                F.sum(yy * yy).alias("__qyy"),
-                F.sum(xx * yy).alias("__qxy"),
-                F.count(F.lit(1)).alias("__c"),
-            )
-            base = per.groupBy(*[F.col(c) for c in gs]) if gs else per.groupBy()
-            sx, sy = F.col("__sx"), F.col("__sy")
-            return base.agg(
-                F.sum("__sx").alias("__tx"),
-                F.sum("__sy").alias("__ty"),
-                F.sum("__qxx").alias("__pxx"),
-                F.sum("__qyy").alias("__pyy"),
-                F.sum("__qxy").alias("__pxy"),
-                F.sum(sx * sx - F.col("__qxx")).alias("__dxx"),
-                F.sum(sy * sy - F.col("__qyy")).alias("__dyy"),
-                F.sum(sx * sy - F.col("__qxy")).alias("__dxy"),
-                F.sum("__c").alias("__n"),
-            ).withColumn("__side", F.lit(tag))
-
-        # union + conditional pivot, not an equi-join on the group
-        # columns — NULL group keys must survive (review r8)
-        u = side(self.join_ids[0], "l").unionByName(side(self.join_ids[1], "r"))
-        ubase = u.groupBy(*[F.col(c) for c in gs]) if gs else u.groupBy()
-        joined = ubase.agg(
-            *[
-                F.max(F.when(F.col("__side") == tag, F.col(name))).alias(
-                    f"{name}{tag}"
-                )
-                for name in rnames
-                for tag in ("l", "r")
-            ]
-        )
-        a, b, c = F.lit(1.0 - r), F.lit(1.0 - r1), F.lit(1.0 - r2)
-        axx = a * F.col("__pxxl") + b * F.col("__dxxl") + c * F.col("__dxxr")
-        ayy = a * F.col("__pyyl") + b * F.col("__dyyl") + c * F.col("__dyyr")
-        axy = a * F.col("__pxyl") + b * F.col("__dxyl") + c * F.col("__dxyr")
-        R = F.col("__txl") / F.col("__tyl")
-        var = F.greatest(
-            axx + R * R * ayy - F.lit(2.0) * R * axy, F.lit(0.0)
-        ) / (F.col("__tyl") * F.col("__tyl"))
-        cols: list = [F.col(x) for x in gs]
-        cols.append(R.alias(alias))
-        cols.append((F.lit(z) * F.sqrt(var)).alias(f"{alias}_ci"))
-        if min_support is not None:
-            nn = F.col("__nl")
-            cols.append(nn.alias("n_sampled"))
-            cols.append((nn < F.lit(int(min_support))).alias("low_support"))
-        return joined.select(*cols)
 
     def approx_ratio(
         self,
@@ -1537,14 +1347,30 @@ class SampledFrame:
         come from the same aggregation pass — no second job.
 
         On a join-composed frame carrying row ids (``join_sampled`` with
-        ``left_id``/``right_id``) the CI uses the cluster-design Taylor
-        combine instead (see ``_joined_cluster_ratio``); the point
-        estimate is unchanged.
+        ``left_id``/``right_id``) the CI is the cluster-design Taylor
+        combine Var(R^) ~= (A_xx + R^2 A_yy - 2R A_xy) / T_y^2 over the
+        moments of ``_joined_cluster``, to which it reduces to the
+        classical form above on unique keys; NULLs contribute 0 to every
+        moment. The point estimate is unchanged, and a group whose
+        denominator values are all NULL keeps its row with a NULL ratio
+        and CI.
         """
         if ci and self.ratio < 1.0 and self.join_ids is not None:
-            return self._joined_cluster_ratio(
-                num_col, den_col, group_cols, alias, min_support
-            )
+            z = sql_double(stats.z_score(self.config.confidence))
+            terms = {
+                "x": f"coalesce(CAST({ident(num_col)} AS DOUBLE), 0.0D)",
+                "y": f"coalesce(CAST({ident(den_col)} AS DOUBLE), 0.0D)",
+            }
+            R = "try_divide(__t_x, __t_y)"
+            var = f"__a_xx + {R} * {R} * __a_yy - 2.0D * {R} * __a_xy"
+            items = [
+                f"{R} AS {ident(alias)}",
+                f"{z} * sqrt(try_divide({_nonneg(var)}, __t_y * __t_y)) AS {ident(alias + '_ci')}",
+            ]
+            if min_support is not None:
+                items.extend(_support_sql(min_support, "__n"))
+            pairs = [("x", "x"), ("y", "y"), ("x", "y")]
+            return self._joined_cluster(group_cols, terms, pairs, items)
         x, y = F.col(num_col), F.col(den_col)
         base = self.df.groupBy(*[F.col(c) for c in group_cols]) if group_cols else self.df.groupBy()
         flag = min_support is not None and self.ratio < 1.0

@@ -2265,6 +2265,46 @@ class TestReviewR8Guards:
         assert with_ci == without  # NULL group present in both or neither
         assert None in with_ci
 
+    def test_cluster_ci_keeps_all_null_value_group(self, spark):
+        """A group whose values are all NULL keeps its row in every
+        joined cluster estimator, with NULL estimates and CIs as the
+        plain estimators give, and no division by zero under ANSI."""
+        left = spark.range(60).select(F.col("id").alias("lk"))
+        right = spark.range(120).select(
+            (F.col("id") % 60).alias("rk"),
+            F.col("id").alias("rid"),
+            (F.col("id") % 3).alias("g"),
+            F.when(F.col("id") % 3 == 1, F.lit(None).cast("double"))
+            .otherwise((F.col("id") % 7).cast("double"))
+            .alias("v"),
+        )
+        sl = SampledFrame.from_dataframe(
+            left, SamplingConfig(ratio=0.5, seed=3), observe=False
+        )
+        sr = SampledFrame.from_dataframe(
+            right, SamplingConfig(ratio=0.5, seed=4), observe=False
+        )
+        j = sl.join_sampled(
+            sr, F.col("lk") == F.col("rk"), left_id="lk", right_id="rid"
+        )
+        plain = {r["g"]: r for r in j.approx_mean("v", "g").collect()}
+        assert plain[1]["est_mean"] is None
+        mean = {r["g"]: r for r in j.approx_mean("v", "g", ci=True).collect()}
+        stats_ = {r["g"]: r for r in j.approx_join_stats("v", "g").collect()}
+        ratio = {r["g"]: r for r in j.approx_ratio("lk", "v", "g", ci=True).collect()}
+        total = {r["g"]: r for r in j.approx_sum("v", "g", ci=True).collect()}
+        for got in (mean, stats_, ratio, total):
+            assert set(got) == set(plain)
+        assert mean[1]["est_mean"] is None and mean[1]["est_mean_ci"] is None
+        assert ratio[1]["est_ratio"] is None and ratio[1]["est_ratio_ci"] is None
+        assert total[1]["est_sum"] is None and total[1]["est_sum_ci"] is None
+        for c in ("est_sum", "est_sum_ci", "est_mean", "est_mean_ci"):
+            assert stats_[1][c] is None, c
+        assert stats_[1]["est_pairs"] > 0 and stats_[1]["est_pairs_ci"] > 0
+        for g in (0, 2):
+            assert mean[g]["est_mean"] == pytest.approx(plain[g]["est_mean"], rel=1e-12)
+            assert mean[g]["est_mean_ci"] > 0 and ratio[g]["est_ratio_ci"] > 0
+
     def test_topk_null_bound_is_not_stable(self, spark):
         """A rank whose own or next bound is NULL was never compared —
         it must NOT claim stable=True (review r8)."""

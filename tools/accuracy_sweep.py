@@ -174,7 +174,7 @@ def _word_count_m2(df):
     kept = T.drop_digit_lines(df.withColumn("__rid", F.monotonically_increasing_id()), "text")
     tokens = kept.select(
         "__rid", F.explode_outer(T.words("text")).alias("key")
-    ).where((F.length("key") > 0) & ~F.col("key").rlike("^[0-9]+$"))
+    ).where(~F.col("key").rlike("^[0-9]+$"))
     per_row = tokens.groupBy("__rid", "key").agg(F.count(F.lit(1)).alias("m"))
     return per_row.groupBy("key").agg(F.sum(F.col("m") * F.col("m")).alias("m2"))
 
@@ -675,7 +675,7 @@ def sweep_cluster_runs(
             # retained (explode_words itself projects to the token)
             return kept.select(
                 *keep, F.explode_outer(TT.words("value")).alias("key")
-            ).where((F.length("key") > 0) & ~F.col("key").rlike("^[0-9]+$"))
+            ).where(~F.col("key").rlike("^[0-9]+$"))
         parsed = parse_apache_log(df, "value", keep=keep)
         if workload == "log_hack":
             parsed = parsed.where(_probe)
