@@ -148,8 +148,7 @@ def poisson_bootstrap_sum(
     )
     srd = F.col("__sr").cast("double")
     rn = float(n_replicates)
-    base = per.groupBy(*gs) if group_cols else per.groupBy()
-    agged = base.agg(
+    agged = per.groupBy(*gs).agg(
         F.max("__s").alias(alias),  # max over {the one non-NULL}: a pick, not a compare
         F.sum(srd).alias("__ssum"),
         F.sum(srd * srd).alias("__ssq"),
@@ -248,7 +247,6 @@ def weighted_quantile_bootstrap(
         scale_bits=scale_bits,
     )
     alpha = 1.0 - confidence
-    base = per.groupBy(*gs) if group_cols else per.groupBy()
     aggs: list = []
     for q in ps:
         qc = F.col(f"__q{sfx(q)}")
@@ -286,4 +284,4 @@ def weighted_quantile_bootstrap(
         n0 = F.max(F.when(F.col("__rep") == F.lit(-1), F.col("n_sampled")))
         aggs.append(n0.alias("n_sampled"))
         aggs.append((n0 < F.lit(int(min_support))).alias("low_support"))
-    return base.agg(*aggs)
+    return per.groupBy(*gs).agg(*aggs)

@@ -458,18 +458,16 @@ def stratified_weighted_mean_stream(
     delta-method moments A/B/C, min(w), and the row count — so the
     streaming state is ONE ROW OF SEVEN EXACT MOMENTS PER GROUP (day)
     forever, and the est/CI combine is a stateless projection over the
-    complete-mode aggregate. Value goes through DECIMAL cents so every
-    moment addend is an exact integer-valued double; the combine uses
-    the identical literals and association as the batch estimator, so
-    the availableNow run hash-matches the SAME DuckDB oracle as the
-    batch twin (stratified_value_mean_hash_sampled) — stream == batch
-    by construction. Production swaps the trigger for processing-time
-    to keep an always-current mean-with-interval of a firehose.
+    complete-mode aggregate. Both are ``weighted_mean``'s own, built
+    over the stream. Value goes through DECIMAL cents so every moment
+    addend is an exact integer-valued double, so the availableNow run
+    hash-matches the SAME DuckDB oracle as the batch twin
+    (stratified_value_mean_hash_sampled) — stream == batch by
+    construction. Production swaps the trigger for processing-time to
+    keep an always-current mean-with-interval of a firehose.
     """
-    from pyspark.sql import functions as F
-
-    from ..sampling import stats
     from ..sampling.deterministic import stratified_hash_weight
+    from ..sampling.sampled_frame import weighted_mean
 
     src = _stream_source_dir(spark, sf_dir)
     schema = parquet_schema(spark, src)
@@ -487,40 +485,15 @@ def stratified_weighted_mean_stream(
             .alias("x"),
             F.col("w").cast("double").alias("w"),
         )
-        # mirror weighted_mean's NULL exclusion: NULL values leave the
-        # numerator AND the denominator (and n_sampled), or the stream
-        # would diverge from the batch twin on a NULL-bearing corpus.
         # KNOWN divergence (documented): the batch twin keeps a group
         # whose values are ALL NULL (NULL mean, avg semantics); this
         # pre-filter drops it — an all-NULL group has no non-null moment
         # to carry in streaming state, so it simply never emits
         .where(F.col("x").isNotNull())
     )
-    wc, xc = F.col("w"), F.col("x")
-    ww = wc * (wc - F.lit(1.0))
-    agg = s.groupBy("d").agg(
-        F.sum(wc * xc).alias("__tx"),
-        F.sum(wc).alias("__t1"),
-        F.sum(ww * xc * xc).alias("__ma"),
-        F.sum(ww * xc).alias("__mb"),
-        F.sum(ww).alias("__mc"),
-        F.min(wc).alias("__minw"),
-        F.count(F.lit(1)).alias("n_sampled"),
-    )
-    z = stats.z_score(confidence)
-    m = F.col("__tx") / F.col("__t1")
-    var = F.greatest(
-        F.col("__ma") - F.lit(2.0) * m * F.col("__mb") + m * m * F.col("__mc"),
-        F.lit(0.0),
-    ) / (F.col("__t1") * F.col("__t1"))
-    out = agg.select(
-        "d",
-        m.alias("est_mean"),
-        F.when(F.col("__minw") >= F.lit(1.0), F.lit(z) * F.sqrt(var)).alias(
-            "est_mean_ci"
-        ),
-        F.col("n_sampled"),
-        (F.col("n_sampled") < F.lit(int(min_support))).alias("low_support"),
+    out = weighted_mean(
+        s, "x", "d", weight_col="w", min_support=min_support,
+        ci_confidence=confidence, alias="est_mean",
     )
     name = "rsmr_stream_stratified_mean"
     with _state_partitions(spark):

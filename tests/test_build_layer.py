@@ -1,13 +1,13 @@
 """The driver-side build layer: the parquet schema cache behind
 ``sources.tables.load`` and the SQL-string builders (tokenizer, Apache
-log round trip, hash sampling, ``approx_count``, TPC-H Q1, the CI
-families).
+log round trip, hash sampling, the plain and weighted estimators, TPC-H
+Q1, the CI families).
 
 A plan build should launch no Spark job and make few py4j calls; these
 tests pin what the shortcuts must not change: the schema a read sees,
 the attribute IDs of each read, and each optimized plan, which must
-equal the plan of a Column-API reference written out here. A budget
-test caps the py4j round trips of one warm build.
+equal the plan of a Column-API reference written out here. Budget
+tests cap the py4j round trips of one warm build.
 """
 
 from __future__ import annotations
@@ -34,7 +34,13 @@ from random_sampling_based_approximate_mapreduce_spark.plans.catalog import QUER
 from random_sampling_based_approximate_mapreduce_spark.sampling import stats
 from random_sampling_based_approximate_mapreduce_spark.sampling.config import SamplingConfig
 from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic import hash_bernoulli
-from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import SampledFrame
+from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import (
+    SampledFrame,
+    weighted_count,
+    weighted_mean,
+    weighted_ratio,
+    weighted_sum,
+)
 from random_sampling_based_approximate_mapreduce_spark.sources import apache_log as AL
 from random_sampling_based_approximate_mapreduce_spark.sources import scale_up, tables
 from random_sampling_based_approximate_mapreduce_spark.sources.tables import (
@@ -428,19 +434,125 @@ def test_approx_count_plan_matches_column_api(spark, sf_dir, group_cols, ci, min
     assert _optimized(got) == _optimized(want)
 
 
+def _column_api_support(min_support):
+    n = F.count(F.lit(1))
+    return [] if min_support is None else [n.alias("n_sampled"), (n < F.lit(min_support)).alias("low_support")]
+
+
+def _column_api_approx_sum(sf, group_cols, ci, min_support, alias):
+    x = F.col("value")
+    aggs = [(F.sum(x) * F.lit(sf.scale)).alias(alias)]
+    if ci:
+        z = stats.z_score(sf.config.confidence)
+        ci_half = F.lit(z) * F.sqrt(F.lit(1.0 - sf.ratio) * F.sum(x * x)) / F.lit(sf.ratio)
+        aggs.append(ci_half.alias(f"{alias}_ci"))
+    return sf.df.groupBy(*group_cols).agg(*aggs, *_column_api_support(min_support))
+
+
+def _column_api_approx_mean(sf, group_cols, ci, min_support, alias):
+    x = F.col("value")
+    aggs = [F.avg(x).alias(alias)]
+    if ci:
+        z = stats.z_score(sf.config.confidence)
+        aggs.append((F.lit(z) * F.stddev(x) / F.sqrt(F.count(x))).alias(f"{alias}_ci"))
+    return sf.df.groupBy(*group_cols).agg(*aggs, *_column_api_support(min_support))
+
+
+def _column_api_approx_distinct(sf, group_cols, ci, min_support, alias):
+    return sf.df.groupBy(*group_cols).agg(F.approx_count_distinct(F.col("user_id"), rsd=0.05).alias(alias))
+
+
+def _column_api_approx_distinct_chao(sf, group_cols, ci, min_support, alias):
+    gs = [F.col(c) for c in group_cols]
+    per_val = sf.df.where(F.col("user_id").isNotNull()).groupBy(*gs, F.col("user_id")).agg(
+        F.count(F.lit(1)).alias("__c")
+    )
+    agg = per_val.groupBy(*gs).agg(
+        F.count(F.lit(1)).alias("d_sampled"),
+        F.count_if(F.col("__c") == 1).alias("f1"),
+        F.count_if(F.col("__c") == 2).alias("f2"),
+    )
+    f1, f2 = F.col("f1"), F.col("f2")
+    est = F.col("d_sampled").cast("double") + (f1 * (f1 - F.lit(1))).cast("double") / (
+        F.lit(2.0) * (f2 + F.lit(1)).cast("double")
+    )
+    return agg.select(*gs, est.alias(alias), "d_sampled", "f1", "f2")
+
+
+def _column_api_weighted(df, value, group_cols, ci, min_support, alias):
+    """``weighted_count`` (``value`` None) and ``weighted_sum``."""
+    w = F.col("__weight")
+    if value is None:
+        est, addend = F.sum(w), w * (w - F.lit(1.0))
+    else:
+        x = F.col(value).cast("double")
+        est, addend = F.sum(F.col(value) * w), x * x * w * (w - F.lit(1.0))
+    aggs = [est.alias(alias)]
+    if ci:
+        ci_half = F.lit(stats.z_score(0.95)) * F.sqrt(F.greatest(F.sum(addend), F.lit(0.0)))
+        aggs.append(F.when(F.min(w) >= F.lit(1.0), ci_half).alias(f"{alias}_ci"))
+    return df.groupBy(*group_cols).agg(*aggs, *_column_api_support(min_support))
+
+
+_ESTIMATORS = {
+    "approx_sum": (
+        lambda sf, g, ci, ms, a: sf.approx_sum("value", *g, ci=ci, min_support=ms, alias=a),
+        _column_api_approx_sum,
+    ),
+    "approx_mean": (
+        lambda sf, g, ci, ms, a: sf.approx_mean("value", *g, ci=ci, min_support=ms, alias=a),
+        _column_api_approx_mean,
+    ),
+    "approx_distinct": (
+        lambda sf, g, ci, ms, a: sf.approx_distinct("user_id", *g, alias=a),
+        _column_api_approx_distinct,
+    ),
+    "approx_distinct_chao": (
+        lambda sf, g, ci, ms, a: sf.approx_distinct_chao("user_id", *g, alias=a),
+        _column_api_approx_distinct_chao,
+    ),
+    "weighted_count": (
+        lambda sf, g, ci, ms, a: weighted_count(
+            sf.df, *g, min_support=ms, ci_confidence=0.95 if ci else None, alias=a
+        ),
+        lambda sf, g, ci, ms, a: _column_api_weighted(sf.df, None, g, ci, ms, a),
+    ),
+    "weighted_sum": (
+        lambda sf, g, ci, ms, a: weighted_sum(
+            sf.df, "value", *g, min_support=ms, ci_confidence=0.95 if ci else None, alias=a
+        ),
+        lambda sf, g, ci, ms, a: _column_api_weighted(sf.df, "value", g, ci, ms, a),
+    ),
+}
+
+
 @pytest.mark.parametrize(
-    "name", ["log_host", "log_host_sampled", "tpch_q1", "approx_sum_ci_families", "sampled_join_cluster_ci"]
+    "group_cols, ci, min_support",
+    [(("event_type",), True, 5), ((), False, None), (("event_type", "user_id"), True, None)],
 )
-def test_warm_build_round_trip_budget(spark, sf_dir, name):
-    """One warm build stays at or under 300 py4j round trips (the
-    Column-API builders made 500-1,300, and the Column-API join-cluster
-    moments chain about 3,000). Each ``send_command`` call is
-    one round trip; the minimum of three builds drops the object-release
-    commands a garbage collection can flush into a build."""
+@pytest.mark.parametrize("name", sorted(_ESTIMATORS))
+def test_estimator_plan_matches_column_api(spark, sf_dir, name, group_cols, ci, min_support):
+    """The SQL-text estimators whose arithmetic the Column-API builders
+    fixed: same optimized plan as those builders, written out here.
+    ``__weight`` makes the sampled rows a frame the weighted estimators
+    read."""
+    events = _events(spark, sf_dir).withColumn("__weight", F.lit(4.0))
+    sf = SampledFrame.from_dataframe(events, SamplingConfig(ratio=0.25, seed=11), observe=False)
+    build, reference = _ESTIMATORS[name]
+    got = build(sf, group_cols, ci, min_support, "est `n`")
+    want = reference(sf, group_cols, ci, min_support, "est `n`")
+    assert got.columns == want.columns
+    assert _optimized(got) == _optimized(want)
+
+
+def _warm_round_trips(build) -> list[int]:
+    """The py4j round trips of three warm builds, after one cold build.
+    Each ``send_command`` call is one round trip; garbage collection is
+    off while counting, and the caller takes the minimum, which drops
+    the object-release commands a collection can flush into a build."""
     import py4j.clientserver as cs
 
-    build = QUERIES[name].spark
-    build(spark, sf_dir)  # cold: schema inference and layouts
+    build()  # cold: schema inference and layouts
     calls = [0]
     orig = cs.ClientServerConnection.send_command
 
@@ -455,9 +567,47 @@ def test_warm_build_round_trip_budget(spark, sf_dir, name):
         cs.ClientServerConnection.send_command = counting
         for _ in range(3):
             calls[0] = 0
-            kept.append(build(spark, sf_dir))
+            kept.append(build())
             counts.append(calls[0])
     finally:
         cs.ClientServerConnection.send_command = orig
         gc.enable()
+    return counts
+
+
+@pytest.mark.parametrize(
+    "name", ["log_host", "log_host_sampled", "tpch_q1", "approx_sum_ci_families", "sampled_join_cluster_ci"]
+)
+def test_warm_build_round_trip_budget(spark, sf_dir, name):
+    """One warm build stays at or under 300 py4j round trips (the
+    Column-API builders made 500-1,300, and the Column-API join-cluster
+    moments chain about 3,000)."""
+    counts = _warm_round_trips(lambda: QUERIES[name].spark(spark, sf_dir))
     assert min(counts) <= 300, counts
+
+
+_ESTIMATOR_BUILDS = {
+    "approx_count": lambda sf: sf.approx_count("g", ci=True, min_support=10),
+    "approx_sum": lambda sf: sf.approx_sum("x", "g", ci=True, min_support=10),
+    "approx_mean": lambda sf: sf.approx_mean("x", "g", ci=True, min_support=10),
+    "approx_ratio": lambda sf: sf.approx_ratio("x", "y", "g", ci=True, min_support=10),
+    "approx_distinct": lambda sf: sf.approx_distinct("x", "g"),
+    "approx_distinct_chao": lambda sf: sf.approx_distinct_chao("x", "g"),
+    "weighted_count": lambda sf: weighted_count(sf.df, "g", min_support=10, ci_confidence=0.95),
+    "weighted_sum": lambda sf: weighted_sum(sf.df, "x", "g", min_support=10, ci_confidence=0.95),
+    "weighted_mean": lambda sf: weighted_mean(sf.df, "x", "g", min_support=10, ci_confidence=0.95),
+    "weighted_ratio": lambda sf: weighted_ratio(sf.df, "x", "y", "g", min_support=10, ci_confidence=0.95),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ESTIMATOR_BUILDS))
+def test_estimator_warm_build_round_trip_budget(spark, name):
+    """Each estimator's warm build, grouped with its CI and support
+    flags on, is one SQL statement: at most 40 py4j round trips (the
+    builders before them made 27-505)."""
+    rows = spark.range(1000).selectExpr(
+        "id % 7 AS g", "CAST(id % 13 AS DOUBLE) AS x", "CAST(id % 5 + 1 AS DOUBLE) AS y", "4.0D AS __weight"
+    )
+    sf = SampledFrame.from_dataframe(rows, SamplingConfig(ratio=0.25, seed=5), observe=False)
+    counts = _warm_round_trips(lambda: _ESTIMATOR_BUILDS[name](sf))
+    assert min(counts) <= 40, counts

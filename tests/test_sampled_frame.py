@@ -2191,6 +2191,114 @@ class TestWeightedMeanRatio:
         assert got2["bad"]["est_ratio_ci"] is None
 
 
+class TestZeroAndNullDenominators:
+    """A group whose denominator sum is zero or NULL gets a NULL estimate
+    and a NULL CI from the plain and weighted ratio-of-sums estimators,
+    as it does from the joined ones: no DIVIDE_BY_ZERO under ANSI mode,
+    and no CI of 0.0 around a NULL estimate."""
+
+    @staticmethod
+    def _by_group(df):
+        return {r["g"]: r for r in df.collect()}
+
+    def test_approx_ratio(self, spark):
+        # group 1: every y is 0.0; group 2: every y is NULL
+        base = spark.range(60).select(
+            (F.col("id") % 3).alias("g"),
+            F.col("id").cast("double").alias("x"),
+            F.when(F.col("id") % 3 == 0, (F.col("id") % 4 + 1).cast("double"))
+            .when(F.col("id") % 3 == 1, F.lit(0.0))
+            .alias("y"),
+        )
+        sf = SampledFrame.from_dataframe(base, SamplingConfig(ratio=0.5, seed=7), observe=False)
+        plain = self._by_group(sf.approx_ratio("x", "y", "g"))
+        with_ci = self._by_group(sf.approx_ratio("x", "y", "g", ci=True, min_support=3))
+        assert set(plain) == set(with_ci) == {0, 1, 2}
+        for g in (1, 2):
+            assert plain[g]["est_ratio"] is None
+            assert with_ci[g]["est_ratio"] is None and with_ci[g]["est_ratio_ci"] is None
+            assert with_ci[g]["n_sampled"] > 0
+        assert with_ci[0]["est_ratio"] == plain[0]["est_ratio"] > 0
+        assert with_ci[0]["est_ratio_ci"] > 0
+
+    def test_weighted_ratio(self, spark):
+        from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import (
+            weighted_ratio,
+        )
+
+        rows = [
+            ("ok", 4.0, 2.0), ("ok", 6.0, 1.0),
+            ("zero", 4.0, 0.0), ("zero", 6.0, 0.0),
+            ("null", 4.0, None), ("null", 6.0, None),
+        ]
+        df = spark.createDataFrame(
+            [(g, x, y, 2.0) for g, x, y in rows], "g string, x double, y double, __weight double"
+        )
+        plain = self._by_group(weighted_ratio(df, "x", "y", "g"))
+        with_ci = self._by_group(weighted_ratio(df, "x", "y", "g", ci_confidence=0.95))
+        for g in ("zero", "null"):
+            assert plain[g]["est_ratio"] is None
+            assert with_ci[g]["est_ratio"] is None and with_ci[g]["est_ratio_ci"] is None
+        assert with_ci["ok"]["est_ratio"] == plain["ok"]["est_ratio"] == pytest.approx(10.0 / 3.0)
+        assert with_ci["ok"]["est_ratio_ci"] is not None
+
+    def test_weighted_mean_signed_weights_summing_to_zero(self, spark):
+        """4, -2, -2 are the weights ``join_weighted_full`` gives at
+        r1 = r2 = 0.5."""
+        from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import (
+            weighted_mean,
+        )
+
+        rows = [("s", 1.0, 4.0), ("s", 2.0, -2.0), ("s", 3.0, -2.0), ("ok", 1.0, 2.0), ("ok", 3.0, 2.0)]
+        df = spark.createDataFrame(rows, "g string, v double, w double")
+        got = self._by_group(weighted_mean(df, "v", "g", weight_col="w", ci_confidence=0.95))
+        assert got["s"]["est_mean"] is None and got["s"]["est_mean_ci"] is None
+        assert got["ok"]["est_mean"] == pytest.approx(2.0)
+        assert got["ok"]["est_mean_ci"] is not None
+
+
+class TestObservationsThroughSqlEstimators:
+    """The estimators are SQL statements over a temporary view of the
+    sampled frame; an action on one still fires the observations of the
+    frames under it, so ``report()`` returns. Each report runs in a
+    daemon thread with a bounded wait, so a regression fails here
+    instead of hanging the suite."""
+
+    @staticmethod
+    def _report_within(sf, timeout=60.0):
+        import threading
+
+        out = {}
+        t = threading.Thread(target=lambda: out.setdefault("report", sf.report()), daemon=True)
+        t.start()
+        t.join(timeout)
+        assert "report" in out, "report() did not return: the observation never fired"
+        return out["report"]
+
+    def test_plain_estimator(self, spark):
+        base = spark.range(4000).select((F.col("id") % 5).alias("g"))
+        sf = SampledFrame.from_dataframe(base, SamplingConfig(ratio=0.5, seed=3))
+        rows = sf.approx_count("g", ci=True, min_support=5).collect()
+        rep = self._report_within(sf)
+        assert rep.total_records == 4000
+        assert rep.sampled_records == sum(r["n_sampled"] for r in rows)
+
+    def test_joined_estimator(self, spark):
+        left = spark.range(4000).select(
+            F.col("id").alias("lid"),
+            (F.col("id") % 50).alias("lk"),
+            (F.col("id") % 3).alias("g"),
+            F.col("id").cast("double").alias("x"),
+        )
+        right = spark.range(100).select(F.col("id").alias("rid"), (F.col("id") % 50).alias("rk"))
+        la = SampledFrame.from_dataframe(left, SamplingConfig(ratio=0.5, seed=3))
+        rb = SampledFrame.from_dataframe(right, SamplingConfig(ratio=0.5, seed=4))
+        j = la.join_sampled(rb, F.col("lk") == F.col("rk"), left_id="lid", right_id="rid")
+        assert len(j.approx_sum("x", "g", ci=True).collect()) == 3
+        assert self._report_within(la).total_records == 4000
+        assert self._report_within(rb).total_records == 100
+
+
 class TestReviewR8Guards:
     """Second review pass (round 8): validation and NULL-group fixes."""
 
