@@ -36,12 +36,20 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.quoting import ident, sql_double
 from . import stats
 from .deterministic import _BUCKETS, _bucket, _priority_sql
+from .sampled_frame import (
+    _cols,
+    _group_by,
+    _grouped,
+    _normalize_quantile_ps,
+    _quantile_value_filter,
+    _support_sql,
+    _weighted_quantile_sql,
+)
 
 # cumulative Poisson(1) CDF, k = 0..7; P(K >= 8) ~ 1e-6 truncated to 8
 # (bias ~1e-6 on E[m], far below replicate noise). Python-computed
@@ -53,14 +61,14 @@ for _k in range(8):
     _POISSON1_CUM.append(_acc)
 
 
-def _uniform(key: str, rep: str, seed: int) -> Column:
+def _uniform(key: str, rep: str, seed: int) -> str:
     # concat (NULL-propagating, like SQL ||), NOT concat_ws (which
     # skips NULLs): a NULL key then yields a NULL uniform, every CASE
     # branch misses, and BOTH engines land on the constant tail
     # multiplier — mirror-consistent, though statistically degenerate;
     # callers must provide row-identifying non-null keys (docstring).
-    keyrep = f"concat(CAST({ident(key)} AS STRING), '|', CAST({ident(rep)} AS STRING))"
-    return F.expr(f"CAST({_bucket(keyrep, seed)} AS DOUBLE) / {sql_double(_BUCKETS)}")
+    keyrep = f"concat(CAST({key} AS STRING), '|', CAST({rep} AS STRING))"
+    return f"CAST({_bucket(keyrep, seed)} AS DOUBLE) / {sql_double(_BUCKETS)}"
 
 
 def _uniform_sql(key_expr: str, rep_expr: str, seed: int) -> str:
@@ -71,20 +79,24 @@ def _uniform_sql(key_expr: str, rep_expr: str, seed: int) -> str:
     )
 
 
-def _multiplier(u: Column) -> Column:
-    m = None
-    for k, c in enumerate(_POISSON1_CUM):
-        m = F.when(u < F.lit(c), F.lit(k)) if m is None else m.when(
-            u < F.lit(c), F.lit(k)
-        )
-    return m.otherwise(F.lit(8))
+def _multiplier(u: str, lit=sql_double) -> str:
+    """The Poisson(1) inverse CDF at the uniform ``u``, as SQL whose
+    probability literals ``lit`` renders (DOUBLE literals for Spark)."""
+    whens = " ".join(f"WHEN {u} < {lit(c)} THEN {k}" for k, c in enumerate(_POISSON1_CUM))
+    return f"CASE {whens} ELSE 8 END"
 
 
 def _multiplier_sql(u_expr: str) -> str:
-    whens = " ".join(
-        f"WHEN {u_expr} < {c!r} THEN {k}" for k, c in enumerate(_POISSON1_CUM)
+    return _multiplier(u_expr, repr)
+
+
+def _replicates(view: str, cols, reps) -> str:
+    """A FROM source over ``view``: the select list ``cols`` of every
+    row, once per replicate id in ``reps`` as ``__rep``."""
+    return (
+        f"(SELECT *, explode(array({', '.join(map(str, reps))})) AS __rep"
+        f" FROM (SELECT {', '.join(cols)} FROM {view}))"
     )
-    return f"CASE {whens} ELSE 8 END"
 
 
 def poisson_bootstrap_sum(
@@ -132,34 +144,26 @@ def poisson_bootstrap_sum(
     """
     if n_replicates < 2:
         raise ValueError(f"n_replicates must be >= 2, got {n_replicates}")
-    gs = [F.col(c) for c in group_cols]
-    z = stats.z_score(confidence)
-    reps = F.explode(F.array(*[F.lit(i) for i in range(n_replicates)]))
-    d = df.select(
-        *gs,
-        F.col(key_col).alias("__bk"),
-        F.col(value_col).alias("__x"),
-    ).withColumn("__rep", reps)
+    gs = [ident(c) for c in group_cols]
+    z = sql_double(stats.z_score(confidence))
     m = _multiplier(_uniform("__bk", "__rep", seed))
-    per = d.groupBy(*gs, F.col("__rep")).agg(
-        F.sum(F.col("__x") * m).alias("__sr"),
-        # plain sum materialized only in replicate 0's row; NULL elsewhere
-        F.sum(F.when(F.col("__rep") == F.lit(0), F.col("__x"))).alias("__s"),
-    )
-    srd = F.col("__sr").cast("double")
+    srd = "CAST(__sr AS DOUBLE)"
     rn = float(n_replicates)
-    agged = per.groupBy(*gs).agg(
-        F.max("__s").alias(alias),  # max over {the one non-NULL}: a pick, not a compare
-        F.sum(srd).alias("__ssum"),
-        F.sum(srd * srd).alias("__ssq"),
-    )
-    var = (
-        F.col("__ssq") - F.col("__ssum") * F.col("__ssum") / F.lit(rn)
-    ) / F.lit(rn - 1.0)
-    return agged.select(
-        *gs,
-        F.col(alias),
-        (F.lit(z) * F.sqrt(F.greatest(var, F.lit(0.0)))).alias(f"{alias}_ci"),
+    var = f"(__ssq - __ssum * __ssum / {sql_double(rn)}) / {sql_double(rn - 1.0)}"
+
+    def per(view):
+        rows = _replicates(view, [*gs, f"{ident(key_col)} AS __bk", f"{ident(value_col)} AS __x"], range(n_replicates))
+        # plain sum materialized only in replicate 0's row; NULL elsewhere
+        aggs = [f"sum(__x * {m}) AS __sr", "sum(CASE WHEN __rep = 0 THEN __x END) AS __s"]
+        return f"(SELECT {_cols(gs, '__rep', *aggs)} FROM {rows}{_group_by([*gs, '__rep'])})"
+
+    return _grouped(
+        df,
+        group_cols,
+        # max over {the one non-NULL}: a pick, not a compare
+        [f"max(__s) AS {ident(alias)}", f"sum({srd}) AS __ssum", f"sum({srd} * {srd}) AS __ssq"],
+        [ident(alias), f"{z} * sqrt(greatest({var}, 0.0D)) AS {ident(alias + '_ci')}"],
+        rows=per,
     )
 
 
@@ -215,73 +219,43 @@ def weighted_quantile_bootstrap(
     over <= B+1 rows. The bootstrap's inherent cost; sample harder if
     it hurts.
     """
-    from .sampled_frame import _normalize_quantile_ps, weighted_quantile
-
     if n_replicates < 2:
         raise ValueError(f"n_replicates must be >= 2, got {n_replicates}")
     ps, sfx = _normalize_quantile_ps(p)
-    gs = [F.col(c) for c in group_cols]
-    reps = F.explode(F.array(*[F.lit(i) for i in range(-1, n_replicates)]))
-    d = df.select(
-        *gs,
-        F.col(key_col).alias("__bk"),
-        F.col(value_col).alias("__v"),
-        F.col(weight_col).cast("double").alias("__w"),
-    ).withColumn("__rep", reps)
-    m = F.when(F.col("__rep") == F.lit(-1), F.lit(1)).otherwise(
-        _multiplier(_uniform("__bk", "__rep", seed))
-    )
-    d = d.withColumn("__wm", F.col("__w") * m.cast("double"))
-    per = weighted_quantile(
-        d,
-        "__v",
-        p,  # pass the ORIGINAL p: suffix derivation must agree between
-        # the inner call and this function's own sfx ([0.5] is a list,
-        # so it gets '_p50' suffixes; review r8: unwrapping it to a
-        # scalar here made the inner aliases unsuffixed and the outer
-        # column references crash)
-        *(list(group_cols) + ["__rep"]),
-        weight_col="__wm",
-        min_support=min_support,
-        alias="__q",
-        scale_bits=scale_bits,
-    )
+    gs = [ident(c) for c in group_cols]
+    cols = [*gs, f"{ident(key_col)} AS __bk", f"{ident(value_col)} AS __v", f"CAST({ident(weight_col)} AS DOUBLE) AS __w"]
+    # replicate -1 is the original sample (multiplier 1)
+    m = f"CASE WHEN __rep = -1 THEN 1 ELSE {_multiplier(_uniform('__bk', '__rep', seed))} END"
+    admit = _quantile_value_filter(df, value_col, "__v")
     alpha = 1.0 - confidence
-    aggs: list = []
+    aggs = []
     for q in ps:
-        qc = F.col(f"__q{sfx(q)}")
-        est = F.max(F.when(F.col("__rep") == F.lit(-1), qc))
-        arr = F.array_sort(
-            F.collect_list(F.when(F.col("__rep") >= F.lit(0), qc))
-        )
+        qc = f"__q{sfx(q)}"
+        est = f"max(CASE WHEN __rep = -1 THEN {qc} END)"
+        arr = f"array_sort(collect_list(CASE WHEN __rep >= 0 THEN {qc} END))"
         # ranks scale with the surviving replicate count (NULL replicate
         # quantiles drop out of collect_list)
-        nrep = F.size(arr).cast("double")
-        lo_k = F.greatest(
-            F.lit(1), F.ceil(F.lit(0.5 * alpha) * nrep).cast("int")
-        )
-        hi_k = F.greatest(
-            F.lit(1), F.ceil(F.lit(1.0 - 0.5 * alpha) * nrep).cast("int")
-        )
-        aggs.append(est.alias(f"{alias}{sfx(q)}"))
+        nrep = f"CAST(size({arr}) AS DOUBLE)"
+        aggs.append(f"{est} AS {ident(alias + sfx(q))}")
         # the CI bounds inherit the signed-weight guard through the
         # rep=-1 quantile: replicate m=0 draws zero out a negative
         # weight (-w * 0 == -0.0, quantized to 0), so SOME replicates
         # of a poisoned group pass the per-replicate guard — but the
         # original sample (m=1) always sees the negative weight, so a
         # NULL point estimate nullifies the interval too.
-        aggs.append(
-            F.when(est.isNotNull(), F.get(arr, lo_k - F.lit(1))).alias(
-                f"{alias}{sfx(q)}_ci_lo"
-            )
-        )
-        aggs.append(
-            F.when(est.isNotNull(), F.get(arr, hi_k - F.lit(1))).alias(
-                f"{alias}{sfx(q)}_ci_hi"
-            )
-        )
+        for end, a in (("lo", 0.5 * alpha), ("hi", 1.0 - 0.5 * alpha)):
+            k = f"greatest(1, CAST(ceil({sql_double(a)} * {nrep}) AS INT))"
+            aggs.append(f"CASE WHEN {est} IS NOT NULL THEN get({arr}, {k} - 1) END AS {ident(f'{alias}{sfx(q)}_ci_{end}')}")
     if min_support is not None:
-        n0 = F.max(F.when(F.col("__rep") == F.lit(-1), F.col("n_sampled")))
-        aggs.append(n0.alias("n_sampled"))
-        aggs.append((n0 < F.lit(int(min_support))).alias("low_support"))
-    return per.groupBy(*gs).agg(*aggs)
+        aggs.extend(_support_sql(min_support, "max(CASE WHEN __rep = -1 THEN n_sampled END)"))
+
+    def per(view):
+        # pass the ORIGINAL p's suffixes: [0.5] is a list, so the inner
+        # columns get '_p50' suffixes as the outer references expect
+        rows = f"(SELECT *, __w * CAST({m} AS DOUBLE) AS __wm FROM {_replicates(view, cols, range(-1, n_replicates))})"
+        inner = _weighted_quantile_sql(
+            rows, [*group_cols, "__rep"], "__v", admit, "__wm", ps, sfx, min_support, "__q", scale_bits
+        )
+        return f"({inner})"
+
+    return _grouped(df, group_cols, aggs, rows=per)

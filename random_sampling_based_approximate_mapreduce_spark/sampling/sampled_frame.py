@@ -28,15 +28,16 @@ Scale-at-100TB notes:
 
 from __future__ import annotations
 
+import functools
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.quoting import ident, sql_double
+from ..functions.quoting import ident, sql_double, sql_str
 from ..functions.rounding import sql_round
 from . import stats
 from .config import SamplingConfig
@@ -310,9 +311,10 @@ def _guarded_ci(confidence: float, w: str, addend: str, alias: str) -> str:
     """The CI aggregate of ``weighted_count`` and ``weighted_sum``:
     z * sqrt(sum(addend)), NULL for a group holding a weight below 1.
     Under that guard every addend w(w-1)(...) is non-negative, so the
-    clamp never moves a number."""
+    clamp never moves a number; the sum of a group whose addends are
+    all NULL stays NULL."""
     z = sql_double(stats.z_score(confidence))
-    ci = f"{z} * sqrt(greatest(sum({addend}), 0.0D))"
+    ci = f"{z} * sqrt({_nonneg(f'sum({addend})')})"
     return f"CASE WHEN min({w}) >= 1.0D THEN {ci} END AS {ident(alias + '_ci')}"
 
 
@@ -498,57 +500,68 @@ def weighted_quantile(
     only); the histogram k-selection upgrade applies the same way if a
     few-group weighted quantile at extreme scale ever becomes hot.
     """
-    ps, _sfx = _normalize_quantile_ps(p)
-    gs = [F.col(c) for c in group_cols]
-    ws = F.floor(
-        F.col(weight_col).cast("double") * F.lit(float(1 << scale_bits))
-    ).cast("bigint")
-    # same admission predicate as approx_quantile: NULLs and (for float
-    # columns) NaN/±Inf are excluded — a NaN value would sort last and
-    # be selectable as the "population quantile" (review r8: the two
-    # quantile surfaces must agree on identical input)
-    data = df.where(_quantile_value_filter(df, value_col)).select(
-        *gs, F.col(value_col).alias("__v"), ws.alias("__ws")
+    ps, sfx = _normalize_quantile_ps(p)
+    admit = _quantile_value_filter(df, value_col)
+    return _sql_over(
+        df,
+        lambda view: _weighted_quantile_sql(
+            view, group_cols, ident(value_col), admit, ident(weight_col), ps, sfx, min_support, alias, scale_bits
+        ),
     )
-    wtot = Window.partitionBy(*gs)
-    wcum = wtot.orderBy(F.col("__v"))  # default RANGE frame: ties share one cumulative total
-    staged = data.select(
-        *gs,
-        "__v",
-        "__ws",
-        F.sum("__ws").over(wcum).alias("__cum"),
-        F.sum("__ws").over(wtot).alias("__tot"),
-        F.count(F.lit(1)).over(wtot).alias("__n"),
-    )
+
+
+def _weighted_quantile_sql(src, group_cols, v, admit, w, ps, sfx, min_support, alias, scale_bits) -> str:
+    """The statement of ``weighted_quantile`` over the FROM source
+    ``src``: value ``v`` and weight ``w`` are SQL over ``src``'s rows,
+    ``admit`` their admission predicate. Shared with
+    ``bootstrap.weighted_quantile_bootstrap``, which groups it by
+    replicate too."""
+    gs = [ident(c) for c in group_cols]
+    tot = f"OVER ({_partition_by(gs)})"
+    ws = f"CAST(floor(CAST({w} AS DOUBLE) * {sql_double(1 << scale_bits)}) AS BIGINT)"
+    data = f"SELECT {_cols(gs, f'{v} AS __v', f'{ws} AS __ws')} FROM {src} WHERE {admit}"
+    # default RANGE frame: ties share one cumulative total
+    cum = f"sum(__ws) OVER ({_partition_by(gs)} ORDER BY __v) AS __cum"
+    staged = f"SELECT {_cols(gs, '__v', '__ws', cum, f'sum(__ws) {tot} AS __tot', f'count(1) {tot} AS __n')} FROM ({data})"
     # honesty guards, detected in the same aggregation pass: signed
     # weights make the CDF non-monotone; a ZERO total makes every
     # threshold q*0 = 0 trivially crossed by the first row, so the
     # "quantile" would be the group minimum — a fabricated value
     # (review r8: an all-zero-multiplier bootstrap replicate hit this)
-    valid = (F.min("__ws") >= F.lit(0)) & (F.max("__tot") > F.lit(0))
-    aggs: list = []
-    for q in ps:
-        thresh = F.lit(q) * F.col("__tot").cast("double")
-        aggs.append(
-            F.when(
-                valid,
-                F.min(
-                    F.when(
-                        F.col("__cum").cast("double") >= thresh, F.col("__v")
-                    )
-                ),
-            ).alias(f"{alias}{_sfx(q)}")
-        )
+    valid = "min(__ws) >= 0 AND max(__tot) > 0"
+    aggs = [
+        f"CASE WHEN {valid} THEN min(CASE WHEN CAST(__cum AS DOUBLE) >= {sql_double(q)} * CAST(__tot AS DOUBLE)"
+        f" THEN __v END) END AS {ident(alias + sfx(q))}"
+        for q in ps
+    ]
     if min_support is not None:
-        aggs.append(F.max("__n").alias("n_sampled"))
-        aggs.append((F.max("__n") < F.lit(int(min_support))).alias("low_support"))
-    return staged.groupBy(*gs).agg(*aggs)
+        aggs.extend(_support_sql(min_support, "max(__n)"))
+    return f"SELECT {_cols(gs, *aggs)} FROM ({staged}){_group_by(gs)}"
+
+
+def _cols(gs, *items) -> str:
+    """The group columns ``gs``, then ``items``, as a select list."""
+    return ", ".join([*gs, *items])
+
+
+def _partition_by(gs) -> str:
+    return f"PARTITION BY {', '.join(gs)}" if gs else ""
+
+
+def _group_by(gs) -> str:
+    return f" GROUP BY {', '.join(gs)}" if gs else ""
+
+
+def _chain(op: str, terms) -> str:
+    """``terms`` joined by ``op``, parenthesized left-associated like the
+    tree ``a | b | c`` builds: the parser balances a flat chain."""
+    return functools.reduce(lambda a, b: f"({a} {op} {b})", terms)
 
 
 def _nonneg(v: str) -> str:
     """``greatest(v, 0.0D)`` as SQL that keeps a NULL ``v`` NULL, where
     ``greatest`` would skip it and return 0."""
-    return f"IF({v} < 0.0D, 0.0D, {v})"
+    return f"CASE WHEN {v} < 0.0D THEN 0.0D ELSE {v} END"
 
 
 def _sql_over(df: DataFrame, query) -> DataFrame:
@@ -594,39 +607,19 @@ def _grouped(df: DataFrame, group_cols, aggs, items=None, rows=None) -> DataFram
     return _sql_over(df, query)
 
 
-def _nullsafe_join(left: DataFrame, right: DataFrame, cols, how: str = "inner"):
-    """Equi-join on ``cols`` that treats NULL keys as EQUAL (<=>), so
-    NULL-valued group keys survive the join instead of silently
-    vanishing (review r8: ``on=[...]`` uses plain equality, which can
-    never match NULL to NULL — the histogram quantile method was
-    dropping NULL groups the window method kept). The right side's join
-    columns are renamed before the join and dropped after, so the
-    output schema matches the plain ``on=cols`` form."""
-    renamed = right
-    for c in cols:
-        renamed = renamed.withColumnRenamed(c, f"__rjk_{c}")
-    cond = None
-    for c in cols:
-        e = F.col(c).eqNullSafe(F.col(f"__rjk_{c}"))
-        cond = e if cond is None else (cond & e)
-    out = left.join(renamed, cond, how)
-    if how in ("left_semi", "left_anti"):
-        return out
-    for c in cols:
-        out = out.drop(f"__rjk_{c}")
-    return out
-
-
-def _quantile_value_filter(df: DataFrame, value_col: str):
-    """Shared admission predicate for both quantile strategies: NULLs
-    are always excluded; for float/double columns non-finite values
-    (NaN/±Inf) are excluded too (ADVICE r7 — see ``approx_quantile``).
-    One predicate used by BOTH methods so n, ranks, and CIs stay
-    strategy- and engine-identical. ``abs(v) < +Inf`` is a single
-    comparison that rejects NaN (compares false) and ±Inf together."""
-    cond = F.col(value_col).isNotNull()
+def _quantile_value_filter(df: DataFrame, value_col: str, v: str | None = None) -> str:
+    """Shared admission predicate for both quantile strategies, as SQL
+    over ``v`` (``value_col`` itself when None) holding ``value_col``'s
+    values: NULLs are always excluded; for float/double columns
+    non-finite values (NaN/±Inf) are excluded too (ADVICE r7 — see
+    ``approx_quantile``). One predicate used by BOTH methods so n,
+    ranks, and CIs stay strategy- and engine-identical. ``abs(v) < +Inf``
+    is a single comparison that rejects NaN (compares false) and ±Inf
+    together."""
+    v = ident(value_col) if v is None else v
+    cond = f"{v} IS NOT NULL"
     if dict(df.dtypes).get(value_col) in ("float", "double"):
-        cond = cond & (F.abs(F.col(value_col)) < F.lit(float("inf")))
+        cond += f" AND abs({v}) < CAST('Infinity' AS DOUBLE)"
     return cond
 
 
@@ -1472,75 +1465,50 @@ class SampledFrame:
         ``percentile_approx`` sketch on the full frame — mergeable, one
         pass, already approximate.
         """
-        ps, _sfx = _normalize_quantile_ps(p)
+        ps, sfx = _normalize_quantile_ps(p)
         if method not in ("window", "histogram"):
             raise ValueError(f"method must be 'window' or 'histogram', got {method!r}")
         with_ci = ci and self.ratio < 1.0
-        z = stats.z_score(self.config.confidence) if with_ci else None
-        fpc = max(0.0, 1.0 - self.ratio)
+        z = sql_double(stats.z_score(self.config.confidence)) if with_ci else None
+        fpc = sql_double(max(0.0, 1.0 - self.ratio))
 
-        def rank_targets(n_long):
-            """(output column name, rank Column) per requested statistic.
-            ``n_long`` is the per-group non-null count as a long Column;
+        def rank_targets(n):
+            """(output column name, SQL rank expression) per requested
+            statistic. ``n`` names the per-group non-null count (a long);
             the arithmetic is IDENTICAL for both methods (and mirrored
             literally in the DuckDB oracles), so the selected ranks are
             engine- and strategy-independent."""
-            nd = n_long.cast("double")
+            nd = f"CAST({n} AS DOUBLE)"
             out = []
             for q in ps:
-                k = F.greatest(F.lit(1).cast("bigint"), F.ceil(F.lit(q) * nd))
-                out.append((f"{alias}{_sfx(q)}", k))
+                pq = sql_double(q)
+                out.append((f"{alias}{sfx(q)}", f"greatest(1L, ceil({pq} * {nd}))"))
                 if with_ci:
-                    half = F.lit(z) * F.sqrt(
-                        nd * F.lit(q) * F.lit(1.0 - q) * F.lit(fpc)
-                    )
-                    klo = F.greatest(
-                        F.lit(1).cast("bigint"), F.floor(nd * F.lit(q) - half)
-                    )
-                    khi = F.least(
-                        n_long.cast("bigint"), F.ceil(nd * F.lit(q) + half)
-                    )
-                    out.append((f"{alias}{_sfx(q)}_ci_lo", klo))
-                    out.append((f"{alias}{_sfx(q)}_ci_hi", khi))
+                    half = f"{z} * sqrt({nd} * {pq} * {sql_double(1.0 - q)} * {fpc})"
+                    out.append((f"{alias}{sfx(q)}_ci_lo", f"greatest(1L, floor({nd} * {pq} - {half}))"))
+                    out.append((f"{alias}{sfx(q)}_ci_hi", f"least({n}, ceil({nd} * {pq} + {half}))"))
             return out
 
-        flag = min_support is not None and self.ratio < 1.0
+        support = min_support if self.ratio < 1.0 else None
+        targets = rank_targets("__n")
+        admit = _quantile_value_filter(self.df, value_col)
         if method == "histogram":
-            return self._quantile_histogram(
-                value_col, list(group_cols), rank_targets, flag,
-                int(min_support) if flag else 0, int(n_buckets),
-            )
-        gs = [F.col(c) for c in group_cols]
-        w = Window.partitionBy(*gs)
-        wo = w.orderBy(F.col(value_col).asc())
-        rn = F.col("__rn")
-        n = F.col("__n")
-        ranked = self.df.where(_quantile_value_filter(self.df, value_col)).select(
-            *gs,
-            F.col(value_col).alias("__v"),
-            F.row_number().over(wo).alias("__rn"),
-            F.count(F.lit(1)).over(w).alias("__n"),
-        )
-        want = None
-        aggs: list = []
-        for name, k in rank_targets(n):
-            aggs.append(F.max(F.when(rn == k, F.col("__v"))).alias(name))
-            cond = rn == k
-            want = cond if want is None else (want | cond)
-        if flag:
-            aggs.append(F.max(n).alias("n_sampled"))
-            aggs.append((F.max(n) < F.lit(int(min_support))).alias("low_support"))
-        picked = ranked.where(want)
-        return picked.groupBy(*gs).agg(*aggs)
+            return self._quantile_histogram(value_col, group_cols, admit, targets, support, int(n_buckets))
+        gs, v = [ident(c) for c in group_cols], ident(value_col)
+        part = _partition_by(gs)
+        ranked = [f"{v} AS __v", f"row_number() OVER ({part} ORDER BY {v} ASC) AS __rn", f"count(1) OVER ({part}) AS __n"]
+        want = _chain("OR", [f"__rn = {k}" for _, k in targets])
+        aggs = [f"max(CASE WHEN __rn = {k} THEN __v END) AS {ident(name)}" for name, k in targets]
+        if support is not None:
+            aggs.extend(_support_sql(support, "max(__n)"))
+
+        def rows(view):
+            return f"(SELECT * FROM (SELECT {_cols(gs, *ranked)} FROM {view} WHERE {admit}) WHERE {want})"
+
+        return _grouped(self.df, group_cols, aggs, rows=rows)
 
     def _quantile_histogram(
-        self,
-        value_col: str,
-        group_cols: list,
-        rank_targets,
-        flag: bool,
-        min_support: int,
-        n_buckets: int,
+        self, value_col: str, group_cols, admit: str, targets, min_support: int | None, n_buckets: int
     ) -> DataFrame:
         """Exact distributed k-selection (approx_quantile method=
         'histogram'). Three fully-parallel passes over the data — stats,
@@ -1566,98 +1534,60 @@ class SampledFrame:
         bucket (near-constant group) degrades to the window method's
         in-group sort, never worse.
         """
-        gs = [F.col(c) for c in group_cols]
-        gnames = list(group_cols)
-        data = self.df.where(_quantile_value_filter(self.df, value_col)).select(
-            *gs, F.col(value_col).alias("__v")
+        gs, v = [ident(c) for c in group_cols], ident(value_col)
+        names = [name for name, _ in targets]
+
+        def join(src, items, keys, how="", hint="/*+ BROADCAST */ "):
+            """``how`` JOIN of the subquery ``items`` over ``src``, whose
+            ``keys`` are renamed ``__rjk_<key>`` so no name needs a
+            qualifier, on ``key <=> __rjk_<key>``: NULL group keys match
+            each other, as the window method keeps them. No keys make a
+            CROSS JOIN of the one global row."""
+            renamed = {k: ident(f"__rjk_{k}") for k in keys}
+            rhs = f"(SELECT {hint}{_cols([f'{ident(k)} AS {r}' for k, r in renamed.items()], *items)} FROM {src})"
+            if not keys:
+                return f"CROSS JOIN {rhs}"
+            return f"{how} JOIN {rhs} ON {_chain('AND', [f'{ident(k)} <=> {r}' for k, r in renamed.items()])}"
+
+        bkeys = [*group_cols, "__b"]
+        span = "__mx - __mn"
+        bucket = (
+            f"CASE WHEN {span} <= 0.0D THEN 0 ELSE least({n_buckets - 1}, greatest(0, "
+            f"CAST(floor((__v - __mn) / ({span}) * {sql_double(n_buckets)}) AS INT))) END"
         )
-        stats_df = data.groupBy(*gs).agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min("__v").alias("__mn"),
-            F.max("__v").alias("__mx"),
-        )
-        out_names = [name for name, _ in rank_targets(F.lit(0).cast("bigint"))]
-        st = F.broadcast(stats_df)
-        # _nullsafe_join everywhere a group key crosses a join: plain
-        # equality drops NULL-keyed groups the window method keeps
-        joined = _nullsafe_join(data, st, gnames) if gnames else data.crossJoin(st)
-        span = F.col("__mx") - F.col("__mn")
-        b = F.when(span <= F.lit(0.0), F.lit(0)).otherwise(
-            F.least(
-                F.lit(n_buckets - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (F.col("__v") - F.col("__mn"))
-                        / span
-                        * F.lit(float(n_buckets))
-                    ).cast("int"),
-                ),
-            )
-        )
-        bucketed = joined.select(*gs, "__v", b.alias("__b"))
-        hist = bucketed.groupBy(*gs, F.col("__b")).agg(F.count(F.lit(1)).alias("__c"))
-        wcum = Window.partitionBy(*gs).orderBy(F.col("__b"))
-        cum = hist.select(
-            *gnames, "__b", F.sum("__c").over(wcum).alias("__cum"), F.col("__c")
-        ).withColumn("__cum_prev", F.col("__cum") - F.col("__c"))
         # Evaluate every target-rank predicate INLINE per histogram row
         # (then explode the matches) instead of joining a target table —
         # a join would multiply targets x buckets before its range filter
         # could prune. Expected exactly one surviving row per target.
-        nsel = stats_df.select(*gnames, "__n")
-        cum2 = (
-            _nullsafe_join(cum, F.broadcast(nsel), gnames)
-            if gnames
-            else cum.crossJoin(F.broadcast(nsel))
+        matches = ", ".join(
+            f"CASE WHEN __cum_prev < {k} AND {k} <= __cum THEN struct({sql_str(name)} AS o, {k} - __cum_prev AS r) END"
+            for name, k in targets
         )
-        matches = F.array(
-            *[
-                F.when(
-                    (F.col("__cum_prev") < k) & (k <= F.col("__cum")),
-                    F.struct(
-                        F.lit(name).alias("o"),
-                        (k - F.col("__cum_prev")).alias("r"),
-                    ),
-                )
-                for name, k in rank_targets(F.col("__n"))
-            ]
-        )
-        loc = (
-            cum2.select(*gnames, "__b", F.explode(matches).alias("__m"))
-            .where(F.col("__m").isNotNull())
-            .select(
-                *gnames,
-                "__b",
-                F.col("__m.o").alias("__out"),
-                F.col("__m.r").alias("__res"),
-            )
-        )
-        tb = loc.select(*gnames, "__b").distinct()
-        on_cols = gnames + ["__b"]
-        cand = _nullsafe_join(bucketed, F.broadcast(tb), on_cols, how="left_semi")
-        wsel = Window.partitionBy(*(gs + [F.col("__b")])).orderBy(F.col("__v"))
-        rsel = cand.select(
-            *gnames, "__b", "__v", F.row_number().over(wsel).alias("__rn")
-        )
-        hit = _nullsafe_join(rsel, F.broadcast(loc), on_cols).where(
-            F.col("__rn") == F.col("__res")
-        )
-        res = hit.groupBy(*gs).agg(
-            *[
-                F.max(F.when(F.col("__out") == name, F.col("__v"))).alias(name)
-                for name in out_names
-            ]
-        )
-        if flag:
-            supp = stats_df.select(
-                *gnames,
-                F.col("__n").alias("n_sampled"),
-                (F.col("__n") < F.lit(min_support)).alias("low_support"),
-            )
-            res = _nullsafe_join(res, supp, gnames) if gnames else res.crossJoin(supp)
-            res = res.select(*gnames, *out_names, "n_sampled", "low_support")
-        return res
+        picks = ", ".join(f"max(CASE WHEN __out = {sql_str(name)} THEN __v END) AS {ident(name)}" for name in names)
+        tail = "SELECT * FROM res"
+        if min_support is not None:
+            support = _support_sql(min_support, "__n")
+            out = [ident(name) for name in names] + ["n_sampled", "low_support"]
+            tail = f"SELECT {_cols(gs, *out)} FROM res {join('stats', support, group_cols, hint='')}"
+
+        def query(view):
+            return f"""WITH data AS (SELECT {_cols(gs, f'{v} AS __v')} FROM {view} WHERE {admit}),
+            stats AS (SELECT {_cols(gs, 'count(1) AS __n', 'min(__v) AS __mn', 'max(__v) AS __mx')} FROM data{_group_by(gs)}),
+            bucketed AS (SELECT {_cols(gs, '__v', f'{bucket} AS __b')} FROM data
+              {join('stats', ['__n', '__mn', '__mx'], group_cols)}),
+            hist AS (SELECT {_cols(gs, '__b', 'count(1) AS __c')} FROM bucketed{_group_by([*gs, '__b'])}),
+            cum AS (SELECT *, __cum - __c AS __cum_prev FROM (SELECT {_cols(gs, '__b',
+              f'sum(__c) OVER ({_partition_by(gs)} ORDER BY __b) AS __cum', '__c')} FROM hist)),
+            loc AS (SELECT {_cols(gs, '__b', '__m.o AS __out', '__m.r AS __res')} FROM (
+              SELECT {_cols(gs, '__b', f'explode(array({matches})) AS __m')} FROM cum
+              {join('stats', ['__n'], group_cols)}) WHERE __m IS NOT NULL),
+            res AS (SELECT {_cols(gs, picks)} FROM (
+              SELECT {_cols(gs, '__b', '__v', f'row_number() OVER ({_partition_by([*gs, "__b"])} ORDER BY __v) AS __rn')}
+              FROM bucketed {join(f'(SELECT DISTINCT {_cols(gs, "__b")} FROM loc)', [], bkeys, how='LEFT SEMI')})
+              {join('loc', ['__out', '__res'], bkeys)} WHERE __rn = __res{_group_by(gs)})
+            {tail}"""
+
+        return _sql_over(self.df, query)
 
     def approx_topk(
         self,
@@ -1695,40 +1625,37 @@ class SampledFrame:
         """
         if k < 1:
             raise ValueError(f"k must be >= 1, got {k}")
-        est_col = F.col(alias)
-        ci_col = F.col(f"{alias}_ci")
+        est, ci = ident(alias), ident(f"{alias}_ci")
         if value_col is None:
             base = self.approx_count(*group_cols, ci=True, alias=alias)
         else:
             base = self.approx_sum(value_col, *group_cols, ci=True, alias=alias)
-        order = [est_col.desc()] + [F.col(c).asc() for c in group_cols]
-        if self.ratio >= 1.0:
-            # exact mode: CI column absent, every rank is exact.
-            # orderBy+limit plans as TakeOrderedAndProject (per-partition
-            # top-k, driver merge); the rank window then runs on k rows.
-            topped = base.orderBy(*order).limit(k)
-            w = Window.orderBy(*order)
-            return topped.select(
-                "*", F.row_number().over(w).alias("rank")
-            ).withColumn("stable", F.lit(True))
-        topped = base.orderBy(*order).limit(k + 1)
-        w = Window.orderBy(*order)
-        ranked = topped.select("*", F.row_number().over(w).alias("rank"))
-        nxt_hi = F.lead(est_col + ci_col).over(w)
-        has_next = F.lead(F.lit(True)).over(w)
-        # stable is TRUE only when the comparison was actually MADE and
-        # held, or there is genuinely no next item; a NULL bound on
-        # either side (e.g. an all-NULL value group) means the bound
-        # comparison never happened — claim UNSTABLE, not stable
-        # (review r8: coalesce-to-True marked exactly the uncomparable
-        # rows as certain)
-        flagged = ranked.select(
-            "*",
-            F.when(has_next.isNull(), F.lit(True))
-            .otherwise(F.coalesce((est_col - ci_col) > nxt_hi, F.lit(False)))
-            .alias("stable"),
+        order = _cols([f"{est} DESC"], *[f"{ident(c)} ASC" for c in group_cols])
+        over = f"OVER (ORDER BY {order})"
+        exact = self.ratio >= 1.0
+        # exact mode: CI column absent, every rank is exact. ORDER BY +
+        # LIMIT plans as TakeOrderedAndProject (per-partition top-k,
+        # driver merge); the rank window then runs on k rows.
+        # Sampled: stable is TRUE only when the comparison was actually
+        # MADE and held, or there is genuinely no next item; a NULL bound
+        # on either side (e.g. an all-NULL value group) means the bound
+        # comparison never happened — claim UNSTABLE, not stable (review
+        # r8: coalesce-to-True marked exactly the uncomparable rows as
+        # certain)
+        stable = (
+            "true"
+            if exact
+            else f"CASE WHEN lead(true) {over} IS NULL THEN true"
+            f" ELSE coalesce({est} - {ci} > lead({est} + {ci}) {over}, false) END"
         )
-        return flagged.where(F.col("rank") <= k)
+
+        def query(view):
+            topped = f"SELECT * FROM {view} ORDER BY {order} LIMIT {k if exact else k + 1}"
+            ranked = f"SELECT *, row_number() {over} AS `rank` FROM ({topped})"
+            flagged = f"SELECT *, {stable} AS stable FROM ({ranked})"
+            return flagged if exact else f"SELECT * FROM ({flagged}) WHERE `rank` <= {k}"
+
+        return _sql_over(base, query)
 
     def approx_distinct(self, value_col: str, *group_cols: str, rsd: float = 0.05, alias: str = "est_distinct") -> DataFrame:
         """Approximate distinct count via the HyperLogLog++ sketch — over

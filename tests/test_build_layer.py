@@ -1,7 +1,7 @@
 """The driver-side build layer: the parquet schema cache behind
 ``sources.tables.load`` and the SQL-string builders (tokenizer, Apache
-log round trip, hash sampling, the plain and weighted estimators, TPC-H
-Q1, the CI families).
+log round trip, hash sampling, the plain, weighted, quantile, bootstrap
+and top-k estimators, TPC-H Q1, the CI families).
 
 A plan build should launch no Spark job and make few py4j calls; these
 tests pin what the shortcuts must not change: the schema a read sees,
@@ -22,22 +22,30 @@ import struct
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StringType, TimestampType
 
 from random_sampling_based_approximate_mapreduce_spark import session
 from random_sampling_based_approximate_mapreduce_spark.functions import text as T
 from random_sampling_based_approximate_mapreduce_spark.functions.hashing import hash64
-from random_sampling_based_approximate_mapreduce_spark.functions.quoting import sql_double
+from random_sampling_based_approximate_mapreduce_spark.functions.quoting import ident, sql_double
 from random_sampling_based_approximate_mapreduce_spark.functions.rounding import sql_round
 from random_sampling_based_approximate_mapreduce_spark.plans.catalog import QUERIES
 from random_sampling_based_approximate_mapreduce_spark.sampling import stats
+from random_sampling_based_approximate_mapreduce_spark.sampling.bootstrap import (
+    _POISSON1_CUM,
+    poisson_bootstrap_sum,
+    weighted_quantile_bootstrap,
+)
 from random_sampling_based_approximate_mapreduce_spark.sampling.config import SamplingConfig
-from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic import hash_bernoulli
+from random_sampling_based_approximate_mapreduce_spark.sampling.deterministic import _BUCKETS, _bucket, hash_bernoulli
 from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import (
     SampledFrame,
+    _normalize_quantile_ps,
     weighted_count,
     weighted_mean,
+    weighted_quantile,
     weighted_ratio,
     weighted_sum,
 )
@@ -489,9 +497,261 @@ def _column_api_weighted(df, value, group_cols, ci, min_support, alias):
         est, addend = F.sum(F.col(value) * w), x * x * w * (w - F.lit(1.0))
     aggs = [est.alias(alias)]
     if ci:
-        ci_half = F.lit(stats.z_score(0.95)) * F.sqrt(F.greatest(F.sum(addend), F.lit(0.0)))
+        s = F.sum(addend)
+        ci_half = F.lit(stats.z_score(0.95)) * F.sqrt(F.when(s < F.lit(0.0), F.lit(0.0)).otherwise(s))
         aggs.append(F.when(F.min(w) >= F.lit(1.0), ci_half).alias(f"{alias}_ci"))
     return df.groupBy(*group_cols).agg(*aggs, *_column_api_support(min_support))
+
+
+_QUANTILE_PS = [0.5, 0.9]
+
+# The rank-selection estimators as Column-API trees. ``F.col`` reads a
+# name with backticks as a quoted multi-part name, so an output column
+# picked back by name goes through ``ident``.
+
+
+def _column_api_admit(df, value_col):
+    cond = F.col(value_col).isNotNull()
+    if dict(df.dtypes).get(value_col) in ("float", "double"):
+        cond = cond & (F.abs(F.col(value_col)) < F.lit(float("inf")))
+    return cond
+
+
+def _column_api_rank_targets(sf, ps, sfx, ci, alias, n_long):
+    with_ci = ci and sf.ratio < 1.0
+    z = stats.z_score(sf.config.confidence) if with_ci else None
+    fpc = max(0.0, 1.0 - sf.ratio)
+    nd = n_long.cast("double")
+    out = []
+    for q in ps:
+        out.append((f"{alias}{sfx(q)}", F.greatest(F.lit(1).cast("bigint"), F.ceil(F.lit(q) * nd))))
+        if with_ci:
+            half = F.lit(z) * F.sqrt(nd * F.lit(q) * F.lit(1.0 - q) * F.lit(fpc))
+            klo = F.greatest(F.lit(1).cast("bigint"), F.floor(nd * F.lit(q) - half))
+            khi = F.least(n_long.cast("bigint"), F.ceil(nd * F.lit(q) + half))
+            out += [(f"{alias}{sfx(q)}_ci_lo", klo), (f"{alias}{sfx(q)}_ci_hi", khi)]
+    return out
+
+
+def _column_api_quantile(sf, group_cols, ci, min_support, alias, method):
+    """``approx_quantile("value", [0.5, 0.9], ...)``, both methods."""
+    ps, sfx = _normalize_quantile_ps(_QUANTILE_PS)
+
+    def targets(n):
+        return _column_api_rank_targets(sf, ps, sfx, ci, alias, n)
+
+    flag = min_support is not None and sf.ratio < 1.0
+    if method == "histogram":
+        return _column_api_quantile_histogram(sf, list(group_cols), targets, flag, min_support)
+    gs = [F.col(c) for c in group_cols]
+    w = Window.partitionBy(*gs)
+    wo = w.orderBy(F.col("value").asc())
+    rn, n = F.col("__rn"), F.col("__n")
+    ranked = sf.df.where(_column_api_admit(sf.df, "value")).select(
+        *gs,
+        F.col("value").alias("__v"),
+        F.row_number().over(wo).alias("__rn"),
+        F.count(F.lit(1)).over(w).alias("__n"),
+    )
+    want, aggs = None, []
+    for name, k in targets(n):
+        aggs.append(F.max(F.when(rn == k, F.col("__v"))).alias(name))
+        want = (rn == k) if want is None else (want | (rn == k))
+    if flag:
+        aggs += [F.max(n).alias("n_sampled"), (F.max(n) < F.lit(min_support)).alias("low_support")]
+    return ranked.where(want).groupBy(*gs).agg(*aggs)
+
+
+def _column_api_nullsafe_join(left, right, cols, how="inner"):
+    renamed = right
+    for c in cols:
+        renamed = renamed.withColumnRenamed(c, f"__rjk_{c}")
+    cond = None
+    for c in cols:
+        e = F.col(c).eqNullSafe(F.col(f"__rjk_{c}"))
+        cond = e if cond is None else (cond & e)
+    out = left.join(renamed, cond, how)
+    if how in ("left_semi", "left_anti"):
+        return out
+    for c in cols:
+        out = out.drop(f"__rjk_{c}")
+    return out
+
+
+def _column_api_quantile_histogram(sf, gnames, targets, flag, min_support, n_buckets=8192):
+    gs = [F.col(c) for c in gnames]
+    data = sf.df.where(_column_api_admit(sf.df, "value")).select(*gs, F.col("value").alias("__v"))
+    stats_df = data.groupBy(*gs).agg(
+        F.count(F.lit(1)).alias("__n"), F.min("__v").alias("__mn"), F.max("__v").alias("__mx")
+    )
+    out_names = [name for name, _ in targets(F.lit(0).cast("bigint"))]
+    st = F.broadcast(stats_df)
+    joined = _column_api_nullsafe_join(data, st, gnames) if gnames else data.crossJoin(st)
+    span = F.col("__mx") - F.col("__mn")
+    b = F.when(span <= F.lit(0.0), F.lit(0)).otherwise(
+        F.least(
+            F.lit(n_buckets - 1),
+            F.greatest(
+                F.lit(0),
+                F.floor((F.col("__v") - F.col("__mn")) / span * F.lit(float(n_buckets))).cast("int"),
+            ),
+        )
+    )
+    bucketed = joined.select(*gs, "__v", b.alias("__b"))
+    hist = bucketed.groupBy(*gs, F.col("__b")).agg(F.count(F.lit(1)).alias("__c"))
+    wcum = Window.partitionBy(*gs).orderBy(F.col("__b"))
+    cum = hist.select(*gnames, "__b", F.sum("__c").over(wcum).alias("__cum"), F.col("__c")).withColumn(
+        "__cum_prev", F.col("__cum") - F.col("__c")
+    )
+    nsel = stats_df.select(*gnames, "__n")
+    cum2 = (
+        _column_api_nullsafe_join(cum, F.broadcast(nsel), gnames)
+        if gnames
+        else cum.crossJoin(F.broadcast(nsel))
+    )
+    matches = F.array(
+        *[
+            F.when(
+                (F.col("__cum_prev") < k) & (k <= F.col("__cum")),
+                F.struct(F.lit(name).alias("o"), (k - F.col("__cum_prev")).alias("r")),
+            )
+            for name, k in targets(F.col("__n"))
+        ]
+    )
+    loc = (
+        cum2.select(*gnames, "__b", F.explode(matches).alias("__m"))
+        .where(F.col("__m").isNotNull())
+        .select(*gnames, "__b", F.col("__m.o").alias("__out"), F.col("__m.r").alias("__res"))
+    )
+    tb = loc.select(*gnames, "__b").distinct()
+    on_cols = gnames + ["__b"]
+    cand = _column_api_nullsafe_join(bucketed, F.broadcast(tb), on_cols, how="left_semi")
+    wsel = Window.partitionBy(*(gs + [F.col("__b")])).orderBy(F.col("__v"))
+    rsel = cand.select(*gnames, "__b", "__v", F.row_number().over(wsel).alias("__rn"))
+    hit = _column_api_nullsafe_join(rsel, F.broadcast(loc), on_cols).where(F.col("__rn") == F.col("__res"))
+    res = hit.groupBy(*gs).agg(
+        *[F.max(F.when(F.col("__out") == name, F.col("__v"))).alias(name) for name in out_names]
+    )
+    if flag:
+        supp = stats_df.select(
+            *gnames, F.col("__n").alias("n_sampled"), (F.col("__n") < F.lit(min_support)).alias("low_support")
+        )
+        res = _column_api_nullsafe_join(res, supp, gnames) if gnames else res.crossJoin(supp)
+        res = res.select(*gnames, *[F.col(ident(n)) for n in out_names], "n_sampled", "low_support")
+    return res
+
+
+def _column_api_weighted_quantile(df, value_col, p, group_cols, weight_col, min_support, alias, scale_bits=20):
+    ps, sfx = _normalize_quantile_ps(p)
+    gs = [F.col(c) for c in group_cols]
+    ws = F.floor(F.col(weight_col).cast("double") * F.lit(float(1 << scale_bits))).cast("bigint")
+    data = df.where(_column_api_admit(df, value_col)).select(*gs, F.col(value_col).alias("__v"), ws.alias("__ws"))
+    wtot = Window.partitionBy(*gs)
+    wcum = wtot.orderBy(F.col("__v"))
+    staged = data.select(
+        *gs,
+        "__v",
+        "__ws",
+        F.sum("__ws").over(wcum).alias("__cum"),
+        F.sum("__ws").over(wtot).alias("__tot"),
+        F.count(F.lit(1)).over(wtot).alias("__n"),
+    )
+    valid = (F.min("__ws") >= F.lit(0)) & (F.max("__tot") > F.lit(0))
+    aggs = [
+        F.when(
+            valid, F.min(F.when(F.col("__cum").cast("double") >= F.lit(q) * F.col("__tot").cast("double"), F.col("__v")))
+        ).alias(f"{alias}{sfx(q)}")
+        for q in ps
+    ]
+    if min_support is not None:
+        aggs.append(F.max("__n").alias("n_sampled"))
+        aggs.append((F.max("__n") < F.lit(int(min_support))).alias("low_support"))
+    return staged.groupBy(*gs).agg(*aggs)
+
+
+def _column_api_multiplier(key, rep, seed):
+    keyrep = f"concat(CAST(`{key}` AS STRING), '|', CAST(`{rep}` AS STRING))"
+    u = F.expr(f"CAST({_bucket(keyrep, seed)} AS DOUBLE) / {sql_double(_BUCKETS)}")
+    m = None
+    for k, c in enumerate(_POISSON1_CUM):
+        m = F.when(u < F.lit(c), F.lit(k)) if m is None else m.when(u < F.lit(c), F.lit(k))
+    return m.otherwise(F.lit(8))
+
+
+def _column_api_bootstrap_sum(df, value_col, key_col, group_cols, n_replicates, alias, seed=42):
+    gs = [F.col(c) for c in group_cols]
+    z = stats.z_score(0.95)
+    reps = F.explode(F.array(*[F.lit(i) for i in range(n_replicates)]))
+    d = df.select(*gs, F.col(key_col).alias("__bk"), F.col(value_col).alias("__x")).withColumn("__rep", reps)
+    m = _column_api_multiplier("__bk", "__rep", seed)
+    per = d.groupBy(*gs, F.col("__rep")).agg(
+        F.sum(F.col("__x") * m).alias("__sr"),
+        F.sum(F.when(F.col("__rep") == F.lit(0), F.col("__x"))).alias("__s"),
+    )
+    srd = F.col("__sr").cast("double")
+    rn = float(n_replicates)
+    agged = per.groupBy(*gs).agg(
+        F.max("__s").alias(alias), F.sum(srd).alias("__ssum"), F.sum(srd * srd).alias("__ssq")
+    )
+    var = (F.col("__ssq") - F.col("__ssum") * F.col("__ssum") / F.lit(rn)) / F.lit(rn - 1.0)
+    return agged.select(
+        *gs, F.col(ident(alias)), (F.lit(z) * F.sqrt(F.greatest(var, F.lit(0.0)))).alias(f"{alias}_ci")
+    )
+
+
+def _column_api_quantile_bootstrap(df, value_col, p, group_cols, key_col, n_replicates, min_support, alias, seed=42):
+    ps, sfx = _normalize_quantile_ps(p)
+    gs = [F.col(c) for c in group_cols]
+    reps = F.explode(F.array(*[F.lit(i) for i in range(-1, n_replicates)]))
+    d = df.select(
+        *gs,
+        F.col(key_col).alias("__bk"),
+        F.col(value_col).alias("__v"),
+        F.col("__weight").cast("double").alias("__w"),
+    ).withColumn("__rep", reps)
+    m = F.when(F.col("__rep") == F.lit(-1), F.lit(1)).otherwise(_column_api_multiplier("__bk", "__rep", seed))
+    d = d.withColumn("__wm", F.col("__w") * m.cast("double"))
+    per = _column_api_weighted_quantile(d, "__v", p, list(group_cols) + ["__rep"], "__wm", min_support, "__q")
+    alpha = 1.0 - 0.95
+    aggs = []
+    for q in ps:
+        qc = F.col(f"__q{sfx(q)}")
+        est = F.max(F.when(F.col("__rep") == F.lit(-1), qc))
+        arr = F.array_sort(F.collect_list(F.when(F.col("__rep") >= F.lit(0), qc)))
+        nrep = F.size(arr).cast("double")
+        lo_k = F.greatest(F.lit(1), F.ceil(F.lit(0.5 * alpha) * nrep).cast("int"))
+        hi_k = F.greatest(F.lit(1), F.ceil(F.lit(1.0 - 0.5 * alpha) * nrep).cast("int"))
+        aggs.append(est.alias(f"{alias}{sfx(q)}"))
+        aggs.append(F.when(est.isNotNull(), F.get(arr, lo_k - F.lit(1))).alias(f"{alias}{sfx(q)}_ci_lo"))
+        aggs.append(F.when(est.isNotNull(), F.get(arr, hi_k - F.lit(1))).alias(f"{alias}{sfx(q)}_ci_hi"))
+    if min_support is not None:
+        n0 = F.max(F.when(F.col("__rep") == F.lit(-1), F.col("n_sampled")))
+        aggs.append(n0.alias("n_sampled"))
+        aggs.append((n0 < F.lit(int(min_support))).alias("low_support"))
+    return per.groupBy(*gs).agg(*aggs)
+
+
+def _column_api_topk(sf, group_cols, k, value_col, alias):
+    est_col, ci_col = F.col(ident(alias)), F.col(ident(f"{alias}_ci"))
+    if value_col is None:
+        base = sf.approx_count(*group_cols, ci=True, alias=alias)
+    else:
+        base = sf.approx_sum(value_col, *group_cols, ci=True, alias=alias)
+    order = [est_col.desc()] + [F.col(c).asc() for c in group_cols]
+    w = Window.orderBy(*order)
+    if sf.ratio >= 1.0:
+        topped = base.orderBy(*order).limit(k)
+        return topped.select("*", F.row_number().over(w).alias("rank")).withColumn("stable", F.lit(True))
+    ranked = base.orderBy(*order).limit(k + 1).select("*", F.row_number().over(w).alias("rank"))
+    nxt_hi = F.lead(est_col + ci_col).over(w)
+    has_next = F.lead(F.lit(True)).over(w)
+    flagged = ranked.select(
+        "*",
+        F.when(has_next.isNull(), F.lit(True))
+        .otherwise(F.coalesce((est_col - ci_col) > nxt_hi, F.lit(False)))
+        .alias("stable"),
+    )
+    return flagged.where(F.col("rank") <= k)
 
 
 _ESTIMATORS = {
@@ -523,7 +783,43 @@ _ESTIMATORS = {
         ),
         lambda sf, g, ci, ms, a: _column_api_weighted(sf.df, "value", g, ci, ms, a),
     ),
+    "approx_quantile": (
+        lambda sf, g, ci, ms, a: sf.approx_quantile("value", _QUANTILE_PS, *g, ci=ci, min_support=ms, alias=a),
+        lambda sf, g, ci, ms, a: _column_api_quantile(sf, g, ci, ms, a, "window"),
+    ),
+    "approx_quantile_histogram": (
+        lambda sf, g, ci, ms, a: sf.approx_quantile(
+            "value", _QUANTILE_PS, *g, ci=ci, min_support=ms, alias=a, method="histogram"
+        ),
+        lambda sf, g, ci, ms, a: _column_api_quantile(sf, g, ci, ms, a, "histogram"),
+    ),
+    "weighted_quantile": (
+        lambda sf, g, ci, ms, a: weighted_quantile(sf.df, "value", _QUANTILE_PS, *g, min_support=ms, alias=a),
+        lambda sf, g, ci, ms, a: _column_api_weighted_quantile(sf.df, "value", _QUANTILE_PS, g, "__weight", ms, a),
+    ),
+    "poisson_bootstrap_sum": (
+        lambda sf, g, ci, ms, a: poisson_bootstrap_sum(sf.df, "value", "event_id", *g, n_replicates=8, alias=a),
+        lambda sf, g, ci, ms, a: _column_api_bootstrap_sum(sf.df, "value", "event_id", g, 8, a),
+    ),
+    "weighted_quantile_bootstrap": (
+        lambda sf, g, ci, ms, a: weighted_quantile_bootstrap(
+            sf.df, "value", _QUANTILE_PS, *g, key_col="event_id", n_replicates=8, min_support=ms, alias=a
+        ),
+        lambda sf, g, ci, ms, a: _column_api_quantile_bootstrap(sf.df, "value", _QUANTILE_PS, g, "event_id", 8, ms, a),
+    ),
+    "approx_topk": (
+        lambda sf, g, ci, ms, a: sf.approx_topk(*g, k=3, value_col="value" if ci else None, alias=a),
+        lambda sf, g, ci, ms, a: _column_api_topk(sf, g, 3, "value" if ci else None, a),
+    ),
+    "approx_topk_exact": (
+        lambda sf, g, ci, ms, a: _exact(sf).approx_topk(*g, k=3, value_col="value" if ci else None, alias=a),
+        lambda sf, g, ci, ms, a: _column_api_topk(_exact(sf), g, 3, "value" if ci else None, a),
+    ),
 }
+
+
+def _exact(sf):
+    return SampledFrame(df=sf.df, ratio=1.0, config=SamplingConfig(ratio=1.0))
 
 
 @pytest.mark.parametrize(
@@ -576,11 +872,21 @@ def _warm_round_trips(build) -> list[int]:
 
 
 @pytest.mark.parametrize(
-    "name", ["log_host", "log_host_sampled", "tpch_q1", "approx_sum_ci_families", "sampled_join_cluster_ci"]
+    "name",
+    [
+        "log_host",
+        "log_host_sampled",
+        "tpch_q1",
+        "approx_sum_ci_families",
+        "sampled_join_cluster_ci",
+        "order_price_quantile_hash_sampled",
+        "order_price_quantile_histogram",
+        "order_price_percentiles_hash_sampled",
+    ],
 )
 def test_warm_build_round_trip_budget(spark, sf_dir, name):
     """One warm build stays at or under 300 py4j round trips (the
-    Column-API builders made 500-1,300, and the Column-API join-cluster
+    Column-API builders made 500-2,300, and the Column-API join-cluster
     moments chain about 3,000)."""
     counts = _warm_round_trips(lambda: QUERIES[name].spark(spark, sf_dir))
     assert min(counts) <= 300, counts
@@ -597,16 +903,27 @@ _ESTIMATOR_BUILDS = {
     "weighted_sum": lambda sf: weighted_sum(sf.df, "x", "g", min_support=10, ci_confidence=0.95),
     "weighted_mean": lambda sf: weighted_mean(sf.df, "x", "g", min_support=10, ci_confidence=0.95),
     "weighted_ratio": lambda sf: weighted_ratio(sf.df, "x", "y", "g", min_support=10, ci_confidence=0.95),
+    "approx_quantile": lambda sf: sf.approx_quantile("x", [0.5, 0.9], "g", ci=True, min_support=10),
+    "approx_quantile_histogram": lambda sf: sf.approx_quantile(
+        "x", [0.5, 0.9], "g", ci=True, min_support=10, method="histogram"
+    ),
+    "weighted_quantile": lambda sf: weighted_quantile(sf.df, "x", [0.5, 0.9], "g", min_support=10),
+    "poisson_bootstrap_sum": lambda sf: poisson_bootstrap_sum(sf.df, "x", "id", "g"),
+    "weighted_quantile_bootstrap": lambda sf: weighted_quantile_bootstrap(
+        sf.df, "x", [0.5, 0.9], "g", key_col="id", min_support=10
+    ),
+    "approx_topk": lambda sf: sf.approx_topk("g", k=3, value_col="x"),
 }
 
 
 @pytest.mark.parametrize("name", sorted(_ESTIMATOR_BUILDS))
 def test_estimator_warm_build_round_trip_budget(spark, name):
     """Each estimator's warm build, grouped with its CI and support
-    flags on, is one SQL statement: at most 40 py4j round trips (the
-    builders before them made 27-505)."""
+    flags on, is one SQL statement (``approx_topk`` two: the count's and
+    its ranking): at most 40 py4j round trips (the Column-API builders
+    before them made 27-3,155)."""
     rows = spark.range(1000).selectExpr(
-        "id % 7 AS g", "CAST(id % 13 AS DOUBLE) AS x", "CAST(id % 5 + 1 AS DOUBLE) AS y", "4.0D AS __weight"
+        "id", "id % 7 AS g", "CAST(id % 13 AS DOUBLE) AS x", "CAST(id % 5 + 1 AS DOUBLE) AS y", "4.0D AS __weight"
     )
     sf = SampledFrame.from_dataframe(rows, SamplingConfig(ratio=0.25, seed=5), observe=False)
     counts = _warm_round_trips(lambda: _ESTIMATOR_BUILDS[name](sf))

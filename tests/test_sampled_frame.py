@@ -2256,6 +2256,21 @@ class TestZeroAndNullDenominators:
         assert got["ok"]["est_mean"] == pytest.approx(2.0)
         assert got["ok"]["est_mean_ci"] is not None
 
+    def test_weighted_sum_all_null_values(self, spark):
+        """Group ``a``'s values are all NULL under weights 2 and 3: its sum
+        is NULL, and so is the CI around it, as from ``approx_sum``."""
+        from random_sampling_based_approximate_mapreduce_spark.sampling import stats
+        from random_sampling_based_approximate_mapreduce_spark.sampling.sampled_frame import (
+            weighted_sum,
+        )
+
+        rows = [("a", None, 2.0), ("a", None, 3.0), ("b", 5.0, 2.0)]
+        df = spark.createDataFrame(rows, "g string, v double, __weight double")
+        got = self._by_group(weighted_sum(df, "v", "g", ci_confidence=0.95))
+        assert got["a"]["est_sum"] is None and got["a"]["est_sum_ci"] is None
+        assert got["b"]["est_sum"] == pytest.approx(10.0)
+        assert got["b"]["est_sum_ci"] == pytest.approx(stats.z_score(0.95) * (25.0 * 2.0) ** 0.5)
+
 
 class TestObservationsThroughSqlEstimators:
     """The estimators are SQL statements over a temporary view of the

@@ -140,6 +140,7 @@ def test_rungs_read_without_python_datasource(spark, tmp_path, monkeypatch):
         read_text_bzip2_sampled,
     )
     from random_sampling_based_approximate_mapreduce_spark.sources.rowgroup_parquet import (
+        pick_row_groups,
         read_parquet_rowgroup_sampled,
     )
     from random_sampling_based_approximate_mapreduce_spark.sources.zstd_seekable_text import (
@@ -177,6 +178,7 @@ def test_rungs_read_without_python_datasource(spark, tmp_path, monkeypatch):
         return real_pick(*args, **kwargs)
 
     monkeypatch.setattr(unit_source, "pick_runs", counting_pick)
+    parts = {}
     for name, read in reads.items():
         picks.clear()
         df = read().df
@@ -188,4 +190,10 @@ def test_rungs_read_without_python_datasource(spark, tmp_path, monkeypatch):
             # ratio 1 in pick order: the file's lines, in order, across
             # every partition (bgzf's small batches make several)
             assert [r.value for r in rows] == open(text).read().splitlines(), name
-    assert df.rdd.getNumPartitions() > 1
+        parts[name] = df.rdd.getNumPartitions()
+    assert parts["bgzf"] > 1
+    # one scan row per picked row group, sliced over at most
+    # defaultParallelism partitions; which groups are picked hashes the
+    # file's path, so the count is read off this run's own pick
+    picked, _, _ = pick_row_groups(rg_path, 0.5)
+    assert parts["rowgroup"] == min(len(picked), spark.sparkContext.defaultParallelism)
